@@ -471,14 +471,14 @@ object Bench {
       .map { case (k, _, _, b, _) => "\"" + k + "\":" + b }
       .mkString("{", ",", "}")
     // Per-drain state-store actuals (r13 verdict item #6): rows AND
-    // bytes from the final StreamingQueryProgress's stateOperators,
-    // recorded by StreamReplayQueries.drain into a registry keyed by
-    // sr tag. SCALE.md §4's state model is row-derived; this column is
-    // what the store actually held, reconciled in SCALE.md §9.1.3.
-    // Stateless drains legitimately report 0/0; -1 = never drained.
+    // bytes the store held after the drain's last micro-batch, from
+    // StreamReplayQueries' per-tag drain record. SCALE.md §4's state
+    // model is row-derived; this column is what the store actually
+    // held, reconciled in SCALE.md §9.1.3. Stateless drains
+    // legitimately report 0/0; -1 = never drained.
     val qsState = results.collect { case (k, _, _, _, _) if k.startsWith("sr") =>
-      val (rows, bytes) = StreamReplayQueries.lastStateActuals
-        .getOrElse(k.split("_")(0), (-1L, -1L))
+      val p = StreamReplayQueries.lastDrainProfile.getOrElse(k.split("_")(0), Map.empty[String, Long])
+      val (rows, bytes) = (p.getOrElse("stateRows", -1L), p.getOrElse("stateBytes", -1L))
       "\"" + k + "\":{" + s""""rows":$rows,"bytes":$bytes}"""
     }.mkString("{", ",", "}")
     // Per-drain phase profile from the SERIAL pass (r14 verdict item

@@ -439,10 +439,10 @@ object MaintenanceQueries {
         "second triage still flags partitions after compaction")
       // The read-back IS the oracle contract (content untouched by the
       // rewrite) — returned LAZY over the compacted store, which lives
-      // until JVM exit like every staging (r18: the eager checkpoint
+      // until the next v8 call replaces it (r18: the eager checkpoint
       // re-materialized the whole silver-sized store per invocation
       // only so the scratch could be deleted synchronously).
-      graft.streaming.ReplayStaging.keepUntilExit(work)
+      graft.streaming.ReplayStaging.keepUntilExit("v8", work)
       s.read.parquet(store)
         .select(col("symbol"), unix_millis(col("event_time")).as("ts_ms"),
           col("price"), col("volume"))

@@ -1,14 +1,16 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextAnalysis
 import graft.sources.Tables
 import graft.streaming.{CurationStream, Heartbeats, HeavyHitterStream, IncrementalGoldStream, LatestPriceStream, OrderFlowStream, ReplayStaging, VpinStream}
+import graft.streaming.Monitoring.BatchMetric
 
 /** Driver-visible queries that actually EXECUTE `writeStream` — the
   * streaming runtimes replayed deterministically over the static sf
@@ -50,31 +52,27 @@ import graft.streaming.{CurationStream, Heartbeats, HeavyHitterStream, Increment
   */
 object StreamReplayQueries {
 
-  /** Recursive delete for the per-invocation scratch dirs (unique via
-    * createTempDirectory, removed once results are materialized).
-    * Staged INPUT directories are no longer per-invocation — they live
-    * in [[ReplayStaging]]'s process-lifetime cache (r11 verdict #6), so
-    * only each query's private ckpt/out/store scratch is deleted here.
-    */
-  private def deleteRecursively(root: Path): Unit =
-    ReplayStaging.deleteRecursively(root)
-
   /** Run `body` with replay-friendly session confs, restoring the
-    * caller's values after. The stateful shuffle drops to 8
+    * caller's values after. The stateful shuffle drops to 2
     * partitions: replay state is a handful of keys (symbols, users),
     * and every partition is another state-store instance set up PER
-    * STATEFUL OPERATOR PER MICRO-BATCH — at the session's 32 it is
-    * pure orchestration overhead (measured: sr4's chained two-operator
-    * drain 29 s → ~6 s at sf0.1; 4 partitions measured no better —
-    * the residual is fixed per-micro-batch machinery). Partition count never touches
-    * results — every replay's arithmetic is per-key. `provider` sets
-    * the state-store provider: every transformWithState replay MUST
-    * pass RocksDB (multiple column families — HDFSBackedStateStore
-    * does not support them); sr1/sr2 (foreachBatch store, watermark
-    * dedup) run on the session default.
+    * STATEFUL OPERATOR PER MICRO-BATCH, so the right count is a
+    * function of STATE SIZE, not of cores. r18 swept 8/4/2 against the
+    * measured state actuals (the largest replay state is sr14's 20k
+    * rows / 33 MB — far below one store instance's comfortable
+    * capacity): 2 partitions read serial 68.3 s vs 76.2 s at 8 and
+    * concurrent wall 15.1 s vs 20.1 s, with the heavy-stateCommit
+    * drains (sr13's 4-store stream-stream join, sr4's chained tws
+    * pair) gaining the most. `SPARK_GRAFT_SR_SHUFFLE` overrides it, so
+    * a deployment with real state re-derives the count (≈ one
+    * partition per few hundred MB of state) without a code change.
+    * Partition count never touches results — every replay's
+    * arithmetic is per-key. `provider` sets the state-store provider:
+    * every transformWithState replay MUST pass RocksDB (multiple
+    * column families — HDFSBackedStateStore does not support them);
+    * the rest run on the session default.
     */
-  private def withReplayConfs[T](s: SparkSession, provider: Option[String] = None,
-                                 statePartitions: Int = 2)
+  private def withReplayConfs[T](s: SparkSession, provider: Option[String])
                                 (body: => T): T = {
     val shufKey = "spark.sql.shuffle.partitions"
     val provKey = "spark.sql.streaming.stateStore.providerClass"
@@ -92,22 +90,7 @@ object StreamReplayQueries {
       case None => s.conf.unset(key)
     }
     try {
-      // Parameterized (r17 optimization round) so the drain state
-      // partitioning can be re-derived per deployment without a code
-      // change: every partition is a state-store instance whose setup/
-      // commit machinery is paid per stateful operator per micro-batch,
-      // so the right count is a function of STATE SIZE, not of cores.
-      // r18 swept 8/4/2 against the measured state actuals (the
-      // largest replay state is sr14's 20k rows / 33 MB — far below
-      // one store instance's comfortable capacity): 2 partitions read
-      // serial 68.3 s vs 76.2 s at 8 and concurrent wall 15.1 s vs
-      // 20.1 s, with the heavy-stateCommit drains (sr13's 4-store
-      // stream-stream join, sr4's chained tws pair) gaining the most —
-      // so 2 is the sized default. The env override wins, so a
-      // deployment with real state re-derives the count (≈ one
-      // partition per few hundred MB of state) without a code change.
-      s.conf.set(shufKey,
-        sys.env.getOrElse("SPARK_GRAFT_SR_SHUFFLE", statePartitions.toString))
+      s.conf.set(shufKey, sys.env.getOrElse("SPARK_GRAFT_SR_SHUFFLE", "2"))
       provider.foreach { p =>
         s.conf.set(provKey, p)
         s.conf.set(logKey, "true")
@@ -123,90 +106,100 @@ object StreamReplayQueries {
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Await a replay drain; with SPARK_GRAFT_SR_PROFILE=1 also print
-    * one stderr line splitting the drain across the engine's own
-    * phase metrics (StreamingQueryProgress.durationMs + state-store
-    * commit times) — the r12 verdict item #4 measurement: how much of
-    * a drain is real work (addBatch) vs commit machinery (walCommit/
-    * commitOffsets) vs planning, per query. The sink description
-    * carries the per-query tmp dir (graft_srN_...), which identifies
-    * the query without threading a tag through 17 call sites.
-    */
-  /** Per-drain state-store actuals, recorded by [[drain]] from the
-    * LAST StreamingQueryProgress's stateOperators (r13 verdict item
-    * #6: SCALE.md's state sizing was asserted from row counts; the
-    * store reports BYTES — `memoryUsedBytes`, plus RocksDB's SST
-    * total when that provider is active). Keyed by the query's sr tag
-    * (parsed from its scratch dir name, e.g. "graft_sr11_..." →
-    * "sr11"); Bench reads this after each sr query and ships a
-    * `state_bytes`/`state_rows` column next to the shuffle actuals.
-    * Last-writer-wins per tag is correct: each drain rebuilds its
-    * state from scratch, so the newest drain IS the current actual.
-    */
-  val lastStateActuals = scala.collection.concurrent.TrieMap[String, (Long, Long)]()
-
-  /** Per-drain phase profile, keyed by sr tag (r14 verdict item #2:
-    * the SPARK_GRAFT_SR_PROFILE split is what adjudicated sr13 in r13
-    * and stream_catchup in r14, but it lived in stderr/BENCHNOTES
-    * prose — the artifact could not explain its own drain readings).
-    * Recorded on EVERY drain (summing recentProgress is microseconds),
-    * last-writer-wins like the state actuals; Bench snapshots it after
-    * the serial pass and ships it as `drain_profile`, so a flagged
-    * drain's own JSON says "stateCommit 14 s of 17 s = fsync, not
-    * plan". Keys are the engine's own phase metrics (durationMs) plus
-    * the state-store commit sum.
+  /** Per-drain record, keyed by sr tag: the engine's phase split
+    * summed over the drain's micro-batches (`batches`,
+    * `triggerExecution`, `addBatch`, `walCommit`, `commitOffsets`,
+    * `queryPlanning`, `source`, `stateCommit`) plus the store's
+    * END state (`stateRows`, `stateBytes`) from the last micro-batch.
+    * Bench ships the phases as `drain_profile` and the end state as
+    * `state_actuals`, so a flagged drain's own JSON says "stateCommit
+    * 14 s of 17 s = fsync, not plan". Last-writer-wins per tag is
+    * correct: each drain rebuilds its state from scratch, so the
+    * newest drain IS the current actual.
     */
   val lastDrainProfile =
     scala.collection.concurrent.TrieMap[String, Map[String, Long]]()
 
-  private val srTag = "graft_(sr\\d+)_".r
+  private def profile(ms: Seq[BatchMetric]): Map[String, Long] = {
+    def tot(f: BatchMetric => Long): Long = ms.map(f).sum
+    Map(
+      "batches" -> ms.length.toLong,
+      "triggerExecution" -> tot(_.batch_duration_ms),
+      "addBatch" -> tot(_.add_batch_ms),
+      "walCommit" -> tot(_.wal_commit_ms),
+      "commitOffsets" -> tot(_.commit_offsets_ms),
+      "queryPlanning" -> tot(_.query_planning_ms),
+      "source" -> tot(_.source_ms),
+      "stateCommit" -> tot(_.state_commit_ms),
+      "stateRows" -> ms.lastOption.map(_.state_rows).getOrElse(0L),
+      "stateBytes" -> ms.lastOption.map(_.state_bytes).getOrElse(0L))
+  }
 
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-                    scratch: java.nio.file.Path = null): Unit = {
-    q.awaitTermination()
-    // The final progress carries the END-state of every stateful
-    // operator: total rows and bytes in the store after the last
-    // micro-batch. RocksDB reports its on-disk SST footprint under
-    // customMetrics ("rocksdbSstFileSize"); memoryUsedBytes covers the
-    // in-memory store (HDFS-backed provider) and RocksDB block cache.
-    // The max of the two is the store's resident footprint either way.
-    val ps = q.recentProgress.toSeq
-    def tot(k: String): Long =
-      ps.flatMap(p => Option(p.durationMs.get(k)).map(_.toLong)).sum
-    val profile = Map(
-      "batches" -> ps.length.toLong,
-      "triggerExecution" -> tot("triggerExecution"),
-      "addBatch" -> tot("addBatch"),
-      "walCommit" -> tot("walCommit"),
-      "commitOffsets" -> tot("commitOffsets"),
-      "queryPlanning" -> tot("queryPlanning"),
-      "source" -> (tot("getBatch") + tot("latestOffset")),
-      "stateCommit" -> ps.flatMap(_.stateOperators.toSeq.map(_.commitTimeMs)).sum)
-    if (scratch != null) {
-      srTag.findFirstMatchIn(scratch.getFileName.toString).foreach { m =>
-        val last = ps.lastOption.toSeq
-        val ops = last.flatMap(_.stateOperators.toSeq)
-        val rows = ops.map(_.numRowsTotal).sum
-        val bytes = ops.map { op =>
-          val sst = Option(op.customMetrics.get("rocksdbSstFileSize"))
-            .map(_.toLong).getOrElse(0L)
-          math.max(op.memoryUsedBytes, sst)
-        }.sum
-        lastStateActuals.put(m.group(1), (rows, bytes))
-        lastDrainProfile.put(m.group(1), profile)
-        ()
-      }
+  /** One replay's scratch and its drains. `out` is the output parquet
+    * directory the replay reads back; `ckpt` is deleted once the
+    * replay succeeds.
+    */
+  private final class Drain(tag: String, val tmp: Path) {
+    val out: String = tmp.resolve("out").toString
+    val ckpt: String = tmp.resolve("ckpt").toString
+
+    /** Start `stream` into `out` under `trigger`. The parquet file
+      * sink accepts append mode only, so update-mode output is
+      * appended batch by batch through foreachBatch.
+      */
+    def start(stream: DataFrame, mode: String = "append",
+              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      val w = stream.writeStream.outputMode(mode)
+        .option("checkpointLocation", ckpt).trigger(trigger)
+      val sink =
+        if (mode == "append") w.format("parquet").option("path", out)
+        else w.foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(out); ()
+        }
+      sink.start()
     }
-    if (sys.env.get("SPARK_GRAFT_SR_PROFILE").contains("1")) {
-      val sink = ps.headOption.map(_.sink.description).getOrElse("?")
-      System.err.println(
-        s"[sr-profile] batches=${ps.length} triggerExecution=${profile("triggerExecution")}ms " +
-          s"addBatch=${profile("addBatch")}ms walCommit=${profile("walCommit")}ms " +
-          s"commitOffsets=${profile("commitOffsets")}ms queryPlanning=${profile("queryPlanning")}ms " +
-          s"source=${profile("source")}ms stateCommit=${profile("stateCommit")}ms " +
-          s"sink=$sink")
+
+    /** Await `q` and record its micro-batches under the tag. */
+    def await(q: StreamingQuery): Seq[BatchMetric] = {
+      q.awaitTermination()
+      val ms = q.recentProgress.toSeq.map(BatchMetric.of)
+      lastDrainProfile.put(tag, profile(ms))
+      ms
+    }
+
+    /** Drain `stream` to completion under AvailableNow; returns `out`. */
+    def run(stream: DataFrame, mode: String = "append"): String = {
+      await(start(stream, mode)); out
     }
   }
+
+  /** Every replay's one shape: replay confs, a fresh scratch dir named
+    * after `tag`, and a [[Drain]] that starts, awaits and records the
+    * replay's queries. `body` stages the input, drains it and returns
+    * a frame that reads the drained output LAZILY (no eager
+    * localCheckpoint pass: the caller's first action IS the single
+    * read). On success the `transient` subdirs (checkpoint, state
+    * stores, per-invocation topics) are deleted and the output is
+    * kept under `tag` ([[ReplayStaging.keepUntilExit]]): the returned
+    * frame stays valid until the next call of the same replay, which
+    * deletes it, so a caller holding a frame across a second call
+    * must materialize it first. On failure the whole scratch is
+    * deleted.
+    */
+  private def replay(s: SparkSession, tag: String, provider: Option[String] = None,
+                     transient: Seq[String] = Seq("ckpt"))
+                    (body: Drain => DataFrame): DataFrame =
+    withReplayConfs(s, provider) {
+      val tmp = ReplayStaging.scratchDir(s"graft_${tag}_")
+      try {
+        val out = body(new Drain(tag, tmp))
+        transient.foreach(nm => ReplayStaging.deleteRecursively(tmp.resolve(nm)))
+        ReplayStaging.keepUntilExit(tag, tmp)
+        out
+      } catch {
+        case e: Throwable => ReplayStaging.deleteRecursively(tmp); throw e
+      }
+    }
 
   /** The silver feed, materialized once per (JVM, dir): it backs four
     * distinct stagings (chrono, mod-3, daily bars, SCD2 snapshots) and
@@ -216,33 +209,22 @@ object StreamReplayQueries {
   private def silverM(s: SparkSession, dir: String): DataFrame =
     ReplayStaging.materialized(s"silver_df|$dir", SparkEntry.silverDf(s, dir))
 
-  /** Per-drain scratch with the r18 output posture: `body` drains into
-    * subdirectories of a fresh scratch dir and returns a frame that
-    * reads the drained output LAZILY. On success the `transient`
-    * subdirs (checkpoint, state stores, per-invocation topics) are
-    * deleted immediately and the rest of the scratch — the output
-    * parquet the returned frame reads — lives until JVM exit
-    * (ReplayStaging.keepUntilExit, the same lifetime as every staged
-    * input), so the result needs NO eager localCheckpoint pass: the
-    * caller's first action IS the single read. On failure the whole
-    * scratch is deleted. Before r18 every drain ended in
-    * `localCheckpoint(eager = true)` + immediate scratch deletion —
-    * one extra full job per drain (execute the readback plan, cache
-    * it) whose only purpose was to outlive the deletion.
+  /** A staged file source: `maxFilesPerTrigger=1` makes each staged
+    * slice one micro-batch.
     */
-  private def withDrainScratch(prefix: String,
-                               transient: Seq[String] = Seq("ckpt"))
-                              (body: Path => DataFrame): DataFrame = {
-    val tmp = ReplayStaging.scratchDir(prefix)
-    try {
-      val out = body(tmp)
-      transient.foreach(nm => deleteRecursively(tmp.resolve(nm)))
-      ReplayStaging.keepUntilExit(tmp)
-      out
-    } catch {
-      case e: Throwable => deleteRecursively(tmp); throw e
-    }
-  }
+  private def sliced(s: SparkSession, schema: StructType, staging: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(staging)
+
+  /** Three chronological slices, each ONE parquet file with ascending
+    * name and mtime, so the file-source ordering (mtime, with path as
+    * tiebreak) replays them in event-time order no matter which key it
+    * uses. Staged once per (key) per JVM and shared across queries —
+    * see [[ReplayStaging]]. Returns the staging directory path.
+    */
+  private def stagedChrono(key: String, frame: => DataFrame,
+                           cutCol: org.apache.spark.sql.Column = col("event_time"),
+                           cutType: String = "timestamp"): String =
+    ReplayStaging.chronoSlices(key, frame, cutCol, cutType)
 
   /** The silver trade feed serialized under the K3 wire contract —
     * shared produce for every drain that consumes the plain
@@ -273,28 +255,19 @@ object StreamReplayQueries {
     * partial-bar upsert store → merge-on-read. Result = gold_5m
     * exactly (v1's oracle), no matter how the stream was sliced.
     */
-  def streamGoldReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamGoldReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr1") { d =>
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr1_") { tmp =>
-      // The monoid store converges under ANY slicing; reuse the shared
-      // chronological silver staging rather than paying a private one.
-      val staging = stagedChrono(s"silver|$dir", silver)
-      val stream = s.readStream.schema(silver.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val q = IncrementalGoldStream.writer(stream,
-        path = tmp.resolve("store").toString,
-        checkpoint = tmp.resolve("ckpt").toString,
-        duration = "5 minutes",
-        trigger = Trigger.AvailableNow(),
-        nBuckets = 8).start()
-      drain(q, tmp)
-      IncrementalGoldStream.read(s, tmp.resolve("store").toString)
-        .select(col("symbol"),
-          unix_millis(col("window_start")).as("window_start_ms"),
-          unix_millis(col("window_end")).as("window_end_ms"),
-          col("open"), col("high"), col("low"), col("close"),
-          col("volume"), col("trade_count"), col("vwap_e6"))
-    }
+    // The monoid store converges under ANY slicing; reuse the shared
+    // chronological silver staging rather than paying a private one.
+    val stream = sliced(s, silver.schema, stagedChrono(s"silver|$dir", silver))
+    d.await(IncrementalGoldStream.writer(stream, path = d.out, checkpoint = d.ckpt,
+      duration = "5 minutes", trigger = Trigger.AvailableNow(), nBuckets = 8).start())
+    IncrementalGoldStream.read(s, d.out)
+      .select(col("symbol"),
+        unix_millis(col("window_start")).as("window_start_ms"),
+        unix_millis(col("window_end")).as("window_end_ms"),
+        col("open"), col("high"), col("low"), col("close"),
+        col("volume"), col("trade_count"), col("vwap_e6"))
   }
 
   /** SR2 — the CurationStream runtime end-to-end: documents →
@@ -304,28 +277,16 @@ object StreamReplayQueries {
     * every document inside one watermark window so the stream's dedup
     * scope equals the batch DISTINCT the oracle computes.
     */
-  def streamCurationReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamCurationReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr2") { d =>
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    withDrainScratch("graft_sr2_") { tmp =>
-      // Shared with sr9: stage the raw (doc_id, text) feed once; the
-      // constant event time is attached AFTER readStream (a literal
-      // column, identical semantics to staging it).
-      val staging = ReplayStaging.multiFile(s"docs|$dir", docs, n = 3)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .withColumn("event_time", lit("2024-01-15 00:00:00").cast("timestamp"))
-      val outDir = tmp.resolve("out").toString
-      val q = CurationStream.admit(stream, minScoreMilli = 0L, delay = "7 days")
-        .select(TextAnalysis.fingerprintMd5(col("text")).as("fp_md5"),
-          col("score_milli"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir).distinct()
-    }
+    // Shared with sr9: stage the raw (doc_id, text) feed once; the
+    // constant event time is attached AFTER readStream (a literal
+    // column, identical semantics to staging it).
+    val stream = sliced(s, docs.schema, ReplayStaging.multiFile(s"docs|$dir", docs, n = 3))
+      .withColumn("event_time", lit("2024-01-15 00:00:00").cast("timestamp"))
+    s.read.parquet(d.run(CurationStream.admit(stream, minScoreMilli = 0L, delay = "7 days")
+      .select(TextAnalysis.fingerprintMd5(col("text")).as("fp_md5"), col("score_milli"))))
+      .distinct()
   }
 
   /** SR3 — the LatestPriceStream `transformWithState` runtime
@@ -341,52 +302,27 @@ object StreamReplayQueries {
     * pair is the batch LEAD pair, and the JVM change/pct arithmetic
     * is the same IEEE op sequence the batch column expressions run.
     */
-  /** Three chronological slices, each ONE parquet file with ascending
-    * name and mtime, so the file-source ordering (mtime, with path as
-    * tiebreak) replays them in event-time order no matter which key it
-    * uses. Staged once per (key) per JVM and shared across queries —
-    * see [[ReplayStaging]]. Returns the staging directory path.
-    */
-  private def stagedChrono(key: String, frame: => DataFrame,
-                           cutCol: org.apache.spark.sql.Column = col("event_time"),
-                           cutType: String = "timestamp"): String =
-    ReplayStaging.chronoSlices(key, frame, cutCol, cutType)
-
   def streamLatestReplay(s: SparkSession, dir: String): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, "sr3", Some(RocksDb)) { d =>
     import s.implicits._
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr3_") { tmp =>
-      val staging = stagedChrono(s"silver|$dir", silver)
-      val stream = s.readStream.schema(silver.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val trades = stream
-        .select(col("symbol"), col("price"), col("volume"), col("event_time"))
-        .as[LatestPriceStream.TradeEvent]
-      val outDir = tmp.resolve("out").toString
-      val q = LatestPriceStream.snapshotsTws(s, trades)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.LatestPrice], _: Long) =>
-          batch.write.mode("append").parquet(outDir); ()
-        }
-        .start()
-      drain(q, tmp)
-      // Update-mode emissions accumulate one snapshot per (symbol,
-      // micro-batch-with-fresh-events); the newest per symbol is the
-      // final state. last_trade_time is unique per symbol (silver
-      // dedup), so the argmax is total.
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("symbol"))
-        .orderBy(col("last_trade_time").desc)
-      s.read.parquet(outDir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("symbol"), col("last_price"), col("last_volume"),
-          unix_millis(col("last_trade_time")).as("last_trade_time_ms"),
-          round(col("price_change"), 6).as("price_change"),
-          round(col("price_change_pct"), 6).as("price_change_pct"))
-    }
+    val trades = sliced(s, silver.schema, stagedChrono(s"silver|$dir", silver))
+      .select(col("symbol"), col("price"), col("volume"), col("event_time"))
+      .as[LatestPriceStream.TradeEvent]
+    val out = d.run(LatestPriceStream.snapshotsTws(s, trades).toDF(), "update")
+    // Update-mode emissions accumulate one snapshot per (symbol,
+    // micro-batch-with-fresh-events); the newest per symbol is the
+    // final state. last_trade_time is unique per symbol (silver
+    // dedup), so the argmax is total.
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("symbol"))
+      .orderBy(col("last_trade_time").desc)
+    s.read.parquet(out)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("symbol"), col("last_price"), col("last_volume"),
+        unix_millis(col("last_trade_time")).as("last_trade_time_ms"),
+        round(col("price_change"), 6).as("price_change"),
+        round(col("price_change_pct"), 6).as("price_change_pct"))
   }
 
   /** A tick with its classification grouping key (sr4's replay input:
@@ -416,46 +352,28 @@ object StreamReplayQueries {
     * is the batch window pass exactly.
     */
   def streamVpinReplay(s: SparkSession, dir: String): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, "sr4", Some(RocksDb)) { d =>
     import s.implicits._
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr4_") { tmp =>
-      val staging = stagedChrono(s"silver|$dir", silver)
-      val stream = s.readStream.schema(silver.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val keyed = stream.select(
-          concat(col("symbol"), lit("|"), col("trade_date").cast("string")).as("k"),
-          col("symbol"),
-          graft.operators.Indicators.ticksE4(col("price")).as("px"),
-          col("volume"),
-          unix_micros(col("event_time")).as("ts"),
-          col("event_id").as("eventId"))
-        .as[KeyedTick]
-      val grouped = keyed.groupByKey(_.k)
-        .mapValues(t => OrderFlowStream.Tick(t.symbol, t.px, t.volume, t.ts, t.eventId))
-      val verdicts = OrderFlowStream.verdictsGrouped(s, grouped)
-      val buckets = VpinStream.buckets(s, verdicts, bucketVolume = 2000L, window = 10)
-      val outDir = tmp.resolve("out").toString
-      val q = buckets.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      // Append mode + the (ts, eventId) high-water guard emit each
-      // completed bucket exactly once; no distinct needed.
-      s.read.parquet(outDir)
-        .select(col("symbol"), col("bucket"), col("buy"), col("sell"),
-          col("vol"), col("n_in_window"), col("vpin_roll_e6"))
-    }
+    val keyed = sliced(s, silver.schema, stagedChrono(s"silver|$dir", silver)).select(
+        concat(col("symbol"), lit("|"), col("trade_date").cast("string")).as("k"),
+        col("symbol"),
+        graft.operators.Indicators.ticksE4(col("price")).as("px"),
+        col("volume"),
+        unix_micros(col("event_time")).as("ts"),
+        col("event_id").as("eventId"))
+      .as[KeyedTick]
+    val grouped = keyed.groupByKey(_.k)
+      .mapValues(t => OrderFlowStream.Tick(t.symbol, t.px, t.volume, t.ts, t.eventId))
+    val verdicts = OrderFlowStream.verdictsGrouped(s, grouped)
+    val buckets = VpinStream.buckets(s, verdicts, bucketVolume = 2000L, window = 10)
+    // Append mode + the (ts, eventId) high-water guard emit each
+    // completed bucket exactly once; no distinct needed.
+    s.read.parquet(d.run(buckets.toDF()))
+      .select(col("symbol"), col("bucket"), col("buy"), col("sell"),
+        col("vol"), col("n_in_window"), col("vpin_roll_e6"))
   }
 
-  /** Shared harness for the event-keyed replays (sr5/sr6): stage the
-    * normalized user-event feed chronologically, drain `wire`'s
-    * transformWithState output to parquet under AvailableNow +
-    * RocksDB, and hand the emitted rows to `reduce` for the batch-
-    * equivalent aggregate.
-    */
   /** The shared staged event feed (sr5/sr6/sr12 + the bounded-state
     * specs): one superset projection so all consumers share ONE
     * staging — each selects its own columns after readStream, where
@@ -466,28 +384,21 @@ object StreamReplayQueries {
       .select(col("user_id"), col("event_type"), col("value"), col("ts_us"),
         col("event_id"), col("event_time"))
 
+  /** Shared harness for the event-keyed replays (sr5/sr6): stage the
+    * normalized user-event feed chronologically, drain `wire`'s
+    * transformWithState output under RocksDB, and hand the emitted
+    * rows to `reduce` for the batch-equivalent aggregate.
+    */
   private def replayUserEvents(s: SparkSession, dir: String, tag: String)
       (wire: org.apache.spark.sql.Dataset[graft.streaming.FunnelStream.UserEvent] => DataFrame)
       (reduce: DataFrame => DataFrame): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, tag, Some(RocksDb)) { d =>
     import s.implicits._
     val ev = eventsFeed(s, dir)
-    withDrainScratch(s"graft_${tag}_") { tmp =>
-      val staging = stagedChrono(s"events|$dir", ev)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .select(col("user_id"), col("event_type"), col("ts_us").as("ts"),
-          col("event_id"))
-        .as[graft.streaming.FunnelStream.UserEvent]
-      val outDir = tmp.resolve("out").toString
-      val q = wire(stream).writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      reduce(s.read.parquet(outDir))
-    }
+    val stream = sliced(s, ev.schema, stagedChrono(s"events|$dir", ev))
+      .select(col("user_id"), col("event_type"), col("ts_us").as("ts"), col("event_id"))
+      .as[graft.streaming.FunnelStream.UserEvent]
+    reduce(s.read.parquet(d.run(wire(stream))))
   }
 
   /** SR5 — the FunnelStream `transformWithState` runtime end-to-end:
@@ -545,38 +456,26 @@ object StreamReplayQueries {
     * applies. Result = batch v3 verbatim (shared oracle SQL).
     */
   def streamScd2Replay(s: SparkSession, dir: String): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, "sr7", Some(RocksDb)) { d =>
     import s.implicits._
     val snaps = MaintenanceQueries.dailyCloseSnapshots(s, dir)
-    withDrainScratch("graft_sr7_") { tmp =>
-      val staging = stagedChrono(s"snaps|$dir", snaps, col("trade_date"), "date")
-      val stream = s.readStream.schema(snaps.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .select(col("symbol").as("key"), col("trade_date").as("date"),
-          col("close").as("value"))
-        .as[graft.streaming.Scd2Stream.DimSnapshot]
-      val outDir = tmp.resolve("out").toString
-      val q = graft.streaming.Scd2Stream.intervals(s, stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.Scd2Stream.Scd2Row], _: Long) =>
-          batch.write.mode("append").parquet(outDir); ()
-        }
-        .start()
-      drain(q, tmp)
-      // A version emits at most twice: once opening (is_current) and
-      // once closing. The closed form is the keyed upsert's survivor.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"), col("version"))
-        .orderBy(col("is_current").asc)
-      s.read.parquet(outDir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("key").as("symbol"), col("value").as("close"),
-          col("version"), col("effective_from"), col("effective_to"),
-          col("is_current"))
-    }
+    val stream = sliced(s, snaps.schema,
+        stagedChrono(s"snaps|$dir", snaps, col("trade_date"), "date"))
+      .select(col("symbol").as("key"), col("trade_date").as("date"),
+        col("close").as("value"))
+      .as[graft.streaming.Scd2Stream.DimSnapshot]
+    val out = d.run(graft.streaming.Scd2Stream.intervals(s, stream).toDF(), "update")
+    // A version emits at most twice: once opening (is_current) and
+    // once closing. The closed form is the keyed upsert's survivor.
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("key"), col("version"))
+      .orderBy(col("is_current").asc)
+    s.read.parquet(out)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("key").as("symbol"), col("value").as("close"),
+        col("version"), col("effective_from"), col("effective_to"),
+        col("is_current"))
   }
 
   /** SR8 — the IndicatorStream EMA recursion end-to-end: silver ticks
@@ -588,31 +487,19 @@ object StreamReplayQueries {
     * (the list_reduce prefix fold) verbatim.
     */
   def streamEmaReplay(s: SparkSession, dir: String): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, "sr8", Some(RocksDb)) { d =>
     import s.implicits._
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr8_") { tmp =>
-      // Shared full-silver staging; the tick projection happens after
-      // readStream, where parquet column pruning makes the narrower
-      // read free.
-      val staging = stagedChrono(s"silver|$dir", silver)
-      val stream = s.readStream.schema(silver.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .select(col("symbol"), col("price"), col("event_time"))
-        .as[graft.streaming.IndicatorStream.TradeTick]
-      val outDir = tmp.resolve("out").toString
-      val q = graft.streaming.IndicatorStream.updates(s, stream, n = 14)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-        .groupBy(col("symbol"), to_date(col("event_time")).as("trade_date"))
-        .agg(count(lit(1)).as("n_ticks"),
-          max_by(col("ema"), col("event_time")).as("ema"))
-    }
+    // Shared full-silver staging; the tick projection happens after
+    // readStream, where parquet column pruning makes the narrower
+    // read free.
+    val stream = sliced(s, silver.schema, stagedChrono(s"silver|$dir", silver))
+      .select(col("symbol"), col("price"), col("event_time"))
+      .as[graft.streaming.IndicatorStream.TradeTick]
+    s.read.parquet(d.run(graft.streaming.IndicatorStream.updates(s, stream, n = 14).toDF()))
+      .groupBy(col("symbol"), to_date(col("event_time")).as("trade_date"))
+      .agg(count(lit(1)).as("n_ticks"),
+        max_by(col("ema"), col("event_time")).as("ema"))
   }
 
   /** SR9 — the HeavyHitterStream runtime end-to-end: document tokens
@@ -629,37 +516,26 @@ object StreamReplayQueries {
     * its own (disjoint) group.
     */
   def streamHeavyHitterReplay(s: SparkSession, dir: String): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, "sr9", Some(RocksDb)) { d =>
     import s.implicits._
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val toks = (df: DataFrame) =>
       df.select(explode(graft.operators.TextAnalysis.tokens(lower(col("text")))).as("token"))
-    withDrainScratch("graft_sr9_") { tmp =>
-      val staging = ReplayStaging.multiFile(s"docs|$dir", docs, n = 3)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val outDir = tmp.resolve("out").toString
-      val q = HeavyHitterStream.candidates(s, toks(stream).as[String], k = 67)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      // Newest snapshot per group; the union is bounded by
-      // numGroups·k counters — a metadata-sized driver collect, the
-      // same contract as the batch operator's In predicate.
-      val cands = HeavyHitterStream.latestCandidates(
-        s.read.parquet(outDir).as[HeavyHitterStream.HHCandidate].collect().toSeq)
-      val tokDf = toks(docs)
-      val tot = tokDf.agg(count(lit(1)).as("n"))
-      tokDf.groupBy(col("token")).agg(count(lit(1)).as("tf"))
-        .filter(col("token").isin(cands.toSeq: _*))
-        .crossJoin(broadcast(tot))
-        // decimal staging: tf·1e6 and n·φE6 both pass 2⁶³ at web scale.
-        .filter(expr("cast(tf as decimal(38,0)) * 1000000 >= cast(n as decimal(38,0)) * 30000"))
-        .select(col("token"), col("tf"))
-    }
+    val stream = sliced(s, docs.schema, ReplayStaging.multiFile(s"docs|$dir", docs, n = 3))
+    val out = d.run(HeavyHitterStream.candidates(s, toks(stream).as[String], k = 67).toDF())
+    // Newest snapshot per group; the union is bounded by
+    // numGroups·k counters — a metadata-sized driver collect, the
+    // same contract as the batch operator's In predicate.
+    val cands = HeavyHitterStream.latestCandidates(
+      s.read.parquet(out).as[HeavyHitterStream.HHCandidate].collect().toSeq)
+    val tokDf = toks(docs)
+    val tot = tokDf.agg(count(lit(1)).as("n"))
+    tokDf.groupBy(col("token")).agg(count(lit(1)).as("tf"))
+      .filter(col("token").isin(cands.toSeq: _*))
+      .crossJoin(broadcast(tot))
+      // decimal staging: tf·1e6 and n·φE6 both pass 2⁶³ at web scale.
+      .filter(expr("cast(tf as decimal(38,0)) * 1000000 >= cast(n as decimal(38,0)) * 30000"))
+      .select(col("token"), col("tf"))
   }
 
   /** SR10 — the BarIndicatorStream runtime end-to-end: closed daily
@@ -672,28 +548,17 @@ object StreamReplayQueries {
     * so the replay shares b12's oracle SQL unchanged.
     */
   def streamBarIndicatorReplay(s: SparkSession, dir: String): DataFrame =
-      withReplayConfs(s, Some(RocksDb)) {
+      replay(s, "sr10", Some(RocksDb)) { d =>
     import s.implicits._
     val bars = graft.operators.Indicators.dailyBars(silverM(s, dir))
       .select(col("symbol"), col("trade_date"), col("high"), col("low"),
         col("close"), col("day_volume"))
-    withDrainScratch("graft_sr10_") { tmp =>
-      val staging = stagedChrono(s"bars|$dir", bars, col("trade_date"), "date")
-      val stream = s.readStream.schema(bars.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .as[graft.streaming.BarIndicatorStream.DailyBar]
-      val outDir = tmp.resolve("out").toString
-      val q = graft.streaming.BarIndicatorStream.updates(s, stream, n = 14)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-        .select(col("symbol"), col("trade_date"), col("k_num"), col("k_den"),
-          col("pct_k"), col("pct_d"))
-    }
+    val stream = sliced(s, bars.schema,
+        stagedChrono(s"bars|$dir", bars, col("trade_date"), "date"))
+      .as[graft.streaming.BarIndicatorStream.DailyBar]
+    s.read.parquet(d.run(graft.streaming.BarIndicatorStream.updates(s, stream, n = 14).toDF()))
+      .select(col("symbol"), col("trade_date"), col("k_num"), col("k_den"),
+        col("pct_k"), col("pct_d"))
   }
 
   /** SR11 — adversarial LATE / out-of-order replay under the oracle
@@ -726,27 +591,16 @@ object StreamReplayQueries {
     * emission cutoff — and append mode would reject the plan outright)
     * — the oracle row is watermark-SENSITIVE, not watermark-blind.
     */
-  def streamLateReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamLateReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr11") { d =>
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr11_") { tmp =>
-      val staging = ReplayStaging.modSlices(s"silver_mod3|$dir", silver, col("event_id"))
-      val stream = s.readStream.schema(silver.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val bars = graft.operators.Ohlcv.bars5m(stream.withWatermark("event_time", "3 days"))
-      val outDir = tmp.resolve("out").toString
-      val q = bars.select(col("symbol"),
-          unix_millis(col("window_start")).as("window_start_ms"),
-          unix_millis(col("window_end")).as("window_end_ms"),
-          col("open"), col("high"), col("low"), col("close"),
-          col("volume"), col("trade_count"), col("vwap_e6"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+    val stream = sliced(s, silver.schema,
+      ReplayStaging.modSlices(s"silver_mod3|$dir", silver, col("event_id")))
+    val bars = graft.operators.Ohlcv.bars5m(stream.withWatermark("event_time", "3 days"))
+    s.read.parquet(d.run(bars.select(col("symbol"),
+      unix_millis(col("window_start")).as("window_start_ms"),
+      unix_millis(col("window_end")).as("window_end_ms"),
+      col("open"), col("high"), col("low"), col("close"),
+      col("volume"), col("trade_count"), col("vwap_e6"))))
   }
 
   /** SR12 — streaming SESSION WINDOWS under the oracle: x2's gap-merge
@@ -767,26 +621,14 @@ object StreamReplayQueries {
     * disagree exactly on a session ending inside the watermark's
     * truncated millisecond.
     */
-  def streamSessionReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamSessionReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr12") { d =>
     val ev = eventsFeed(s, dir)
-    withDrainScratch("graft_sr12_") { tmp =>
-      val staging = stagedChrono(s"events|$dir", ev)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .select(col("user_id"), col("value"), col("event_time"))
-        .withWatermark("event_time", "3 days")
-      val outDir = tmp.resolve("out").toString
-      val q = graft.operators.Sessions.sessionStats(stream,
-          keyCol = "user_id", timeCol = "event_time", valueCol = "value",
-          gap = "30 minutes")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+    val stream = sliced(s, ev.schema, stagedChrono(s"events|$dir", ev))
+      .select(col("user_id"), col("value"), col("event_time"))
+      .withWatermark("event_time", "3 days")
+    s.read.parquet(d.run(graft.operators.Sessions.sessionStats(stream,
+      keyCol = "user_id", timeCol = "event_time", valueCol = "value",
+      gap = "30 minutes")))
   }
 
   /** SR13 — watermarked STREAM-STREAM interval join under the oracle:
@@ -816,51 +658,38 @@ object StreamReplayQueries {
     * from the real watermark (minutes, not the replay's synthetic
     * 3 days) — state is O(traffic within watermark + join window).
     */
-  def streamJoinReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamJoinReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr13") { d =>
     val day = silverM(s, dir).filter(col("trade_date") === lit("2024-01-15").cast("date"))
-    withDrainScratch("graft_sr13_") { tmp =>
-      // Slice classifier independent of the quote residue (id % 3), so
-      // quotes and trades scatter across all three batches and matches
-      // form in BOTH arrival orders.
-      val staging = ReplayStaging.customSlices(s"silver_day15_div7mod3|$dir", day,
-        Seq(0, 1, 2).map(r => expr("(event_id div 7) % 3") === r))
-      def src = s.readStream.schema(day.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val px = graft.operators.Indicators.ticksE4(col("price"))
-      val trades = src.select(col("symbol"), col("trade_date"),
-          col("event_time").as("trade_time"), px.as("px_e4"))
-        .withWatermark("trade_time", "3 days")
-      val quotes = src.filter(col("event_id") % 3 === 0)
-        .select(col("symbol").as("q_symbol"),
-          (col("event_time") - expr("INTERVAL 500 MILLISECONDS")).as("quote_time"),
-          px.as("qpx_e4"))
-        .withColumn("bid_e4", col("qpx_e4") - greatest(lit(1L), expr("qpx_e4 div 2000")))
-        .withColumn("ask_e4", col("qpx_e4") + greatest(lit(1L), expr("qpx_e4 div 1000")))
-        .withWatermark("quote_time", "3 days")
-      val joined = trades.join(quotes,
-        col("symbol") === col("q_symbol") &&
-          col("quote_time") >= col("trade_time") - expr("INTERVAL 60 SECONDS") &&
-          col("quote_time") <= col("trade_time"))
-      val outDir = tmp.resolve("out").toString
-      val q = joined
-        .select(col("symbol"), col("trade_date"), col("px_e4"),
-          col("bid_e4"), col("ask_e4"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-        .groupBy(col("symbol"), col("trade_date"))
-        .agg(count(lit(1)).as("n_matches"),
-          sum((col("ask_e4") - col("bid_e4")).cast("decimal(38,0)")).as("__quoted"),
-          sum(abs(lit(2L) * col("px_e4") - (col("bid_e4") + col("ask_e4")))
-            .cast("decimal(38,0)")).as("__dev"))
-        .select(col("symbol"), col("trade_date"), col("n_matches"),
-          expr("cast(__quoted as bigint)").as("quoted_sum_e4"),
-          expr("cast(__dev as bigint)").as("dev_sum_e4"))
-    }
+    // Slice classifier independent of the quote residue (id % 3), so
+    // quotes and trades scatter across all three batches and matches
+    // form in BOTH arrival orders.
+    val staging = ReplayStaging.customSlices(s"silver_day15_div7mod3|$dir", day,
+      Seq(0, 1, 2).map(r => expr("(event_id div 7) % 3") === r))
+    val px = graft.operators.Indicators.ticksE4(col("price"))
+    val trades = sliced(s, day.schema, staging).select(col("symbol"), col("trade_date"),
+        col("event_time").as("trade_time"), px.as("px_e4"))
+      .withWatermark("trade_time", "3 days")
+    val quotes = sliced(s, day.schema, staging).filter(col("event_id") % 3 === 0)
+      .select(col("symbol").as("q_symbol"),
+        (col("event_time") - expr("INTERVAL 500 MILLISECONDS")).as("quote_time"),
+        px.as("qpx_e4"))
+      .withColumn("bid_e4", col("qpx_e4") - greatest(lit(1L), expr("qpx_e4 div 2000")))
+      .withColumn("ask_e4", col("qpx_e4") + greatest(lit(1L), expr("qpx_e4 div 1000")))
+      .withWatermark("quote_time", "3 days")
+    val joined = trades.join(quotes,
+      col("symbol") === col("q_symbol") &&
+        col("quote_time") >= col("trade_time") - expr("INTERVAL 60 SECONDS") &&
+        col("quote_time") <= col("trade_time"))
+    s.read.parquet(d.run(joined.select(col("symbol"), col("trade_date"), col("px_e4"),
+        col("bid_e4"), col("ask_e4"))))
+      .groupBy(col("symbol"), col("trade_date"))
+      .agg(count(lit(1)).as("n_matches"),
+        sum((col("ask_e4") - col("bid_e4")).cast("decimal(38,0)")).as("__quoted"),
+        sum(abs(lit(2L) * col("px_e4") - (col("bid_e4") + col("ask_e4")))
+          .cast("decimal(38,0)")).as("__dev"))
+      .select(col("symbol"), col("trade_date"), col("n_matches"),
+        expr("cast(__quoted as bigint)").as("quoted_sum_e4"),
+        expr("cast(__dev as bigint)").as("dev_sum_e4"))
   }
 
   /** SR14 — streaming DEDUP state under the oracle: the F2 operator
@@ -877,7 +706,7 @@ object StreamReplayQueries {
     * feed exactly. The 3-day horizon vastly exceeds the zero time skew
     * between original and copy, so no key can expire between them.
     */
-  def streamDedupReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamDedupReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr14") { d =>
     val cleaned = graft.operators.Medallion
       .toSilver(Tables.trades(s, dir), lit(SparkEntry.CutoffTs).cast("timestamp"))
       .withColumn("timestamp", unix_millis(col("event_time")))
@@ -908,25 +737,12 @@ object StreamReplayQueries {
     val feed = cleaned.unionByName(
       cleaned.filter(col("event_id") % 5 === 0)
         .withColumn("event_id", col("event_id") + 10000000L))
-    withDrainScratch("graft_sr14_") { tmp =>
-      val staging = ReplayStaging.customSlices(s"dedup_feed|$dir", feed,
-        Seq(col("event_id") < 10000000L, col("event_id") >= 10000000L))
-      val stream = s.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-        .withWatermark("event_time", "3 days")
-      val deduped = graft.streaming.TradeStreams.dedupWithinWatermark(stream)
-      val outDir = tmp.resolve("out").toString
-      val q = deduped
-        .select(col("symbol"), col("timestamp").as("ts_ms"),
-          col("price"), col("volume"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+    val staging = ReplayStaging.customSlices(s"dedup_feed|$dir", feed,
+      Seq(col("event_id") < 10000000L, col("event_id") >= 10000000L))
+    val deduped = graft.streaming.TradeStreams.dedupWithinWatermark(
+      sliced(s, feed.schema, staging).withWatermark("event_time", "3 days"))
+    s.read.parquet(d.run(deduped.select(col("symbol"), col("timestamp").as("ts_ms"),
+      col("price"), col("volume"))))
   }
 
   /** SR15 — the Kafka DATA PLANE under the oracle: silver trades
@@ -942,23 +758,11 @@ object StreamReplayQueries {
     * box, r10-verified); every columnar and offset contract the
     * connector exposes is now under the DuckDB gate, not just specs.
     */
-  def streamKafkaReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    withDrainScratch("graft_sr15_") { tmp =>
-      val topicDir = stagedTradesTopic(s, dir)
-      val raw = s.readStream.format("graft-testkafka")
-        .option("path", topicDir).option("partitions", "4").load()
-      val parsed = graft.streaming.TradeStreams.parseTrades(raw)
-        .select(col("symbol"), col("timestamp").as("ts_ms"),
-          col("price"), col("volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+  def streamKafkaReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr15") { d =>
+    val raw = s.readStream.format("graft-testkafka")
+      .option("path", stagedTradesTopic(s, dir)).option("partitions", "4").load()
+    s.read.parquet(d.run(graft.streaming.TradeStreams.parseTrades(raw)
+      .select(col("symbol"), col("timestamp").as("ts_ms"), col("price"), col("volume"))))
   }
 
   /** SR16 — MULTI-TOPIC subscribe under the oracle (r12 verdict item
@@ -977,66 +781,56 @@ object StreamReplayQueries {
     * the oracle recomputes bid/ask with the same integer-tick rules
     * and the same IEEE division.
     */
-  def streamMultiTopicReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    withDrainScratch("graft_sr16_") { tmp =>
-      val silver = silverM(s, dir)
-      val tradeWire = silver.select(col("symbol"), col("price"), col("volume"),
-        unix_millis(col("event_time")).as("timestamp"),
-        array().cast("array<string>").as("conditions"))
-      val pxE4 = graft.operators.Indicators.ticksE4(col("price"))
-      val quoteWire = silver.filter(col("event_id") % 3 === 0)
-        .withColumn("px_e4", pxE4)
-        .withColumn("bid_e4", col("px_e4") - greatest(lit(1L), expr("px_e4 div 2000")))
-        .withColumn("ask_e4", col("px_e4") + greatest(lit(1L), expr("px_e4 div 1000")))
-        .select(col("symbol"),
-          (col("bid_e4").cast("double") / 10000.0).as("bid_price"),
-          col("volume").as("bid_size"),
-          (col("ask_e4").cast("double") / 10000.0).as("ask_price"),
-          (col("volume") + 1L).as("ask_size"),
-          (unix_millis(col("event_time")) - 500L).as("timestamp"))
-      // One produce with per-row topic routing — the sink contract's
-      // `topic` COLUMN form (no `topic` option set). Staged once per
-      // (JVM, dir) like the plain trades topic.
-      val wire = graft.streaming.Sinks.kafkaProjection(tradeWire)
-        .withColumn("topic", lit("trades_raw"))
-        .unionByName(graft.streaming.Sinks.kafkaProjection(quoteWire)
-          .withColumn("topic", lit("quotes_raw")))
-      val topicDir = ReplayStaging.stagedDir(s"ktopic_multi|$dir", wire) { (ktmp, f) =>
-        val td = ktmp.resolve("topics").toString
-        f.write.mode("append").format("graft-testkafka")
-          .option("path", td).option("partitions", "4")
-          .save()
-        td
-      }
-      // ONE subscribe scan; branch on the topic metadata column via
-      // the production helper, decode per contract, union.
-      val raw = s.readStream.format("graft-testkafka")
-        .option("path", topicDir).option("partitions", "4").load()
-      val trades = graft.streaming.TradeStreams
-        .parseTrades(graft.streaming.TradeStreams.topicBranch(raw, "trades_raw"))
-        .select(lit("trade").as("feed"), col("symbol"),
-          col("timestamp").as("ts_ms"), col("price"), col("volume"),
-          lit(null).cast("double").as("bid_price"),
-          lit(null).cast("double").as("ask_price"),
-          lit(null).cast("long").as("bid_size"),
-          lit(null).cast("long").as("ask_size"))
-      val quotes = graft.streaming.QuoteStreams
-        .parseQuotes(graft.streaming.TradeStreams.topicBranch(raw, "quotes_raw"))
-        .select(lit("quote").as("feed"), col("symbol"),
-          col("timestamp").as("ts_ms"),
-          lit(null).cast("double").as("price"),
-          lit(null).cast("long").as("volume"),
-          col("bid_price"), col("ask_price"), col("bid_size"), col("ask_size"))
-      val outDir = tmp.resolve("out").toString
-      val q = trades.unionByName(quotes)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
+  def streamMultiTopicReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr16") { d =>
+    val silver = silverM(s, dir)
+    val tradeWire = silver.select(col("symbol"), col("price"), col("volume"),
+      unix_millis(col("event_time")).as("timestamp"),
+      array().cast("array<string>").as("conditions"))
+    val pxE4 = graft.operators.Indicators.ticksE4(col("price"))
+    val quoteWire = silver.filter(col("event_id") % 3 === 0)
+      .withColumn("px_e4", pxE4)
+      .withColumn("bid_e4", col("px_e4") - greatest(lit(1L), expr("px_e4 div 2000")))
+      .withColumn("ask_e4", col("px_e4") + greatest(lit(1L), expr("px_e4 div 1000")))
+      .select(col("symbol"),
+        (col("bid_e4").cast("double") / 10000.0).as("bid_price"),
+        col("volume").as("bid_size"),
+        (col("ask_e4").cast("double") / 10000.0).as("ask_price"),
+        (col("volume") + 1L).as("ask_size"),
+        (unix_millis(col("event_time")) - 500L).as("timestamp"))
+    // One produce with per-row topic routing — the sink contract's
+    // `topic` COLUMN form (no `topic` option set). Staged once per
+    // (JVM, dir) like the plain trades topic.
+    val wire = graft.streaming.Sinks.kafkaProjection(tradeWire)
+      .withColumn("topic", lit("trades_raw"))
+      .unionByName(graft.streaming.Sinks.kafkaProjection(quoteWire)
+        .withColumn("topic", lit("quotes_raw")))
+    val topicDir = ReplayStaging.stagedDir(s"ktopic_multi|$dir", wire) { (ktmp, f) =>
+      val td = ktmp.resolve("topics").toString
+      f.write.mode("append").format("graft-testkafka")
+        .option("path", td).option("partitions", "4")
+        .save()
+      td
     }
+    // ONE subscribe scan; branch on the topic metadata column via
+    // the production helper, decode per contract, union.
+    val raw = s.readStream.format("graft-testkafka")
+      .option("path", topicDir).option("partitions", "4").load()
+    val trades = graft.streaming.TradeStreams
+      .parseTrades(graft.streaming.TradeStreams.topicBranch(raw, "trades_raw"))
+      .select(lit("trade").as("feed"), col("symbol"),
+        col("timestamp").as("ts_ms"), col("price"), col("volume"),
+        lit(null).cast("double").as("bid_price"),
+        lit(null).cast("double").as("ask_price"),
+        lit(null).cast("long").as("bid_size"),
+        lit(null).cast("long").as("ask_size"))
+    val quotes = graft.streaming.QuoteStreams
+      .parseQuotes(graft.streaming.TradeStreams.topicBranch(raw, "quotes_raw"))
+      .select(lit("quote").as("feed"), col("symbol"),
+        col("timestamp").as("ts_ms"),
+        lit(null).cast("double").as("price"),
+        lit(null).cast("long").as("volume"),
+        col("bid_price"), col("ask_price"), col("bid_size"), col("ask_size"))
+    s.read.parquet(d.run(trades.unionByName(quotes)))
   }
 
   /** SR17 — Kafka ADMISSION CONTROL under the oracle (r13): the real
@@ -1057,66 +851,40 @@ object StreamReplayQueries {
     * batches resumes from the partial-file offset without loss or
     * duplication.
     */
-  def streamRateLimitReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    withDrainScratch("graft_sr17_") { tmp =>
-      val silver = silverM(s, dir)
-      val topicDir = stagedTradesTopic(s, dir)
-      // Cap = a quarter of the feed (silver is localCheckpoint-
-      // materialized, so the sizing count is O(1) re-reads).
-      val cap = math.max(1L, (silver.count() + 3) / 4)
-      val raw = s.readStream.format("graft-testkafka")
-        .option("path", topicDir).option("partitions", "4")
-        .option("maxOffsetsPerTrigger", cap.toString)
-        .load()
-      val parsed = raw.select(col("partition").as("kafka_partition"),
-          col("offset").as("kafka_offset"),
-          from_json(col("value").cast("string"),
-            graft.streaming.TradeStreams.tradeSchema).as("trade"))
-        .select(col("kafka_partition"), col("kafka_offset"),
-          col("trade.symbol").as("symbol"),
-          col("trade.timestamp").as("ts_ms"),
-          col("trade.price").as("price"),
-          col("trade.volume").as("volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      // The drained files are read twice (dense-offset guard + the
-      // returned frame) — both lazy scans of a silver-sized parquet
-      // dir, cheaper than the former eager checkpoint pass + cache.
-      val out = s.read.parquet(outDir)
-      // Dense-offset guard (bounded: ≤4 groups): offsets per partition
-      // must be exactly [0, n).
-      val bad = out.groupBy(col("kafka_partition"))
-        .agg(count(lit(1)).as("n"), min("kafka_offset").as("mn"),
-          max("kafka_offset").as("mx"),
-          countDistinct("kafka_offset").as("nd"))
-        .filter(!(col("mn") === 0 && col("mx") === col("n") - 1 &&
-          col("nd") === col("n")))
-        .count()
-      require(bad == 0L, s"sr17: non-dense kafka offsets in $bad partitions")
-      out.select(col("symbol"), col("ts_ms"), col("price"), col("volume"))
-    }
+  def streamRateLimitReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr17") { d =>
+    // Cap = a quarter of the feed (silver is localCheckpoint-
+    // materialized, so the sizing count is O(1) re-reads).
+    val cap = math.max(1L, (silverM(s, dir).count() + 3) / 4)
+    val raw = s.readStream.format("graft-testkafka")
+      .option("path", stagedTradesTopic(s, dir)).option("partitions", "4")
+      .option("maxOffsetsPerTrigger", cap.toString)
+      .load()
+    val parsed = raw.select(col("partition").as("kafka_partition"),
+        col("offset").as("kafka_offset"),
+        from_json(col("value").cast("string"),
+          graft.streaming.TradeStreams.tradeSchema).as("trade"))
+      .select(col("kafka_partition"), col("kafka_offset"),
+        col("trade.symbol").as("symbol"),
+        col("trade.timestamp").as("ts_ms"),
+        col("trade.price").as("price"),
+        col("trade.volume").as("volume"))
+    // The drained files are read twice (dense-offset guard + the
+    // returned frame) — both lazy scans of a silver-sized parquet
+    // dir, cheaper than the former eager checkpoint pass + cache.
+    val out = s.read.parquet(d.run(parsed))
+    // Dense-offset guard (bounded: ≤4 groups): offsets per partition
+    // must be exactly [0, n).
+    val bad = out.groupBy(col("kafka_partition"))
+      .agg(count(lit(1)).as("n"), min("kafka_offset").as("mn"),
+        max("kafka_offset").as("mx"),
+        countDistinct("kafka_offset").as("nd"))
+      .filter(!(col("mn") === 0 && col("mx") === col("n") - 1 &&
+        col("nd") === col("n")))
+      .count()
+    require(bad == 0L, s"sr17: non-dense kafka offsets in $bad partitions")
+    out.select(col("symbol"), col("ts_ms"), col("price"), col("volume"))
   }
 
-  /** SR18 — per-partition `startingOffsets` offset JSON under the
-    * oracle (r13 verdict item #4): `{"topic":{"partition":offset}}`
-    * mid-topic resume, the commonest operational Kafka knob after
-    * maxOffsetsPerTrigger (backfill repair). Records are keyed by a
-    * side tag (event_id parity → 'feed-a'/'feed-b', murmur2 partitions
-    * checked disjoint at runtime) and produced as ONE record file in
-    * event_id order (single sorted write task), so each partition's
-    * offsets are exactly the side's event_id ranks — deterministic and
-    * oracle-expressible as a per-side ROW_NUMBER. The consume then
-    * starts the two partitions at DIFFERENT offsets (side A at 7, side
-    * B at 3); the drained set must equal silver minus each side's
-    * skipped prefix. KafkaAdmissionSpec pins the mechanics (floors on
-    * streaming + batch scans, -2/earliest sentinel, validation
-    * failures, batch-latest rejection).
-    */
   /** Stage silver as ONE sorted record file of a two-key topic: keys
     * 'feed-a'/'feed-b' by event_id parity (murmur2 partitions checked
     * disjoint), line order = event_id order, so each partition's
@@ -1163,28 +931,39 @@ object StreamReplayQueries {
     (topicDir, pA, pB)
   }
 
-  def streamStartOffsetsReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    withDrainScratch("graft_sr18_") { tmp =>
-      val (topicDir, pA, pB) = stagedSidedTopic(s, dir, decoy = false)
-      val raw = s.readStream.format("graft-testkafka")
-        .option("path", topicDir).option("partitions", "4")
-        .option("startingOffsets", s"""{"trades_raw":{"$pA":7,"$pB":3}}""")
-        .load()
-      val parsed = raw.select(col("key").cast("string").as("side"),
-          from_json(col("value").cast("string"), org.apache.spark.sql.types.StructType.fromDDL(
-            "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT")).as("t"))
-        .select(col("side"), col("t.symbol").as("symbol"),
-          col("t.timestamp").as("ts_ms"),
-          col("t.price").as("price"), col("t.volume").as("volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+  /** The sided topic's (side, symbol, ts_ms, price, volume) decode —
+    * sr18, sr21 and p8 read the same wire form.
+    */
+  private def sidedTrades(raw: DataFrame): DataFrame =
+    raw.select(col("key").cast("string").as("side"),
+        from_json(col("value").cast("string"), StructType.fromDDL(
+          "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT")).as("t"))
+      .select(col("side"), col("t.symbol").as("symbol"),
+        col("t.timestamp").as("ts_ms"),
+        col("t.price").as("price"), col("t.volume").as("volume"))
+
+  /** SR18 — per-partition `startingOffsets` offset JSON under the
+    * oracle (r13 verdict item #4): `{"topic":{"partition":offset}}`
+    * mid-topic resume, the commonest operational Kafka knob after
+    * maxOffsetsPerTrigger (backfill repair). Records are keyed by a
+    * side tag (event_id parity → 'feed-a'/'feed-b', murmur2 partitions
+    * checked disjoint at runtime) and produced as ONE record file in
+    * event_id order (single sorted write task), so each partition's
+    * offsets are exactly the side's event_id ranks — deterministic and
+    * oracle-expressible as a per-side ROW_NUMBER. The consume then
+    * starts the two partitions at DIFFERENT offsets (side A at 7, side
+    * B at 3); the drained set must equal silver minus each side's
+    * skipped prefix. KafkaAdmissionSpec pins the mechanics (floors on
+    * streaming + batch scans, -2/earliest sentinel, validation
+    * failures, batch-latest rejection).
+    */
+  def streamStartOffsetsReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr18") { d =>
+    val (topicDir, pA, pB) = stagedSidedTopic(s, dir, decoy = false)
+    val raw = s.readStream.format("graft-testkafka")
+      .option("path", topicDir).option("partitions", "4")
+      .option("startingOffsets", s"""{"trades_raw":{"$pA":7,"$pB":3}}""")
+      .load()
+    s.read.parquet(d.run(sidedTrades(raw)))
   }
 
   /** SR21 — SEEK-THEN-ADMIT under the oracle (r14): per-partition
@@ -1198,32 +977,17 @@ object StreamReplayQueries {
     * is ceil(admissible/cap) rate-limited micro-batches with mid-file
     * checkpoint offsets instead of sr18's single batch.
     */
-  def streamSeekAdmitReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    withDrainScratch("graft_sr21_") { tmp =>
-      val (topicDir, pA, pB) = stagedSidedTopic(s, dir, decoy = false)
-      // Admissible = all but the 10 floored records; cap cuts the
-      // drain into ~4 rate-limited batches at any SF.
-      val cap = math.max(1L, (silverM(s, dir).count() - 10 + 3) / 4)
-      val raw = s.readStream.format("graft-testkafka")
-        .option("path", topicDir).option("partitions", "4")
-        .option("startingOffsets", s"""{"trades_raw":{"$pA":7,"$pB":3}}""")
-        .option("maxOffsetsPerTrigger", cap.toString)
-        .load()
-      val parsed = raw.select(col("key").cast("string").as("side"),
-          from_json(col("value").cast("string"), org.apache.spark.sql.types.StructType.fromDDL(
-            "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT")).as("t"))
-        .select(col("side"), col("t.symbol").as("symbol"),
-          col("t.timestamp").as("ts_ms"),
-          col("t.price").as("price"), col("t.volume").as("volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+  def streamSeekAdmitReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr21") { d =>
+    val (topicDir, pA, pB) = stagedSidedTopic(s, dir, decoy = false)
+    // Admissible = all but the 10 floored records; cap cuts the
+    // drain into ~4 rate-limited batches at any SF.
+    val cap = math.max(1L, (silverM(s, dir).count() - 10 + 3) / 4)
+    val raw = s.readStream.format("graft-testkafka")
+      .option("path", topicDir).option("partitions", "4")
+      .option("startingOffsets", s"""{"trades_raw":{"$pA":7,"$pB":3}}""")
+      .option("maxOffsetsPerTrigger", cap.toString)
+      .load()
+    s.read.parquet(d.run(sidedTrades(raw)))
   }
 
   /** SR22 — ReadMinRows admission under the oracle (r15, verdict item
@@ -1253,58 +1017,49 @@ object StreamReplayQueries {
     * The poll waits on the engine's own numInputRows sum reaching the
     * feed size, which only the deadline-fired tail batch completes.
     */
-  def streamMinOffsetsReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    withDrainScratch("graft_sr22_") { tmp =>
-      val silver = silverM(s, dir)
-      val topicDir = stagedTradesTopic(s, dir)
-      val n = silver.count()
-      require(n >= 16, s"sr22 needs a non-trivial feed, got $n rows")
-      // cap = n/4 + 1 (not ceil(n/4)): guarantees 0 < tail < cap for
-      // every n, so the fourth batch is ALWAYS sub-min and the
-      // deferral the query require()s below always occurs.
-      val cap = n / 4 + 1
-      val raw = s.readStream.format("graft-testkafka")
-        .option("path", topicDir).option("partitions", "4")
-        .option("maxOffsetsPerTrigger", cap.toString)
-        .option("minOffsetsPerTrigger", cap.toString)
-        .option("maxTriggerDelay", "1s")
-        .load()
-      val parsed = raw.select(
-          from_json(col("value").cast("string"),
-            graft.streaming.TradeStreams.tradeSchema).as("trade"))
-        .select(col("trade.symbol").as("symbol"),
-          col("trade.timestamp").as("ts_ms"),
-          col("trade.price").as("price"),
-          col("trade.volume").as("volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .format("parquet").option("path", outDir)
-        .start()
-      try {
-        val t0 = System.nanoTime()
-        def drainedRows(): Long = q.recentProgress.toSeq.map(_.numInputRows).sum
-        while (drainedRows() < n && q.exception.isEmpty &&
-          (System.nanoTime() - t0) < 120L * 1000 * 1000 * 1000) Thread.sleep(50)
-        // A query that died mid-drain must surface ITS error, not a
-        // misleading drained-X-of-N timeout two minutes later.
-        q.exception.foreach(throw _)
-        require(drainedRows() == n,
-          s"sr22: drained ${drainedRows()} of $n rows before the poll timeout")
-      } finally q.stop()
-      drain(q, tmp) // awaitTermination returns post-stop; records profile
-      val fired = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-      val sizes = fired.map(_.numInputRows)
-      require(sizes.length == 4 && sizes.take(3).forall(_ == cap) &&
-        sizes.last == n - 3 * cap,
-        s"sr22: batch shape ${sizes.mkString(",")} != $cap,$cap,$cap,${n - 3 * cap}")
-      val gapMs = java.time.Instant.parse(fired.last.timestamp).toEpochMilli -
-        java.time.Instant.parse(fired(2).timestamp).toEpochMilli
-      require(gapMs >= 900L,
-        s"sr22: the sub-min tail fired after ${gapMs}ms — no deferral observed")
-      s.read.parquet(outDir)
-    }
+  def streamMinOffsetsReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr22") { d =>
+    val n = silverM(s, dir).count()
+    require(n >= 16, s"sr22 needs a non-trivial feed, got $n rows")
+    // cap = n/4 + 1 (not ceil(n/4)): guarantees 0 < tail < cap for
+    // every n, so the fourth batch is ALWAYS sub-min and the
+    // deferral the query require()s below always occurs.
+    val cap = n / 4 + 1
+    val raw = s.readStream.format("graft-testkafka")
+      .option("path", stagedTradesTopic(s, dir)).option("partitions", "4")
+      .option("maxOffsetsPerTrigger", cap.toString)
+      .option("minOffsetsPerTrigger", cap.toString)
+      .option("maxTriggerDelay", "1s")
+      .load()
+    val parsed = raw.select(
+        from_json(col("value").cast("string"),
+          graft.streaming.TradeStreams.tradeSchema).as("trade"))
+      .select(col("trade.symbol").as("symbol"),
+        col("trade.timestamp").as("ts_ms"),
+        col("trade.price").as("price"),
+        col("trade.volume").as("volume"))
+    val q = d.start(parsed, trigger = Trigger.ProcessingTime(0))
+    try {
+      val t0 = System.nanoTime()
+      def drainedRows(): Long = q.recentProgress.toSeq.map(BatchMetric.of(_).input_rows).sum
+      while (drainedRows() < n && q.exception.isEmpty &&
+        (System.nanoTime() - t0) < 120L * 1000 * 1000 * 1000) Thread.sleep(50)
+      // A query that died mid-drain must surface ITS error, not a
+      // misleading drained-X-of-N timeout two minutes later.
+      q.exception.foreach(throw _)
+      require(drainedRows() == n,
+        s"sr22: drained ${drainedRows()} of $n rows before the poll timeout")
+    } finally q.stop()
+    // awaitTermination returns post-stop.
+    val fired = d.await(q).filter(_.input_rows > 0)
+    val sizes = fired.map(_.input_rows)
+    require(sizes.length == 4 && sizes.take(3).forall(_ == cap) &&
+      sizes.last == n - 3 * cap,
+      s"sr22: batch shape ${sizes.mkString(",")} != $cap,$cap,$cap,${n - 3 * cap}")
+    val gapMs = java.time.Instant.parse(fired.last.ts).toEpochMilli -
+      java.time.Instant.parse(fired(2).ts).toEpochMilli
+    require(gapMs >= 900L,
+      s"sr22: the sub-min tail fired after ${gapMs}ms — no deferral observed")
+    s.read.parquet(d.out)
   }
 
   /** SR23 — HEARTBEAT rows un-stick an IDLE source, under the oracle
@@ -1326,55 +1081,34 @@ object StreamReplayQueries {
     * 'HB' rows would mint extra windows: same failure. One row proves
     * both halves of the mitigation.
     */
-  def streamHeartbeatReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamHeartbeatReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr23") { d =>
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr23_") { tmp =>
-      // Bounded 1-row aggregate: the heartbeat's deterministic stamp.
-      val maxTs = silver.agg(max(col("event_time"))).collect()(0).getTimestamp(0)
-      val feedB = silver
-        .filter(col("event_time") < lit("2024-01-10").cast("timestamp"))
-        .select(col("symbol"), col("event_time"), col("volume"),
-          lit(false).as("hb"))
-        .unionByName(s.range(3).select(lit("HB").as("symbol"),
-          lit(maxTs).as("event_time"), lit(0L).cast("long").as("volume"),
-          lit(true).as("hb")))
-      val stagingA = stagedChrono(s"silver|$dir", silver)
-      // Real prefix first, heartbeats after — the idle period's shape.
-      val stagingB = ReplayStaging.customSlices(s"silver_hb|$dir", feedB,
-        Seq(!col("hb"), col("hb")))
-      val srcA = s.readStream.schema(silver.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stagingA)
-        .withWatermark("event_time", "3 days")
-        .select(lit("trade").as("feed"), col("symbol"),
-          col("event_time"), col("volume"))
-      // The watermark-then-strip order and the un-pushable predicate
-      // live in ONE place since r16 (Heartbeats.watermarkAndStrip) —
-      // the production decorator (App --heartbeat-secs) and this
-      // oracle-gated replay share it, so neither can drift from the
-      // other. Same oracle row as the hand-built r15 form.
-      val srcB = Heartbeats.watermarkAndStrip(
-        s.readStream.schema(feedB.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stagingB),
+    // Bounded 1-row aggregate: the heartbeat's deterministic stamp.
+    val maxTs = silver.agg(max(col("event_time"))).collect()(0).getTimestamp(0)
+    val feedB = silver
+      .filter(col("event_time") < lit("2024-01-10").cast("timestamp"))
+      .select(col("symbol"), col("event_time"), col("volume"),
+        lit(false).as("hb"))
+      .unionByName(s.range(3).select(lit("HB").as("symbol"),
+        lit(maxTs).as("event_time"), lit(0L).cast("long").as("volume"),
+        lit(true).as("hb")))
+    val srcA = sliced(s, silver.schema, stagedChrono(s"silver|$dir", silver))
+      .withWatermark("event_time", "3 days")
+      .select(lit("trade").as("feed"), col("symbol"),
+        col("event_time"), col("volume"))
+    // Real prefix first, heartbeats after — the idle period's shape.
+    // The watermark-then-strip order and the un-pushable predicate
+    // live in ONE place since r16 (Heartbeats.watermarkAndStrip) —
+    // the production decorator (App --heartbeat-secs) and this
+    // oracle-gated replay share it, so neither can drift from the
+    // other. Same oracle row as the hand-built r15 form.
+    val srcB = Heartbeats.watermarkAndStrip(
+        sliced(s, feedB.schema, ReplayStaging.customSlices(s"silver_hb|$dir", feedB,
+          Seq(!col("hb"), col("hb")))),
         "event_time", "3 days", hbCol = "hb")
-        .select(lit("quote").as("feed"), col("symbol"),
-          col("event_time"), col("volume"))
-      val agg = srcA.unionByName(srcB)
-        .groupBy(col("feed"), col("symbol"),
-          window(col("event_time"), "5 minutes"))
-        .agg(count(lit(1)).as("n_events"), sum(col("volume")).as("sum_volume"))
-        .select(col("feed"), col("symbol"),
-          unix_millis(col("window.start")).as("ws_ms"),
-          unix_millis(col("window.end")).as("we_ms"),
-          col("n_events"), col("sum_volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = agg.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+      .select(lit("quote").as("feed"), col("symbol"),
+        col("event_time"), col("volume"))
+    s.read.parquet(d.run(windowCounts(srcA.unionByName(srcB))))
   }
 
   /** P8 — the Kafka BATCH bounded read (r14): `spark.read` over the
@@ -1394,18 +1128,12 @@ object StreamReplayQueries {
     // cache, so the bounded batch scan can stay LAZY — no scratch of
     // its own and no eager materialization pass.
     val (topicDir, pA, pB) = stagedSidedTopic(s, dir, decoy = true)
-    s.read.format("graft-testkafka")
+    sidedTrades(s.read.format("graft-testkafka")
       .option("path", topicDir).option("partitions", "4")
       .option("subscribe", "trades_raw")
       .option("startingOffsets", s"""{"trades_raw":{"$pA":7,"$pB":3}}""")
       .option("endingOffsets", s"""{"trades_raw":{"$pA":400,"$pB":-1}}""")
-      .load()
-      .select(col("key").cast("string").as("side"),
-        from_json(col("value").cast("string"), org.apache.spark.sql.types.StructType.fromDDL(
-          "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT")).as("t"))
-      .select(col("side"), col("t.symbol").as("symbol"),
-        col("t.timestamp").as("ts_ms"),
-        col("t.price").as("price"), col("t.volume").as("volume"))
+      .load())
   }
 
   /** SR19 — SCHEMA-EVOLUTION replay under the oracle (r13 verdict item
@@ -1427,58 +1155,49 @@ object StreamReplayQueries {
     * SchemaDriftSpec (add-nullable and reader-ahead → null defaults;
     * type flips → corrupt-record null, loud under a count guard).
     */
-  def streamEvolutionReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
-    // The topic stays PER-INVOCATION (transient, deleted with the
-    // checkpoint): the two-epoch produce interleaves with the drains
-    // on one checkpoint, so a shared staging cannot express it.
-    withDrainScratch("graft_sr19_", transient = Seq("ckpt", "topic")) { tmp =>
-      val silver = silverM(s, dir)
-      val topicDir = tmp.resolve("topic").toString
-      val outDir = tmp.resolve("out").toString
-      val ckpt = tmp.resolve("ckpt").toString
-      val v1Reader = org.apache.spark.sql.types.StructType.fromDDL(
-        "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT")
-      val v2Reader = org.apache.spark.sql.types.StructType.fromDDL(
-        "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT, exchange STRING")
-      def produce(wire: DataFrame): Unit =
-        wire.write.mode("append").format("graft-testkafka")
-          .option("path", topicDir).option("topic", "trades_raw")
-          .option("partitions", "4").save()
-      def drainWith(reader: org.apache.spark.sql.types.StructType): Unit = {
-        val raw = s.readStream.format("graft-testkafka")
-          .option("path", topicDir).option("partitions", "4").load()
-        val cols = Seq(col("t.symbol").as("symbol"),
-          col("t.timestamp").as("ts_ms"),
-          col("t.price").as("price"), col("t.volume").as("volume")) ++
-          (if (reader.fieldNames.contains("exchange"))
-            Seq(col("t.exchange").as("exchange")) else Seq.empty)
-        val q = raw.select(from_json(col("value").cast("string"), reader).as("t"))
-          .select(cols: _*)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .format("parquet").option("path", outDir)
-          .start()
-        drain(q, tmp)
-      }
-      // Epoch 1: current contract, current reader.
-      produce(silver.filter(col("event_id") % 2 === 0)
-        .select(col("symbol").as("key"),
-          to_json(struct(col("symbol"), col("price"), col("volume"),
-            unix_millis(col("event_time")).as("timestamp"))).as("value")))
-      drainWith(v1Reader)
-      // Epoch 2: BACKWARD-evolved contract; upgraded reader restarts
-      // on the same checkpoint and consumes only the new records.
-      produce(silver.filter(col("event_id") % 2 === 1)
-        .select(col("symbol").as("key"),
-          to_json(struct(col("symbol"), col("price"), col("volume"),
-            unix_millis(col("event_time")).as("timestamp"),
-            concat(lit("XN-"), col("symbol")).as("exchange"))).as("value")))
-      drainWith(v2Reader)
-      s.read.option("mergeSchema", "true").parquet(outDir)
-        .select(col("exchange"), col("symbol"), col("ts_ms"),
-          col("price"), col("volume"))
+  def streamEvolutionReplay(s: SparkSession, dir: String): DataFrame =
+      // The topic stays PER-INVOCATION (transient, deleted with the
+      // checkpoint): the two-epoch produce interleaves with the drains
+      // on one checkpoint, so a shared staging cannot express it.
+      replay(s, "sr19", transient = Seq("ckpt", "topic")) { d =>
+    val silver = silverM(s, dir)
+    val topicDir = d.tmp.resolve("topic").toString
+    val v1Reader = StructType.fromDDL(
+      "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT")
+    val v2Reader = StructType.fromDDL(
+      "symbol STRING, price DOUBLE, volume BIGINT, timestamp BIGINT, exchange STRING")
+    def produce(wire: DataFrame): Unit =
+      wire.write.mode("append").format("graft-testkafka")
+        .option("path", topicDir).option("topic", "trades_raw")
+        .option("partitions", "4").save()
+    def drainWith(reader: StructType): Unit = {
+      val raw = s.readStream.format("graft-testkafka")
+        .option("path", topicDir).option("partitions", "4").load()
+      val cols = Seq(col("t.symbol").as("symbol"),
+        col("t.timestamp").as("ts_ms"),
+        col("t.price").as("price"), col("t.volume").as("volume")) ++
+        (if (reader.fieldNames.contains("exchange"))
+          Seq(col("t.exchange").as("exchange")) else Seq.empty)
+      d.run(raw.select(from_json(col("value").cast("string"), reader).as("t"))
+        .select(cols: _*))
     }
+    // Epoch 1: current contract, current reader.
+    produce(silver.filter(col("event_id") % 2 === 0)
+      .select(col("symbol").as("key"),
+        to_json(struct(col("symbol"), col("price"), col("volume"),
+          unix_millis(col("event_time")).as("timestamp"))).as("value")))
+    drainWith(v1Reader)
+    // Epoch 2: BACKWARD-evolved contract; upgraded reader restarts
+    // on the same checkpoint and consumes only the new records.
+    produce(silver.filter(col("event_id") % 2 === 1)
+      .select(col("symbol").as("key"),
+        to_json(struct(col("symbol"), col("price"), col("volume"),
+          unix_millis(col("event_time")).as("timestamp"),
+          concat(lit("XN-"), col("symbol")).as("exchange"))).as("value")))
+    drainWith(v2Reader)
+    s.read.option("mergeSchema", "true").parquet(d.out)
+      .select(col("exchange"), col("symbol"), col("ts_ms"),
+        col("price"), col("volume"))
   }
 
   /** SR20 — MULTI-SOURCE watermark semantics under the oracle (r13
@@ -1499,37 +1218,28 @@ object StreamReplayQueries {
     * pinned per-batch in MultiWatermarkSpec from
     * StreamingQueryProgress.
     */
-  def streamUnionWatermarkReplay(s: SparkSession, dir: String): DataFrame = withReplayConfs(s) {
+  def streamUnionWatermarkReplay(s: SparkSession, dir: String): DataFrame = replay(s, "sr20") { d =>
     val silver = silverM(s, dir)
-    withDrainScratch("graft_sr20_") { tmp =>
-      val feedB = silver.filter(col("event_id") % 3 === 0 &&
-        col("event_time") < lit("2024-01-20").cast("timestamp"))
-      val stagingA = stagedChrono(s"silver|$dir", silver)
-      val stagingB = ReplayStaging.chronoSlices(s"silver_b20|$dir", feedB)
-      def src(staging: String, feed: String) =
-        s.readStream.schema(silver.schema)
-          .option("maxFilesPerTrigger", "1").parquet(staging)
-          .withWatermark("event_time", "3 days")
-          .select(lit(feed).as("feed"), col("symbol"),
-            col("event_time"), col("volume"))
-      val agg = src(stagingA, "trade").unionByName(src(stagingB, "quote"))
-        .groupBy(col("feed"), col("symbol"),
-          window(col("event_time"), "5 minutes"))
-        .agg(count(lit(1)).as("n_events"), sum(col("volume")).as("sum_volume"))
-        .select(col("feed"), col("symbol"),
-          unix_millis(col("window.start")).as("ws_ms"),
-          unix_millis(col("window.end")).as("we_ms"),
-          col("n_events"), col("sum_volume"))
-      val outDir = tmp.resolve("out").toString
-      val q = agg.writeStream.outputMode("append")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      drain(q, tmp)
-      s.read.parquet(outDir)
-    }
+    val feedB = silver.filter(col("event_id") % 3 === 0 &&
+      col("event_time") < lit("2024-01-20").cast("timestamp"))
+    def src(staging: String, feed: String) =
+      sliced(s, silver.schema, staging)
+        .withWatermark("event_time", "3 days")
+        .select(lit(feed).as("feed"), col("symbol"),
+          col("event_time"), col("volume"))
+    s.read.parquet(d.run(windowCounts(
+      src(stagedChrono(s"silver|$dir", silver), "trade")
+        .unionByName(src(ReplayStaging.chronoSlices(s"silver_b20|$dir", feedB), "quote")))))
   }
+
+  /** sr20/sr23's per-(feed, symbol) 5-minute event counts and volume. */
+  private def windowCounts(feeds: DataFrame): DataFrame =
+    feeds.groupBy(col("feed"), col("symbol"), window(col("event_time"), "5 minutes"))
+      .agg(count(lit(1)).as("n_events"), sum(col("volume")).as("sum_volume"))
+      .select(col("feed"), col("symbol"),
+        unix_millis(col("window.start")).as("ws_ms"),
+        unix_millis(col("window.end")).as("we_ms"),
+        col("n_events"), col("sum_volume"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sr1_stream_gold_replay" -> (streamGoldReplay _),

@@ -18,29 +18,6 @@ case class Trade(
     conditions: Seq[String],
     event_time: Timestamp)
 
-/** Raw wire-format trade (Finnhub field names, FIXTURES.md §1). */
-case class RawTrade(
-    s: String,
-    p: Double,
-    v: Long,
-    t: Long,
-    c: Seq[String])
-
-/** One OHLCV bar (OHLCV_SCHEMA transformations.py:34-44 + vwap,
-  * keyspace.cql:77-97).
-  */
-case class OhlcvBar(
-    symbol: String,
-    window_start: Timestamp,
-    window_end: Timestamp,
-    open: Double,
-    high: Double,
-    low: Double,
-    close: Double,
-    volume: Long,
-    trade_count: Long,
-    vwap: Double)
-
 /** Latest-price snapshot row (keyspace.cql:132-141). change/pct are
   * None for a symbol's first-ever trade — the same NULL the batch
   * form's LEAD(price) produces (LatestPrices.snapshot), so the

@@ -3,7 +3,7 @@ package graft.streaming
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Engine-side observability for the streaming graph — the analog of
   * the reference's Prometheus/Grafana monitoring and its one hard SLO
@@ -23,7 +23,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Monitoring {
 
-  /** One micro-batch's operational record. */
+  /** One micro-batch's operational record: the engine's own phase
+    * split (`durationMs`), state size and commit time, and rows the
+    * watermark dropped as late. `source_ms` is getBatch + latestOffset.
+    * State bytes are the store's resident footprint: the max of
+    * `memoryUsedBytes` (HDFS-backed store, RocksDB block cache) and
+    * RocksDB's on-disk SST total, per stateful operator.
+    */
   case class BatchMetric(
       query: String,
       batch_id: Long,
@@ -32,7 +38,45 @@ object Monitoring {
       input_rows_per_sec: Double,
       processed_rows_per_sec: Double,
       batch_duration_ms: Long,
-      state_rows: Long)
+      state_rows: Long,
+      add_batch_ms: Long,
+      wal_commit_ms: Long,
+      commit_offsets_ms: Long,
+      query_planning_ms: Long,
+      source_ms: Long,
+      state_commit_ms: Long,
+      state_bytes: Long,
+      late_dropped_rows: Long)
+
+  object BatchMetric {
+    /** The one place a `StreamingQueryProgress` is read. */
+    def of(p: StreamingQueryProgress): BatchMetric = {
+      def phase(k: String): Long = Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
+      val ops = p.stateOperators.toSeq
+      BatchMetric(
+        query = Option(p.name).getOrElse(p.id.toString),
+        batch_id = p.batchId,
+        ts = p.timestamp,
+        input_rows = p.numInputRows,
+        input_rows_per_sec = nanSafe(p.inputRowsPerSecond),
+        processed_rows_per_sec = nanSafe(p.processedRowsPerSecond),
+        batch_duration_ms = phase("triggerExecution"),
+        state_rows = ops.map(_.numRowsTotal).sum,
+        add_batch_ms = phase("addBatch"),
+        wal_commit_ms = phase("walCommit"),
+        commit_offsets_ms = phase("commitOffsets"),
+        query_planning_ms = phase("queryPlanning"),
+        source_ms = phase("getBatch") + phase("latestOffset"),
+        state_commit_ms = ops.map(_.commitTimeMs).sum,
+        state_bytes = ops.map { op =>
+          val sst = Option(op.customMetrics.get("rocksdbSstFileSize")).map(_.longValue).getOrElse(0L)
+          math.max(op.memoryUsedBytes, sst)
+        }.sum,
+        late_dropped_rows = ops.map(_.numRowsDroppedByWatermark).sum)
+    }
+
+    private def nanSafe(d: Double): Double = if (d.isNaN || d.isInfinite) 0.0 else d
+  }
 
   /** Bounded per-batch progress recorder. Thread-safe: listener
     * callbacks arrive on the streams bus thread while readers
@@ -46,24 +90,12 @@ object Monitoring {
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
 
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      val m = BatchMetric(
-        query = Option(p.name).getOrElse(p.id.toString),
-        batch_id = p.batchId,
-        ts = p.timestamp,
-        input_rows = p.numInputRows,
-        input_rows_per_sec = nanSafe(p.inputRowsPerSecond),
-        processed_rows_per_sec = nanSafe(p.processedRowsPerSecond),
-        batch_duration_ms =
-          Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L),
-        state_rows = p.stateOperators.map(_.numRowsTotal).sum)
+      val m = BatchMetric.of(e.progress)
       synchronized {
         buf.append(m)
         while (buf.size > capacity) buf.removeHead()
       }
     }
-
-    private def nanSafe(d: Double): Double = if (d.isNaN || d.isInfinite) 0.0 else d
 
     def snapshot: Seq[BatchMetric] = synchronized { buf.toSeq }
 

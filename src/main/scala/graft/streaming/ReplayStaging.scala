@@ -94,16 +94,18 @@ object ReplayStaging {
     roots.values.foreach(deleteRecursively)
   }
 
-  /** Register an existing scratch directory for JVM-exit deletion —
-    * the drained-output posture (r18): a replay's result frame reads
-    * its output parquet LAZILY instead of paying an eager
-    * materialization pass, so the files must outlive the query
-    * function. Same lifetime contract as every staged input above.
+  /** Keep a query's drained-output scratch under `key` — the r18
+    * posture: a replay's result frame reads its output parquet LAZILY
+    * instead of paying an eager materialization pass, so the files
+    * must outlive the query function. Registering a new dir under a
+    * key deletes the dir that key kept before, so repeated calls hold
+    * ONE output per query, not one per call: a returned frame stays
+    * valid until the next call of the same query, and a caller that
+    * holds a frame across a second call must materialize it first.
+    * The last output per key is deleted at JVM exit.
     */
-  def keepUntilExit(p: Path): Unit = {
-    roots.put(s"keep:$p", p)
-    ()
-  }
+  def keepUntilExit(key: String, p: Path): Unit =
+    roots.put(s"keep:$key", p).filter(_ != p).foreach(deleteRecursively)
 
   private val onceDone = new ConcurrentHashMap[String, Unit]()
 

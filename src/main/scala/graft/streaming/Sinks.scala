@@ -170,7 +170,7 @@ object Sinks {
       // Cluster rows by their target directory before writing: without
       // this, every one of the 32 writer tasks opens a file in every
       // (date, bucket) directory it sees — a small-file explosion that
-      // cost 4x wall-clock in StreamBench. After the repartition each
+      // cost 4x wall-clock (docs/SCALE.md §2). After the repartition each
       // combo is written by exactly one task -> one file per touched
       // bucket per batch.
       merged
@@ -279,8 +279,9 @@ object Sinks {
       queries.map { case (n, q) => n -> q.isActive }.toMap
 
     /** The managed query handles, by sink name — read-only view for
-      * callers that profile or assert on StreamingQueryProgress
-      * (StreamBench's per-query phase breakdown).
+      * callers that profile or assert on StreamingQueryProgress (the
+      * per-layer phase split of
+      * `python3 perfbench/run.py --workload live --trace 1`).
       */
     def handles: Map[String, StreamingQuery] = queries.toMap
 

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum}
 
 class AppSpec extends SparkSpecBase {
   import spark.implicits._
@@ -168,11 +168,18 @@ class AppSpec extends SparkSpecBase {
     // 10 s sleep. The production default (10 000) is the reference's
     // ingest→silver alert threshold.
     val cfg = App.Config(out = s"$dir/out", checkpoint = s"$dir/ckp",
-      layers = Set("silver"), trigger = "0 seconds", sloMs = 1L)
+      layers = Set("silver", "gold5m"), trigger = "0 seconds", sloMs = 1L)
     val mgr = App.start(spark, mem.toDF(), cfg)
+    def trade(ts: Long): String =
+      s"""{"symbol":"AAPL","price":10.5,"volume":3,"timestamp":$ts,"conditions":[],"ingestion_time":$ts}"""
     try {
-      mem.addData(
-        s"""{"symbol":"AAPL","price":10.5,"volume":3,"timestamp":$t0,"conditions":[],"ingestion_time":$t0}""")
+      mem.addData(trade(t0))
+      mgr.processAllAvailable()
+      // An hour later moves the 10-minute watermark past t0, so a
+      // second trade at t0 + 1 s arrives late and is dropped.
+      mem.addData(trade(t0 + 3600000L))
+      mgr.processAllAvailable()
+      mem.addData(trade(t0 + 1000L))
       mgr.processAllAvailable()
       val listener = mgr.monitor.getOrElse(fail("App.start attached no monitor"))
       assert(listener.snapshot.nonEmpty, "no batch metrics recorded")
@@ -183,6 +190,17 @@ class AppSpec extends SparkSpecBase {
     assert(batches.filter(col("query") === "silver")
       .filter(col("input_rows") > 0).count() > 0,
       "silver's data-carrying batch missing from the exported metrics")
+    // Per-layer phase split, state size and late drops reach the export.
+    val gold = batches.filter(col("query") === "gold5m")
+    val data = gold.filter(col("input_rows") > 0)
+    assert(data.count() > 0, "gold5m's data-carrying batches missing from the export")
+    assert(data.filter(col("add_batch_ms") > 0 && col("wal_commit_ms") >= 0 &&
+      col("commit_offsets_ms") >= 0 && col("query_planning_ms") >= 0 &&
+      col("source_ms") >= 0).count() > 0, "gold5m batches carry no phase split")
+    assert(gold.filter(col("state_rows") > 0 && col("state_bytes") > 0 &&
+      col("state_commit_ms") >= 0).count() > 0, "gold5m batches carry no state size")
+    assert(gold.agg(sum(col("late_dropped_rows"))).head().getLong(0) > 0,
+      "the late trade is not counted as dropped by gold5m's watermark")
     val alerts = spark.read.parquet(s"$dir/out/_metrics/alerts")
     assert(alerts.count() > 0, "SLO alert did not fire in the export")
   }
