@@ -255,8 +255,10 @@ object App {
     require(cfg.heartbeatSecs == 0 || !boundedDrain,
       s"--heartbeat-secs ${cfg.heartbeatSecs} cannot combine with the " +
         s"bounded-drain trigger '${cfg.trigger}': a wall-clock heartbeat " +
-        "marks the entire backlog late. Backfill without heartbeats, " +
-        "then restart the continuous topology with them.")
+        "marks the entire backlog late. Run the backlog through the " +
+        "continuous topology with heartbeats instead, starting each " +
+        "chained level once its upstream has committed the backlog, so " +
+        "it lands in that level's first micro-batch, before any heartbeat.")
     // The indicators layer runs on transformWithState, which only the
     // RocksDB state store provider supports — configure it here (as
     // main() does for the whole app) so callers building their own
@@ -298,19 +300,44 @@ object App {
     // sink deployment) silently hides that history from sink-log-aware
     // readers — surface it loudly instead of letting gold silently
     // recompute from post-upgrade data only.
+    //
+    // The reverse is refused: a checkpoint that has not planned the
+    // batches the directory's sink log already holds (a NEW checkpoint
+    // over an old output). The file sink skips every batch id its log
+    // has seen WITHOUT running it, so the query's first batches lose
+    // their rows, and a stateful layer never commits state for them —
+    // the first batch past the log then dies with
+    // CANNOT_READ_DELTA_FILE_NOT_EXISTS (found in AppSpec's idle
+    // cascade, which restarted silver on fresh checkpoints).
+    val gold1hFromBars = cfg.chained && cfg.layers("gold5m_final")
     for ((layer, dirName) <- Seq("bronze" -> "bronze", "silver" -> "silver",
-           "deadletter" -> "dead_letters", "indicators" -> "indicators")
-         if cfg.layers(layer)) {
+           "deadletter" -> "dead_letters", "indicators" -> "indicators",
+           "gold5m_final" -> "gold5m_final", "gold1h" -> "gold1h")
+         if cfg.layers(layer) && (layer != "gold1h" || gold1hFromBars)) {
       val dir = new org.apache.hadoop.fs.Path(s"${cfg.out}/$dirName")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def lastBatch(log: org.apache.hadoop.fs.Path): Long = {
+        val logFs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!logFs.exists(log)) -1L
+        else logFs.listStatus(log).flatMap(_.getPath.getName.stripSuffix(".compact").toLongOption)
+          .maxOption.getOrElse(-1L)
+      }
       val hasData = fs.exists(dir) && fs.listStatus(dir).nonEmpty
-      val hasLog = fs.exists(new org.apache.hadoop.fs.Path(dir, "_spark_metadata"))
-      if (hasData && !hasLog)
+      val sinkLog = new org.apache.hadoop.fs.Path(dir, "_spark_metadata")
+      if (hasData && !fs.exists(sinkLog))
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"$dir holds data but no _spark_metadata sink log: files written " +
             "before this stream's first commit will be INVISIBLE to " +
             "sink-log-aware readers (including the chained gold source). " +
             "Migrate the history or use a fresh output directory.")
+      val logged = lastBatch(sinkLog)
+      val planned = lastBatch(new org.apache.hadoop.fs.Path(s"${cfg.checkpoint}/$layer/offsets"))
+      require(logged <= planned,
+        s"$dir's sink log holds batches up to $logged, but checkpoint " +
+          s"${cfg.checkpoint}/$layer has planned only up to $planned: the file " +
+          "sink would skip this query's first batches without running them " +
+          "(their rows lost, their state never committed). Resume from the " +
+          "checkpoint that wrote the directory, or write to a fresh one.")
     }
     val parsed = cfg.format match {
       case "json" => TradeStreams.parseTrades(raw)

@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import scala.collection.mutable
 
@@ -95,12 +97,21 @@ object Sinks {
     * dynamically overwritten — per-batch I/O is O(batch keys / bucket
     * density), NOT O(touched date partition). With a 10 s trigger on a
     * hot trading day this is the difference between rewriting a few
-    * key buckets and rewriting the whole day 8,640×. The touched set
-    * is pruned with an explicit OR-of-ANDs predicate on the partition
-    * values (collected from the batch — bounded by batch key count),
-    * so pruning is static and guaranteed, not dependent on runtime
-    * DPP. `nBuckets` trades rewrite granularity against file count;
-    * tune so bucket files stay ~100 MB at the deployment's bar rate.
+    * key buckets and rewriting the whole day 8,640×. `nBuckets` trades
+    * rewrite granularity against file count; tune so bucket files stay
+    * ~100 MB at the deployment's bar rate.
+    *
+    * Job shape: a merge into an existing store runs two Spark jobs.
+    * (1) One collect of the persisted batch's (keys, partitionBy,
+    * bucket) tuples — the only run of the micro-batch plan, bounded by
+    * the batch's changed keys. Both the touched (partition, bucket)
+    * set and the replaced-key set become null-safe literal set filters
+    * (static partition pruning, no join, no broadcast job). (2) One
+    * write: read the touched buckets with the schema the store's
+    * marker records (no footer-inference job), drop the replaced keys,
+    * union the batch, cluster by target directory, overwrite
+    * dynamically. A store's first batch skips (1): the write is the
+    * only job.
     *
     * NOTE a bare dynamic-overwrite of the batch alone is WRONG for
     * update-mode aggregates: a micro-batch carries only the bars that
@@ -108,9 +119,15 @@ object Sinks {
     * that partition's other bars (found in review; regression-tested
     * in StreamingSpec).
     *
-    * Atomicity: dynamic partition overwrite stages files and commits
-    * by per-directory rename — a crash mid-commit can leave a touched
-    * bucket half-replaced (bounded by one bucket, and replaying the
+    * Atomicity: the write job reads the very bucket directories it
+    * overwrites, and that is safe without cutting lineage. Dynamic
+    * partition overwrite stages every task's output under
+    * `.spark-staging-<job>` and replaces the touched directories only
+    * at job commit, which runs after every task of the job — the
+    * read-back scan included — has finished. (Spark's "overwrite a
+    * path that is also being read from" check guards table inserts,
+    * not path writes.) A crash mid-commit can leave a touched bucket
+    * half-replaced (bounded by one bucket, and replaying the
     * micro-batch converges because the merge is idempotent). A table
     * format with a transactional MERGE (Delta/Iceberg) is the slot-in
     * upgrade when one is allowed on the cluster.
@@ -119,89 +136,109 @@ object Sinks {
                   keys: Seq[String], nBuckets: Int = 16): Unit = {
     require(keys.nonEmpty, "upsertByKey needs at least one key column")
     val spark = batch.sparkSession
+    val partCols = partitionBy :+ BucketCol
     val bucketed = batch.withColumn(BucketCol,
       pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int"))
-    val batchP = bucketed.persist()
-    try {
-      val partCols = partitionBy :+ BucketCol
-      // "Exists" must mean "has data": a pre-created empty directory
-      // would make the read-back fail schema inference. Hadoop FS API,
-      // not java.io.File — the store may be hdfs:// or s3a://.
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val exists = fs.exists(hPath) && fs.listStatus(hPath).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
+    // The shape a read of the store returns: data columns, then the
+    // partition columns (typed as the batch types them — directory
+    // names carry no type).
+    def readShape(fields: Seq[StructField]): StructType = ColumnBridge.storeShape(StructType(
+      fields.filterNot(f => partCols.contains(f.name)) ++ partCols.map(bucketed.schema(_))))
+    val batchSchema = readShape(bucketed.schema)
+    // "Exists" must mean "has data": a pre-created empty directory
+    // holds nothing to merge. Hadoop FS API, not java.io.File — the
+    // store may be hdfs:// or s3a://.
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(hPath) && fs.listStatus(hPath).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val layout = specLayout(partitionBy, keys, nBuckets)
+    // Cluster rows by their target directory before writing: without
+    // this, every one of the 32 writer tasks opens a file in every
+    // (date, bucket) directory it sees — a small-file explosion that
+    // cost 4x wall-clock (docs/SCALE.md §2). After the repartition each
+    // combo is written by exactly one task -> one file per touched
+    // bucket per batch.
+    def write(rows: DataFrame, mode: String): Unit =
+      rows.repartition(partCols.map(col): _*)
+        .write
+        .option("partitionOverwriteMode", "dynamic")
+        .mode(mode)
+        .partitionBy(partCols: _*)
+        .parquet(path)
+    if (!exists) {
+      // The spec marker is written BEFORE the first data write: a
+      // crash between the two then leaves marker+no-data (harmless —
+      // `exists` only counts data, so replay re-runs this branch and
+      // overwrites the marker idempotently), never data+no-marker,
+      // which would wedge checkpoint replay behind the marker check
+      // forever.
+      writeStoreSpec(fs, hPath, layout, batchSchema)
+      write(bucketed, "append")
+    } else {
       // The bucket layout is part of the store's identity: a different
       // nBuckets (or key set) hashes the same key to a different
       // directory and the merge would silently leave the stale row
-      // behind. The spec marker makes any drift — including a store
-      // written by a pre-bucket layout, which has no marker — a loud
-      // error instead of data corruption. Written BEFORE the first
-      // data write: a crash between the two then leaves marker+no-data
-      // (harmless — `exists` only counts data, so replay re-runs this
-      // branch and overwrites the marker idempotently), never
-      // data+no-marker, which would wedge checkpoint replay behind the
-      // marker check forever.
-      if (exists) checkStoreSpec(fs, hPath, partitionBy, keys, nBuckets)
-      else writeStoreSpec(fs, hPath, partitionBy, keys, nBuckets)
-      val merged = if (exists) {
-        val existing = spark.read.parquet(path)
-        // Exact touched (partition..., bucket) combos from the batch —
-        // tiny (bounded by batch keys) — as a static pruning predicate.
-        // Null-SAFE equality: `===` on a NULL partition value yields
-        // NULL, which would exclude that directory's surviving rows
-        // from the merge while dynamic overwrite still rewrites it.
-        val combos = batchP.select(partCols.map(col): _*).distinct().collect()
-        if (combos.isEmpty) return // empty micro-batch: nothing to merge
-        val touchedPred = combos.map { row =>
-          partCols.zipWithIndex.map { case (c, i) =>
-            col(c) <=> lit(row.get(i))
-          }.reduce(_ && _)
-        }.reduce(_ || _)
-        val touched = existing.filter(touchedPred)
-        val untouchedOfBucket = touched.join(
-          broadcast(batchP.select(keys.map(col): _*).distinct()), keys, "left_anti")
-        // Cut lineage before overwriting the path we just read.
-        untouchedOfBucket.unionByName(batchP).select(existing.columns.toIndexedSeq.map(col): _*)
-          .localCheckpoint(true)
-      } else batchP
-      // Cluster rows by their target directory before writing: without
-      // this, every one of the 32 writer tasks opens a file in every
-      // (date, bucket) directory it sees — a small-file explosion that
-      // cost 4x wall-clock (docs/SCALE.md §2). After the repartition each
-      // combo is written by exactly one task -> one file per touched
-      // bucket per batch.
-      merged
-        .repartition(partCols.map(col): _*)
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(if (exists) "overwrite" else "append")
-        .partitionBy(partCols: _*)
-        .parquet(path)
-    } finally batchP.unpersist()
+      // behind. The store's schema is too: the read-back uses it, and
+      // a column the store lacks would read as NULLs (a pre-`pv_ticks`
+      // gold store would silently corrupt VWAP rollups). Any drift —
+      // including a store written by a pre-bucket layout, which has no
+      // marker — is a loud error instead of data corruption.
+      val recorded = readStoreSpec(fs, hPath, layout)
+      // A v1 marker predates recorded schemas: infer the data columns
+      // from the footers once, then upgrade the marker.
+      val storeSchema = recorded.getOrElse(readShape(spark.read.parquet(path).schema))
+      require(storeSchema == batchSchema,
+        s"upsert spec mismatch for $path: the store holds [${storeSchema.toDDL}], " +
+          s"the batch is [${batchSchema.toDDL}]. Rewrite the store to change its schema.")
+      if (recorded.isEmpty) writeStoreSpec(fs, hPath, layout, storeSchema)
+      val batchP = bucketed.persist()
+      try {
+        val tupleCols = (keys ++ partCols).distinct
+        val tuples = batchP.select(tupleCols.map(col): _*).collect().toSeq
+        if (tuples.nonEmpty) { // an empty micro-batch has nothing to merge
+          def distinctOf(cols: Seq[String]): Seq[Row] = {
+            val idx = cols.map(tupleCols.indexOf(_))
+            tuples.map(r => Row.fromSeq(idx.map(r.get))).distinct
+          }
+          val combos = distinctOf(partCols)
+          val keyRows = distinctOf(keys)
+          log.info(s"upsert $path: ${keyRows.size} keys into ${combos.size} touched buckets")
+          val survivors = spark.read.schema(storeSchema).parquet(path)
+            .filter(ColumnBridge.tupleIn(partCols, combos, storeSchema) &&
+              !ColumnBridge.tupleIn(keys, keyRows, storeSchema))
+          write(survivors.unionByName(batchP), "overwrite")
+        }
+      } finally batchP.unpersist()
+    }
   }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def specPath(root: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(root, "_graft_upsert_spec")
 
-  private def specLine(partitionBy: Seq[String], keys: Seq[String], nBuckets: Int): String =
-    s"v1|buckets=$nBuckets|keys=${keys.mkString(",")}|partitionBy=${partitionBy.mkString(",")}"
+  private def specLayout(partitionBy: Seq[String], keys: Seq[String], nBuckets: Int): String =
+    s"buckets=$nBuckets|keys=${keys.mkString(",")}|partitionBy=${partitionBy.mkString(",")}"
 
+  /** Marker line: `v2|<layout>|schema=<store schema json>`. */
   private def writeStoreSpec(fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path,
-                             partitionBy: Seq[String], keys: Seq[String],
-                             nBuckets: Int): Unit = {
+                             layout: String, schema: StructType): Unit = {
     val out = fs.create(specPath(root), true)
-    try out.write(specLine(partitionBy, keys, nBuckets).getBytes("UTF-8"))
+    try out.write(s"v2|$layout|schema=${schema.json}".getBytes("UTF-8"))
     finally out.close()
   }
 
-  private def checkStoreSpec(fs: org.apache.hadoop.fs.FileSystem,
-                             root: org.apache.hadoop.fs.Path,
-                             partitionBy: Seq[String], keys: Seq[String],
-                             nBuckets: Int): Unit = {
+  /** Checks the marker's layout against the caller's and returns the
+    * store schema it records — None for a v1 marker, which predates
+    * recorded schemas.
+    */
+  private def readStoreSpec(fs: org.apache.hadoop.fs.FileSystem,
+                            root: org.apache.hadoop.fs.Path,
+                            layout: String): Option[StructType] = {
     val p = specPath(root)
     require(fs.exists(p),
       s"$root has data but no ${p.getName} marker — it was not written by the " +
@@ -210,11 +247,16 @@ object Sinks {
     val in = fs.open(p)
     val found = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
     finally in.close()
-    val expect = specLine(partitionBy, keys, nBuckets)
-    require(found == expect,
-      s"upsert spec mismatch for $root: store has [$found], caller wants [$expect]. " +
-        "Changing nBuckets/keys relocates keys between bucket directories and " +
-        "would leave stale rows behind — rewrite the store to change its layout.")
+    found match {
+      case s"v2|$l|schema=$json" if l == layout =>
+        Some(DataType.fromJson(json).asInstanceOf[StructType])
+      case s"v1|$l" if l == layout => None
+      case _ => throw new IllegalArgumentException(
+        s"upsert spec mismatch for $root: store has [${found.split("\\|schema=")(0)}], " +
+          s"caller wants [v2|$layout]. Changing nBuckets/keys relocates keys between " +
+          "bucket directories and would leave stale rows behind — rewrite the store " +
+          "to change its layout.")
+    }
   }
 
   /** K2 — console sink (sinks.py:147-164). */

@@ -296,16 +296,16 @@ class AppSpec extends SparkSpecBase {
     // single-layer heartbeat test; MultiWatermarkSpec's decorated
     // rollup + delay-sizing pins) — this drives the WHOLE wired
     // topology through App.start: --chained --heartbeat-secs over a
-    // feed that has gone idle. Invocation shape mirrors the
-    // documented cascade-backfill posture (silver, then each chain
-    // level over its upstream's COMMITTED backlog): historical data
-    // and wall-clock heartbeats only coexist when the backlog lands
-    // in a level's FIRST micro-batch, before any heartbeat has moved
-    // its fresh watermark — a single fresh-start invocation would
-    // late-drop the 3 h-old rows at every downstream level (the
-    // fourth-trap scaladoc in Heartbeats). Writing this test is what
-    // surfaced that trap — and the r16 cascade delay bug it implies —
-    // in the first place.
+    // feed that has gone idle. Invocation shape: silver, then each
+    // chain level added over its upstream's COMMITTED backlog, every
+    // invocation resuming the earlier layers from their checkpoints.
+    // Historical data and wall-clock heartbeats only coexist when the
+    // backlog lands in a level's FIRST micro-batch, before any
+    // heartbeat has moved its fresh watermark — a single fresh-start
+    // invocation would late-drop the 3 h-old rows at every downstream
+    // level (the fourth-trap scaladoc in Heartbeats). Writing this test
+    // is what surfaced that trap — and the r16 cascade delay bug it
+    // implies — in the first place.
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_app_idle_cascade").toString
     // Hour-aligned, 3 h in the past: every 5m and 1h window the trades
@@ -316,42 +316,37 @@ class AppSpec extends SparkSpecBase {
     def rows(layer: String) =
       try spark.read.parquet(s"$dir/out/$layer").collect()
       catch { case _: Throwable => Array.empty[org.apache.spark.sql.Row] }
-    def drainUntil(cfg: App.Config, mem: MemoryStream[String])(done: => Boolean): Unit = {
-      val mgr = App.start(spark, mem.toDF(), cfg)
+    // One feed and one checkpoint root for every invocation: a file-
+    // sink layer resumes its own checkpoint (App refuses a new one over
+    // an output its sink log already covers).
+    val mem = MemoryStream[String]
+    def drainUntil(layers: Set[String])(done: => Boolean): Unit = {
+      val mgr = App.start(spark, mem.toDF(), App.Config(out = s"$dir/out",
+        checkpoint = s"$dir/ckp", watermark = "1 second", chained = true,
+        heartbeatSecs = 1, trigger = "1 second", layers = layers))
       try {
         val deadline = System.currentTimeMillis() + 120000
         while (!done && System.currentTimeMillis() < deadline)
           Thread.sleep(1000)
-        // A few extra triggers so the sink log's committed batch ids
-        // run well past the emission batch (keeps the next fresh-
-        // checkpoint invocation's replayed emissions inside the
-        // sink's idempotent-skip range).
+        // A few more triggers, so a query that dies after the flush
+        // (a state-store or sink fault) shows in its handle below.
         Thread.sleep(3000)
+        mgr.handles.foreach { case (name, q) =>
+          assert(q.exception.isEmpty, s"$name died: ${q.exception}") }
       } finally mgr.stopAll()
     }
-    // Invocation 1 — backfill silver alone (bounded drain, heartbeats
-    // OFF per the documented posture; App refuses the combination).
-    val mem1 = MemoryStream[String]
-    mem1.addData(
+    // Invocation 1 — silver alone: the backlog is in the feed before
+    // start, so it lands in silver's first micro-batch.
+    mem.addData(
       s"""{"symbol":"AAPL","price":10.5,"volume":3,"timestamp":$t0,"conditions":[],"ingestion_time":$t0}""",
       s"""{"symbol":"AAPL","price":11.5,"volume":2,"timestamp":${t0 + 360000},"conditions":[],"ingestion_time":$t0}""")
-    val base = App.Config(out = s"$dir/out", watermark = "1 second",
-      chained = true, heartbeatSecs = 1, trigger = "1 second")
-    val mgr1 = App.start(spark, mem1.toDF(), base.copy(
-      checkpoint = s"$dir/ckp1", layers = Set("silver"),
-      trigger = "available-now", heartbeatSecs = 0))
-    try {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (mgr1.status.values.exists(identity) && System.nanoTime() < deadline)
-        Thread.sleep(100)
-    } finally mgr1.stopAll()
+    drainUntil(Set("silver"))(rows("silver").length >= 2)
     assert(spark.read.parquet(s"$dir/out/silver").count() === 2)
     // Invocation 2 — idle continuous chained topology WITH heartbeats:
     // gold5m_final's first batch ingests the committed silver backlog
     // (fresh watermark = 0), then heartbeats alone close both 5m
     // windows and flush the bars.
-    drainUntil(base.copy(checkpoint = s"$dir/ckp2",
-      layers = Set("silver", "gold5m_final")), MemoryStream[String]) {
+    drainUntil(Set("silver", "gold5m_final")) {
       rows("gold5m_final").map(_.getAs[Long]("trade_count")).sum >= 2
     }
     val bars5 = rows("gold5m_final")
@@ -362,8 +357,7 @@ class AppSpec extends SparkSpecBase {
     // ingests the committed bars in ITS first batch, then its own
     // heartbeats close the 1h window — the level r16 only proved at
     // library level.
-    drainUntil(base.copy(checkpoint = s"$dir/ckp3",
-      layers = Set("silver", "gold5m_final", "gold1h")), MemoryStream[String]) {
+    drainUntil(Set("silver", "gold5m_final", "gold1h")) {
       rows("gold1h").map(_.getAs[Long]("trade_count")).sum >= 2
     }
     val bars1h = rows("gold1h")
@@ -376,12 +370,22 @@ class AppSpec extends SparkSpecBase {
     assert(bar.head.getAs[Double]("open") === 10.5)
     assert(bar.head.getAs[Double]("close") === 11.5)
     assert(bar.head.getAs[Long]("volume") === 5L)
-    // The replayed gold5m_final emissions in invocation 3 were
-    // absorbed by the sink log's idempotent skip — no duplicate bars.
+    // gold5m_final resumed in invocation 3 without re-emitting its
+    // bars — no duplicates.
     assert(rows("gold5m_final").map(_.getAs[Long]("trade_count")).sum === 2L)
     // Zero heartbeat rows anywhere: silver still carries exactly the
     // two trades.
     assert(spark.read.parquet(s"$dir/out/silver").count() === 2)
+    // A NEW checkpoint over silver's sink log would skip its first
+    // batches unrun (silver's dedup state never committed): refused
+    // before any query starts.
+    val err = intercept[IllegalArgumentException] {
+      App.start(spark, mem.toDF(), App.Config(out = s"$dir/out",
+        checkpoint = s"$dir/ckp_new", watermark = "1 second", chained = true,
+        heartbeatSecs = 1, trigger = "1 second", layers = Set("silver", "gold5m_final")))
+    }
+    assert(err.getMessage.contains("sink log"))
+    assert(!spark.streams.active.exists(_.name == "silver"))
   }
 
   test("chained cascade refuses bounded-drain triggers (bar backlog would be lost)") {

@@ -435,6 +435,148 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(dir).collect().head.getAs[Double]("close") === 3.0)
   }
 
+  /** MD5 of every file under `dir` (data, marker, commit files),
+    * keyed by relative path.
+    */
+  private def fileDigests(dir: String): Map[String, String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).map { f =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      f.getAbsolutePath.stripPrefix(dir) ->
+        md.digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+    }.toMap
+  }
+
+  /** Replace a store's upsert marker through the Hadoop FS (which
+    * keeps the local checksum file in step).
+    */
+  private def writeMarker(dir: String, text: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_graft_upsert_spec")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def upsertBars(rows: (String, String, Double)*) =
+    rows.toSeq.toDF("symbol", "window_date", "close")
+
+  test("upsert into an existing store runs two Spark jobs and evaluates its batch once") {
+    val dir = Files.createTempDirectory("graft_upsert_jobs").toString
+    val keys = Seq("symbol", "window_date")
+    Sinks.upsertByKey(upsertBars((0 until 12).map(i => (s"SYM$i", "2024-01-15", i.toDouble)): _*),
+      dir, Seq("window_date"), keys)
+    // The batch frame carries a shuffle, like the stateful plan of a
+    // gold micro-batch, and a UDF that counts every row it evaluates.
+    val evals = spark.sparkContext.longAccumulator("upsert_batch_evals")
+    val tick = udf { (c: Double) => evals.add(1); c }
+    val batch = upsertBars(("SYM0", "2024-01-15", 99.0), ("NEW", "2024-01-16", 7.0))
+      .repartition(2).withColumn("close", tick(col("close")))
+    val group = s"upsert-jobs-${System.nanoTime()}"
+    val barrier = s"$group-barrier"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val barrierSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.incrementAndGet()
+          case `barrier` => barrierSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // Micro-batches run with adaptive execution off (the engine turns
+    // it off for streaming), so the write's shuffle is a stage of the
+    // write job, not a job of its own.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      sc.setJobGroup(group, "upsert into an existing store")
+      try Sinks.upsertByKey(batch, dir, Seq("window_date"), keys)
+      finally sc.clearJobGroup()
+      // The listener bus delivers in order: once a later job's start
+      // arrives, every job start of the upsert has been counted.
+      sc.setJobGroup(barrier, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(barrierSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get() <= 2, s"upsert started ${jobs.get()} jobs")
+    assert(evals.value === 2L) // each batch row evaluated exactly once
+    val out = spark.read.parquet(dir).collect()
+      .map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
+    assert(out.size === 13 && out("SYM0") === 99.0 && out("NEW") === 7.0 && out("SYM5") === 5.0)
+  }
+
+  test("an empty micro-batch leaves every store file byte-identical; the next batch still merges") {
+    val dir = Files.createTempDirectory("graft_upsert_empty").toString
+    val keys = Seq("symbol", "window_date")
+    Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 1.0), ("MSFT", "2024-01-15", 2.0)),
+      dir, Seq("window_date"), keys)
+    val before = fileDigests(dir)
+    Sinks.upsertByKey(upsertBars().filter(lit(false)), dir, Seq("window_date"), keys)
+    assert(fileDigests(dir) === before)
+    Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 3.0)), dir, Seq("window_date"), keys)
+    val out = spark.read.parquet(dir).collect()
+      .map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
+    assert(out === Map("AAPL" -> 3.0, "MSFT" -> 2.0))
+  }
+
+  test("upsert records the store schema in its marker; a v1 marker is upgraded once") {
+    val dir = Files.createTempDirectory("graft_upsert_schema").toString
+    val keys = Seq("symbol", "window_date")
+    val marker = java.nio.file.Paths.get(dir, "_graft_upsert_spec")
+    def markerText = new String(Files.readAllBytes(marker), "UTF-8")
+    Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 1.0)), dir, Seq("window_date"),
+      keys, nBuckets = 8)
+    val v2 = markerText
+    assert(v2.startsWith("v2|buckets=8|keys=symbol,window_date|partitionBy=window_date|schema="))
+    assert(v2.contains("\"close\"") && v2.contains("\"upsert_bucket\""))
+    // A store written before schemas were recorded carries a v1 marker.
+    writeMarker(dir, "v1|buckets=8|keys=symbol,window_date|partitionBy=window_date")
+    Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 2.0), ("MSFT", "2024-01-15", 5.0)),
+      dir, Seq("window_date"), keys, nBuckets = 8)
+    assert(markerText === v2) // inferred once, upgraded to the recorded form
+    val out = spark.read.parquet(dir).collect()
+      .map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
+    assert(out === Map("AAPL" -> 2.0, "MSFT" -> 5.0))
+  }
+
+  test("upsert refuses a batch whose schema differs from the store's (no NULL-filled merge)") {
+    val keys = Seq("symbol", "window_date")
+    val withTicks = upsertBars(("AAPL", "2024-01-15", 2.0)).withColumn("pv_ticks", lit(20L))
+    // Recorded schema: a batch with an extra column is refused, and so
+    // is one that retypes a column.
+    val dir = Files.createTempDirectory("graft_upsert_drift").toString
+    Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 1.0)), dir, Seq("window_date"), keys)
+    val e = intercept[IllegalArgumentException] {
+      Sinks.upsertByKey(withTicks, dir, Seq("window_date"), keys)
+    }
+    assert(e.getMessage.contains("spec mismatch") && e.getMessage.contains("pv_ticks"))
+    intercept[IllegalArgumentException] {
+      Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 2.0))
+        .withColumn("close", col("close").cast("float")), dir, Seq("window_date"), keys)
+    }
+    // v1 marker over a store that predates a batch column: the inferred
+    // footer schema lacks it, so the merge is refused and the marker
+    // is not upgraded.
+    val old = Files.createTempDirectory("graft_upsert_drift_v1").toString
+    Sinks.upsertByKey(upsertBars(("AAPL", "2024-01-15", 1.0)), old, Seq("window_date"), keys)
+    val marker = java.nio.file.Paths.get(old, "_graft_upsert_spec")
+    val v1 = "v1|buckets=16|keys=symbol,window_date|partitionBy=window_date"
+    writeMarker(old, v1)
+    val e2 = intercept[IllegalArgumentException] {
+      Sinks.upsertByKey(withTicks, old, Seq("window_date"), keys)
+    }
+    assert(e2.getMessage.contains("spec mismatch"))
+    assert(new String(Files.readAllBytes(marker), "UTF-8") === v1)
+    // Both stores still hold their one row, untouched.
+    assert(spark.read.parquet(dir).collect().map(_.getAs[Double]("close")).toSeq === Seq(1.0))
+    assert(spark.read.parquet(old).collect().map(_.getAs[Double]("close")).toSeq === Seq(1.0))
+  }
+
   test("kafka sink projection re-keys by symbol with JSON payload (P6/K3)") {
     val df = Seq(("AAPL", 1.5)).toDF("symbol", "price")
     val out = Sinks.kafkaProjection(df).collect().head
