@@ -513,9 +513,9 @@ object Bench {
     // against 8 shuffle partitions per drain). Measure that schedule
     // too (r12 verdict item #4: "drain pairs of independent sr queries
     // concurrently … Done = all-15 cold ≤45 s"): a second pass drains
-    // every sr query again, SPARK_GRAFT_SR_CONCURRENCY (default 4) at
-    // a time, each on its own spark.newSession() so withReplayConfs'
-    // per-session SQLConf writes cannot race. Per-query numbers in
+    // every sr query again, 4 at a time, each on its own
+    // spark.newSession() so withReplayConfs' per-session SQLConf
+    // writes cannot race. Per-query numbers in
     // "queries" stay the SERIAL walls (comparable across rounds, and
     // the shuffle listener can only attribute bytes serially); the
     // concurrent group wall ships alongside in "sr_drains". "value"
@@ -525,8 +525,7 @@ object Bench {
     val srNames = names.filter(_.startsWith("sr"))
     val srSerialSum = results
       .collect { case (k, Some(v), _, _, _) if k.startsWith("sr") => v }.sum
-    val srConcurrency = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_SR_CONCURRENCY", "4").toInt)
+    val srConcurrency = 4
     def runSrConcurrent(): (Double, Seq[String]) =
       if (srNames.isEmpty) (0.0, Seq.empty)
       else {

@@ -141,8 +141,7 @@ object ScaleBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val kMain = args.headOption.map(_.toInt).getOrElse(10)
     val kDeep = args.drop(1).headOption.map(_.toInt).getOrElse(30)
-    val repeats = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_REPEATS", "3").toInt)
+    val repeats = 3
     val scaleRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALEBENCH_LOCAL.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -309,7 +309,7 @@ object StreamReplayQueries {
     val trades = sliced(s, silver.schema, stagedChrono(s"silver|$dir", silver))
       .select(col("symbol"), col("price"), col("volume"), col("event_time"))
       .as[LatestPriceStream.TradeEvent]
-    val out = d.run(LatestPriceStream.snapshotsTws(s, trades).toDF(), "update")
+    val out = d.run(LatestPriceStream.snapshots(s, trades).toDF(), "update")
     // Update-mode emissions accumulate one snapshot per (symbol,
     // micro-batch-with-fresh-events); the newest per symbol is the
     // final state. last_trade_time is unique per symbol (silver

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * SecondMaxByOrd2's scaladoc for why uniqueness matters).
   *
   * Streaming form: graft.streaming.LatestPriceStream keeps one small
-  * state record per symbol via flatMapGroupsWithState.
+  * state record per symbol on the transformWithState runtime
+  * (graft.streaming.KeyedFold).
   */
 object LatestPrices {
 

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.Date
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming forms of the bar-level indicators (B10–B12 in
   * operators/Indicators.scala): OBV, ATR-n, and the stochastic
@@ -122,32 +121,11 @@ object BarIndicatorStream {
     (st, out.result())
   }
 
-  class BarIndicatorProcessor(n: Int)
-      extends StatefulProcessor[String, DailyBar, BarIndicatorUpdate] {
-
-    @transient private var state: ValueState[BarState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[BarState]("bar_indicators",
-        Encoders.product[BarState], TTLConfig.NONE)
-
-    override def handleInputRows(symbol: String, rows: Iterator[DailyBar],
-                                 timerValues: TimerValues): Iterator[BarIndicatorUpdate] = {
-      // Bounded per (key, micro-batch): a symbol contributes at most
-      // one bar per day, and a trigger's file/offset cap bounds the
-      // days — the same materialize-then-sort argument as
-      // IndicatorStream.IndicatorProcessor.
-      val (next, updates) = fold(rows.toSeq, Option(state.get()), n)
-      next.foreach(state.update)
-      updates.iterator
-    }
-  }
-
   /** Wire the bar recursions over a closed daily-bar stream. */
   def updates(spark: SparkSession, bars: Dataset[DailyBar], n: Int = 14): Dataset[BarIndicatorUpdate] = {
     import spark.implicits._
-    bars.groupByKey(_.symbol)
-      .transformWithState(new BarIndicatorProcessor(n),
-        TimeMode.None(), OutputMode.Append, implicitly[Encoder[BarIndicatorUpdate]])
+    KeyedFold[String, DailyBar, BarState, BarIndicatorUpdate](
+        bars.groupByKey(_.symbol), "bar_indicators", OutputMode.Append)(
+      (_, rows, prev) => fold(rows.toSeq, prev, n))
   }
 }

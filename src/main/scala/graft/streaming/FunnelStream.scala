@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming form of the x32 conversion funnel (view → click →
   * purchase, each stage strictly after the user's FIRST event of the
@@ -63,37 +62,11 @@ object FunnelStream {
     }
   }
 
-  class FunnelProcessor
-      extends StatefulProcessor[Long, UserEvent, FunnelTransition] {
-
-    @transient private var state: ValueState[FunnelState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[UserEvent],
-                                 timerValues: TimerValues): Iterator[FunnelTransition] = {
-      var st = Option(state.get())
-        .getOrElse(FunnelState(Unset, Unset, Unset, Unset, Unset))
-      val out = Seq.newBuilder[FunnelTransition]
-      // Bounded per (key, micro-batch) — the trigger's offset cap —
-      // so materialize-then-sort is safe (BarIndicatorStream argument).
-      rows.toSeq.sortBy(e => (e.ts, e.event_id)).foreach { e =>
-        val (next, t) = step(st, e)
-        st = next
-        t.foreach(out += _)
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
   /** Wire the funnel over a user-event stream. */
   def transitions(spark: SparkSession, events: Dataset[UserEvent]): Dataset[FunnelTransition] = {
     import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(),
-        TimeMode.None(), OutputMode.Append, implicitly[Encoder[FunnelTransition]])
+    KeyedFold(events.groupByKey(_.user_id), "funnel", OutputMode.Append)(
+      KeyedFold.ordered((e: UserEvent) => (e.ts, e.event_id),
+        FunnelState(Unset, Unset, Unset, Unset, Unset))(step))
   }
 }

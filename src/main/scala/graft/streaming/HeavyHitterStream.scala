@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.HeavyHitters
 import graft.operators.HeavyHitters.MG
@@ -50,26 +49,18 @@ object HeavyHitterStream {
   /** Carried per-group state: the MG sketch plus the snapshot counter. */
   case class GroupState(sketch: MG, seq: Long)
 
-  class HeavyHitterProcessor(k: Int)
-      extends StatefulProcessor[Int, (Int, String), HHCandidate] {
-
-    @transient private var state: ValueState[GroupState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[GroupState]("mg_sketch",
-        Encoders.product[GroupState], TTLConfig.NONE)
-
-    override def handleInputRows(group: Int, rows: Iterator[(Int, String)],
-                                 timerValues: TimerValues): Iterator[HHCandidate] = {
-      val agg = HeavyHitters.sketch(k)
-      val prev = Option(state.get()).getOrElse(GroupState(agg.zero, 0L))
-      val mg = rows.foldLeft(prev.sketch)((b, r) => agg.reduce(b, r._2))
-      val seq = prev.seq + 1
-      state.update(GroupState(mg, seq))
-      mg.counters.toSeq.sortBy(_._1).iterator.map { case (item, c) =>
-        HHCandidate(group, seq, item, c, mg.total)
-      }
-    }
+  /** Absorb one micro-batch of a group's items into its sketch and
+    * emit the group's full snapshot (≤ k rows, item order).
+    */
+  private[graft] def fold(group: Int, items: Iterator[String], prev: Option[GroupState],
+                          k: Int): (Option[GroupState], Iterator[HHCandidate]) = {
+    val agg = HeavyHitters.sketch(k)
+    val start = prev.getOrElse(GroupState(agg.zero, 0L))
+    val mg = items.foldLeft(start.sketch)(agg.reduce)
+    val next = GroupState(mg, start.seq + 1)
+    (Some(next), mg.counters.toSeq.sortBy(_._1).iterator.map { case (item, c) =>
+      HHCandidate(group, next.seq, item, c, mg.total)
+    })
   }
 
   /** Route `items` through per-group MG sketches. `k` defaults to
@@ -81,10 +72,10 @@ object HeavyHitterStream {
                  numGroups: Int = 32): Dataset[HHCandidate] = {
     require(k >= 1 && numGroups >= 1, s"need k >= 1 and numGroups >= 1")
     import spark.implicits._
-    items.map(i => (math.floorMod(i.hashCode, numGroups), i))
-      .groupByKey(_._1)
-      .transformWithState(new HeavyHitterProcessor(k),
-        TimeMode.None(), OutputMode.Append, implicitly[Encoder[HHCandidate]])
+    val grouped = items.map(i => (math.floorMod(i.hashCode, numGroups), i)).groupByKey(_._1)
+    KeyedFold[Int, (Int, String), GroupState, HHCandidate](
+        grouped, "mg_sketch", OutputMode.Append)(
+      (group, rows, prev) => fold(group, rows.map(_._2), prev, k))
   }
 
   /** The newest snapshot per group from a collected candidate table —

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming technical indicators — the stateful counterpart of
   * operators/Indicators.scala for the recursive indicators a batch
@@ -102,36 +101,12 @@ object IndicatorStream {
     (st, out.result())
   }
 
-  class IndicatorProcessor(n: Int)
-      extends StatefulProcessor[String, TradeTick, IndicatorUpdate] {
-
-    @transient private var state: ValueState[IndicatorState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[IndicatorState]("indicators",
-        Encoders.product[IndicatorState], TTLConfig.NONE)
-
-    override def handleInputRows(symbol: String, rows: Iterator[TradeTick],
-                                 timerValues: TimerValues): Iterator[IndicatorUpdate] = {
-      // The materialize-then-sort is per (key, micro-batch) and is
-      // bounded by the source's per-trigger cap (the file source's
-      // maxFilesPerTrigger; Kafka's default maxOffsetsPerTrigger in
-      // TradeStreams.kafkaOptions) — a catch-up backlog arrives as a
-      // sequence of bounded batches, never one unbounded buffer. The
-      // sort itself is unavoidable: rows within a micro-batch carry
-      // no order, and the recursion is order-sensitive.
-      val (next, updates) = fold(symbol, rows.toSeq, Option(state.get()), n)
-      next.foreach(state.update)
-      updates.iterator
-    }
-  }
-
   /** Wire the indicator recursion over a parsed trade stream. */
   def updates(spark: SparkSession, ticks: Dataset[TradeTick], n: Int = 14): Dataset[IndicatorUpdate] = {
     import spark.implicits._
-    ticks.groupByKey(_.symbol)
-      .transformWithState(new IndicatorProcessor(n),
-        TimeMode.None(), OutputMode.Append, implicitly[Encoder[IndicatorUpdate]])
+    KeyedFold[String, TradeTick, IndicatorState, IndicatorUpdate](
+        ticks.groupByKey(_.symbol), "indicators", OutputMode.Append)(
+      (sym, rows, prev) => fold(sym, rows.toSeq, prev, n))
   }
 
   /** Batch adapter: the same recursion over whole per-symbol histories —

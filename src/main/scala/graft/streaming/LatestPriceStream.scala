@@ -3,15 +3,14 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.model.LatestPrice
 
 /** A6 (streaming) — latest-price snapshot with change vs the previous
   * trade, as an arbitrary-stateful streaming operator
-  * (flatMapGroupsWithState keyed by symbol). The reference declares
-  * the table + UPDATE statement (keyspace.cql:132-141,
+  * (`transformWithState` keyed by symbol, via [[KeyedFold]]). The
+  * reference declares the table + UPDATE statement (keyspace.cql:132-141,
   * cassandra_client.py:105-114) but never ships the writer — a gap we
   * fill (SURVEY.md §2.5).
   *
@@ -25,15 +24,15 @@ object LatestPriceStream {
 
   case class PriceState(price: Double, volume: Long, time: Timestamp)
 
-  /** Core fold shared by both stateful runtimes: advance through the
-    * batch's events in event-time order, IGNORING any event older than
+  /** Core fold of the stream and the batch adapter: advance through
+    * the batch's events in event-time order, IGNORING any event older than
     * the current state — a late out-of-order trade must not regress
     * the snapshot to stale data (found in review; the batch form's
     * window picks the max event time, and streaming must agree).
     * Ties on event_time take the later-sorted (higher-price) event,
     * deterministically. The first-ever trade of a symbol carries
     * change = pct = None — the batch window's LEAD produces NULL
-    * there, and the two runtimes must agree under the oracle (sr3).
+    * there, and the stream must agree with it under the oracle (sr3).
     */
   private[streaming] def fold(symbol: String, events: Seq[TradeEvent],
                               initial: Option[PriceState]): (Option[PriceState], Option[LatestPrice]) = {
@@ -56,86 +55,27 @@ object LatestPriceStream {
     (prev, newest)
   }
 
-  def updateState(symbol: String, events: Iterator[TradeEvent],
-                  state: GroupState[PriceState]): Iterator[LatestPrice] = {
-    val (next, newest) = fold(symbol, events.toSeq, state.getOption)
-    next.foreach(state.update)
-    // Emit only the newest snapshot per micro-batch (update
-    // semantics: downstream upserts by symbol).
-    newest.iterator
-  }
-
-  /** Wire the stateful operator over a parsed trade stream. */
+  /** Wire the per-symbol fold over a parsed trade stream
+    * (transformWithState through [[KeyedFold]], RocksDB-backed). Update
+    * output mode: each micro-batch emits only the newest snapshot per
+    * symbol, and downstream upserts by symbol. TTL is deliberately off:
+    * StateTtlSpec measured that a TTL'd processor in
+    * TimeMode.ProcessingTime makes Trigger.AvailableNow loop forever
+    * ("another batch could expire state" never goes false), so TTL
+    * belongs on ProcessingTime-trigger topologies, not backfills.
+    */
   def snapshots(spark: SparkSession, trades: Dataset[TradeEvent]): Dataset[LatestPrice] = {
     import spark.implicits._
-    trades.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateState)
+    KeyedFold[String, TradeEvent, PriceState, LatestPrice](
+        trades.groupByKey(_.symbol), "latest", OutputMode.Update)(
+      (sym, rows, prev) => fold(sym, rows.toSeq, prev))
   }
 
-  /** Spark-4 `transformWithState` form (SURVEY.md §2.5 A6 names this
-    * API): same semantics as `snapshots`, state held in a typed
-    * ValueState managed by the new stateful-processor runtime
-    * (RocksDB-backed, TTL-capable — the long-horizon posture for
-    * keyed state at scale; the TTL path itself is EXECUTED in
-    * StateTtlSpec: expiry across a restart gap, plus the long-TTL
-    * control. Operational note measured there: a TTL'd processor in
-    * TimeMode.ProcessingTime makes Trigger.AvailableNow loop forever
-    * — "another batch could expire state" never goes false — so TTL
-    * belongs on ProcessingTime-trigger topologies, not backfills).
-    */
-  class LatestPriceProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, TradeEvent, LatestPrice] {
-    import org.apache.spark.sql.streaming.{TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.{Encoders, streaming => ss}
-
-    @transient private var state: ValueState[PriceState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[PriceState]("latest",
-        Encoders.product[PriceState], TTLConfig.NONE)
-
-    override def handleInputRows(symbol: String, rows: Iterator[TradeEvent],
-                                 timerValues: TimerValues): Iterator[LatestPrice] = {
-      val (next, newest) = fold(symbol, rows.toSeq, Option(state.get()))
-      next.foreach(state.update)
-      newest.iterator
-    }
-  }
-
-  /** snapshots() on the transformWithState runtime. */
-  def snapshotsTws(spark: SparkSession, trades: Dataset[TradeEvent]): Dataset[LatestPrice] = {
-    import org.apache.spark.sql.streaming.TimeMode
-    import spark.implicits._
-    trades.groupByKey(_.symbol)
-      .transformWithState(new LatestPriceProcessor,
-        TimeMode.None(), OutputMode.Update, implicitly[org.apache.spark.sql.Encoder[LatestPrice]])
-  }
-
-  /** Batch adapter: same per-symbol fold, for tests and backfill. */
+  /** Batch adapter: the same per-symbol fold, for tests and backfill. */
   def snapshotsBatch(spark: SparkSession, trades: Dataset[TradeEvent]): Dataset[LatestPrice] = {
     import spark.implicits._
-    trades.groupByKey(_.symbol).flatMapGroups { (sym, it) =>
-      val dummy = new NonStreamingState[PriceState]
-      updateState(sym, it, dummy)
+    trades.groupByKey(_.symbol).flatMapGroups { (sym, rows) =>
+      fold(sym, rows.toSeq, None)._2.iterator
     }
-  }
-
-  /** Minimal GroupState for the batch adapter. */
-  private final class NonStreamingState[S] extends GroupState[S] {
-    private var v: Option[S] = None
-    override def exists: Boolean = v.isDefined
-    override def get: S = v.get
-    override def getOption: Option[S] = v
-    override def update(newValue: S): Unit = v = Some(newValue)
-    override def remove(): Unit = v = None
-    override def hasTimedOut: Boolean = false
-    override def setTimeoutDuration(durationMs: Long): Unit = ()
-    override def setTimeoutDuration(duration: String): Unit = ()
-    override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-    override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-    override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-    override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-    override def getCurrentWatermarkMs(): Long = 0L
-    override def getCurrentProcessingTimeMs(): Long = 0L
   }
 }

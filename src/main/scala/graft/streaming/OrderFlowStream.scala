@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming form of b16's tick-rule classification: per-symbol
   * (last price, last non-zero tick sign, high-water mark) as one
@@ -48,29 +47,6 @@ object OrderFlowStream {
         Some(Verdict(t.symbol, t.ts, t.eventId, sign, t.volume)))
     }
 
-  class OrderFlowProcessor
-      extends StatefulProcessor[String, Tick, Verdict] {
-
-    @transient private var state: ValueState[TickState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[TickState]("tick_state",
-        Encoders.product[TickState], TTLConfig.NONE)
-
-    override def handleInputRows(symbol: String, rows: Iterator[Tick],
-                                 timerValues: TimerValues): Iterator[Verdict] = {
-      var st = Option(state.get()).getOrElse(TickState(-1L, 0, Long.MinValue, Long.MinValue))
-      val out = Seq.newBuilder[Verdict]
-      rows.toSeq.sortBy(t => (t.ts, t.eventId)).foreach { t =>
-        val (next, v) = step(st, t)
-        st = next
-        v.foreach(out += _)
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
   def verdicts(spark: SparkSession, ticks: Dataset[Tick]): Dataset[Verdict] = {
     import spark.implicits._
     verdictsGrouped(spark, ticks.groupByKey(_.symbol))
@@ -86,9 +62,10 @@ object OrderFlowStream {
     * the emitted Verdict carries the tick's own symbol, not the key.
     */
   def verdictsGrouped(spark: SparkSession,
-                      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, Tick]): Dataset[Verdict] = {
+                      grouped: KeyValueGroupedDataset[String, Tick]): Dataset[Verdict] = {
     import spark.implicits._
-    grouped.transformWithState(new OrderFlowProcessor(),
-      TimeMode.None(), OutputMode.Append, implicitly[Encoder[Verdict]])
+    KeyedFold(grouped, "tick_state", OutputMode.Append)(
+      KeyedFold.ordered((t: Tick) => (t.ts, t.eventId),
+        TickState(-1L, 0, Long.MinValue, Long.MinValue))(step))
   }
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.Date
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** SCD2 maintenance as a stream — the live counterpart of
   * [[graft.operators.Incremental.scd2]]: per-key daily snapshots flow
@@ -75,29 +74,14 @@ object Scd2Stream {
     (state, out.result())
   }
 
-  class Scd2Processor extends StatefulProcessor[String, DimSnapshot, Scd2Row] {
-    @transient private var state: ValueState[RunState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[RunState]("scd2_run",
-        Encoders.product[RunState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[DimSnapshot],
-        timerValues: TimerValues): Iterator[Scd2Row] = {
-      val (next, out) = fold(key, rows.toSeq, Option(state.get()))
-      next.foreach(state.update)
-      out.iterator
-    }
-  }
-
-  /** Wire the processor over a snapshot stream (update output mode —
+  /** Wire the fold over a snapshot stream (update output mode —
     * downstream upserts by (key, version)).
     */
   def intervals(spark: SparkSession, snaps: Dataset[DimSnapshot]): Dataset[Scd2Row] = {
     import spark.implicits._
-    snaps.groupByKey(_.key)
-      .transformWithState(new Scd2Processor, TimeMode.None(), OutputMode.Update,
-        implicitly[Encoder[Scd2Row]])
+    KeyedFold[String, DimSnapshot, RunState, Scd2Row](
+        snaps.groupByKey(_.key), "scd2_run", OutputMode.Update)(
+      (key, rows, prev) => fold(key, rows.toSeq, prev))
   }
 
   /** Batch adapter: the same fold over complete per-key history — for

@@ -21,37 +21,24 @@ import scala.collection.mutable
   */
 object Sinks {
 
-  /** K1 — parquet foreachBatch sink: checkpointed, 10s
-    * processing-time trigger (sinks.py:88-132). Append mode for the
-    * immutable bronze/silver layers; pass `upsertKeys` for the
-    * update-mode gold layer (see upsertByKey).
-    *
-    * NOTE the append form is at-least-once: a crash between the
-    * parquet append and the checkpoint commit replays the micro-batch
-    * and appends its rows twice. That is acceptable for a terminal
-    * store a downstream dedups anyway, but any append layer that
-    * other streams READ FROM (the chained gold topology streams from
-    * silver) must use [[fileSink]] instead — its _spark_metadata
-    * commit log gives exactly-once and file sources read only
-    * committed files.
+  /** K1 — keyed parquet foreachBatch sink for the update-mode gold
+    * layers: checkpointed, 10s processing-time trigger
+    * (sinks.py:88-132), each micro-batch merged into the store by
+    * `upsertKeys` (see upsertByKey). Append layers use [[fileSink]],
+    * whose `_spark_metadata` commit log makes them exactly-once.
     */
   def parquetSink(df: DataFrame, path: String, checkpoint: String,
+                  upsertKeys: Seq[String],
                   partitionBy: Seq[String] = Nil,
-                  upsertKeys: Seq[String] = Nil,
                   trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
                   queryName: String = "parquet_sink"): DataStreamWriter[Row] = {
     df.writeStream
       .queryName(queryName)
-      .outputMode(if (upsertKeys.nonEmpty) "update" else "append")
+      .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (upsertKeys.nonEmpty) upsertByKey(batch, path, partitionBy, upsertKeys)
-        else {
-          val w0 = batch.write.mode("append")
-          val w = if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0
-          w.parquet(path)
-        }
+        upsertByKey(batch, path, partitionBy, upsertKeys)
       }
   }
 
@@ -60,11 +47,8 @@ object Sinks {
     * `_spark_metadata` log, so a micro-batch replayed after a crash
     * commits the same batch id once, and both batch reads and
     * downstream streaming file sources see only committed files.
-    * This is the required sink for append layers that another stream
-    * consumes (chained gold reads the silver directory) and the
-    * preferred one for bronze/dead-letters; `parquetSink`'s
-    * foreachBatch append remains for sinks that need per-batch
-    * logic.
+    * This is the sink for every append layer: bronze, silver (which
+    * chained gold reads as a stream) and the dead letters.
     */
   def fileSink(df: DataFrame, path: String, checkpoint: String,
                partitionBy: Seq[String] = Nil,

@@ -40,7 +40,7 @@ object TradeStreams {
 
   /** Default per-trigger offset cap. Without one, the first batch
     * after downtime reads the WHOLE backlog, and every per-key
-    * stateful stage downstream (IndicatorProcessor sorts a key's
+    * stateful stage downstream (KeyedFold's folds sort a key's
     * micro-batch slice in memory) sees an unbounded buffer. The cap
     * makes catch-up a sequence of bounded batches instead — the Kafka
     * analog of the file source's maxFilesPerTrigger bound.

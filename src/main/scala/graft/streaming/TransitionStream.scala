@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming form of x39's Markov transition matrix: per-user LAST
   * event type as `transformWithState` ValueState — one (string, long)
@@ -43,36 +42,11 @@ object TransitionStream {
       (LastSeen(e.event_type, e.ts, e.event_id), out)
     }
 
-  class TransitionProcessor
-      extends StatefulProcessor[Long, UserEvent, Transition] {
-
-    @transient private var state: ValueState[LastSeen] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[LastSeen]("last_seen",
-        Encoders.product[LastSeen], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[UserEvent],
-                                 timerValues: TimerValues): Iterator[Transition] = {
-      var st = Option(state.get()).getOrElse(LastSeen("", Long.MinValue, Long.MinValue))
-      val out = Seq.newBuilder[Transition]
-      // Bounded per (key, micro-batch) by the trigger's offset cap —
-      // materialize-then-sort is safe (BarIndicatorStream argument).
-      rows.toSeq.sortBy(e => (e.ts, e.event_id)).foreach { e =>
-        val (next, t) = step(st, e)
-        st = next
-        t.foreach(out += _)
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
   /** Wire the transition extractor over a user-event stream. */
   def transitions(spark: SparkSession, events: Dataset[UserEvent]): Dataset[Transition] = {
     import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessor(),
-        TimeMode.None(), OutputMode.Append, implicitly[Encoder[Transition]])
+    KeyedFold(events.groupByKey(_.user_id), "last_seen", OutputMode.Append)(
+      KeyedFold.ordered((e: UserEvent) => (e.ts, e.event_id),
+        LastSeen("", Long.MinValue, Long.MinValue))(step))
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.{streaming => ss}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.OrderFlowStream.Verdict
 
@@ -96,39 +95,15 @@ object VpinStream {
     }
   }
 
-  class VpinProcessor(bucketVolume: Long, window: Int)
-      extends StatefulProcessor[String, Verdict, BucketRow] {
-    require(bucketVolume > 0 && window > 0)
-
-    @transient private var state: ValueState[VpinState] = _
-
-    override def init(outputMode: ss.OutputMode, timeMode: ss.TimeMode): Unit =
-      state = getHandle.getValueState[VpinState]("vpin_state",
-        Encoders.product[VpinState], TTLConfig.NONE)
-
-    override def handleInputRows(symbol: String, rows: Iterator[Verdict],
-                                 timerValues: TimerValues): Iterator[BucketRow] = {
-      var st = Option(state.get()).getOrElse(empty)
-      val out = Seq.newBuilder[BucketRow]
-      rows.toSeq.sortBy(v => (v.ts, v.eventId)).foreach { v =>
-        val (next, row) = step(st, v, bucketVolume, window)
-        st = next
-        row.foreach(out += _)
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
   /** Completed volume buckets with rolling VPIN over a verdict stream
     * (OrderFlowStream.verdicts output, or any per-symbol classified
     * trade feed).
     */
   def buckets(spark: SparkSession, verdicts: Dataset[Verdict],
               bucketVolume: Long, window: Int = 10): Dataset[BucketRow] = {
+    require(bucketVolume > 0 && window > 0)
     import spark.implicits._
-    verdicts.groupByKey(_.symbol)
-      .transformWithState(new VpinProcessor(bucketVolume, window),
-        TimeMode.None(), OutputMode.Append, implicitly[Encoder[BucketRow]])
+    KeyedFold(verdicts.groupByKey(_.symbol), "vpin_state", OutputMode.Append)(
+      KeyedFold.ordered((v: Verdict) => (v.ts, v.eventId), empty)(step(_, _, bucketVolume, window)))
   }
 }

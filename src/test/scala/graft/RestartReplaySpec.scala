@@ -159,7 +159,7 @@ class RestartReplaySpec extends SparkSpecBase {
 
       @volatile var crashed = false
       def writer(inject: Boolean) =
-        LatestPriceStream.snapshotsTws(spark, trades)
+        LatestPriceStream.snapshots(spark, trades)
           .writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())

@@ -257,68 +257,46 @@ class StreamingSpec extends SparkSpecBase {
 
   test("latest-price stateful stream emits change vs previous trade") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[LatestPriceStream.TradeEvent]
-    val snaps = LatestPriceStream.snapshots(spark, mem.toDS())
-    val q = snaps.writeStream.format("memory").queryName("lp_out")
-      .outputMode("update").start()
-    mem.addData(LatestPriceStream.TradeEvent("AAPL", 100.0, 10, new Timestamp(t0)))
-    q.processAllAvailable()
-    mem.addData(LatestPriceStream.TradeEvent("AAPL", 110.0, 20, new Timestamp(t0 + 1000)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("lp_out").orderBy("last_trade_time").collect()
-    assert(rows.length === 2)
-    // First-ever trade: no previous price — NULL, the batch LEAD's value.
-    assert(rows(0).isNullAt(rows(0).fieldIndex("price_change")))
-    assert(rows(1).getAs[Double]("price_change") === 10.0)
-    assert(math.abs(rows(1).getAs[Double]("price_change_pct") - 10.0) < 1e-9)
-  }
-
-  test("transformWithState processor matches the flatMapGroupsWithState form") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val mem = MemoryStream[LatestPriceStream.TradeEvent]
-      val snaps = LatestPriceStream.snapshotsTws(spark, mem.toDS())
-      val q = snaps.writeStream.format("memory").queryName("lp_tws_out")
+      val snaps = LatestPriceStream.snapshots(spark, mem.toDS())
+      val q = snaps.writeStream.format("memory").queryName("lp_out")
         .outputMode("update").start()
       mem.addData(LatestPriceStream.TradeEvent("AAPL", 100.0, 10, new Timestamp(t0)))
       q.processAllAvailable()
       mem.addData(LatestPriceStream.TradeEvent("AAPL", 110.0, 20, new Timestamp(t0 + 1000)))
       q.processAllAvailable()
       q.stop()
-      val rows = spark.table("lp_tws_out").orderBy("last_trade_time").collect()
+      val rows = spark.table("lp_out").orderBy("last_trade_time").collect()
       assert(rows.length === 2)
+      // First-ever trade: no previous price — NULL, the batch LEAD's value.
+      assert(rows(0).isNullAt(rows(0).fieldIndex("price_change")))
       assert(rows(1).getAs[Double]("price_change") === 10.0)
       assert(math.abs(rows(1).getAs[Double]("price_change_pct") - 10.0) < 1e-9)
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("a late out-of-order trade does not regress the latest-price snapshot") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[LatestPriceStream.TradeEvent]
-    val snaps = LatestPriceStream.snapshots(spark, mem.toDS())
-    val q = snaps.writeStream.format("memory").queryName("lp_late_out")
-      .outputMode("update").start()
-    mem.addData(LatestPriceStream.TradeEvent("AAPL", 110.0, 20, new Timestamp(t0 + 60000)))
-    q.processAllAvailable()
-    // Late event: older than the stored state — must be ignored.
-    mem.addData(LatestPriceStream.TradeEvent("AAPL", 100.0, 10, new Timestamp(t0)))
-    q.processAllAvailable()
-    // A genuinely newer event still advances the state correctly.
-    mem.addData(LatestPriceStream.TradeEvent("AAPL", 120.0, 5, new Timestamp(t0 + 120000)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("lp_late_out").orderBy("last_trade_time").collect()
-    assert(rows.length === 2) // the late batch emitted nothing
-    assert(rows.last.getAs[Double]("last_price") === 120.0)
-    assert(rows.last.getAs[Double]("price_change") === 10.0) // vs 110, not vs the stale 100
+    withRocksDbState {
+      val mem = MemoryStream[LatestPriceStream.TradeEvent]
+      val snaps = LatestPriceStream.snapshots(spark, mem.toDS())
+      val q = snaps.writeStream.format("memory").queryName("lp_late_out")
+        .outputMode("update").start()
+      mem.addData(LatestPriceStream.TradeEvent("AAPL", 110.0, 20, new Timestamp(t0 + 60000)))
+      q.processAllAvailable()
+      // Late event: older than the stored state — must be ignored.
+      mem.addData(LatestPriceStream.TradeEvent("AAPL", 100.0, 10, new Timestamp(t0)))
+      q.processAllAvailable()
+      // A genuinely newer event still advances the state correctly.
+      mem.addData(LatestPriceStream.TradeEvent("AAPL", 120.0, 5, new Timestamp(t0 + 120000)))
+      q.processAllAvailable()
+      q.stop()
+      val rows = spark.table("lp_late_out").orderBy("last_trade_time").collect()
+      assert(rows.length === 2) // the late batch emitted nothing
+      assert(rows.last.getAs[Double]("last_price") === 120.0)
+      assert(rows.last.getAs[Double]("price_change") === 10.0) // vs 110, not vs the stale 100
+    }
   }
 
   test("batch adapter reproduces the stateful fold") {
@@ -339,7 +317,7 @@ class StreamingSpec extends SparkSpecBase {
     val mem = MemoryStream[String]
     val trades = TradeStreams.parseTrades(mem.toDF())
     val mgr = new Sinks.SinkManager
-    mgr.start("bronze", Sinks.parquetSink(trades, s"$dir/bronze", s"$dir/ckp_b",
+    mgr.start("bronze", Sinks.fileSink(trades, s"$dir/bronze", s"$dir/ckp_b",
       trigger = Trigger.ProcessingTime(0), queryName = "bronze"))
     mem.addData(tradeJson("AAPL", 1.0, 1, t0), tradeJson("MSFT", 2.0, 2, t0))
     mgr.processAllAvailable()
