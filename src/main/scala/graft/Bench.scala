@@ -299,25 +299,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "5").toInt)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // HotSpot refuses to JIT methods >8000 bytecodes (DontCompileHuge
-      // Methods): a whole-stage-codegen'd multi-level aggregate cascade
-      // can exceed that and run INTERPRETED (~3.5x slower on a8's fused
-      // stage, round 9). At 8000 Spark falls back to per-operator
-      // execution for oversized stages, which the JIT does compile.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.batchSession(defaultCpus = 32)
     // Per-query shuffle-write volume from the runtime's own task
     // metrics (r12 verdict item #6: SCALE.md §9.1 projects per-family
     // shuffle bytes — measure them instead). Counters reset before

@@ -740,7 +740,9 @@ object PipelineQueries {
     // the full score-aggregate tree 4× and the langId tokenize ~15×
     // per input row (plans/r17/c2_curation_pipeline_after.txt
     // Filter(2); warm 1.35 s → 0.4 s class). The barrier pins each
-    // tree to ONE evaluation per surviving row; values are unchanged.
+    // tree to ONE evaluation per surviving row; values are unchanged
+    // (PlanSpec's c2 case counts one score tree). Both sit in
+    // Projects, as StageBarrier's usage contract requires.
     // ONE tokenize feeds both stages: langId and the gram expansion
     // share the staged `__toks` (the coalesce('') only differs from
     // langId's bare tokens(lower(text)) on NULL text, where both

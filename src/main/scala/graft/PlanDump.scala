@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Writes `.explain("formatted")` for named queries to files — the
@@ -11,9 +10,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * Usage: runMain graft.PlanDump <outDir> <name>[,<name>...] [suffix]
   *
   * Each query's plan lands in `<outDir>/<name>_<suffix>.txt` (suffix
-  * default "before"). Session confs mirror Bench exactly (same master,
-  * shuffle partitions, AQE, codegen limit) so the captured plan is the
-  * plan the bench actually times. `sr` streaming replays are skipped:
+  * default "before"). It runs on Bench's session
+  * (`SparkEntry.batchSession`), so the captured plan is the plan the
+  * bench actually times. `sr` streaming replays are skipped:
   * their cost is drain orchestration, not a batch plan — the frame a
   * dump would explain is the already-drained localCheckpoint.
   */
@@ -25,17 +24,7 @@ object PlanDump {
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty)
     val suffix = if (args.length > 2) args(2) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.batchSession(defaultCpus = 32)
     names.foreach { name =>
       if (name.startsWith("sr")) {
         System.err.println(s"[plandump] $name skipped: drain query, no batch plan")

@@ -144,22 +144,7 @@ object ScaleBench {
     val repeats = 3
     val scaleRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALEBENCH_LOCAL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // HotSpot refuses to JIT methods >8000 bytecodes (DontCompileHuge
-      // Methods): a whole-stage-codegen'd multi-level aggregate cascade
-      // can exceed that and run INTERPRETED (~3.5x slower on a8's fused
-      // stage, round 9). At 8000 Spark falls back to per-operator
-      // execution for oversized stages, which the JIT does compile.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.batchSession(defaultCpus = 32)
     spark.range(1000000).selectExpr("sum(id)").collect() // warm JVM
 
     val mainDir = s"$scaleRoot/k$kMain"

@@ -22,6 +22,35 @@ import graft.operators._
   */
 object SparkEntry {
 
+  /** The session of the batch mains (Verify, Bench, PlanDump,
+    * ScaleBench): `SPARK_GRAFT_CPUS` local cores (default
+    * `defaultCpus`) and as many shuffle partitions, UTC, AQE, UI off,
+    * WARN logging. `App.main` builds its own (RocksDB state, UI on).
+    */
+  def batchSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      // HotSpot refuses to JIT methods >8000 bytecodes (DontCompileHuge
+      // Methods): a whole-stage-codegen'd multi-level aggregate cascade
+      // can exceed that and run INTERPRETED (~3.5x slower on a8's fused
+      // stage, round 9). At 8000 Spark falls back to per-operator
+      // execution for oversized stages, which the JIT does compile.
+      .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      // Legacy events.parquet generations carried TIMESTAMP(NANOS);
+      // with this flag they surface as epoch-nanos longs, which
+      // Tables.normalizeEventTime converts (current timestamp[us]
+      // data is unaffected by the flag).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Deterministic stand-in for the reference's `now() + 5 minutes`
     * future-event guard (transformations.py:136): all test events are
     * in January 2024.

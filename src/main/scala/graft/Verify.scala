@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -29,26 +29,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // HotSpot refuses to JIT methods >8000 bytecodes (DontCompileHuge
-      // Methods): a whole-stage-codegen'd multi-level aggregate cascade
-      // can exceed that and run INTERPRETED (~3.5x slower on a8's fused
-      // stage, round 9). At 8000 Spark falls back to per-operator
-      // execution for oversized stages, which the JIT does compile.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // Legacy events.parquet generations carried TIMESTAMP(NANOS);
-      // with this flag they surface as epoch-nanos longs, which
-      // Tables.normalizeEventTime converts (current timestamp[us]
-      // data is unaffected by the flag).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.batchSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // Pre-flight (round-8 lesson): print every table's physical schema
     // and fail fast — one readable line, not 53 opaque query failures —

@@ -79,7 +79,8 @@ object Dedup {
     * shingle-hash set, materializing tokens-hashes first.
     *
     * The staged column is a [[graft.functions.StageBarrier]] (r18,
-    * guide §4.4): downstream `explode(sh)` infers a `size(sh) > 0`
+    * guide §4.4; the one optimizer barrier, in a Project as its
+    * contract requires): downstream `explode(sh)` infers a `size(sh) > 0`
     * predicate (InferFiltersFromGenerate) and predicate pushdown
     * re-inlines the whole tokenize+shingle tree into the pushed scan
     * filter — every consumer row paid the tree TWICE (filter +
@@ -182,15 +183,6 @@ object Dedup {
   def minhashJaccardE6(sigA: Column, sigB: Column, k: Int): Column = {
     val matches = size(filter(zip_with(sigA, sigB, (x, y) => x === y), m => m))
     (matches.cast("long") * 1000000L / k).cast("long")
-  }
-
-  /** Exact n-gram Jaccard similarity in integer micro-units:
-    * floor(1e6 * |A∩B| / |A∪B|) over distinct shingle-hash sets.
-    */
-  def jaccardE6(shA: Column, shB: Column): Column = {
-    val inter = size(array_intersect(shA, shB)).cast("long")
-    val uni = size(array_union(shA, shB)).cast("long")
-    when(uni === 0, 0L).otherwise(((inter * 1000000L) - pmod(inter * 1000000L, uni)) / uni).cast("long")
   }
 
   /** Exact pairwise n-gram Jaccard over a (bounded!) document set:
@@ -404,7 +396,7 @@ object Dedup {
     // Barrier-staged like withShingles: the size filter (and the
     // downstream explode's inferred predicate) otherwise pushes below
     // this projection with the winnow tree inlined — 2× per row
-    // (d22's r18 plan).
+    // (d22's r18 plan; PlanSpec's d22 case pins one tree per side).
     docs.select(col(idCol).as("id"),
         graft.functions.StageBarrier(graft.functions.WinnowFunctions
           .winnowFingerprints(tokenHashes(col(textCol)), k, w)).as("fps"))

@@ -41,8 +41,6 @@ object MarketHours {
     "2025-06-19", "2025-07-04", "2025-09-01", "2025-11-27", "2025-12-25"
   ).map(LocalDate.parse)
 
-  def nowEt(): ZonedDateTime = ZonedDateTime.now(Zone)
-
   private def et(dt: ZonedDateTime): ZonedDateTime = dt.withZoneSameInstant(Zone)
 
   def isWeekend(dt: ZonedDateTime): Boolean = et(dt).getDayOfWeek.getValue >= 6

@@ -39,7 +39,8 @@ object CurationStream {
     // score-aggregate tree inlined into its condition, so every
     // micro-batch row paid the tokenize+hash fold twice (once to
     // gate, once to emit). Values are unchanged — the barrier only
-    // pins the tree to one evaluation per row.
+    // pins the tree to one evaluation per row (the same StageBarrier
+    // that keeps Heartbeats' strip predicate on the watermark column).
     // The token array is staged too: the gram expansion references
     // its token input six times and HOFs get no codegen CSE, so the
     // inlined form re-split every micro-batch row's text six times

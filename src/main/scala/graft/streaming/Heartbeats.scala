@@ -62,11 +62,13 @@ import org.apache.spark.sql.functions._
   * loses its watermark-column reference, pushes below the collector,
   * and every heartbeat dies in exactly the batches that exist to
   * carry them. `decorate` therefore routes EVERY stamp through
-  * [[graft.functions.OpaqueStamp]] — a pass-through Catalyst
-  * expression that is non-foldable and nullable-typed by declaration —
-  * so no optimizer rule can evaluate either disjunct statically and
-  * the strip provably keeps its reference. Stamps of any shape,
-  * including plain literals for deterministic replays, are safe.
+  * [[graft.functions.StageBarrier]] — the pass-through optimizer
+  * barrier, non-foldable and nullable-typed by declaration (and
+  * non-deterministic, so the stamp's alias is never substituted
+  * either) — so no optimizer rule can evaluate either disjunct
+  * statically and the strip provably keeps its reference. Stamps of
+  * any shape, including plain literals for deterministic replays, are
+  * safe.
   *
   * THE FOURTH TRAP (r17, found driving App's idle-cascade test — a
   * WATERMARK-SEMANTICS trap, not a Catalyst one): when the decorated
@@ -142,11 +144,11 @@ object Heartbeats {
       .select(fields.map { f =>
         if (f.name == eventTimeCol)
           // The third-trap barrier (see the scaladoc): the stamp goes
-          // through OpaqueStamp so no optimizer rule can statically
+          // through StageBarrier so no optimizer rule can statically
           // evaluate the strip predicate's isnull(event_time) half —
           // neither by folding a literal stamp nor by NullPropagation
           // over a provably non-nullable one.
-          graft.functions.OpaqueStamp(stamp.cast(f.dataType)).as(f.name)
+          graft.functions.StageBarrier(stamp.cast(f.dataType)).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }: _*)
       .withColumn(HbCol, lit(true))

@@ -25,10 +25,12 @@ object LatestPriceStream {
   case class PriceState(price: Double, volume: Long, time: Timestamp)
 
   /** Core fold of the stream and the batch adapter: advance through
-    * the batch's events in event-time order, IGNORING any event older than
-    * the current state — a late out-of-order trade must not regress
-    * the snapshot to stale data (found in review; the batch form's
-    * window picks the max event time, and streaming must agree).
+    * the batch's events in (event_time, price) order, IGNORING any
+    * event not strictly after the current state in that order — a late
+    * out-of-order trade must not regress the snapshot to stale data
+    * (found in review; the batch form's window picks the max event
+    * time, and streaming must agree), and a re-delivered copy of the
+    * newest trade must not emit a second snapshot with a zero change.
     * Ties on event_time take the later-sorted (higher-price) event,
     * deterministically. The first-ever trade of a symbol carries
     * change = pct = None — the batch window's LEAD produces NULL
@@ -40,7 +42,8 @@ object LatestPriceStream {
     var prev = initial
     var newest: Option[LatestPrice] = None
     sorted.foreach { e =>
-      val fresh = prev.forall(p => !e.event_time.before(p.time))
+      val fresh = prev.forall(p => e.event_time.after(p.time) ||
+        (e.event_time.equals(p.time) && e.price > p.price))
       if (fresh) {
         val (change, pct) = prev match {
           case Some(p) if p.price != 0 =>

@@ -205,14 +205,13 @@ object TradeStreams {
   def dedupWithinWatermark(df: DataFrame): DataFrame =
     df.dropDuplicatesWithinWatermark(Seq("symbol", "timestamp"))
 
-  /** F1 (streaming form) — silver filter with the wall-clock
-    * future-event guard the reference uses (to_silver,
-    * transformations.py:114-137). `current_timestamp()` in streaming
-    * is micro-batch evaluation time (SURVEY.md §7.5.3).
+  /** F1 (streaming form) — the batch silver rule
+    * (`Medallion.toSilver`) with the wall-clock future-event guard the
+    * reference uses (to_silver, transformations.py:114-137).
+    * `current_timestamp()` in streaming is micro-batch evaluation time
+    * (SURVEY.md §7.5.3).
     */
   def toSilverStreaming(df: DataFrame): DataFrame =
-    df.withColumn("price", round(col("price"), 4))
-      .withColumn("volume", abs(col("volume")))
-      .filter(col("volume") > 0 && col("price") > 0 &&
-        col("event_time") <= current_timestamp() + expr("INTERVAL 5 MINUTES"))
+    graft.operators.Medallion.toSilver(df,
+      current_timestamp() + expr("INTERVAL 5 MINUTES"))
 }

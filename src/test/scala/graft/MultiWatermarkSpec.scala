@@ -275,7 +275,7 @@ class MultiWatermarkSpec extends SparkSpecBase {
       .withColumn("vwap_e6", lit(0L)).withColumn("vwap", lit(0.0))
       .withColumn("window_date", to_date(col("window_start")))
     // A plain LITERAL stamp — the hardest case for the third trap:
-    // without the OpaqueStamp barrier, heartbeat-only batches pruned
+    // without the StageBarrier, heartbeat-only batches pruned
     // the union, folded the strip predicate to a reference-free
     // `false`, and pushed it below the collector (`Filter false` over
     // the rate scan, captured live developing this test). This test
@@ -326,10 +326,11 @@ class MultiWatermarkSpec extends SparkSpecBase {
     // And the barrier's declarations, pinned directly — both halves
     // the third trap needs defeated: non-foldable (FoldablePropagation
     // cannot substitute the alias) and nullable (NullPropagation
-    // cannot rewrite isnull(event_time) to false).
-    val barrier = graft.functions.OpaqueStamp(
+    // cannot rewrite isnull(event_time) to false) — plus the
+    // non-determinism that stops alias re-inlining at the staged sites.
+    val barrier = graft.functions.StageBarrier(
       org.apache.spark.sql.graftbridge.ColumnBridge.expression(lit(ts("13:00"))))
-    assert(!barrier.foldable && barrier.nullable)
+    assert(!barrier.foldable && barrier.nullable && !barrier.deterministic)
   }
 
   test("cascade delay sizing: wall-clock heartbeats late-drop steady-state bars unless the delay covers the upstream emission lag (r17)") {

@@ -22,6 +22,13 @@ class PlanSpec extends SparkSpecBase {
     }
   }
 
+  /** How often `marker` occurs in the query's optimized logical plan:
+    * a count of the copies of the expression tree it stands for.
+    */
+  private def optimizedCount(name: String, marker: String): Int =
+    SparkEntry.queries(name)(spark, Sf).queryExecution.optimizedPlan.toString
+      .split(java.util.regex.Pattern.quote(marker), -1).length - 1
+
   test("OHLCV aggregates hash, not sort (custom min_by_ord2)") {
     val p = plan("a1_ohlcv_5m")
     assert(p.contains("HashAggregate"))
@@ -359,6 +366,11 @@ class PlanSpec extends SparkSpecBase {
     assert(!p.contains("CartesianProduct"), "curation chain must stay equi-join only")
     val windowLines = p.linesIterator.filter(_.contains("Window [")).toSeq
     assert(windowLines.isEmpty, "no corpus-wide window expected in the curation chain")
+    // The StageBarrier pins the ngramScoreMilli tree to one evaluation:
+    // its bucket-weight modulus appears once. Without the barrier the
+    // quota filter is pushed down with the score alias re-inlined.
+    assert(optimizedCount("c2_curation_pipeline", "% 2001)") === 1,
+      "the ngramScoreMilli tree is re-inlined past its StageBarrier stage")
   }
 
   test("t13 encode runs on the vocab table: equi-joins only, native codegen expressions") {
@@ -469,6 +481,10 @@ class PlanSpec extends SparkSpecBase {
       "winnowing lost the native fused expression (HOF form is O(m^2 k))")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "pair stage regressed to an all-pairs join")
+    // The StageBarrier keeps the size filter from re-inlining the winnow
+    // tree: d22 self-joins the fingerprint table, so one tree per side.
+    assert(optimizedCount("d22_winnowing", "winnow_fingerprints") === 2,
+      "the winnow tree is re-inlined past its StageBarrier stage")
   }
 
   test("c4 prune: assignment scan plus cluster-keyed windows — no join, no cartesian") {

@@ -299,6 +299,31 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
+  test("a re-delivered newest trade emits no second latest-price snapshot") {
+    implicit val sqlCtx = spark.sqlContext
+    withRocksDbState {
+      val mem = MemoryStream[LatestPriceStream.TradeEvent]
+      val snaps = LatestPriceStream.snapshots(spark, mem.toDS())
+      val q = snaps.writeStream.format("memory").queryName("lp_redelivered_out")
+        .outputMode("update").start()
+      mem.addData(LatestPriceStream.TradeEvent("AAPL", 100.0, 10, new Timestamp(t0)))
+      q.processAllAvailable()
+      mem.addData(LatestPriceStream.TradeEvent("AAPL", 110.0, 20, new Timestamp(t0 + 1000)))
+      q.processAllAvailable()
+      // The same trade again: equal (event_time, price) to the state is
+      // not fresh, so it must not emit a (0.0, 0.0) snapshot that an
+      // upsert by symbol would let overwrite the true change.
+      mem.addData(LatestPriceStream.TradeEvent("AAPL", 110.0, 20, new Timestamp(t0 + 1000)))
+      q.processAllAvailable()
+      q.stop()
+      val rows = spark.table("lp_redelivered_out").collect()
+      assert(rows.length === 2, rows.toSeq)
+      val newest = rows.filter(_.getAs[Double]("last_price") == 110.0)
+      assert(newest.length === 1)
+      assert(newest.head.getAs[Double]("price_change") === 10.0)
+    }
+  }
+
   test("batch adapter reproduces the stateful fold") {
     val ds = Seq(
       LatestPriceStream.TradeEvent("A", 100.0, 1, new Timestamp(t0)),
