@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.operators._
+import graft.streaming.LocalFs
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -25,7 +26,8 @@ object SparkEntry {
   /** The session of the batch mains (Verify, Bench, PlanDump,
     * ScaleBench): `SPARK_GRAFT_CPUS` local cores (default
     * `defaultCpus`) and as many shuffle partitions, UTC, AQE, UI off,
-    * WARN logging. `App.main` builds its own (RocksDB state, UI on).
+    * WARN logging, the spawn-free local file systems (`LocalFs`).
+    * `App.main` builds its own (RocksDB state, UI on).
     */
   def batchSession(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -46,6 +48,7 @@ object SparkEntry {
       // data is unaffected by the flag).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.SessionConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

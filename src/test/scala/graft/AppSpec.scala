@@ -552,6 +552,62 @@ class AppSpec extends SparkSpecBase {
     assert(dead.length === 1 && dead.head.getAs[String]("symbol") === "BAD")
   }
 
+  test("fan-out drain conserves trades and volume across silver, gold5m and gold1h") {
+    // The layers re-derive silver independently (fan-out: each gold
+    // grain parses and dedups the raw feed itself), so nothing but
+    // these sums ties them together. Six files cross the hour, each
+    // re-sending two rows of the previous file (inside the 10m
+    // watermark, so dedup drops them and nothing is late) and carrying
+    // three invalid rows. The span crosses the watermark, so the files
+    // must arrive in order.
+    val dir = Files.createTempDirectory("graft_app_conserve").toString
+    val t0 = 1705314600000L // 2024-01-15 10:30:00 UTC
+    def line(sym: String, px: Double, vol: Long, ts: Long) =
+      s"""{"symbol":"$sym","price":$px,"volume":$vol,"timestamp":$ts,"conditions":[],"ingestion_time":$ts}"""
+    val syms = Seq("AAPL", "MSFT", "NVDA")
+    val files = (0 until 6).map { f =>
+      (0 until 8).map { i =>
+        val n = f * 8 + i
+        line(syms(n % 3), 100.0 + n, 1L + n % 7, t0 + n * 61000L)
+      }
+    }
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    for ((f, i) <- files.zipWithIndex) {
+      val resent = if (i == 0) Nil else files(i - 1).takeRight(2)
+      val invalid = Seq(line("BAD", -1.0, 5, t0 + i * 488000L),
+        line("ZERO", 10.0, 0, t0 + i * 488000L), "{not json")
+      val file = Files.write(java.nio.file.Paths.get(s"$dir/in/part$i.json"),
+        (f ++ resent ++ invalid).mkString("\n").getBytes("UTF-8"))
+      // The file source takes files in modification-time order.
+      Files.setLastModifiedTime(file, java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
+    }
+    val raw = spark.readStream.option("maxFilesPerTrigger", "1").text(s"$dir/in")
+    val cfg = App.Config(out = s"$dir/out", checkpoint = s"$dir/ckp",
+      layers = Set("bronze", "silver", "gold5m", "gold1h"), trigger = "available-now")
+    val mgr = App.start(spark, raw, cfg)
+    val progress = try {
+      mgr.handles.values.foreach(_.awaitTermination(120000))
+      assert(mgr.status.values.forall(!_), s"queries still active: ${mgr.status}")
+      mgr.handles.map { case (n, q) => n -> q.recentProgress.toSeq }
+    } finally mgr.stopAll()
+
+    for ((layer, ps) <- progress) {
+      assert(ps.map(_.batchId).distinct.size >= 6, s"$layer ran ${ps.size} batches")
+      val dropped = ps.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      assert(dropped === 0, s"$layer dropped $dropped rows by watermark")
+    }
+    def read(layer: String) = spark.read.parquet(s"$dir/out/$layer")
+    val silver = read("silver")
+    val silverRows = silver.count()
+    assert(silverRows === 48) // 48 valid trades; re-sends and invalid rows gone
+    val silverVolume = silver.agg(sum("volume")).as[Long].head()
+    val gold5m = read("gold5m").agg(sum("trade_count"), sum("volume")).as[(Long, Long)].head()
+    val gold1hVolume = read("gold1h").agg(sum("volume")).as[Long].head()
+    assert(gold5m === ((silverRows, silverVolume)))
+    assert(gold1hVolume === silverVolume)
+    assert(read("gold1h").select("window_start").distinct().count() === 2) // 10:00 and 11:00
+  }
+
   test("admission layer classifies a replayed doc batch against a seeded corpus") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._

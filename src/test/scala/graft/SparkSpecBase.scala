@@ -19,6 +19,9 @@ object TestSpark {
       // per-operator execution instead of running interpreted (r9).
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.ui.enabled", "false")
+      // The mains' local file systems: checkpoint and parquet I/O
+      // without chmod/readlink processes (graft.streaming.LocalFs).
+      .config(graft.streaming.LocalFs.SessionConfs)
       .getOrCreate()
     // Keep test output readable: failures drown in executor INFO spam
     // otherwise (the mains set the same level).
