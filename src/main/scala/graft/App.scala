@@ -6,7 +6,8 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Medallion, Ohlcv}
 import graft.sources.Tables
-import graft.streaming.{IncrementalGoldStream, LocalFs, Sinks, SpawnFreeLocalFs, TradeStreams}
+import graft.streaming.{IncrementalGoldStream, LocalFs, Sinks, SpawnFreeLocalFileSystem,
+  SpawnFreeLocalFs, TradeStreams}
 
 /** Streaming application entry — the Scala analog of the reference
   * consumer CLI (src/consumer/main.py:115-153): layer toggles, trigger
@@ -187,17 +188,30 @@ object App {
   /** Build the full branch graph over a raw source frame and start
     * every selected sink. Returns the manager holding the handles.
     *
-    * Before any query starts, `start` binds the session's
-    * `fs.AbstractFileSystem.file.impl` to [[SpawnFreeLocalFs]] unless the
-    * caller chose a non-default binding (the same rule as the RocksDB
-    * switch below). Every checkpoint commit (offsets, commits, state-store
-    * changelogs and their checksums, `_spark_metadata`) is a `FileContext`
-    * create-then-rename, and without Hadoop's native library the stock
-    * binding forks `chmod` per created file and `readlink` twice per
-    * rename: about 3,000 processes in an 8 s perfbench `live` run on 4
-    * vCPUs, and most of each layer's walCommit, commitOffsets and
-    * stateCommit time. The bytes on disk are the same, so checkpoints
-    * move freely between the bindings.
+    * Before any query starts, `start` makes the fixed cost of a
+    * micro-batch independent of how the caller built the session. Each
+    * setting below keeps a caller's non-default choice (the same rule as
+    * the RocksDB switch):
+    *   - `fs.AbstractFileSystem.file.impl` is bound to
+    *     [[SpawnFreeLocalFs]]. Every checkpoint commit (offsets, commits,
+    *     state-store changelogs and their checksums, `_spark_metadata`) is
+    *     a `FileContext` create-then-rename, and without Hadoop's native
+    *     library the stock binding forks `chmod` per created file and
+    *     `readlink` twice per rename: about 3,000 processes in an 8 s
+    *     perfbench `live` run on 4 vCPUs, and most of each layer's
+    *     walCommit, commitOffsets and stateCommit time.
+    *   - `fs.file.impl` is bound to [[SpawnFreeLocalFileSystem]], with the
+    *     JVM-wide `file:` cache off for the session (it may hold a stock
+    *     instance). Parquet part files, `_temporary` and `.spark-staging`
+    *     directories, the upsert's marker and the `_metrics` export then
+    *     stop forking `chmod`: about 650 processes in the same run.
+    *   - `spark.sql.codegen.useIdInClassName` is turned off. A stage's
+    *     number is part of its generated class text, so a stage renumbered
+    *     between micro-batches compiles again; without the number it hits
+    *     the codegen cache. (Per-batch constants are the other half:
+    *     [[graft.functions.BatchConstant]].)
+    * The bytes on disk are the same under either binding, so checkpoints
+    * and stores move freely between them.
     */
   def start(spark: SparkSession, raw: DataFrame, cfg: Config): Sinks.SinkManager = {
     // Trigger modes per the reference's documented set: micro-batch
@@ -271,13 +285,13 @@ object App {
         "continuous topology with heartbeats instead, starting each " +
         "chained level once its upstream has committed the backlog, so " +
         "it lands in that level's first micro-batch, before any heartbeat.")
-    // Spawn-free checkpoint I/O (see the scaladoc). FileContext reads the
-    // key afresh per checkpoint writer, and each query clones this
-    // session's conf at start, so the binding reaches every query below.
-    val afsBinding = spark.conf.getOption(LocalFs.AbstractFsKey)
-      .orElse(Option(spark.sparkContext.hadoopConfiguration.get(LocalFs.AbstractFsKey)))
-    if (afsBinding.forall(_ == LocalFs.StockAbstractFs))
-      spark.conf.set(LocalFs.AbstractFsKey, classOf[SpawnFreeLocalFs].getName)
+    // Spawn-free file I/O and per-batch-stable generated code (see the
+    // scaladoc). Each query clones this session's conf at start, so the
+    // settings reach every query below.
+    LocalFs.bindSession(spark)
+    val classIdKey = "spark.sql.codegen.useIdInClassName"
+    if (spark.conf.get(classIdKey) == "true") spark.conf.set(classIdKey, "false")
+    val hadoopConf = spark.sessionState.newHadoopConf()
     // The indicators layer runs on transformWithState, which only the
     // RocksDB state store provider supports — configure it here (as
     // main() does for the whole app) so callers building their own
@@ -334,9 +348,9 @@ object App {
            "gold5m_final" -> "gold5m_final", "gold1h" -> "gold1h")
          if cfg.layers(layer) && (layer != "gold1h" || gold1hFromBars)) {
       val dir = new org.apache.hadoop.fs.Path(s"${cfg.out}/$dirName")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = dir.getFileSystem(hadoopConf)
       def lastBatch(log: org.apache.hadoop.fs.Path): Long = {
-        val logFs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val logFs = log.getFileSystem(hadoopConf)
         if (!logFs.exists(log)) -1L
         else logFs.listStatus(log).flatMap(_.getPath.getName.stripSuffix(".compact").toLongOption)
           .maxOption.getOrElse(-1L)
@@ -446,8 +460,7 @@ object App {
         // hdfs:// or s3a://, where File.mkdirs is a silent no-op
         // and the stream would fail at start.
         val silverPath = new org.apache.hadoop.fs.Path(s"${cfg.out}/silver")
-        silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .mkdirs(silverPath)
+        silverPath.getFileSystem(hadoopConf).mkdirs(silverPath)
         val files = spark.readStream.schema(silverSchema)
           .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
           .parquet(s"${cfg.out}/silver")
@@ -519,7 +532,7 @@ object App {
         // window order (a bar is emitted only once its window closed
         // upstream), so one bar-span of slack is already conservative.
         val barsPath = new org.apache.hadoop.fs.Path(s"${cfg.out}/gold5m_final")
-        barsPath.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(barsPath)
+        barsPath.getFileSystem(hadoopConf).mkdirs(barsPath)
         val barFiles = spark.readStream.schema(barsSchema)
           .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
           .parquet(s"${cfg.out}/gold5m_final")

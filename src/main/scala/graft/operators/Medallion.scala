@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.BatchConstant
+
 /** Bronze -> Silver medallion transforms — pure DataFrame -> DataFrame
   * functions so the identical code runs in batch tests and streaming
   * production (the central design property of the reference's
@@ -26,11 +28,14 @@ object Medallion {
     trades.withColumn("source", lit(source))
 
   /** P5 — wall-clock processing metadata (streaming path only; not
-    * deterministic, so kept out of oracle-checked plans).
+    * deterministic, so kept out of oracle-checked plans). Both are the
+    * micro-batch's timestamp, passed by reference
+    * ([[graft.functions.BatchConstant]]) so the generated code is the
+    * same in every batch.
     */
   def withAuditTimestamps(df: DataFrame): DataFrame =
-    df.withColumn("processed_at", current_timestamp())
-      .withColumn("processing_date", current_date())
+    df.withColumn("processed_at", BatchConstant(current_timestamp()))
+      .withColumn("processing_date", BatchConstant(current_date()))
 
   /** P4 — quality normalization: round price to 4 decimals, absolute
     * volume (clean_trades, transformations.py:140-154).

@@ -83,12 +83,14 @@ object Validation {
   }
 
   /** Streaming form: the future bound is micro-batch evaluation time
-    * plus the skew window, like the reference's producer validator.
+    * plus the skew window, like the reference's producer validator,
+    * passed by reference ([[graft.functions.BatchConstant]]) so the
+    * generated code is the same in every batch.
     */
   def validateStreaming(trades: DataFrame,
                         filterZeroVolume: Boolean = true): DataFrame =
-    validate(trades,
-      unix_millis(current_timestamp()) + lit(FutureSkewMs), filterZeroVolume)
+    validate(trades, graft.functions.BatchConstant(
+      unix_millis(current_timestamp()) + lit(FutureSkewMs)), filterZeroVolume)
 
   /** F5 (streaming form) — zero-cost validation counters attached to
     * the stream itself via `Dataset.observe`: total/valid/invalid per

@@ -86,7 +86,7 @@ object IncrementalGoldStream {
       .withColumn(BatchCol, lit(-1L))
       .localCheckpoint(true) // cut lineage: the source dir is replaced below
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(hPath, true)
     Sinks.upsertByKey(combined, path, partitionBy = Nil, keys = UpsertKeys,
       nBuckets = nBuckets)

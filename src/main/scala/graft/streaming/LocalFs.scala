@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsCon
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
 
 /** Spawn-free local file systems for checkpoint and sink I/O.
   *
@@ -41,6 +42,49 @@ object LocalFs {
   val AbstractFsKey = "fs.AbstractFileSystem.file.impl"
   /** Hadoop's default binding of [[AbstractFsKey]] (core-default.xml). */
   val StockAbstractFs = "org.apache.hadoop.fs.local.LocalFs"
+  /** Hadoop key naming the `FileSystem` of `file:` paths: parquet part
+    * files, `_temporary` and `.spark-staging` directories, markers.
+    */
+  val FsKey = "fs.file.impl"
+  /** What `file:` resolves to when [[FsKey]] is unset (Hadoop's service
+    * registration; core-default.xml leaves the key empty).
+    */
+  val StockFs = "org.apache.hadoop.fs.LocalFileSystem"
+  /** `FileSystem.get` caches one instance per scheme, authority and user
+    * JVM-wide, whatever the conf asks for; with this set it builds one
+    * from the conf on every call.
+    */
+  val FsCacheOffKey = "fs.file.impl.disable.cache"
+
+  /** Binds both local-file APIs of `spark`'s session conf to the
+    * spawn-free classes, keeping a caller's non-default binding: a key
+    * is bound when its effective value (session conf, else the
+    * SparkContext's Hadoop conf) is unset or the stock class. Everything
+    * that builds its Hadoop conf from the session sees the binding:
+    * checkpoint writers, the file sink, `DataFrameWriter` and
+    * `sessionState.newHadoopConf()`, from which the program resolves the
+    * file systems it uses itself.
+    *
+    * The `FileSystem` binding also turns the `file:` cache off for the
+    * session, since the JVM-wide cache may already hold a stock
+    * instance. An uncached `LocalFileSystem` costs one small object per
+    * lookup: it starts no thread and holds no open handle (streams are
+    * the caller's), and nothing in Spark's SQL engine, Parquet or
+    * Hadoop's client calls `FileSystem.deleteOnExit`, the one duty an
+    * instance that is never closed would skip.
+    */
+  def bindSession(spark: SparkSession): Unit = {
+    def unlessChosen(key: String, stock: String, ours: String): Boolean = {
+      val effective = spark.conf.getOption(key)
+        .orElse(Option(spark.sparkContext.hadoopConfiguration.get(key))).filter(_.nonEmpty)
+      val bind = effective.forall(_ == stock)
+      if (bind) spark.conf.set(key, ours)
+      bind
+    }
+    unlessChosen(AbstractFsKey, StockAbstractFs, classOf[SpawnFreeLocalFs].getName)
+    if (unlessChosen(FsKey, StockFs, classOf[SpawnFreeLocalFileSystem].getName))
+      spark.conf.set(FsCacheOffKey, "true")
+  }
 
   /** Session-builder confs binding both local-file APIs to the
     * spawn-free classes. `fs.file.impl` goes through the JVM-wide

@@ -157,9 +157,12 @@ object Monitoring {
     def exportOnce(): Unit = synchronized {
       try {
         import spark.implicits._
-        listener.metrics(spark).write.mode("overwrite").parquet(s"$dir/batches")
+        // One file per table: a ring of a few hundred rows split over
+        // defaultParallelism tasks took that many slots from the live
+        // queries and wrote that many part files per export.
+        listener.metrics(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/batches")
         val alerts = listener.slowBatches(sloMs)
-        alerts.toDF().write.mode("overwrite").parquet(s"$dir/alerts")
+        alerts.toDF().coalesce(1).write.mode("overwrite").parquet(s"$dir/alerts")
         if (alerts.nonEmpty)
           log.warn(s"SLO: ${alerts.size} micro-batch(es) over ${sloMs} ms " +
             s"(slowest ${alerts.map(_.batch_duration_ms).max} ms, " +

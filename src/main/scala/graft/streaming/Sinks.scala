@@ -131,9 +131,10 @@ object Sinks {
     val batchSchema = readShape(bucketed.schema)
     // "Exists" must mean "has data": a pre-created empty directory
     // holds nothing to merge. Hadoop FS API, not java.io.File — the
-    // store may be hdfs:// or s3a://.
+    // store may be hdfs:// or s3a://. Resolved from the session's conf,
+    // like the write below, so the marker uses the same file system.
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val exists = fs.exists(hPath) && fs.listStatus(hPath).exists { s =>
       val n = s.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
@@ -274,7 +275,8 @@ object Sinks {
     */
   def deadLetterSink(invalid: DataFrame, path: String, checkpoint: String,
                      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): DataStreamWriter[Row] =
-    fileSink(invalid.withColumn("dead_lettered_at", current_timestamp()),
+    fileSink(invalid.withColumn("dead_lettered_at",
+      graft.functions.BatchConstant(current_timestamp())),
       path, checkpoint, trigger = trigger, queryName = "dead_letters")
 
   /** K4 — multi-sink fan-out manager: N concurrent StreamingQuery

@@ -209,9 +209,10 @@ object TradeStreams {
     * (`Medallion.toSilver`) with the wall-clock future-event guard the
     * reference uses (to_silver, transformations.py:114-137).
     * `current_timestamp()` in streaming is micro-batch evaluation time
-    * (SURVEY.md §7.5.3).
+    * (SURVEY.md §7.5.3); the bound reaches generated code by reference
+    * ([[graft.functions.BatchConstant]]), not as a per-batch literal.
     */
   def toSilverStreaming(df: DataFrame): DataFrame =
     graft.operators.Medallion.toSilver(df,
-      current_timestamp() + expr("INTERVAL 5 MINUTES"))
+      graft.functions.BatchConstant(current_timestamp() + expr("INTERVAL 5 MINUTES")))
 }

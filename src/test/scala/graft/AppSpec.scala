@@ -203,6 +203,12 @@ class AppSpec extends SparkSpecBase {
       "the late trade is not counted as dropped by gold5m's watermark")
     val alerts = spark.read.parquet(s"$dir/out/_metrics/alerts")
     assert(alerts.count() > 0, "SLO alert did not fire in the export")
+    // Each export writes one file per table, not one per default slot.
+    for (table <- Seq("batches", "alerts")) {
+      val parts = Files.list(java.nio.file.Paths.get(s"$dir/out/_metrics/$table"))
+        .toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      assert(parts.length === 1, s"_metrics/$table: ${parts.mkString(", ")}")
+    }
   }
 
   test("chained layers refuse bounded-drain triggers (backlog would be silently lost)") {

@@ -17,7 +17,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{LocalFs, SpawnFreeLocalFs, SpawnFreeRawLocalFileSystem}
+import graft.streaming.{LocalFs, SpawnFreeLocalFileSystem, SpawnFreeLocalFs,
+  SpawnFreeRawLocalFileSystem}
 
 /** The spawn-free local file systems (`graft.streaming.LocalFs`) give the
   * stock answers without forking, and `App.start` binds them.
@@ -165,6 +166,43 @@ class LocalFsSpec extends SparkSpecBase {
     assert(fsForks(processStarts(atomicWrite(classOf[SpawnFreeLocalFs].getName, "spawnfree")),
       probeDir).isEmpty)
 
+    // An explicit stock binding is the default, which App.start replaces.
+    val commands = drainForks(dir, LocalFs.AbstractFsKey -> LocalFs.StockAbstractFs) {
+      assert(spark.conf.get(LocalFs.AbstractFsKey) === classOf[SpawnFreeLocalFs].getName)
+    }
+    val ckpForks = fsForks(commands, dir.resolve("ckp"))
+    assert(ckpForks.size === 0, ckpForks.take(3))
+  }
+
+  test("App.start drains the fan-out topology with no chmod under out/, over a stock FileSystem binding") {
+    val dir = Files.createTempDirectory("graft_localfs_out")
+    // The stock binding with the JVM-wide cache off for the session: a
+    // parquet write through it forks `chmod` (the negative control).
+    val stock = Seq(LocalFs.FsKey -> LocalFs.StockFs, LocalFs.FsCacheOffKey -> "true")
+    val probe = dir.resolve("probe")
+    val stockForks = fsForks(withConfs(stock: _*)(processStarts(
+      spark.range(2).write.parquet(probe.toString))), probe)
+    assert(stockForks.exists(_.startsWith("chmod")), s"the stock binding forked only: $stockForks")
+
+    val commands = drainForks(dir, stock: _*) {
+      assert(spark.conf.get(LocalFs.FsKey) === classOf[SpawnFreeLocalFileSystem].getName)
+    }
+    val out = dir.resolve("out")
+    // gold5m created its store in batch 0 and merged batches 1 and 2;
+    // stopAll flushed the metrics export.
+    assert(Files.exists(out.resolve("gold5m/_graft_upsert_spec")))
+    assert(Files.exists(out.resolve("_metrics/batches/_SUCCESS")))
+    val outForks = fsForks(commands, out)
+    assert(outForks.size === 0, s"${outForks.size} forks, first: ${outForks.take(3)}")
+  }
+
+  /** Drains three one-minute files through `App.start`'s fan-out
+    * topology (bronze, silver, gold5m, gold1h, dead letters; the metrics
+    * export on) under the production state store and `confs`, with
+    * `started` run once the queries are up. Returns the commands of the
+    * processes the JVM started meanwhile, `stopAll` included.
+    */
+  private def drainForks(dir: JPath, confs: (String, String)*)(started: => Unit): Seq[String] = {
     val t0 = 1705312800000L
     def line(sym: String, px: Double, ts: Long) =
       s"""{"symbol":"$sym","price":$px,"volume":1,"timestamp":$ts,"conditions":[],"ingestion_time":$ts}"""
@@ -177,37 +215,73 @@ class LocalFsSpec extends SparkSpecBase {
     val cfg = App.Config(out = dir.resolve("out").toString, checkpoint = ckp.toString,
       layers = Set("bronze", "silver", "gold5m", "gold1h", "deadletter"),
       trigger = "available-now")
-    // Production state store (RocksDB changelogs); an explicit stock
-    // binding is the default, which App.start replaces.
-    val commands = withConfs(
+    val commands = withConfs(Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-      LocalFs.AbstractFsKey -> LocalFs.StockAbstractFs) {
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") ++
+      confs: _*) {
       processStarts {
         val raw = spark.readStream.option("maxFilesPerTrigger", "1").text(dir.resolve("in").toString)
         val mgr = App.start(spark, raw, cfg)
         try {
-          assert(spark.conf.get(LocalFs.AbstractFsKey) === classOf[SpawnFreeLocalFs].getName)
+          started
           mgr.handles.values.foreach(_.awaitTermination(120000))
           assert(mgr.status.values.forall(!_), s"queries still active: ${mgr.status}")
         } finally mgr.stopAll()
       }
     }
     assert(Files.exists(ckp.resolve("gold5m/commits/2")), "the drain did not commit three batches")
-    val ckpForks = fsForks(commands, ckp)
-    assert(ckpForks.size === 0, ckpForks.take(3))
+    commands
   }
 
   test("App.start keeps a caller's non-default file system binding") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_localfs_keep")
     val custom = "org.apache.hadoop.fs.local.RawLocalFs"
-    withAbstractFs(custom) {
+    val customFs = classOf[RawLocalFileSystem].getName
+    withConfs(LocalFs.AbstractFsKey -> custom, LocalFs.FsKey -> customFs) {
       val mgr = App.start(spark, MemoryStream[String].toDF(),
         App.Config(out = s"$dir/out", checkpoint = s"$dir/ckp", layers = Set("bronze")))
-      try assert(spark.conf.get(LocalFs.AbstractFsKey) === custom)
-      finally mgr.stopAll()
+      try {
+        assert(spark.conf.get(LocalFs.AbstractFsKey) === custom)
+        assert(spark.conf.get(LocalFs.FsKey) === customFs)
+        assert(spark.conf.getOption(LocalFs.FsCacheOffKey).isEmpty)
+      } finally mgr.stopAll()
     }
+  }
+
+  test("an uncached spawn-free FileSystem starts no thread and keeps no handle open") {
+    val dir = Files.createTempDirectory("graft_localfs_uncached")
+    val conf = new Configuration()
+    conf.set(LocalFs.FsKey, classOf[SpawnFreeLocalFileSystem].getName)
+    conf.setBoolean(LocalFs.FsCacheOffKey, true)
+    val root = new Path(dir.toUri)
+    def use(i: Int): Unit = {
+      val fs = root.getFileSystem(conf)
+      val p = new Path(root, s"d$i/f")
+      val out = fs.create(p)
+      out.write(i)
+      out.close()
+      fs.setPermission(p, new FsPermission("644"))
+      val in = fs.open(p)
+      assert(in.read() === i)
+      in.close()
+      assert(fs.listStatus(p.getParent).map(_.getPath.getName).toSeq === Seq("f"))
+      assert(Files.exists(dir.resolve(s"d$i/.f.crc")))
+      fs.delete(p, false)
+    }
+    use(200) // loads the classes and opens the jars the calls need
+    val first = root.getFileSystem(conf)
+    assert(first.isInstanceOf[SpawnFreeLocalFileSystem] && (root.getFileSystem(conf) ne first),
+      "the cache is not off")
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    val (threads0, fds0) = (threads.getThreadCount, os.getOpenFileDescriptorCount)
+    (0 until 200).foreach(use)
+    // 200 instances, none closed: slack for the session's own threads.
+    assert(threads.getThreadCount - threads0 < 10, s"threads $threads0 -> ${threads.getThreadCount}")
+    assert(os.getOpenFileDescriptorCount - fds0 < 10,
+      s"open descriptors $fds0 -> ${os.getOpenFileDescriptorCount}")
   }
 }
