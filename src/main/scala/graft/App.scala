@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{Medallion, Ohlcv}
-import graft.sources.Tables
-import graft.streaming.{IncrementalGoldStream, LocalFs, Sinks, SpawnFreeLocalFileSystem,
-  SpawnFreeLocalFs, TradeStreams}
+import org.apache.hadoop.fs.Path
+
+import graft.operators.{Medallion, Ohlcv, Validation}
+import graft.streaming.{Heartbeats, IncrementalGoldStream, IndicatorStream, LocalFs, Sinks,
+  SpawnFreeLocalFileSystem, SpawnFreeLocalFs, TradeStreams}
 
 /** Streaming application entry — the Scala analog of the reference
   * consumer CLI (src/consumer/main.py:115-153): layer toggles, trigger
@@ -20,17 +21,10 @@ import graft.streaming.{IncrementalGoldStream, LocalFs, Sinks, SpawnFreeLocalFil
   *     --checkpoint /data/ckp --trigger "10 seconds" --watermark "10 minutes" \
   *     --offsets latest
   *   graft.App --source file --in /data/raw --out /data/market ...
-  *   graft.App --layers admission --docs-in /data/crawl_slices \
-  *     --corpus /data/corpus --min-jaccard-e6 500000 --out /data/market ...
   *
   * Pipeline (spark_processor.py:135-183): source -> parse (P1,P2) ->
-  * watermark (A5) -> bronze (P3) / silver (P4,F1,F2) / gold (A1-A4)
-  * branches, each with its own sink and checkpoint, fanned out
-  * through one SinkManager (K1/K4). Append layers (bronze, silver,
-  * dead letters) use the native file sink — exactly-once via the
-  * _spark_metadata commit log; the update-mode gold layers use the
-  * foreachBatch keyed upsert (idempotent, so at-least-once replay
-  * converges).
+  * watermark (A5) -> the rows of [[layers]] (bronze P3, silver P4/F1/F2,
+  * gold A1-A4, ...), each its own query, sink and checkpoint.
   */
 object App {
 
@@ -77,20 +71,6 @@ object App {
         * and log a WARN.
         */
       sloMs: Long = 10000L,
-      /** Admission layer (d16): directory of incoming document
-        * batches as JSONL crawl slices (Tables.documentsSchema), read
-        * as a streaming json source.
-        */
-      docsIn: String = "",
-      /** Admission layer: the existing corpus as a parquet directory
-        * of (doc_id, text, ...) — indexed ONCE at stream start
-        * (Dedup.corpusIndex), probed per micro-batch.
-        */
-      corpus: String = "",
-      /** Admission layer: verified n-gram-Jaccard threshold (e6
-        * micro-units) above which a batch doc is a near-dup.
-        */
-      minJaccardE6: Long = 500000L,
       /** Idle-source heartbeat interval in seconds (0 = off). When on,
         * the parsed trade feed is decorated with a rate-driven
         * heartbeat (Heartbeats.decorate): the watermark keeps
@@ -122,9 +102,6 @@ object App {
       case (c, Array("--chained", v)) => c.copy(chained = v.toBoolean)
       case (c, Array("--metrics-out", v)) => c.copy(metricsOut = v)
       case (c, Array("--slo-ms", v)) => c.copy(sloMs = v.toLong)
-      case (c, Array("--docs-in", v)) => c.copy(docsIn = v)
-      case (c, Array("--corpus", v)) => c.copy(corpus = v)
-      case (c, Array("--min-jaccard-e6", v)) => c.copy(minJaccardE6 = v.toLong)
       case (c, Array("--heartbeat-secs", v)) => c.copy(heartbeatSecs = v.toInt)
       case (c, other) => sys.error(s"unknown argument: ${other.mkString(" ")}")
     }
@@ -170,7 +147,7 @@ object App {
 
   /** Watermark delay for the HEARTBEAT-decorated gold1h cascade:
     * upstream watermark delay + 5m bar span + 5m chain-latency
-    * margin. See the sizing note at the cascade wiring — a wall-clock
+    * margin. See the sizing note on the gold1h cascade row — a wall-clock
     * heartbeat watermark at a cascade level must lag by at least the
     * upstream EMISSION lag, or every steady-state bar arrives "late"
     * by construction and the hour's tail bars silently vanish from
@@ -185,8 +162,218 @@ object App {
     s"${upstreamMs + 10 * 60000L} milliseconds"
   }
 
-  /** Build the full branch graph over a raw source frame and start
-    * every selected sink. Returns the manager holding the handles.
+  /** Where a layer's stream comes from: the parsed feed, the clean
+    * deduplicated feed (silver's output directory when chained), or the
+    * finalized 5m bar files (the chained gold1h cascade).
+    */
+  private[graft] sealed trait Upstream
+  private[graft] case object Parsed extends Upstream
+  private[graft] case object Clean extends Upstream
+  private[graft] case object Bars extends Upstream
+
+  /** How a layer's rows reach its directory. Append layers use the
+    * native file sink, exactly-once through its `_spark_metadata` commit
+    * log; the update-mode gold grains use the foreachBatch keyed upsert
+    * (idempotent, so at-least-once replay converges); the merge-on-read
+    * store upserts per-batch partial bars ([[IncrementalGoldStream]]).
+    */
+  private[graft] sealed trait SinkKind
+  private[graft] final case class FileSink(partitionBy: Seq[String]) extends SinkKind
+  private[graft] final case class Upsert(keys: Seq[String], partitionBy: Seq[String])
+    extends SinkKind
+  private[graft] case object MergeOnRead extends SinkKind
+
+  /** One streaming layer: one query named `name`, writing `out` from
+    * `frame` over its upstream, checkpointed at `checkpoint`. `prepare`
+    * runs before any query starts.
+    */
+  private[graft] final case class Layer(name: String, out: String, checkpoint: String,
+      upstream: Upstream, sink: SinkKind, frame: DataFrame => DataFrame,
+      prepare: () => Unit = () => ())
+
+  /** Every layer `--layers` can select, in wiring order (a chain level
+    * after its upstream). gold1h depends on `cfg`: in the chained
+    * cascade it rolls up the gold5m_final bar files through a file sink.
+    */
+  private[graft] def layers(spark: SparkSession, cfg: Config): Seq[Layer] = {
+    def row(name: String, upstream: Upstream, sink: SinkKind)(frame: DataFrame => DataFrame) =
+      Layer(name, s"${cfg.out}/$name", s"${cfg.checkpoint}/$name", upstream, sink, frame)
+    // Schema note for existing stores: bars() output gained a
+    // `pv_ticks` column (the exact VWAP carry that makes grain
+    // rollups lossless). A gold directory written by an earlier build
+    // holds files without it; reading the mixed directory resolves
+    // the schema from a subset of footers unless
+    // spark.read.option("mergeSchema", true) is set — do that once
+    // and rewrite, or start a fresh store directory.
+    def bars(duration: String)(trades: DataFrame): DataFrame =
+      Ohlcv.bars(trades.withColumn("event_id", col("timestamp")), duration)
+        .withColumn("window_date", to_date(col("window_start")))
+    val barKeys = Seq("symbol", "window_start")
+    val byTradeDate = Seq("trade_date")
+    val byWindowDate = Seq("window_date")
+    Seq(
+      row("bronze", Parsed, FileSink(byTradeDate)) { parsed =>
+        Medallion.withAuditTimestamps(
+          Medallion.toBronze(parsed.withColumn("trade_date", to_date(col("event_time")))))
+      },
+      // Exactly-once matters here specifically: the chained gold
+      // topology STREAMS from this directory, so a foreachBatch
+      // append (at-least-once — crash between append and checkpoint
+      // commit replays the batch) would double-count duplicated rows
+      // into gold bars. The file sink's _spark_metadata commit log
+      // closes that window: the chained file source reads only
+      // committed files.
+      row("silver", Parsed, FileSink(byTradeDate)) { parsed =>
+        cleanFeed(parsed, cfg).withColumn("trade_date", to_date(col("event_time")))
+      },
+      row("gold5m", Clean, Upsert(barKeys, byWindowDate))(bars("5 minutes")),
+      // Merge-on-read 5m gold: the STATELESS alternative to the
+      // watermarked aggregate above. Each micro-batch reduces to partial
+      // bars upserted by (symbol, window, batch_id); finished bars
+      // materialize at read time via IncrementalGoldStream.read. No
+      // watermark ⇒ a backfill batch of any age lands correctly (it
+      // adds one partial to an old window) where the gold5m aggregate
+      // would drop it. Serving reads pay the merge until `compact` folds
+      // partials — the deployment picks per store: watermarked upsert
+      // for hot serving, merge-on-read for backfill-heavy history.
+      row("gold5m_mor", Clean, MergeOnRead)(_.withColumn("event_id", col("timestamp"))),
+      // Finalized-bar variant of the 5m grain: append output mode, so a
+      // bar is emitted exactly once — when the watermark closes its
+      // window — through the exactly-once file sink (immutable files +
+      // _spark_metadata commit log). That makes the directory a safe
+      // upstream for a chained file source, which the upsert gold store
+      // is not (its buckets rewrite). The upsert store remains the
+      // serving layer (live partial bars); this layer is the cascade
+      // feed and the archival bar log.
+      row("gold5m_final", Clean, FileSink(byWindowDate))(bars("5 minutes")),
+      if (cfg.chained && cfg.layers("gold5m_final"))
+        // A7 as a stream: 1h bars roll up from the FINALIZED 5m bar
+        // stream instead of re-aggregating trades — state and input
+        // are O(bars), not O(trades), and the parse+dedup+trade-window
+        // state exists exactly once in the whole topology. Watermark
+        // on window_start: finalized bars arrive in near-monotone
+        // window order (a bar is emitted only once its window closed
+        // upstream), so one bar-span of slack is already conservative.
+        row("gold1h", Bars, FileSink(byWindowDate)) { barFiles =>
+          // The cascade needs its OWN heartbeat: an idle trade feed means
+          // EMPTY 5m windows upstream, which emit no bars in append mode
+          // — so nothing propagates down to advance this layer's
+          // watermark and the session's last 1h bar would stay open until
+          // the next session's first bar. rollup's per-row shape assert
+          // PASSES null-bounded rows by design (r16 ADVICE fix), so the
+          // composition is safe in EITHER conjunct order when
+          // CombineFilters merges the strip filter with the assert — no
+          // Catalyst ordering detail is load-bearing. The strip conjunct
+          // still removes heartbeats from the stream before the
+          // aggregate (pinned end-to-end in MultiWatermarkSpec's
+          // rollup-decoration test and AppSpec's idle-cascade test).
+          //
+          // DELAY SIZING (found driving the idle-cascade test end to
+          // end; a bar-order delay of "5 minutes" here was WRONG under
+          // heartbeats): a bar for window [W, W+5m) is EMITTED upstream
+          // only once the silver-level heartbeat watermark (wallclock − D)
+          // passes W+5m, so against THIS layer's wall-clock watermark
+          // every bar is D+5m "late" by construction, and the last bars of
+          // each hour were SILENTLY late-dropped (numRowsDroppedByWatermark
+          // is the only witness; MultiWatermarkSpec pins both sides). The
+          // delay covers D + 5m (bar span) + a 5m chain-latency margin
+          // (file commit + trigger + catch-up; a deeper backlog is the
+          // backfill posture, which refuses heartbeats). Cost: the
+          // session's last 1h bar flushes ~10 min later. Without
+          // heartbeats the watermark derives from bar stamps themselves
+          // (near-monotone window order), so one bar span of slack holds.
+          val barStream =
+            if (cfg.heartbeatSecs > 0)
+              Heartbeats.decorate(barFiles, "window_start",
+                cascadeHeartbeatDelay(cfg.watermark), cfg.heartbeatSecs)
+            else barFiles.withWatermark("window_start", "5 minutes")
+          Ohlcv.rollup(barStream, "1 hour").withColumn("window_date", to_date(col("window_start")))
+        }
+      else row("gold1h", Clean, Upsert(barKeys, byWindowDate))(bars("1 hour")),
+      // Streaming per-symbol EMA/RSI (the recursive indicators a
+      // window cannot express) over the clean deduped feed.
+      row("indicators", Clean, FileSink(byTradeDate)) { clean =>
+        import spark.implicits._
+        val ticks = clean.select(col("symbol"), col("price"), col("event_time"))
+          .as[IndicatorStream.TradeTick]
+        IndicatorStream.updates(spark, ticks)
+          .toDF().withColumn("trade_date", to_date(col("event_time")))
+      }.copy(prepare = () => useRocksDb(spark)),
+      // K5 — validation split: rows failing the rule bundle (including
+      // schema-level parse nulls) land in the dead-letter store with
+      // their reasons. The future-timestamp bound is re-evaluated per
+      // micro-batch (validateStreaming) — a constant here would start
+      // rejecting all live traffic after 5 minutes of uptime.
+      row("deadletter", Parsed, FileSink(Nil)) { parsed =>
+        val (_, dead) = Validation.split(
+          Validation.validateStreaming(parsed.withColumn("event_id", col("timestamp"))))
+        dead.withColumn("errors", to_json(col("errors")))
+          .withColumn("dead_lettered_at", graft.functions.BatchConstant(current_timestamp()))
+      }.copy(out = s"${cfg.out}/dead_letters"))
+  }
+
+  /** The parsed feed through the streaming silver rule and dedup.
+    *
+    * Heartbeat decoration goes LAST — above every quality filter,
+    * directly under the stateful operators. Decorating the raw parsed
+    * feed instead would re-freeze the watermark through a SECOND
+    * Catalyst trap (found live in AppSpec): CombineFilters merges the
+    * silver quality filter into the strip filter, and
+    * PushPredicateThroughNonJoin then pushes its watermark-column-free
+    * conjuncts (volume > 0, price > 0) BELOW the EventTimeWatermark
+    * node, where the heartbeats' null columns fail them — the rows die
+    * before the collector, silently, exactly like an unprotected
+    * strip predicate. Heartbeats' scaladoc documents the rule; the
+    * "null-hostile filter above the decoration point" test pins it.
+    */
+  private def cleanFeed(parsed: DataFrame, cfg: Config): DataFrame =
+    if (cfg.heartbeatSecs > 0)
+      TradeStreams.dedupWithinWatermark(Heartbeats.decorate(
+        TradeStreams.toSilverStreaming(parsed), "event_time",
+        cfg.watermark, cfg.heartbeatSecs))
+    else
+      TradeStreams.dedupWithinWatermark(TradeStreams.toSilverStreaming(
+        TradeStreams.withWatermark(parsed, cfg.watermark)))
+
+  /** The indicators layer runs on transformWithState, which only the
+    * RocksDB state store provider supports — configure it here (as
+    * main() does for the whole app) so callers building their own
+    * session don't hit a mid-start state-store error that kills one
+    * query while the other layers keep running. Never clobber a
+    * caller's explicit non-default choice; fail fast instead.
+    */
+  private def useRocksDb(spark: SparkSession): Unit = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark.conf.getOption(key) match {
+      case Some(p) if p == rocks => ()
+      // The stock default (getOption reports it even when never set
+      // explicitly) cannot run transformWithState — switch it. New
+      // queries pick this up; queries already running, or restarting
+      // from a checkpoint, keep the provider recorded in their
+      // offset log (Spark restores it from checkpoint metadata).
+      case None | Some(_)
+          if spark.conf.getOption(key).forall(_.endsWith("HDFSBackedStateStoreProvider")) =>
+        spark.conf.set(key, rocks)
+        // We chose RocksDB for the caller, so also choose its
+        // production commit mode (deltas, not per-batch snapshots —
+        // the r14-measured tax). Unconditional inside THIS branch
+        // only: getOption can't distinguish an explicit false from
+        // the stock default (it reports defaults, same trap as the
+        // provider above), and a caller who wants different RocksDB
+        // knobs sets the provider explicitly — which skips this
+        // whole branch.
+        spark.conf.set(
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      case Some(p) => throw new IllegalArgumentException(
+        s"the indicators layer needs $rocks, but the session pins $key=$p")
+    }
+  }
+
+  /** Start every selected layer of [[layers]] over a raw source frame,
+    * fanned out through one SinkManager (K1/K4), and return it. If a
+    * start fails, the layers already started are stopped before the
+    * error propagates.
     *
     * Before any query starts, `start` makes the fixed cost of a
     * micro-batch independent of how the caller built the session. Each
@@ -228,16 +415,18 @@ object App {
       case "once" => (Trigger.Once(), true)
       case t => (Trigger.ProcessingTime(t), false)
     }
-    // Validate the whole config BEFORE any query starts: a failure
-    // mid-wiring would strand already-started queries with no manager
-    // handle to stop them.
+    // Validate the whole config BEFORE any query starts.
+    val table = layers(spark, cfg)
+    val unknown = cfg.layers -- table.map(_.name)
+    require(unknown.isEmpty, s"unknown layer(s) ${unknown.mkString(", ")}; " +
+      s"--layers takes ${table.map(_.name).mkString(", ")}")
+    val selected = table.filter(l => cfg.layers(l.name))
     if (cfg.chained) {
-      // In the cascade topology (gold5m_final present) gold1h is a
-      // BAR consumer, not a silver consumer — it streams the
-      // finalized-bar directory, one chain level further down.
-      val cascade = cfg.layers("gold5m_final") && cfg.layers("gold1h")
-      val silverConsumers = Seq("gold5m", "gold5m_final", "gold5m_mor", "gold1h", "indicators")
-        .filter(cfg.layers).filterNot(l => cascade && l == "gold1h")
+      // In the cascade gold1h is a BAR consumer, not a silver consumer
+      // — it streams the finalized-bar directory, one chain level
+      // further down.
+      val cascade = selected.exists(_.upstream == Bars)
+      val silverConsumers = selected.filter(_.upstream == Clean).map(_.name)
       if (boundedDrain) {
         // Same offset-snapshot hazard one level down: a draining
         // gold1h would snapshot the gold5m_final directory before the
@@ -271,10 +460,6 @@ object App {
             "enable the silver layer")
       }
     }
-    if (cfg.layers("admission"))
-      require(cfg.docsIn.nonEmpty && cfg.corpus.nonEmpty,
-        "the admission layer needs --docs-in (incoming JSONL batches) " +
-          "and --corpus (existing corpus parquet)")
     // Heartbeats are wall-clock stamped: under a bounded-drain trigger
     // (a backfill) the first heartbeat would advance the watermark
     // past the whole backlog and late-drop it — refuse up front.
@@ -292,46 +477,12 @@ object App {
     val classIdKey = "spark.sql.codegen.useIdInClassName"
     if (spark.conf.get(classIdKey) == "true") spark.conf.set(classIdKey, "false")
     val hadoopConf = spark.sessionState.newHadoopConf()
-    // The indicators layer runs on transformWithState, which only the
-    // RocksDB state store provider supports — configure it here (as
-    // main() does for the whole app) so callers building their own
-    // session don't hit a mid-start state-store error that kills one
-    // query while the other layers keep running. Never clobber a
-    // caller's explicit non-default choice; fail fast instead.
-    if (cfg.layers("indicators")) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      spark.conf.getOption(key) match {
-        case Some(p) if p == rocks => ()
-        // The stock default (getOption reports it even when never set
-        // explicitly) cannot run transformWithState — switch it. New
-        // queries pick this up; queries already running, or restarting
-        // from a checkpoint, keep the provider recorded in their
-        // offset log (Spark restores it from checkpoint metadata).
-        case None | Some(_)
-            if spark.conf.getOption(key).forall(_.endsWith("HDFSBackedStateStoreProvider")) =>
-          spark.conf.set(key, rocks)
-          // We chose RocksDB for the caller, so also choose its
-          // production commit mode (deltas, not per-batch snapshots —
-          // the r14-measured tax). Unconditional inside THIS branch
-          // only: getOption can't distinguish an explicit false from
-          // the stock default (it reports defaults, same trap as the
-          // provider above), and a caller who wants different RocksDB
-          // knobs sets the provider explicitly — which skips this
-          // whole branch.
-          spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true")
-        case Some(p) => throw new IllegalArgumentException(
-          s"the indicators layer needs $rocks, but the session pins $key=$p")
-      }
-    }
-    // MIGRATION NOTE: bronze/silver/dead-letter layers write through
-    // the native file sink, whose _spark_metadata commit log defines
-    // what readers see. Pointing a NEW checkpoint at a directory that
-    // already holds parquet written some other way (e.g. a pre-file-
-    // sink deployment) silently hides that history from sink-log-aware
-    // readers — surface it loudly instead of letting gold silently
+    selected.foreach(_.prepare())
+    // MIGRATION NOTE: the file-sink layers' _spark_metadata commit log
+    // defines what readers see. Pointing a NEW checkpoint at a directory
+    // that already holds parquet written some other way (e.g. a pre-
+    // file-sink deployment) silently hides that history from sink-log-
+    // aware readers — surface it loudly instead of letting gold silently
     // recompute from post-upgrade data only.
     //
     // The reverse is refused: a checkpoint that has not planned the
@@ -342,32 +493,27 @@ object App {
     // the first batch past the log then dies with
     // CANNOT_READ_DELTA_FILE_NOT_EXISTS (found in AppSpec's idle
     // cascade, which restarted silver on fresh checkpoints).
-    val gold1hFromBars = cfg.chained && cfg.layers("gold5m_final")
-    for ((layer, dirName) <- Seq("bronze" -> "bronze", "silver" -> "silver",
-           "deadletter" -> "dead_letters", "indicators" -> "indicators",
-           "gold5m_final" -> "gold5m_final", "gold1h" -> "gold1h")
-         if cfg.layers(layer) && (layer != "gold1h" || gold1hFromBars)) {
-      val dir = new org.apache.hadoop.fs.Path(s"${cfg.out}/$dirName")
+    def lastBatch(log: Path): Long = {
+      val fs = log.getFileSystem(hadoopConf)
+      if (!fs.exists(log)) -1L
+      else fs.listStatus(log).flatMap(_.getPath.getName.stripSuffix(".compact").toLongOption)
+        .maxOption.getOrElse(-1L)
+    }
+    for (l <- selected if l.sink.isInstanceOf[FileSink]) {
+      val dir = new Path(l.out)
       val fs = dir.getFileSystem(hadoopConf)
-      def lastBatch(log: org.apache.hadoop.fs.Path): Long = {
-        val logFs = log.getFileSystem(hadoopConf)
-        if (!logFs.exists(log)) -1L
-        else logFs.listStatus(log).flatMap(_.getPath.getName.stripSuffix(".compact").toLongOption)
-          .maxOption.getOrElse(-1L)
-      }
-      val hasData = fs.exists(dir) && fs.listStatus(dir).nonEmpty
-      val sinkLog = new org.apache.hadoop.fs.Path(dir, "_spark_metadata")
-      if (hasData && !fs.exists(sinkLog))
+      val sinkLog = new Path(dir, "_spark_metadata")
+      if (fs.exists(dir) && fs.listStatus(dir).nonEmpty && !fs.exists(sinkLog))
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"$dir holds data but no _spark_metadata sink log: files written " +
             "before this stream's first commit will be INVISIBLE to " +
             "sink-log-aware readers (including the chained gold source). " +
             "Migrate the history or use a fresh output directory.")
       val logged = lastBatch(sinkLog)
-      val planned = lastBatch(new org.apache.hadoop.fs.Path(s"${cfg.checkpoint}/$layer/offsets"))
+      val planned = lastBatch(new Path(s"${l.checkpoint}/offsets"))
       require(logged <= planned,
         s"$dir's sink log holds batches up to $logged, but checkpoint " +
-          s"${cfg.checkpoint}/$layer has planned only up to $planned: the file " +
+          s"${l.checkpoint} has planned only up to $planned: the file " +
           "sink would skip this query's first batches without running them " +
           "(their rows lost, their state never committed). Resume from the " +
           "checkpoint that wrote the directory, or write to a fresh one.")
@@ -377,276 +523,71 @@ object App {
       case "avro" => TradeStreams.parseTradesAvro(raw)
       case other => sys.error(s"unknown format '$other' (json|avro)")
     }
-    val watermarked = TradeStreams.withWatermark(parsed, cfg.watermark)
-    // Heartbeat decoration goes LAST — above every quality filter,
-    // directly under the stateful operators. Decorating the raw parsed
-    // feed instead would re-freeze the watermark through a SECOND
-    // Catalyst trap (found live in AppSpec): CombineFilters merges the
-    // silver quality filter into the strip filter, and
-    // PushPredicateThroughNonJoin then pushes its watermark-column-free
-    // conjuncts (volume > 0, price > 0) BELOW the EventTimeWatermark
-    // node, where the heartbeats' null columns fail them — the rows die
-    // before the collector, silently, exactly like an unprotected
-    // strip predicate. Heartbeats' scaladoc documents the rule; the
-    // "null-hostile filter above the decoration point" test pins it.
-    def cleanFeed(): DataFrame =
-      if (cfg.heartbeatSecs > 0)
-        TradeStreams.dedupWithinWatermark(graft.streaming.Heartbeats.decorate(
-          TradeStreams.toSilverStreaming(parsed), "event_time",
-          cfg.watermark, cfg.heartbeatSecs))
-      else
-        TradeStreams.dedupWithinWatermark(TradeStreams.toSilverStreaming(watermarked))
+    // A file source requires its directory to exist at stream start;
+    // the upstream layer's first commit would otherwise race it. Hadoop
+    // FS API, not java.io.File — the output may be hdfs:// or s3a://,
+    // where File.mkdirs is a silent no-op and the stream would fail at
+    // start.
+    def files(dir: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      val path = s"${cfg.out}/$dir"
+      new Path(path).getFileSystem(hadoopConf).mkdirs(new Path(path))
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger).parquet(path)
+    }
+    // The clean feed in the default (fan-out) topology mirrors the
+    // reference's per-sink fan-out (sinks.py): each layer re-runs the
+    // silver dedup with its own watermark state. Chained, the layers
+    // stream silver's output directory (already deduped and
+    // quality-filtered), so that state exists exactly once. An idle
+    // silver directory stalls the chained layers exactly like an idle
+    // union member — same mitigation, same altitude rule (nothing
+    // null-hostile sits above the decoration).
+    def input(upstream: Upstream): DataFrame = upstream match {
+      case Parsed => parsed
+      case Clean if !cfg.chained => cleanFeed(parsed, cfg)
+      case Clean if cfg.heartbeatSecs > 0 => Heartbeats.decorate(
+        files("silver", silverSchema), "event_time", cfg.watermark, cfg.heartbeatSecs)
+      case Clean => TradeStreams.withWatermark(files("silver", silverSchema), cfg.watermark)
+      case Bars => files("gold5m_final", barsSchema)
+    }
     val mgr = new Sinks.SinkManager
-
-    // Operational visibility (the reference's Prometheus/Grafana
-    // analog): a bounded per-batch progress listener always attaches;
-    // unless disabled, its ring + the evaluated latency SLO export to
-    // a _metrics layer on a 10 s cadence (matching the reference's
-    // alert evaluation interval), with a final flush on stopAll so
-    // bounded runs keep their last batches.
-    val listener = graft.streaming.Monitoring.attach(spark)
-    mgr.monitor = Some(listener)
-    mgr.onStop(() => spark.streams.removeListener(listener))
-    val metricsDir = cfg.metricsOut match {
-      case "none" => None
-      case "" => Some(s"${cfg.out}/_metrics")
-      case d => Some(d)
-    }
-    metricsDir.foreach { d =>
-      val exporter = new graft.streaming.Monitoring.MetricsExporter(
-        spark, listener, d, sloMs = cfg.sloMs).start()
-      mgr.onStop(() => exporter.stop())
-    }
-
-    if (cfg.layers("bronze")) {
-      val bronze = Medallion.withAuditTimestamps(
-        Medallion.toBronze(parsed.withColumn("trade_date", to_date(col("event_time")))))
-      mgr.start("bronze", Sinks.fileSink(bronze, s"${cfg.out}/bronze",
-        s"${cfg.checkpoint}/bronze", partitionBy = Seq("trade_date"),
-        trigger = trigger, queryName = "bronze"))
-    }
-    if (cfg.layers("silver")) {
-      val silver = cleanFeed()
-        .withColumn("trade_date", to_date(col("event_time")))
-      // Exactly-once matters here specifically: the chained gold
-      // topology STREAMS from this directory, so a foreachBatch
-      // append (at-least-once — crash between append and checkpoint
-      // commit replays the batch) would double-count duplicated rows
-      // into gold bars. The file sink's _spark_metadata commit log
-      // closes that window: the chained file source reads only
-      // committed files.
-      mgr.start("silver", Sinks.fileSink(silver, s"${cfg.out}/silver",
-        s"${cfg.checkpoint}/silver", partitionBy = Seq("trade_date"),
-        trigger = trigger, queryName = "silver"))
-    }
-    // NOTE in the default (fan-out) topology each layer is its own
-    // StreamingQuery with its own state, mirroring the reference's
-    // per-sink fan-out (sinks.py) — gold grains therefore re-run the
-    // silver dedup with separate watermark state. With cfg.chained
-    // the gold grains instead stream FROM the silver output directory
-    // (already deduped and quality-filtered), so the parse+dedup
-    // state exists exactly once regardless of grain count.
-    // Clean deduped upstream for every silver-derived layer (gold
-    // grains, indicators): in chained mode it streams FROM the silver
-    // output directory, so the parse+dedup state exists exactly once
-    // regardless of how many layers consume it.
-    def cleanUpstream(consumer: String): DataFrame =
-      if (cfg.chained) {
-        // Config validity (silver enabled) was checked up front,
-        // before any query started.
-        // The file source requires the directory to exist at stream
-        // start; silver's first commit would otherwise race it.
-        // Hadoop FS API, not java.io.File — the output may be
-        // hdfs:// or s3a://, where File.mkdirs is a silent no-op
-        // and the stream would fail at start.
-        val silverPath = new org.apache.hadoop.fs.Path(s"${cfg.out}/silver")
-        silverPath.getFileSystem(hadoopConf).mkdirs(silverPath)
-        val files = spark.readStream.schema(silverSchema)
-          .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-          .parquet(s"${cfg.out}/silver")
-        // An idle silver directory stalls the chained grains exactly
-        // like an idle union member — same mitigation, same altitude
-        // rule (the file feed is already quality-filtered, so nothing
-        // null-hostile sits above the decoration).
-        if (cfg.heartbeatSecs > 0)
-          graft.streaming.Heartbeats.decorate(files, "event_time",
-            cfg.watermark, cfg.heartbeatSecs)
-        else TradeStreams.withWatermark(files, cfg.watermark)
-      } else cleanFeed()
-
-    // Schema note for existing stores: bars() output gained a
-    // `pv_ticks` column (the exact VWAP carry that makes grain
-    // rollups lossless). A gold directory written by an earlier build
-    // holds files without it; reading the mixed directory resolves
-    // the schema from a subset of footers unless
-    // spark.read.option("mergeSchema", true) is set — do that once
-    // and rewrite, or start a fresh store directory.
-    def goldSink(name: String, duration: String): Unit = {
-      val grain = Ohlcv.bars(cleanUpstream(name).withColumn("event_id", col("timestamp")), duration)
-        .withColumn("window_date", to_date(col("window_start")))
-      mgr.start(name, Sinks.parquetSink(grain, s"${cfg.out}/$name",
-        s"${cfg.checkpoint}/$name", partitionBy = Seq("window_date"),
-        upsertKeys = Seq("symbol", "window_start"),
-        trigger = trigger, queryName = name))
-    }
-    if (cfg.layers("gold5m")) goldSink("gold5m", "5 minutes")
-    // Merge-on-read 5m gold: the STATELESS alternative to the
-    // watermarked aggregate above. Each micro-batch reduces to partial
-    // bars upserted by (symbol, window, batch_id); finished bars
-    // materialize at read time via IncrementalGoldStream.read. No
-    // watermark ⇒ a backfill batch of any age lands correctly (it
-    // adds one partial to an old window) where the gold5m aggregate
-    // would drop it. Serving reads pay the merge until `compact` folds
-    // partials — the deployment picks per store: watermarked upsert
-    // for hot serving, merge-on-read for backfill-heavy history.
-    if (cfg.layers("gold5m_mor")) {
-      val silverIn = cleanUpstream("gold5m_mor")
-        .withColumn("event_id", col("timestamp"))
-      mgr.start("gold5m_mor", IncrementalGoldStream.writer(silverIn,
-        s"${cfg.out}/gold5m_mor", s"${cfg.checkpoint}/gold5m_mor",
-        duration = "5 minutes", trigger = trigger))
-    }
-    // Finalized-bar variant of the 5m grain: append output mode, so a
-    // bar is emitted exactly once — when the watermark closes its
-    // window — through the exactly-once file sink (immutable files +
-    // _spark_metadata commit log). That makes the directory a safe
-    // upstream for a chained file source, which the upsert gold store
-    // is not (its buckets rewrite). The upsert store remains the
-    // serving layer (live partial bars); this layer is the cascade
-    // feed and the archival bar log.
-    if (cfg.layers("gold5m_final")) {
-      val bars = Ohlcv.bars(cleanUpstream("gold5m_final")
-          .withColumn("event_id", col("timestamp")), "5 minutes")
-        .withColumn("window_date", to_date(col("window_start")))
-      mgr.start("gold5m_final", Sinks.fileSink(bars, s"${cfg.out}/gold5m_final",
-        s"${cfg.checkpoint}/gold5m_final", partitionBy = Seq("window_date"),
-        trigger = trigger, queryName = "gold5m_final"))
-    }
-    if (cfg.layers("gold1h")) {
-      if (cfg.chained && cfg.layers("gold5m_final")) {
-        // A7 as a stream: 1h bars roll up from the FINALIZED 5m bar
-        // stream instead of re-aggregating trades — state and input
-        // are O(bars), not O(trades), and the parse+dedup+trade-window
-        // state exists exactly once in the whole topology. Watermark
-        // on window_start: finalized bars arrive in near-monotone
-        // window order (a bar is emitted only once its window closed
-        // upstream), so one bar-span of slack is already conservative.
-        val barsPath = new org.apache.hadoop.fs.Path(s"${cfg.out}/gold5m_final")
-        barsPath.getFileSystem(hadoopConf).mkdirs(barsPath)
-        val barFiles = spark.readStream.schema(barsSchema)
-          .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-          .parquet(s"${cfg.out}/gold5m_final")
-        // The cascade needs its OWN heartbeat: an idle trade feed means
-        // EMPTY 5m windows upstream, which emit no bars in append mode
-        // — so nothing propagates down to advance this layer's
-        // watermark and the session's last 1h bar would stay open until
-        // the next session's first bar. rollup's per-row shape assert
-        // PASSES null-bounded rows by design (r16 ADVICE fix), so the
-        // composition is safe in EITHER conjunct order when
-        // CombineFilters merges the strip filter with the assert — no
-        // Catalyst ordering detail is load-bearing. The strip conjunct
-        // still removes heartbeats from the stream before the
-        // aggregate (pinned end-to-end in MultiWatermarkSpec's
-        // rollup-decoration test and AppSpec's idle-cascade test).
-        //
-        // DELAY SIZING (r17 — found driving the idle-cascade test
-        // end-to-end; the r16 wiring carried the bar-order delay
-        // "5 minutes" here and was WRONG under heartbeats): a bar for
-        // window [W, W+5m) is only EMITTED upstream once the
-        // silver-level heartbeat watermark (wallclock − D) passes
-        // W+5m, i.e. at wallclock ≈ W + 5m + D — so against THIS
-        // layer's wall-clock heartbeat watermark the bar is D+5m
-        // "late" BY CONSTRUCTION, every bar, in steady state. With a
-        // 5-minute delay and the default D = 10 minutes, the last
-        // bars of every hour arrived behind the 1h aggregate's
-        // watermark and were SILENTLY late-dropped — a corrupted
-        // hourly bar, no error anywhere (numRowsDroppedByWatermark is
-        // the only witness; MultiWatermarkSpec pins both sides). The
-        // delay must cover the upstream emission lag: D (upstream
-        // watermark delay) + 5m (bar span) + a chain-latency margin
-        // (file commit + trigger + catch-up batching; 5m is generous
-        // for a live chain — a deeper backlog is the documented
-        // backfill posture, which refuses heartbeats anyway). Cost:
-        // the session's last 1h bar flushes ~10 min later and
-        // O(symbols) windows stay open that much longer — state is
-        // bars, not trades. Without heartbeats the watermark derives
-        // from bar stamps themselves (near-monotone window order), so
-        // the one-bar-span slack remains correct there.
-        val barStream =
-          if (cfg.heartbeatSecs > 0)
-            graft.streaming.Heartbeats.decorate(barFiles, "window_start",
-              cascadeHeartbeatDelay(cfg.watermark), cfg.heartbeatSecs)
-          else barFiles.withWatermark("window_start", "5 minutes")
-        val grain = Ohlcv.rollup(barStream, "1 hour")
-          .withColumn("window_date", to_date(col("window_start")))
-        mgr.start("gold1h", Sinks.fileSink(grain, s"${cfg.out}/gold1h",
-          s"${cfg.checkpoint}/gold1h", partitionBy = Seq("window_date"),
-          trigger = trigger, queryName = "gold1h"))
-      } else goldSink("gold1h", "1 hour")
-    }
-    if (cfg.layers("indicators")) {
-      // Streaming per-symbol EMA/RSI (the recursive indicators a
-      // window cannot express) over the clean deduped feed — the
-      // chained form streams from the silver output like the gold
-      // grains, keeping parse+dedup state single-copy.
-      import spark.implicits._
-      val ticks = cleanUpstream("indicators")
-        .select(col("symbol"), col("price"), col("event_time"))
-        .as[graft.streaming.IndicatorStream.TradeTick]
-      val ind = graft.streaming.IndicatorStream.updates(spark, ticks)
-        .toDF().withColumn("trade_date", to_date(col("event_time")))
-      mgr.start("indicators", Sinks.fileSink(ind, s"${cfg.out}/indicators",
-        s"${cfg.checkpoint}/indicators", partitionBy = Seq("trade_date"),
-        trigger = trigger, queryName = "indicators"))
-    }
-    if (cfg.layers("deadletter")) {
-      // K5 — validation split: rows failing the rule bundle (including
-      // schema-level parse nulls) land in the dead-letter store with
-      // their reasons. The future-timestamp bound is re-evaluated per
-      // micro-batch (validateStreaming) — a constant here would start
-      // rejecting all live traffic after 5 minutes of uptime.
-      val validated = graft.operators.Validation.validateStreaming(
-        parsed.withColumn("event_id", col("timestamp")))
-      val (_, dead) = graft.operators.Validation.split(validated)
-      mgr.start("deadletter", Sinks.deadLetterSink(
-        dead.withColumn("errors", to_json(col("errors"))),
-        s"${cfg.out}/dead_letters", s"${cfg.checkpoint}/deadletter", trigger))
-    }
-    if (cfg.layers("admission")) {
-      // D16 as a stream: classify each incoming crawl slice against
-      // the existing corpus (exact_dup / near_dup / new + the matched
-      // corpus doc). The corpus side is indexed ONCE here — fingerprint
-      // set, shingle signatures, banded LSH keys — and persisted, so a
-      // micro-batch pays only its own hashing plus hash-joins against
-      // the index: per-batch cost scales with the batch, never the
-      // corpus. foreachBatch (not a stream-static join) because the
-      // probe is a multi-stage batch plan (aggregations on both sides
-      // of an equi-join chain) that streaming joins cannot express.
-      val index = graft.operators.Dedup.corpusIndex(
-        spark.read.parquet(cfg.corpus)).persist()
-      mgr.onStop(() => index.unpersist())
-      val docs = spark.readStream.schema(Tables.documentsSchema)
-        .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-        .json(cfg.docsIn)
-      mgr.start("admission", docs.writeStream
-        .queryName("admission")
-        .outputMode("append")
-        .option("checkpointLocation", s"${cfg.checkpoint}/admission")
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
-          // Idempotent replay: verdicts land in a batch_id partition
-          // replaced wholesale via dynamic overwrite — a micro-batch
-          // replayed after a crash rewrites its own partition and
-          // nothing else (the K1 upsert argument, one partition per
-          // epoch).
-          graft.operators.Dedup
-            .incrementalDedupAgainst(batch, index, cfg.minJaccardE6)
-            .withColumn("batch_id", lit(epochId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(s"${cfg.out}/admission")
-        })
+    try {
+      // Operational visibility (the reference's Prometheus/Grafana
+      // analog): a bounded per-batch progress listener always attaches;
+      // unless disabled, its ring + the evaluated latency SLO export to
+      // a _metrics layer on a 10 s cadence (matching the reference's
+      // alert evaluation interval), with a final flush on stopAll so
+      // bounded runs keep their last batches.
+      val listener = graft.streaming.Monitoring.attach(spark)
+      mgr.monitor = Some(listener)
+      mgr.onStop(() => spark.streams.removeListener(listener))
+      val metricsDir = cfg.metricsOut match {
+        case "none" => None
+        case "" => Some(s"${cfg.out}/_metrics")
+        case d => Some(d)
+      }
+      metricsDir.foreach { d =>
+        val exporter = new graft.streaming.Monitoring.MetricsExporter(
+          spark, listener, d, sloMs = cfg.sloMs).start()
+        mgr.onStop(() => exporter.stop())
+      }
+      for (l <- selected) {
+        val df = l.frame(input(l.upstream))
+        val writer = l.sink match {
+          case FileSink(partitionBy) =>
+            Sinks.fileSink(df, l.out, l.checkpoint, partitionBy, trigger)
+          case Upsert(keys, partitionBy) =>
+            Sinks.parquetSink(df, l.out, l.checkpoint, keys, partitionBy, trigger)
+          case MergeOnRead => IncrementalGoldStream.writer(df, l.out, l.checkpoint, trigger = trigger)
+        }
+        mgr.start(l.name, writer.queryName(l.name))
+      }
+    } catch {
+      case e: Throwable =>
+        // Nothing else holds the started queries, the listener or the
+        // exporter thread: stop them before the error propagates.
+        try mgr.stopAll() catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
     }
     mgr
   }

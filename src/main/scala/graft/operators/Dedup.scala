@@ -891,9 +891,8 @@ object Dedup {
     * deployment builds this ONCE per corpus version — persisted
     * (`persist()`) or materialized as bucketed tables — and every
     * admitted batch probes the same index, so per-batch cost never
-    * re-reads or re-hashes corpus text. The App's `admission` layer
-    * does exactly this: one index at stream start, one probe per
-    * micro-batch.
+    * re-reads or re-hashes corpus text. `ScaleBench`'s d16 corpus
+    * sweep does exactly this: one index per corpus, one probe per batch.
     */
   case class CorpusIndex(fp: DataFrame, sigs: DataFrame, banded: DataFrame) {
     def persist(): CorpusIndex = { fp.persist(); sigs.persist(); banded.persist(); this }

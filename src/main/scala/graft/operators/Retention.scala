@@ -18,8 +18,9 @@ object Retention {
   def retained(df: DataFrame, dateCol: String, days: Int, asOfDate: String): DataFrame =
     df.filter(col(dateCol) >= date_sub(lit(asOfDate).cast("date"), days - 1))
 
-  /** Storage-side retention for a date-partitioned store (see
-    * ServingStore): drops whole expired `dateCol=...` directories —
+  /** Storage-side retention for a date-partitioned store (silver's
+    * `trade_date`, gold's `window_date`): drops whole expired
+    * `dateCol=...` directories —
     * partition-level metadata operation, no data rewrite.
     * Returns the dropped partition names.
     */

@@ -48,7 +48,7 @@ object Sinks {
     * commits the same batch id once, and both batch reads and
     * downstream streaming file sources see only committed files.
     * This is the sink for every append layer: bronze, silver (which
-    * chained gold reads as a stream) and the dead letters.
+    * chained gold reads as a stream) and the dead letters (K5).
     */
   def fileSink(df: DataFrame, path: String, checkpoint: String,
                partitionBy: Seq[String] = Nil,
@@ -265,19 +265,6 @@ object Sinks {
       .option("kafka.bootstrap.servers", bootstrap)
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
-
-  /** K5 — dead-letter branch writer: the invalid split of
-    * Validation.split, persisted with its error reasons. Takes the
-    * caller's trigger like every other sink — silently keeping the
-    * 10 s default here left the dead-letter branch up to one trigger
-    * interval behind the app's configured cadence (found live: a
-    * trigger=0 test drained every sink except this one).
-    */
-  def deadLetterSink(invalid: DataFrame, path: String, checkpoint: String,
-                     trigger: Trigger = Trigger.ProcessingTime("10 seconds")): DataStreamWriter[Row] =
-    fileSink(invalid.withColumn("dead_lettered_at",
-      graft.functions.BatchConstant(current_timestamp())),
-      path, checkpoint, trigger = trigger, queryName = "dead_letters")
 
   /** K4 — multi-sink fan-out manager: N concurrent StreamingQuery
     * handles from one source (SinkManager, sinks.py:209-245).

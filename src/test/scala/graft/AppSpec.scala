@@ -40,6 +40,8 @@ class AppSpec extends SparkSpecBase {
     var mgr: graft.streaming.Sinks.SinkManager = null
     try {
     mgr = App.start(spark, mem.toDF(), cfg)
+    // Each query runs under the name --layers selected it by.
+    assert(mgr.handles.forall { case (n, q) => q.name == n }, mgr.handles.values.map(_.name))
     mem.addData(
       s"""{"symbol":"AAPL","price":10.5,"volume":3,"timestamp":$t0,"conditions":[],"ingestion_time":$t0}""",
       s"""{"symbol":"AAPL","price":11.5,"volume":2,"timestamp":${t0 + 60000},"conditions":[],"ingestion_time":$t0}""",
@@ -220,6 +222,15 @@ class AppSpec extends SparkSpecBase {
       App.start(spark, mem.toDF(), cfg)
     }
     assert(ex.getMessage.contains("snapshots the silver directory"))
+    // A misspelt or removed layer name is refused, never skipped.
+    for (bad <- Seq(Set("bronze", "silvr"), Set("admission"))) {
+      val unknown = intercept[IllegalArgumentException] {
+        App.start(spark, mem.toDF(), cfg.copy(chained = false, layers = bad))
+      }
+      assert(unknown.getMessage.contains((bad - "bronze").head) &&
+        unknown.getMessage.contains("bronze, silver, gold5m"), unknown.getMessage)
+    }
+    assert(!spark.streams.active.exists(_.name == "bronze"))
   }
 
   test("two-invocation chained backfill: bounded downstream drain over committed silver") {
@@ -614,53 +625,63 @@ class AppSpec extends SparkSpecBase {
     assert(read("gold1h").select("window_start").distinct().count() === 2) // 10:00 and 11:00
   }
 
-  test("admission layer classifies a replayed doc batch against a seeded corpus") {
+  test("a start that fails after earlier layers started stops them, the listener and the exporter") {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_app_adm").toString
-    val d = graft.sources.Tables.documents(spark, Sf)
-    // Seeded corpus: every doc_id % 4 == 0 (the d16 oracle recipe).
-    d.filter(pmod(col("doc_id"), lit(4)) === 0)
-      .write.parquet(s"$dir/corpus")
-    // Incoming crawl slice: genuinely-fresh docs, byte-exact copies of
-    // corpus docs (re-id'd +1e6), and 3/4-prefix truncations (+2e6) —
-    // all three verdicts exercised, planted copies known.
-    val batch = d.filter(pmod(col("doc_id"), lit(4)) === 1)
-      .select(col("doc_id"), col("text"))
-      .unionByName(d.filter(pmod(col("doc_id"), lit(8)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      .unionByName(d.filter(pmod(col("doc_id"), lit(8)) === 4)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          expr("substring(text, 1, greatest(3 * length(text) div 4, 1))").as("text")))
-    batch.write.json(s"$dir/in")
-    val cfg = App.Config(out = s"$dir/out", checkpoint = s"$dir/ckp",
-      layers = Set("admission"), trigger = "available-now",
-      docsIn = s"$dir/in", corpus = s"$dir/corpus")
-    val mem = MemoryStream[String] // unused raw source (admission-only run)
-    val mgr = App.start(spark, mem.toDF(), cfg)
+    val dir = Files.createTempDirectory("graft_app_partial").toString
+    val mem = MemoryStream[String]
+    def exporters() = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread]).count(t => t.isAlive && t.getName == "graft-metrics-exporter")
+    val before = spark.streams.active.map(_.id).toSet
+    val first = App.start(spark, mem.toDF(), App.Config(out = s"$dir/a/out",
+      checkpoint = s"$dir/a/ckp", layers = Set("silver"), trigger = "1 second"))
     try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      while (mgr.status.values.exists(identity) && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      assert(mgr.status.values.forall(!_), s"queries still active: ${mgr.status}")
-    } finally mgr.stopAll()
-    def key(r: org.apache.spark.sql.Row) = (
-      r.getAs[Long]("doc_id"), r.getAs[String]("verdict"),
-      Option(r.getAs[java.lang.Long]("exact_dup_of")).map(_.toLong),
-      Option(r.getAs[java.lang.Long]("near_dup_of")).map(_.toLong),
-      Option(r.getAs[java.lang.Long]("near_j_e6")).map(_.toLong))
-    val got = spark.read.parquet(s"$dir/out/admission").collect().map(key).toSet
-    val want = graft.operators.Dedup.incrementalDedup(
-        batch, spark.read.parquet(s"$dir/corpus"), minJaccardE6 = 500000L)
-      .collect().map(key).toSet
-    assert(got === want,
-      s"stream-only: ${(got -- want).take(3)}; batch-only: ${(want -- got).take(3)}")
-    // All three verdicts actually occur on the planted slice.
-    assert(Set("new", "exact_dup", "near_dup").subsetOf(got.map(_._2)))
-    // The admission layer also refuses a config without its inputs.
-    intercept[IllegalArgumentException] {
-      App.start(spark, mem.toDF(), cfg.copy(docsIn = "",
-        out = s"$dir/out2", checkpoint = s"$dir/ckp2"))
+      val running = exporters()
+      // Bronze starts, then silver's start throws at once: a query of
+      // that name is already active in the session.
+      val err = intercept[IllegalArgumentException] {
+        App.start(spark, mem.toDF(), App.Config(out = s"$dir/b/out",
+          checkpoint = s"$dir/b/ckp", layers = Set("bronze", "silver"), trigger = "1 second"))
+      }
+      assert(err.getMessage.contains("silver"), err.getMessage)
+      assert(spark.streams.active.map(_.id).toSet -- before === Set(first.handles("silver").id))
+      val deadline = System.currentTimeMillis() + 10000
+      while (exporters() > running && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(exporters() <= running, "the failed start left its exporter thread running")
+    } finally first.stopAll()
+  }
+
+  test("every file-sink layer refuses a new checkpoint over its sink log before any query starts") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft_app_sinklog").toString
+    val mem = MemoryStream[String]
+    val fanOut = App.Config(out = s"$dir/out", checkpoint = s"$dir/ckp", trigger = "1 second")
+    // gold1h writes through a file sink only in the chained cascade,
+    // which also needs its upstream levels selected.
+    val cascade = fanOut.copy(chained = true, layers = Set("silver", "gold5m_final", "gold1h"))
+    val rows = App.layers(spark, fanOut).map(_ -> fanOut) ++
+      App.layers(spark, cascade).filter(_.upstream == App.Bars).map(_ -> cascade)
+    val fileSinks = rows.filter(_._1.sink.isInstanceOf[App.FileSink])
+    assert(fileSinks.map(_._1.name) === Seq("bronze", "silver", "gold5m_final", "indicators",
+      "deadletter", "gold1h"))
+    val before = spark.streams.active.map(_.id).toSet
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getOption(providerKey)
+    try for ((row, cfg) <- fileSinks) {
+      val log = java.nio.file.Paths.get(row.out, "_spark_metadata")
+      Files.createDirectories(log)
+      Files.write(log.resolve("0"), "v1\n".getBytes("UTF-8"))
+      val err = intercept[IllegalArgumentException] {
+        App.start(spark, mem.toDF(), cfg.copy(checkpoint = s"$dir/fresh_${row.name}",
+          layers = if (cfg.chained) cfg.layers else Set(row.name)))
+      }
+      assert(err.getMessage.contains("sink log") && err.getMessage.contains(row.out),
+        s"${row.name}: ${err.getMessage}")
+      assert(spark.streams.active.forall(q => before(q.id)),
+        s"${row.name} left ${spark.streams.active.map(_.name).mkString(", ")} running")
+      Files.delete(log.resolve("0"))
+    } finally prevProvider match {
+      case Some(p) => spark.conf.set(providerKey, p)
+      case None => spark.conf.unset(providerKey)
     }
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Medallion, Multimodal, Retention}
-import graft.sources.{ServingStore, Tables}
+import graft.sources.Tables
 import graft.streaming.QuoteStreams
 
 class QuoteRetentionSpec extends SparkSpecBase {
@@ -78,12 +78,12 @@ class QuoteRetentionSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft_ttl").toString
     val silver = Medallion.dedup(Medallion.toSilver(
       Tables.trades(spark, Sf), lit("2024-02-01 00:00:00").cast("timestamp")))
-    ServingStore.write(silver, dir, "trade_date", Seq("symbol"))
+    silver.write.mode("overwrite").partitionBy("trade_date").parquet(dir)
     val before = new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("trade_date="))
 
     // Keep 7 days as of Jan 31 -> Jan 25..31 survive.
-    val kept = Retention.retained(ServingStore.read(spark, dir), "trade_date", 7, "2024-01-31")
+    val kept = Retention.retained(spark.read.parquet(dir), "trade_date", 7, "2024-01-31")
     assert(kept.select(min(col("trade_date"))).collect().head.getDate(0).toString === "2024-01-25")
 
     val dropped = Retention.dropExpiredPartitions(spark, dir, "trade_date", 7, "2024-01-31")
@@ -92,7 +92,7 @@ class QuoteRetentionSpec extends SparkSpecBase {
     assert(dropped.nonEmpty && after === before - dropped.size)
     assert(after <= 7)
     // Store still readable post-drop and agrees with the predicate form.
-    assert(ServingStore.read(spark, dir).count() === kept.count())
+    assert(spark.read.parquet(dir).count() === kept.count())
   }
 
   test("gold sink replay is idempotent (exactly-once convergence)") {

@@ -2,70 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Medallion, Validation}
-import graft.sources.{ServingStore, Tables}
+import graft.operators.Validation
+import graft.sources.Tables
 
 class ServingStoreSpec extends SparkSpecBase {
-
-  test("date-partitioned store prunes partitions for day queries") {
-    val dir = Files.createTempDirectory("graft_store").toString
-    val silver = Medallion.dedup(Medallion.toSilver(
-      Tables.trades(spark, Sf), lit("2024-02-01 00:00:00").cast("timestamp")))
-    ServingStore.write(silver, dir, "trade_date", Seq("symbol"))
-
-    // Layout: one directory per day.
-    val dayDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("trade_date="))
-    assert(dayDirs.length >= 28) // January 2024 coverage
-
-    val q = ServingStore.read(spark, dir)
-      .filter(col("trade_date") === lit("2024-01-15").cast("date"))
-    // Partition pruning visible in the physical plan: the day filter
-    // becomes a PartitionFilter on the scan (directory-level skip),
-    // and the result matches the unpartitioned source exactly.
-    val ex = q.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(ex.contains("PartitionFilters") && ex.contains("trade_date"))
-    val expected = silver.filter(col("trade_date") === lit("2024-01-15").cast("date")).count()
-    assert(q.count() === expected && expected > 0)
-  }
-
-  test("bucketed tables join with no shuffle exchange") {
-    val li = Tables.lineitem(spark, Sf).select("l_orderkey", "l_extendedprice")
-    val ord = Tables.orders(spark, Sf).select("o_orderkey", "o_totalprice")
-    ServingStore.writeBucketed(li, "li_bucketed", Seq("l_orderkey"), 8)
-    ServingStore.writeBucketed(ord, "ord_bucketed", Seq("o_orderkey"), 8)
-    try {
-      // Disable broadcast so the join would otherwise shuffle.
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"), col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"))
-      assert(!plan.contains("Exchange"),
-        s"bucketed join still shuffles:\n${plan.take(800)}")
-      assert(joined.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS li_bucketed")
-      spark.sql("DROP TABLE IF EXISTS ord_bucketed")
-    }
-  }
-
-  test("aggregation on the bucket key needs no exchange either") {
-    ServingStore.writeBucketed(
-      Tables.lineitem(spark, Sf).select("l_orderkey", "l_quantity"),
-      "li_bucketed_agg", Seq("l_orderkey"), 8)
-    try {
-      val agg = spark.table("li_bucketed_agg")
-        .groupBy(col("l_orderkey")).agg(sum(col("l_quantity")).as("qty"))
-      agg.collect()
-      assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
-        "aggregation on the bucket key re-shuffled")
-    } finally spark.sql("DROP TABLE IF EXISTS li_bucketed_agg")
-  }
 
   test("JSONL document ingest round-trips the corpus; corrupt lines degrade per mode") {
     val docs = graft.sources.Tables.documents(spark, Sf)
