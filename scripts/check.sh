@@ -1,7 +1,8 @@
 #!/bin/bash
 # Dev loop: run Verify at sf0.01 then compare against the DuckDB oracle,
 # then prove the compare itself is live (oracle-side mutations), then
-# guard the BENCH_BEST ledger against clobbers.
+# guard the SCALEBENCH ledger against clobbers and smoke-test Bench's
+# output.
 #
 # pipefail (r14 ADVICE): without it the mutation gate's exit(1) was
 # swallowed by a trailing `tail` and the liveness check was silently
@@ -24,17 +25,8 @@ fi
 grep -Ev '^\[info\]' "$LOG" | grep -v 'WARN' | head -30 || true
 python3 scripts/oracle_check.py "$SF" "$OUT"
 (cd scripts && python3 oracle_mutation_check.py "$SF" "$OUT")
-python3 scripts/bench_best_guard.py
 python3 scripts/scalebench_guard.py
-# Adjudicator liveness (r15 verdict #8): prove the regression layer
-# can still flag + re-measure + verdict on every surface class (plan
-# warm / eager cold / drain / wall) against a synthetic 1 ms ledger,
-# plus (r17) that a forced degraded round-trip regime reads
-# 'unresolved' on a plan flag and that the bench_summary stdout tail
-# parses. The r15 parseBestKnown regex find showed a vacuous flag
-# pass looks exactly like a healthy quiet round — this fails check.sh
-# instead. ~2.5 min (two subset Bench runs). Skippable for tight
-# subset loops with SPARK_GRAFT_SKIP_ADJSMOKE=1.
-if [ "${SPARK_GRAFT_SKIP_ADJSMOKE:-0}" != "1" ]; then
-  python3 scripts/adjudicator_smoke.py
-fi
+# One subset Bench run (a plan query and an sr drain at sf0.1, next to
+# $SF): every measurement field present and live, and the bench_summary
+# stdout tail parses. About a minute.
+python3 scripts/bench_smoke.py "$(dirname "$SF")/sf0.1"

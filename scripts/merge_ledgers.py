@@ -1,28 +1,7 @@
 #!/usr/bin/env python3
-"""Ledger-merge automation (r14 verdict item #6).
-
-BENCH_BEST.json and SCALEBENCH_LOCAL.json are the ledgers the whole
-bench-adjudication layer keys off; both were maintained by MANUAL
-rules in BENCHNOTES/memory (elementwise-min over pressure-clean runs
-only; subset SCALEBENCH runs merged over the git-HEAD base) — one
-slip clobbers a ledger and every later regression verdict silently
-compares against garbage. This script IS those rules:
-
-  merge_ledgers.py bench <run.json> [--allow name,name]
-      Verify <run.json> is pressure-clean (refuse otherwise), then
-      fold it into BENCH_BEST.json:
-        - plan queries:  min(best, queries_warm[q])    (warm > 0 only)
-        - sr drains:     min(best, queries[sr*])       (cold > 0 only;
-                         the k=1 discipline — drains have no warm)
-        - eager queries: "cold:<q>" <- min(best, queries[q]) for every
-                         q in the run's "eager" roster (their warm
-                         re-counts a cached frame; the cold min is what
-                         their regression flag fires on)
-        - walls:         "wall:sr_concurrent"   <- sr_drains.concurrent_wall
-                         "wall:board_concurrent" <- board_concurrent.wall
-      Existing keys are NEVER raised or dropped. --allow names an
-      explicit re-seed (e.g. a query whose fixture changed shape):
-      those keys take the run's value even if higher.
+"""Ledger-merge automation for SCALEBENCH_LOCAL.json (r14 verdict
+item #6). The merge rule for subset ScaleBench runs used to live in
+prose, and one slip clobbers the ledger; this script IS the rule:
 
   merge_ledgers.py scale <subset.json>
       Merge a SCALEBENCH subset run's "queries" entries over the
@@ -31,8 +10,8 @@ compares against garbage. This script IS those rules:
       other top-level field from HEAD unless the subset run carried a
       fresh d16_check/d12_skew_check.
 
-check.sh runs scripts/bench_best_guard.py separately so a hand-edited
-BENCH_BEST that regressed (raised/dropped) any entry fails the build.
+check.sh runs scripts/scalebench_guard.py separately, so a working
+tree that dropped any HEAD entry fails the build.
 """
 import json
 import subprocess
@@ -50,118 +29,6 @@ def git_head(path):
     if out.returncode != 0:
         sys.exit(f"refusing to merge: cannot read HEAD:{path} ({out.stderr.strip()})")
     return json.loads(out.stdout)
-
-
-def merge_bench(run_path, allow):
-    run = load(run_path)
-    if not run.get("pressure_clean", False):
-        sys.exit(f"refusing to merge {run_path}: pressure_clean is false "
-                 "(only quiet-host runs may update best-known)")
-    if run.get("pressure_clean_forced", False):
-        sys.exit(f"refusing to merge {run_path}: pressure_clean was FORCED "
-                 "(SPARK_GRAFT_BENCH_ASSUME_CLEAN is for the adjudicator "
-                 "liveness smoke only — its numbers are not quiet-host)")
-    if run.get("roundtrip_forced", False):
-        sys.exit(f"refusing to merge {run_path}: round-trip readings were "
-                 "FORCED (SPARK_GRAFT_BENCH_FORCE_RT is for the adjudicator "
-                 "smoke's degraded-regime case only)")
-    if run.get("failed"):
-        sys.exit(f"refusing to merge {run_path}: failed queries {run['failed']}")
-    best = load("BENCH_BEST.json")
-    before = dict(best)
-    updates = {}
-    for q, w in run.get("queries_warm", {}).items():
-        if not q.startswith("sr") and w and w > 0:
-            updates[q] = w
-    for q, c in run.get("queries", {}).items():
-        if q.startswith("sr") and c and c > 0:
-            updates[q] = c
-    # Eager plan queries additionally seed a COLD best-known under
-    # "cold:<name>" (r15 verdict item #1): their warm only re-counts a
-    # cached frame, so the cold column is the statistic their
-    # regression flag fires on. The roster comes from the run artifact
-    # itself (Bench.EagerPlanQueries emits it), so this script can
-    # never drift from the flag pass's registry.
-    for q in run.get("eager", []):
-        c = run.get("queries", {}).get(q)
-        if c and c > 0:
-            updates[f"cold:{q}"] = c
-    # Walls are SCHEDULE aggregates, not per-query numbers: a subset
-    # run (SPARK_GRAFT_ONLY), a non-default concurrency, or a schedule
-    # with a crashed member ships an artificially short wall that the
-    # min-rule would then poison the best-knowns with — every later
-    # healthy run would flag, re-run its whole schedule, and read
-    # 'confirmed'. Merge walls only from a FULL board run (the run
-    # must cover at least every per-query entry already in the ledger)
-    # at the default concurrency with empty failed lists.
-    full_board = set(run.get("queries", {})) >= {
-        k for k in best if ":" not in k}
-    sr = run.get("sr_drains", {})
-    board = run.get("board_concurrent", {})
-    if full_board:
-        if not sr.get("failed") and sr.get("concurrency") == 4:
-            sr_wall = sr.get("concurrent_wall", 0)
-            if sr_wall and sr_wall > 0:
-                updates["wall:sr_concurrent"] = sr_wall
-        if not board.get("failed") and board.get("concurrency") == 6:
-            board_wall = board.get("wall", 0)
-            if board_wall and board_wall > 0:
-                updates["wall:board_concurrent"] = board_wall
-    else:
-        print("subset run: wall entries not merged")
-    n_new = n_better = n_reseed = 0
-    reseeds = {}
-    for q, v in sorted(updates.items()):
-        v = round(v, 3)
-        if q in allow and v != best.get(q):
-            print(f"RESEED {q}: {best.get(q)} -> {v}")
-            best[q] = v
-            reseeds[q] = v
-            n_reseed += 1
-        elif q not in best:
-            print(f"NEW    {q}: {v}")
-            best[q] = v
-            n_new += 1
-        elif v < best[q]:
-            print(f"BETTER {q}: {best[q]} -> {v}")
-            best[q] = v
-            n_better += 1
-    dropped = set(before) - set(best)
-    assert not dropped, f"merge dropped keys: {dropped}"
-    with open("BENCH_BEST.json", "w") as f:
-        json.dump(dict(sorted(best.items())), f, indent=1)
-        f.write("\n")
-    # Sidecar for bench_best_guard: a RAISED entry vs HEAD is
-    # tolerated iff it matches an explicit --allow reseed recorded
-    # here (committed alongside the ledger, documenting intent) —
-    # otherwise the guard would force a red check.sh between the
-    # reseed and its commit. Each entry records BOTH endpoints
-    # ({"from": head-value-at-reseed-time, "to": new-value}): the
-    # guard honors a raise only when HEAD still equals "from", so the
-    # moment the reseed is committed (HEAD == "to") the entry goes
-    # inert — a flat value-only sidecar would whitelist raising the
-    # key back to its old reseeded value FOREVER (r15 ADVICE). Inert
-    # entries are pruned on every merge for the same reason.
-    try:
-        with open("BENCH_BEST_RESEED.json") as f:
-            prior = json.load(f)
-    except FileNotFoundError:
-        prior = {}
-    head_best = git_head("BENCH_BEST.json")
-    prior = {q: e for q, e in prior.items()
-             if isinstance(e, dict) and head_best.get(q) == e.get("from")}
-    for q, v in reseeds.items():
-        prior[q] = {"from": head_best.get(q), "to": v}
-    if prior:
-        with open("BENCH_BEST_RESEED.json", "w") as f:
-            json.dump(dict(sorted(prior.items())), f, indent=1)
-            f.write("\n")
-    else:
-        import os
-        if os.path.exists("BENCH_BEST_RESEED.json"):
-            os.remove("BENCH_BEST_RESEED.json")
-    print(f"== BENCH_BEST: {n_new} new, {n_better} improved, "
-          f"{n_reseed} reseeded, {len(best)} total ==")
 
 
 def merge_scale(subset_path):
@@ -215,16 +82,9 @@ def merge_scale(subset_path):
 
 
 def main():
-    if len(sys.argv) < 3 or sys.argv[1] not in ("bench", "scale"):
+    if len(sys.argv) < 3 or sys.argv[1] != "scale":
         sys.exit(__doc__)
-    allow = set()
-    if "--allow" in sys.argv:
-        i = sys.argv.index("--allow")
-        allow = set(sys.argv[i + 1].split(","))
-    if sys.argv[1] == "bench":
-        merge_bench(sys.argv[2], allow)
-    else:
-        merge_scale(sys.argv[2])
+    merge_scale(sys.argv[2])
 
 
 if __name__ == "__main__":

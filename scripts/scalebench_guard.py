@@ -1,17 +1,17 @@
 #!/usr/bin/env python3
-"""SCALEBENCH ledger guard (r16 verdict item #6): the symmetric twin of
-bench_best_guard. merge_ledgers.py `scale` unions working-tree extras
-over the git-HEAD base, so a normal subset re-measure can only ADD or
-UPDATE entries — but an accidental working-tree revert (a stale file
-restored from a branch, a truncated write) would silently DROP queries
-from SCALEBENCH_LOCAL.json and the scale-exponent coverage claim
+"""SCALEBENCH ledger guard (r16 verdict item #6), run by check.sh.
+merge_ledgers.py `scale` unions working-tree extras over the git-HEAD
+base, so a normal subset re-measure can only ADD or UPDATE entries —
+but an accidental working-tree revert (a stale file restored from a
+branch, a truncated write) would silently DROP queries from
+SCALEBENCH_LOCAL.json and the scale-exponent coverage claim
 ("211/211 exponents, zero superlinear") would quietly shrink.
 
 Guard: every query key present in HEAD's SCALEBENCH_LOCAL.json must
 still exist in the working tree's. Exponent VALUES may move in either
-direction (they are re-measured, not best-known minima — unlike
-BENCH_BEST there is no monotone direction to enforce), so only key
-coverage is guarded. Exit 1 listing every dropped key.
+direction (they are re-measured, not best-known minima, so there is
+no monotone direction to enforce), so only key coverage is guarded.
+Exit 1 listing every dropped key.
 """
 import json
 import subprocess

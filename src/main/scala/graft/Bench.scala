@@ -28,6 +28,12 @@ import org.apache.spark.sql.SparkSession
   *     capture truncated the head of the one JSON line and lost the
   *     a1–a7 timings, so the line now survives on disk regardless of
   *     how much of stdout the harness keeps.
+  *
+  * The run measures; it does not judge. Host readings (io/cpu
+  * pressure, an fsync probe, the job round trip) are recorded so the
+  * artifact explains the regime it ran in, and a regression is judged
+  * offline over alternating parent/change pairs (scripts/bench_diff.py
+  * diffs two runs).
   */
 object Bench {
 
@@ -42,10 +48,9 @@ object Bench {
   /** /proc/pressure/cpu "some avg300" — the fraction of the window ANY
     * runnable task stalled waiting for a CPU. An r13 run measured a
     * uniform +20% on code untouched for rounds with io-pressure ZERO —
-    * co-tenant CPU contention is invisible to the io gate — so ambient
-    * CPU stall at run START joins the cleanliness gate (start only:
-    * the bench itself legitimately saturates the cores once running,
-    * so the END reading measures us, not the neighbors).
+    * co-tenant CPU contention is invisible to the io reading. The
+    * START reading speaks for the neighbors; once running, the bench
+    * itself saturates the cores, so the END reading measures us.
     */
   def cpuPressureSomeAvg300(): Double = pressureAvg300("cpu", "some")
 
@@ -58,37 +63,18 @@ object Bench {
         .map(_.stripPrefix("avg300=").toDouble).getOrElse(-1.0)
     } catch { case _: Throwable => -1.0 }
 
-  /** A run is comparable to best-known only when the host was quiet:
-    * r12's three same-code runs spanned ±20% with full-avg300 up to
-    * ~8; the clean runs sat below 1. Threshold 1.0 (percent).
-    */
-  val PressureCleanMax = 1.0
-
-  /** Ambient CPU-stall ceiling at run START for a comparable run. The
-    * bench's own load dominates cpu-some once running, so only the
-    * pre-run reading speaks for the neighbors; 5% of the trailing
-    * 5 min is idle-host territory, while the r13 contended run that
-    * motivated this sat well above it.
-    */
-  val CpuPressureCleanMax = 5.0
-
   /** Direct fsync-latency probe (ms per 256 KB write+force over 24
     * ops) against the RESOLVED replay scratch root — the device the
     * drains' checkpoints and state stores actually commit to
     * (ReplayStaging.scratchRoot: SPARK_GRAFT_SCRATCH override, else
     * /dev/shm when roomy, else java.io.tmpdir). The r14 driver run
     * inflated the fsync-sensitive drains 1.8–11× while io full-avg300
-    * peaked at 0.17 — far below PressureCleanMax — so the pressure
-    * gates alone cannot certify a drain re-measure: dirty-page
-    * writeback throttles each fsync without ever stalling ALL runnable
-    * tasks. This probes the exact primitive the state-store commit
-    * path pays ON THE SAME DEVICE (r15 verdict item #2: probing
-    * java.io.tmpdir gated drain verdicts on the wrong disk whenever a
-    * scratch override pointed elsewhere; a tmpfs scratch legitimately
-    * reads ~0 — its drains are not fsync-bound and should never be
-    * fsync-gated). Quiet disk: 1–2 ms/op on this box's /tmp device;
-    * writeback storms push it 10–100×. Gates drain/wall verdicts
-    * alongside io/cpu pressure.
+    * peaked at 0.17, so the pressure readings alone cannot explain a
+    * drain reading: dirty-page writeback throttles each fsync without
+    * ever stalling ALL runnable tasks. This probes the exact primitive
+    * the state-store commit path pays ON THE SAME DEVICE (a tmpfs
+    * scratch legitimately reads ~0). Quiet disk: 1–2 ms/op on a local
+    * /tmp device; writeback storms push it 10–100×.
     */
   def fsyncProbeMsPerOp(
       root: () => java.nio.file.Path =
@@ -116,38 +102,15 @@ object Bench {
       } finally graft.streaming.ReplayStaging.deleteRecursively(dir)
     } catch { case _: Throwable => -1.0 }
 
-  /** Ceiling for a CLEAN fsync probe reading, ms/op: ~5× the quiet
-    * baseline, far below any writeback storm's 20–200 ms/op.
-    */
-  val FsyncCleanMax = 10.0
-
   /** Driver→executor job ROUND-TRIP floor: ms per one-row job over 20
-    * sequential `spark.range(1).count()` calls. Added r16 after a
-    * measured blind-spot instance the other three gates all missed: a
-    * host regime where the sr drains ran 2–7× over best on BOTH the
-    * r15 and r16 jars (code-identical A/B, BENCHNOTES "Round 16"),
-    * with io-pressure 0.0, cpu-some 0.4, fsync 0.07 ms (tmpfs) — and
-    * 5.4% hypervisor steal under load. Drains are SEQUENTIAL
-    * micro-batch orchestration: hundreds of driver→executor round
-    * trips and per-partition state commits, so scheduling-latency
-    * degradation inflates them while throughput-parallel plan queries
-    * barely move (that run: 3 plan flags, 14 drain/wall flags). This
-    * probes the exact primitive. Shipped at run start and around EVERY
-    * re-measure (median-of-3 spaced samples since r17), and GATES every
-    * verdict kind (RoundTripCleanMax) — plan and eager re-measures are
-    * sequential few-job affairs too, and the r16 driver artifact minted
-    * a false plan "confirmed" in a 176 ms/job regime the drain-only
-    * gate ignored. In the degraded regime it read a stable 127–180
-    * ms/job across six consecutive probes while the r15 drain
-    * best-knowns bound the healthy floor from above at ≲20 ms/job (a
-    * 2.3 s three-batch stateful drain is not achievable otherwise) — so
-    * 50 ms separates the regimes with wide margin on both sides, and a
-    * re-measure taken in this regime honestly reads 'unresolved'
-    * instead of 'confirmed'. Every reading also lands in the rolling
-    * cross-run log (appendRoundTripLog) so the regime's persistence is
-    * a measured distribution, not an anecdote. The operational lesson
-    * is generalized in SCALE.md §9.3 (the FOURTH host-health gauge:
-    * sequential-orchestration latency, diagnosed by the drain-vs-plan
+    * sequential `spark.range(1).count()` calls. Added r16 for a host
+    * regime the other three readings all missed: the sr drains ran
+    * 2–7× slow on two code-identical jars with io-pressure 0.0,
+    * cpu-some 0.4 and fsync 0.07 ms, and this probe read 127–180
+    * ms/job against a healthy ≲20. Drains are SEQUENTIAL micro-batch
+    * orchestration (hundreds of round trips), so scheduling latency
+    * inflates them while throughput-parallel plan queries barely move.
+    * SCALE.md §9.3 generalizes the reading (the drain-vs-plan
     * differential).
     */
   def jobRoundTripMsPerOp(spark: SparkSession): Double =
@@ -160,20 +123,13 @@ object Bench {
       (System.nanoTime() - t0) / 1e6 / n
     } catch { case _: Throwable => -1.0 }
 
-  /** Ceiling for a CLEAN job-round-trip reading, ms/job: well above
-    * the healthy floor the drain best-knowns imply (≲20), well below
-    * the measured degraded regime (127–180).
-    */
-  val RoundTripCleanMax = 50.0
-
   /** Median of three SPACED round-trip samples (r16 verdict #2: a
     * single 20-job sample at one instant classifies a fluctuating
-    * regime poorly — the r16 runs probed 176–199 ms at start yet
-    * delivered near-best walls minutes later, and vice versa). Three
-    * samples ~spacingMs apart span ~1 s of regime; the median ignores
-    * one outlier burst in either direction. A failed sample sorts to
-    * an end (-1 low), so the median stays meaningful with one failure
-    * and reads -1 only when at least two samples fail.
+    * regime poorly). Three samples ~spacingMs apart span ~1 s of
+    * regime; the median ignores one outlier burst in either
+    * direction. A failed sample sorts to an end (-1 low), so the
+    * median stays meaningful with one failure and reads -1 only when
+    * at least two samples fail.
     */
   def jobRoundTripMedian3(spark: SparkSession, spacingMs: Long = 400L): Double = {
     val xs = (1 to 3).map { i =>
@@ -182,120 +138,6 @@ object Bench {
     }.sorted
     xs(1)
   }
-
-  /** Rolling cross-run round-trip ledger (r16 verdict #2): every
-    * reading — run start and each re-measure's — appends one line to
-    * ROUNDTRIP_LOG.jsonl with a wall-clock stamp and its context, so
-    * the regime question ("is 127–199 ms this host's new floor, or an
-    * intermittent storm?") is answered by a measured distribution
-    * across runs instead of per-round anecdotes. Append-only and
-    * fail-silent: a log write can never affect a verdict.
-    */
-  def appendRoundTripLog(context: String, ms: Double): Unit =
-    try {
-      val line =
-        f"""{"t_ms":${System.currentTimeMillis()},"context":"$context","ms":$ms%.2f}""" + "\n"
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_RT_LOG", "ROUNDTRIP_LOG.jsonl")),
-        line.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      ()
-    } catch { case _: Throwable => () }
-
-  /** Timing noise has an ABSOLUTE component as well as a relative
-    * one: on this 32-core box a warm execution's scheduler/GC jitter
-    * is ~±100 ms regardless of query size, so a pure 1.5× threshold
-    * sits INSIDE the natural variance band of any query whose best is
-    * under ~400 ms. Measured on d21 (best 0.148 s, code untouched
-    * since r11, cold flat at 1.25–1.41 s across five runs spanning two
-    * rounds): its warm oscillates 0.19–0.31 s, chronically flagging
-    * and once even "confirming" at 0.258 s — a factually wrong verdict
-    * produced by a noise-calibrated-as-signal threshold. The flag and
-    * the ambient rule both carry this absolute headroom; a real
-    * regression of even a 150 ms query (to >0.42 s) still flags, and
-    * at drain/wall scale the term is negligible.
-    */
-  val RegressionAbsFloorSec = 0.2
-
-  /** A measurement regresses vs best iff it exceeds BOTH the relative
-    * threshold and the absolute jitter floor — the one comparison the
-    * flag pass and every verdict share.
-    */
-  def regressedVsBest(t: Double, best: Double): Boolean =
-    t > 1.5 * best + RegressionAbsFloorSec
-
-  /** THE verdict rule, shared by every adjudication surface (plan
-    * warms, drain colds, schedule walls) so the three can never
-    * silently diverge: re back inside the flag threshold → ambient
-    * (the flag was the neighbors); still slow on a re-measure whose
-    * entry gates were clean → confirmed; otherwise unresolved (the
-    * re-measure itself was contended — no verdict can be honest).
-    * `fsyncGated` adds the fsync probe to the gates for the
-    * fsync-bound surfaces (drains, walls); plan queries gate on
-    * io/cpu pressure only.
-    */
-  def verdictOf(re: Double, best: Double, io: Double, cpu: Double,
-                fs: Double, fsyncGated: Boolean,
-                rt: Double = -1.0, rtGated: Boolean = false): String = {
-    val clean = io >= 0 && io <= PressureCleanMax &&
-      cpu >= 0 && cpu <= CpuPressureCleanMax &&
-      (!fsyncGated || (fs >= 0 && fs <= FsyncCleanMax)) &&
-      (!rtGated || (rt >= 0 && rt <= RoundTripCleanMax))
-    if (re >= 0 && !regressedVsBest(re, best)) "ambient"
-    else if (re >= 0 && clean) "confirmed"
-    else "unresolved"
-  }
-
-  /** Parse a flat {"name": seconds} ledger (BENCH_BEST.json). \s*
-    * after the colon matters: the ledger is written by
-    * merge_ledgers.py (json.dump puts a space after the colon) — the
-    * old no-space regex parsed ZERO entries from that format, which
-    * disabled the whole regression layer with no error (caught r15
-    * while forcing a flag in a smoke test; BenchBestParseSpec pins
-    * both formats).
-    */
-  def parseBestKnown(s: String): Map[String, Double] =
-    """"([^"]+)":\s*([0-9.]+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-
-  /** Plan queries whose real work happens at frame-CONSTRUCTION time:
-    * iterative operators that localCheckpoint(eager=true) or collect
-    * mid-build (k-means assignment rounds, connected-components
-    * large/small-star rounds, BPE merge training, TextRank iterations,
-    * term-frequency materialization), the TestKafka batch read's
-    * staging, v8's compact() job, and q12's first-touch file listing.
-    * For these the WARM column only re-counts a cached frame — warm/
-    * cold < 0.2 measured on every entry here (BENCH_LOCAL r15: v8
-    * 0.094 warm vs 1.754 cold, d11 0.219 vs 1.944) — so a warm-based
-    * flag guards a cached count, not the job (r15 verdict item #1,
-    * the same blind-spot shape r15 fixed for the sr drains). Each
-    * entry gets a COLD best-known under the ledger key "cold:<name>"
-    * and flags/adjudicates on its cold min alongside its normal warm
-    * flag. Membership criterion: measured warm/cold < 0.35 on a
-    * pressure-clean run AND construction-time side effects in the
-    * operator (c2/t10/x26/x27/x30 also checkpoint mid-build but their
-    * downstream work dominates — warm/cold ≥ 0.7 — so warm already
-    * measures them).
-    */
-  val EagerPlanQueries: Set[String] = Set(
-    "c1_kmeans", "c3_cluster_quality", "c4_prototype_prune",
-    "d9_dup_clusters", "d11_near_dedup_cc", "d15_quality_dedup",
-    "d17_semantic_dedup", "d21_lsh_tuning",
-    "p8_kafka_bounded_read", "q12_catalog",
-    "t13_bpe_encode", "t14_textrank",
-    "v8_compaction", "x29_importance_weights", "x31_lm_quality")
-
-  /** One fired regression flag: `key` is the ledger key the flag was
-    * computed against ("cold:<name>" for the eager-cold surface),
-    * `name` the runnable query, `kind` selects the re-measure
-    * discipline and gate set ("plan" = warm min of a once-built frame,
-    * io/cpu gates; "eager" = cold construct+count mins, io/cpu gates;
-    * "drain" = one full re-drain, io/cpu+fsync gates).
-    */
-  final case class Flag(key: String, name: String, kind: String,
-                        t: Double, best: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -310,13 +152,11 @@ object Bench {
     // land async, so a short drain pause follows the rep — this is a
     // measurement column, not a gate.
     val shufBytes = new AtomicLong(0L)
-    val shufRecords = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
         if (m != null) {
           shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
           ()
         }
       }
@@ -324,33 +164,7 @@ object Bench {
     val pressureStart = ioPressureFullAvg300()
     val cpuPressureStart = cpuPressureSomeAvg300()
     val fsyncStart = fsyncProbeMsPerOp()
-    // SPARK_GRAFT_BENCH_FORCE_RT forces every round-trip reading — for
-    // the adjudicator smoke's degraded-regime case ONLY (same contract
-    // as ASSUME_CLEAN: the run records roundtrip_forced=true and
-    // merge_ledgers refuses to fold it, so a forced run can never
-    // poison best-knowns or launder a verdict).
-    val forceRt = sys.env.get("SPARK_GRAFT_BENCH_FORCE_RT").map(_.toDouble)
-    // Every reading is a median-of-3 spaced sample and lands in the
-    // rolling cross-run log (both r16 verdict #2).
-    def rtReading(context: String): Double = {
-      val ms = forceRt.getOrElse(jobRoundTripMedian3(spark))
-      appendRoundTripLog(context, ms)
-      ms
-    }
-    val roundTripStart = rtReading("start")
-    // Best-known warm mins (BENCH_BEST.json, maintained per round from
-    // pressure-clean runs): the cross-round regression gate. A warm
-    // time > 1.5x best-known on a PRESSURE-CLEAN run is flagged in the
-    // output's "regressions" list — in CI output, not a human's memory
-    // (r12 verdict item #2).
-    val bestKnown: Map[String, Double] = {
-      val f = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_BEST", "BENCH_BEST.json"))
-      if (!java.nio.file.Files.exists(f)) Map.empty
-      else {
-        parseBestKnown(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-      }
-    }
+    val roundTripStart = jobRoundTripMedian3(spark)
     // Warm the JVM/session (codegen, file index, JIT) outside the
     // timed region so the first query doesn't absorb ~7s of startup.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -393,7 +207,7 @@ object Bench {
       // min-of-N buys nothing and would multiply ~3-4 s of setup into
       // the headline. One rep, documented in BENCHNOTES.
       val reps = if (name.startsWith("sr")) 1 else repeats
-      shufBytes.set(0L); shufRecords.set(0L)
+      shufBytes.set(0L)
       var shuffled = -1L
       // The last successfully-built frame, kept for the untimed
       // content hash: for sr queries it is the drained output's
@@ -469,17 +283,15 @@ object Bench {
     // Per-drain phase profile from the SERIAL pass (r14 verdict item
     // #2): snapshotted HERE, before the concurrent passes re-drain
     // everything and overwrite the last-writer-wins registry. The
-    // split (stateCommit vs addBatch vs setup) is what lets a flagged
+    // split (stateCommit vs addBatch vs setup) is what lets a slow
     // drain's own artifact say "14 of 17 s was state-store fsync".
-    def renderProfile(p: Map[String, Long]): String =
-      Seq("batches", "triggerExecution", "addBatch", "walCommit",
-        "commitOffsets", "queryPlanning", "source", "stateCommit")
-        .map(k => "\"" + k + "\":" + p.getOrElse(k, -1L))
-        .mkString("{", ",", "}")
     val qsDrainProfile = results.collect { case (k, _, _, _, _) if k.startsWith("sr") =>
-      "\"" + k + "\":" + renderProfile(
-        StreamReplayQueries.lastDrainProfile
-          .getOrElse(k.split("_")(0), Map.empty[String, Long]))
+      val p = StreamReplayQueries.lastDrainProfile
+        .getOrElse(k.split("_")(0), Map.empty[String, Long])
+      "\"" + k + "\":" + Seq("batches", "triggerExecution", "addBatch", "walCommit",
+        "commitOffsets", "queryPlanning", "source", "stateCommit")
+        .map(f => "\"" + f + "\":" + p.getOrElse(f, -1L))
+        .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     // The fixed per-query floor: a pre-listed single-row scan through
     // the same session — what a "0-cost" query measures here.
@@ -511,7 +323,7 @@ object Bench {
     val srSerialSum = results
       .collect { case (k, Some(v), _, _, _) if k.startsWith("sr") => v }.sum
     val srConcurrency = 4
-    def runSrConcurrent(): (Double, Seq[String]) =
+    val (srWall, srConcFailed): (Double, Seq[String]) =
       if (srNames.isEmpty) (0.0, Seq.empty)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(srConcurrency)
@@ -533,7 +345,6 @@ object Bench {
           (((System.nanoTime() - t0) / 1e9), bad)
         } finally pool.shutdown()
       }
-    val (srWall, srConcFailed): (Double, Seq[String]) = runSrConcurrent()
     // WHOLE-BOARD concurrent schedule (r13 verdict item #8): a driver
     // submitting the 203-query board would interleave EVERYTHING, not
     // just the sr drains — run the full board again at
@@ -549,7 +360,7 @@ object Bench {
       results.collect { case (k, _, _, _, Some(h)) => k -> h }.toMap
     val boardConcurrency = math.max(0,
       sys.env.getOrElse("SPARK_GRAFT_BOARD_CONCURRENCY", "6").toInt)
-    def runBoardConcurrent(): (Double, Seq[String], Seq[String]) =
+    val (boardWall, boardDiverged, boardFailed): (Double, Seq[String], Seq[String]) =
       if (boardConcurrency == 0 || names.isEmpty) (0.0, Seq.empty, Seq.empty)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(boardConcurrency)
@@ -576,8 +387,6 @@ object Bench {
           (wall, diverged, bad)
         } finally pool.shutdown()
       }
-    val (boardWall, boardDiverged, boardFailed): (Double, Seq[String], Seq[String]) =
-      runBoardConcurrent()
     val failed = results.collect { case (k, None, _, _, _) => "\"" + k + "\"" }
     // With any failure the green-subset sum is NOT a comparable
     // headline (round 8: 53 failures read as a "41% speedup" to any
@@ -586,220 +395,6 @@ object Bench {
       if (failed.nonEmpty) "null" else results.flatMap(_._2).sum.toString
     val pressureEnd = ioPressureFullAvg300()
     val cpuPressureEnd = cpuPressureSomeAvg300()
-    // SPARK_GRAFT_BENCH_ASSUME_CLEAN=1 forces the cleanliness verdict
-    // for the check.sh ADJUDICATOR LIVENESS SMOKE only (r15 verdict
-    // item #8: every guard layer so far had one surface it didn't
-    // cover, and the flag pass itself went silently vacuous once) —
-    // the smoke must prove a flag can fire even on a contended host,
-    // against a synthetic ledger. The flag is recorded in the output
-    // as pressure_clean_forced and merge_ledgers.py REFUSES to fold
-    // such a run, so a forced run can never poison best-knowns.
-    val assumeClean = sys.env.get("SPARK_GRAFT_BENCH_ASSUME_CLEAN").contains("1")
-    val pressureClean = assumeClean || (pressureStart >= 0 && pressureEnd >= 0 &&
-      math.max(pressureStart, pressureEnd) <= PressureCleanMax &&
-      cpuPressureStart >= 0 && cpuPressureStart <= CpuPressureCleanMax)
-    // >1.5x best-known, flagged ONLY on pressure-clean runs — host
-    // contention can never fabricate a regression, and a clean
-    // regression can never hide behind "maybe the host was busy".
-    // Three flag surfaces, one rule (regressedVsBest):
-    //  - plan queries flag on their WARM min (low-noise execution-only
-    //    signal) against the bare ledger key;
-    //  - sr drains flag on their COLD one-rep wall against a best-known
-    //    COLD min — drains have no warm column by design, and until r15
-    //    they had no best-known either, so the shipped r14 artifact
-    //    carried an 11× drain outlier with regressions:{} (r14 verdict
-    //    item #1);
-    //  - EAGER plan queries (EagerPlanQueries) ALSO flag on their COLD
-    //    min against "cold:<name>" — their warm only re-counts a
-    //    cached frame, so until r16 a 10× regression in compact() or
-    //    the CC rounds would have shipped with regressions:{} (r15
-    //    verdict item #1: the same blind-spot shape, third surface).
-    val regressionFlags: Seq[Flag] =
-      if (!pressureClean) Seq.empty else results.flatMap {
-        case (k, cOpt, wOpt, _, _) =>
-          val plan = for {
-            w <- wOpt
-            b <- bestKnown.get(k) if b > 0 && regressedVsBest(w, b)
-          } yield Flag(k, k, "plan", w, b)
-          val drain = if (!k.startsWith("sr")) None else for {
-            c <- cOpt
-            b <- bestKnown.get(k) if b > 0 && regressedVsBest(c, b)
-          } yield Flag(k, k, "drain", c, b)
-          val eager = if (!EagerPlanQueries.contains(k)) None else for {
-            c <- cOpt
-            b <- bestKnown.get(s"cold:$k") if b > 0 && regressedVsBest(c, b)
-          } yield Flag(s"cold:$k", k, "eager", c, b)
-          Seq(plan, drain, eager).flatten
-      }
-    // Flag-list render: "warm" names the plan queries' statistic;
-    // drains and eager colds carry the neutral "measured" (r15 ADVICE:
-    // a drain's one-rep COLD wall rendered under a "warm" key misreads
-    // as a warm min to artifact consumers).
-    def measuredKey(kind: String): String =
-      if (kind == "plan") "warm" else "measured"
-    val regressions = regressionFlags.map { f =>
-      f""""${f.key}":{"${measuredKey(f.kind)}":${f.t}%.3f,"best":${f.best}%.3f,"kind":"${f.kind}"}"""
-    }
-    // The uniform-vs-skewed diagnostic, codified: one plan regression
-    // flags one query; ambient contention that slipped past both
-    // pressure gates flags MANY at once (r13 contended runs flagged
-    // 6/9/15 queries simultaneously with io 0.0 and a clean cpu START
-    // — the contender arrived mid-run — while every genuine plan
-    // regression in the ledger's history flagged exactly one). The
-    // flag ANNOTATES the list, it never suppresses it, so the cheap
-    // threshold errs toward annotating: >3 simultaneous flags.
-    val regressionsSuspectAmbient = regressions.size > 3
-    // ADJUDICATION (r13 verdict item #1): the re-measure discipline
-    // that cleared b14 and v2 used to live in a human — the bench now
-    // closes the loop itself. Each flagged query is re-run STANDALONE
-    // after the main loop (nothing else on the session, pressure
-    // re-read around the re-measure), min of 3 warm executions of a
-    // once-built frame — the same statistic the flag was computed
-    // from. Verdicts:
-    //   re ≤ 1.5×best               → ambient (the flag was the
-    //                                 neighbors; tonight's 15-flag run
-    //                                 self-resolves to zero confirmed)
-    //   re > 1.5×best, re-pressure
-    //     clean                     → confirmed (still slow alone on a
-    //                                 quiet host: a real regression)
-    //   re > 1.5×best, re-pressure
-    //     dirty                     → unresolved (the re-measure itself
-    //                                 was contended; no verdict can be
-    //                                 honest)
-    // Since r15 the sr DRAINS enter too (r14 verdict item #1): a
-    // flagged drain re-runs its full writeStream drain ONCE standalone
-    // (the same one-rep cold statistic its flag was computed from),
-    // with the fsync probe read around the re-measure in addition to
-    // the pressure gates — drains are fsync-bound, and r14's inflation
-    // sat at io 0.17, invisible to the pressure gates alone. A drain
-    // verdict ships its re-measure's phase profile (stateCommit vs
-    // addBatch vs setup) so the artifact itself explains the reading.
-    // Each kind re-measures the SAME statistic its flag was computed
-    // from: plan = warm min-of-3 of a once-built frame; eager = cold
-    // min-of-3 full construct+count rebuilds (the construction IS the
-    // job for these — a warm re-measure would re-count the cached
-    // frame and acquit every real regression); drain = one full
-    // re-drain. Drains alone are fsync-gated: their cost is
-    // state-store commit, while plan/eager work is compute + local
-    // checkpoint writes that never force().
-    final case class Adjudicated(flag: Flag, re: Double, reIo: Double,
-                                 reCpu: Double, reFsync: Double,
-                                 reRoundTrip: Double,
-                                 reProfile: Option[String])
-    val (regConfirmed, regAmbient, regUnresolved) = {
-      val adjudicated = regressionFlags.map { f =>
-        val isDrain = f.kind == "drain"
-        val io0 = ioPressureFullAvg300(); val cpu0 = cpuPressureSomeAvg300()
-        val fs0 = if (isDrain) fsyncProbeMsPerOp() else -1.0
-        // Scheduler-latency reading around EVERY re-measure, gating
-        // every kind (r17, closing r16 verdict #1): the driver's r16
-        // artifact minted its only "confirmed" — a PLAN query
-        // (x34_bigram_lm, 1.79× best) — in a 176 ms/job regime the
-        // drain-only gate ignored; the judge's re-measure on the same
-        // regime acquitted it at 1.20 s. A plan/eager re-measure is a
-        // handful of sequential jobs, so a degraded scheduler inflates
-        // a sub-second warm right through the flag line exactly like
-        // a drain. A fast re-measure still acquits as ambient in any
-        // regime (contention can only inflate) — only the "confirmed"
-        // branch needs the cleanliness guard.
-        val rt0 = rtReading(s"re:${f.key}")
-        val re =
-          try {
-            f.kind match {
-              case "drain" =>
-                val t0 = System.nanoTime()
-                SparkEntry.queries(f.name)(spark, sfDir).count()
-                (System.nanoTime() - t0) / 1e9
-              case "eager" =>
-                (1 to 3).map { _ =>
-                  val t0 = System.nanoTime()
-                  SparkEntry.queries(f.name)(spark, sfDir).count()
-                  (System.nanoTime() - t0) / 1e9
-                }.min
-              case _ =>
-                val df = SparkEntry.queries(f.name)(spark, sfDir)
-                (1 to 3).map { _ =>
-                  val t0 = System.nanoTime(); df.count(); (System.nanoTime() - t0) / 1e9
-                }.min
-            }
-          } catch { case _: Throwable => -1.0 }
-        val io1 = ioPressureFullAvg300(); val cpu1 = cpuPressureSomeAvg300()
-        // Profile only when the re-measure SUCCEEDED: on a failed
-        // re-drain the registry still holds the tag's last successful
-        // drain (the concurrent pass), and shipping that would explain
-        // the wrong measurement.
-        val reProfile =
-          if (isDrain && re >= 0)
-            StreamReplayQueries.lastDrainProfile.get(f.name.split("_")(0))
-              .map(renderProfile)
-          else None
-        // fsync gate = ENTRY probe only (fs0): a drain's own state
-        // commits dirty the page cache, so a post-drain probe reads
-        // the re-measure's self-inflicted writeback and would bias
-        // every real drain regression toward "unresolved" — the same
-        // start-only reasoning as the cpu-pressure gate.
-        Adjudicated(f, re, math.max(io0, io1), math.max(cpu0, cpu1), fs0,
-          rt0, reProfile)
-      }
-      def render(a: Adjudicated): String =
-        f""""${a.flag.key}":{"${measuredKey(a.flag.kind)}":${a.flag.t}%.3f,""" +
-          f""""best":${a.flag.best}%.3f,"kind":"${a.flag.kind}",""" +
-          f""""remeasure":${a.re}%.3f,"re_io":${a.reIo}%.2f,"re_cpu":${a.reCpu}%.2f,""" +
-          f""""re_roundtrip_ms":${a.reRoundTrip}%.2f""" +
-          (if (a.flag.kind == "drain")
-            f""","re_fsync_ms":${a.reFsync}%.2f"""
-          else "") +
-          a.reProfile.map(p => s""","re_profile":$p""").getOrElse("") + "}"
-      def verdict(a: Adjudicated): String =
-        verdictOf(a.re, a.flag.best, a.reIo, a.reCpu, a.reFsync,
-          fsyncGated = a.flag.kind == "drain",
-          rt = a.reRoundTrip, rtGated = true)
-      val ambient = adjudicated.filter(verdict(_) == "ambient")
-      val confirmed = adjudicated.filter(verdict(_) == "confirmed")
-      val unresolved = adjudicated.filter(verdict(_) == "unresolved")
-      (confirmed.map(render), ambient.map(render), unresolved.map(render))
-    }
-    // WALL adjudication (r14 verdict items #1/#8): the two concurrent
-    // schedules get best-known walls of their own (BENCH_BEST keys
-    // "wall:sr_concurrent"/"wall:board_concurrent"). A pressure-clean
-    // wall >1.5× best re-runs its WHOLE schedule once — expensive, but
-    // only paid when flagged — with pressure + fsync read around it,
-    // and ships confirmed/ambient/unresolved by the same rules, so an
-    // r14-style 5× board-wall inflation self-adjudicates in the JSON
-    // instead of silently doubling the round's wall-clock reading.
-    def adjudicateWall(key: String, wall: Double, active: Boolean,
-                       rerun: () => Double): String = {
-      val best = bestKnown.get(key).filter(_ > 0)
-      val flagged = pressureClean && active &&
-        best.exists(b => regressedVsBest(wall, b))
-      val head = f""""$key":{"wall":$wall%.3f,"best":${best.getOrElse(-1.0)}%.3f"""
-      if (!flagged) head + ""","flagged":false}"""
-      else {
-        val io0 = ioPressureFullAvg300(); val cpu0 = cpuPressureSomeAvg300()
-        val fs0 = fsyncProbeMsPerOp()
-        val rt0 = rtReading(s"re:$key")
-        val re = try rerun() catch { case _: Throwable => -1.0 }
-        val io1 = ioPressureFullAvg300(); val cpu1 = cpuPressureSomeAvg300()
-        // fsync/round-trip gates = entry probes only (see the drain
-        // adjudication note: the schedule's own writes dirty the page
-        // cache, and its own task storm would inflate a post-run
-        // round-trip reading).
-        val (io, cpu, fs) =
-          (math.max(io0, io1), math.max(cpu0, cpu1), fs0)
-        val verdict = verdictOf(re, best.getOrElse(-1.0), io, cpu, fs,
-          fsyncGated = true, rt = rt0, rtGated = true)
-        head + f""","flagged":true,"remeasure":$re%.3f,"re_io":$io%.2f,""" +
-          f""""re_cpu":$cpu%.2f,"re_fsync_ms":$fs%.2f,""" +
-          f""""re_roundtrip_ms":$rt0%.2f,"verdict":"$verdict"}"""
-      }
-    }
-    val wallsJson = Seq(
-      adjudicateWall("wall:sr_concurrent", srWall, srNames.nonEmpty,
-        () => runSrConcurrent()._1),
-      adjudicateWall("wall:board_concurrent", boardWall,
-        boardConcurrency > 0 && names.nonEmpty,
-        () => runBoardConcurrent()._1)
-    ).mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""queries_warm":$qsWarm,""" +
@@ -810,29 +405,6 @@ object Bench {
         f""""cpu_pressure_some_avg300":{"start":$cpuPressureStart%.2f,"end":$cpuPressureEnd%.2f},""" +
         f""""fsync_probe_ms":{"start":$fsyncStart%.2f},""" +
         f""""job_roundtrip_ms":{"start":$roundTripStart%.2f},""" +
-        s""""pressure_clean":$pressureClean,""" +
-        s""""pressure_clean_forced":$assumeClean,""" +
-        s""""roundtrip_forced":${forceRt.isDefined},""" +
-        // The eager-query roster THIS run ran, for merge_ledgers: it
-        // folds these queries' COLD mins into "cold:<name>" ledger
-        // entries (the registry lives in one place — here — so the
-        // merge script can never drift from the flag pass).
-        s""""eager":${names.filter(EagerPlanQueries.contains)
-          .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""regressions":${regressions.mkString("{", ",", "}")},""" +
-        s""""regressions_suspect_ambient":$regressionsSuspectAmbient,""" +
-        s""""regressions_confirmed":${regConfirmed.mkString("{", ",", "}")},""" +
-        // The uniform-vs-skewed diagnostic, applied to VERDICTS (r16):
-        // a real regression confirms ONE query (or one family changed
-        // by one commit); a host regime none of the entry gates sees —
-        // measured live this round: drains 2–7× over best on two
-        // code-identical jars with io/cpu/fsync all clean — confirms
-        // MANY at once. >3 simultaneous confirmations annotates (never
-        // suppresses) the list, same rule as the flag-level field.
-        s""""confirmed_suspect_ambient":${regConfirmed.size > 3},""" +
-        s""""regressions_ambient":${regAmbient.mkString("{", ",", "}")},""" +
-        s""""regressions_unresolved":${regUnresolved.mkString("{", ",", "}")},""" +
-        s""""walls":$wallsJson,""" +
         f""""sr_drains":{"serial_sum":$srSerialSum%.3f,"concurrent_wall":$srWall%.3f,""" +
         s""""concurrency":$srConcurrency,""" +
         s""""failed":${srConcFailed.mkString("[", ",", "]")}},""" +
@@ -858,11 +430,8 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT (single-line file, json.load-able).
     val summary =
       s"""{"bench_summary":{"total":$total,"n":${names.size},""" +
-        s""""failed":${failed.size},"flags":${regressionFlags.size},""" +
-        s""""confirmed":${regConfirmed.size},"ambient":${regAmbient.size},""" +
-        s""""unresolved":${regUnresolved.size},""" +
-        f""""roundtrip_ms":$roundTripStart%.1f,""" +
-        s""""pressure_clean":$pressureClean}}"""
+        s""""failed":${failed.size},""" +
+        f""""roundtrip_ms":$roundTripStart%.1f}}"""
     println(summary)
     spark.stop()
   }

@@ -133,6 +133,12 @@ object Monitoring {
     * last batches to the cadence. Overwrite-mode single-directory
     * writes: the export is a dashboard snapshot, not a history — the
     * ring itself bounds retention.
+    *
+    * Readers race the export. `mode("overwrite")` deletes each table's
+    * files before it writes the new ones, so a reader that lists
+    * `dir/batches` or `dir/alerts` while an export runs can fail with
+    * `FileNotFoundException`. Retry such a read. A manifest-committed snapshot reader, shared with the gold
+    * upsert store, is what removes the race; until then it stands.
     */
   final class MetricsExporter(spark: SparkSession, listener: ProgressListener,
                               dir: String, sloMs: Long = 10000L,
