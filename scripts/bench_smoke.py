@@ -5,11 +5,13 @@ measurement field with live values and end stdout with a parseable
 
 Usage: bench_smoke.py <sf0.1 dir>
 
-The subset is one plan query and one sr drain, with the
-concurrent whole-board pass off and two cold repetitions; the full
+The subset is one plan query, selected by its full name, and one sr
+drain, selected by its id (`SPARK_GRAFT_ONLY` takes both forms), with
+the concurrent whole-board pass off and two cold repetitions; the full
 JSON line goes to a temp file through SPARK_GRAFT_BENCH_OUT, so the
 committed BENCH_LOCAL.json is never touched. Checks:
   - the full line json.loads and carries every measurement field;
+  - the per-query maps are keyed by the two full names;
   - the plan query has cold > 0 and warm > 0;
   - the drain has a drain_profile with batches > 0 and a
     state_actuals entry;
@@ -28,6 +30,7 @@ import tempfile
 
 PLAN = "b21_vpin_rolling"
 DRAIN = "sr18_stream_startoffsets_replay"
+DRAIN_ID = "sr18"
 FIELDS = ("queries", "queries_warm", "shuffle_bytes_written",
           "state_actuals", "drain_profile", "io_pressure_full_avg300",
           "cpu_pressure_some_avg300", "fsync_probe_ms", "job_roundtrip_ms",
@@ -45,7 +48,7 @@ def run_bench(sf_dir):
     try:
         env = dict(os.environ,
                    SPARK_GRAFT_SF_DIR=sf_dir,
-                   SPARK_GRAFT_ONLY=f"{PLAN},{DRAIN}",
+                   SPARK_GRAFT_ONLY=f"{PLAN},{DRAIN_ID}",
                    SPARK_GRAFT_BOARD_CONCURRENCY="0",
                    SPARK_GRAFT_BENCH_REPEATS="2",
                    SPARK_GRAFT_BENCH_OUT=out_path)
@@ -87,6 +90,11 @@ def main():
     missing = [f for f in FIELDS if f not in run]
     if missing:
         bad.append(f"full line lacks fields {missing}")
+    for field in ("queries", "queries_warm", "shuffle_bytes_written"):
+        keys = sorted(run.get(field, {}))
+        if keys != sorted([PLAN, DRAIN]):
+            bad.append(f"{field} keys {keys}, expected the full names "
+                       f"{sorted([PLAN, DRAIN])}")
     cold = run.get("queries", {}).get(PLAN, -1)
     warm = run.get("queries_warm", {}).get(PLAN, -1)
     if not cold > 0:

@@ -7,11 +7,14 @@ Usage: python3 scripts/oracle_check.py <sf_dir> <verify_out_dir>
 Reads each <verify_out_dir>/<name> parquet produced by graft.Verify,
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the
 source parquet tables, and compares: row count, column names (sorted),
-and a hash of the sorted value matrix.
+and a hash of the sorted value matrix. A query output directory with
+no oracle_sql.json entry fails too: it would otherwise never be
+compared.
 """
 import datetime
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -75,6 +78,10 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted(os.listdir(out_dir)):
+        if os.path.isdir(f"{out_dir}/{name}") and name not in oracle:
+            print(f"FAIL {name}: output written but no oracle_sql.json entry")
+            n_fail += 1
     for name, sql in sorted(oracle.items()):
         try:
             # Driver-faithful: the Spark side is read NATIVELY with

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every SparkEntry query on
+/** Benchmark main: times every board query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
   *
@@ -140,6 +140,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // Stable name order so per-query numbers are comparable across
+    // rounds. SPARK_GRAFT_ONLY (Board.fromEnv) restricts the run while
+    // iterating on one query's plan (dev convenience; the driver's
+    // per-round bench leaves it unset and times everything).
+    val board = Board.fromEnv().sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "5").toInt)
@@ -169,14 +174,6 @@ object Bench {
     // timed region so the first query doesn't absorb ~7s of startup.
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/events.parquet").limit(1).count()
-    // Stable iteration order so per-query numbers are comparable
-    // across rounds. SPARK_GRAFT_ONLY=a1,d9 restricts the run while
-    // iterating on one query's plan (dev convenience; the driver's
-    // per-round bench leaves it unset and times everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     // Order-insensitive content fingerprint for the board-concurrent
     // divergence check (r13 verdict item #8): row count + sum of
     // per-row xxhash64 over every output column. Output schemas are
@@ -199,14 +196,13 @@ object Bench {
     // a fake wall-clock figure) and is EXCLUDED from the total, which
     // instead flags it in an explicit "failed" list — summing the
     // sentinel would silently SHRINK the headline number.
-    val results: Seq[(String, Option[Double], Option[Double], Long, Option[String])] = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      // The sr streaming-replay queries run a full writeStream drain
+    val results: Seq[(BoardQuery, Option[Double], Option[Double], Long, Option[String])] = board.map { q =>
+      // The streaming-replay drains run a full writeStream drain
       // (stage + checkpoint + AvailableNow micro-batches) per call;
       // their wall is fixed stream orchestration, not plan cost, so
       // min-of-N buys nothing and would multiply ~3-4 s of setup into
       // the headline. One rep, documented in BENCHNOTES.
-      val reps = if (name.startsWith("sr")) 1 else repeats
+      val reps = if (q.drain) 1 else repeats
       shufBytes.set(0L)
       var shuffled = -1L
       // The last successfully-built frame, kept for the untimed
@@ -217,7 +213,7 @@ object Bench {
       val times: Seq[Option[Double]] = (1 to reps).map { i =>
         val t0 = System.nanoTime()
         try {
-          val df = fn(spark, sfDir)
+          val df = q.run(spark, sfDir)
           df.count()
           val sec = (System.nanoTime() - t0) / 1e9
           lastDf = df
@@ -226,7 +222,7 @@ object Bench {
         }
         catch {
           case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
             None
         }
       }
@@ -248,47 +244,46 @@ object Bench {
       // ~300× speedup that would poison bench_diff's noise band. They
       // report -1.0, which bench_diff's >0 filter drops.
       val warm: Option[Double] =
-        if (name.startsWith("sr")) None
+        if (q.drain) None
         else cold.flatMap { _ =>
           try {
-            val df = fn(spark, sfDir)
+            val df = q.run(spark, sfDir)
             val ts = (1 to math.min(repeats, 2)).map { _ =>
               val t0 = System.nanoTime(); df.count(); (System.nanoTime() - t0) / 1e9
             }
             Some(ts.min)
           } catch { case _: Throwable => None }
         }
-      (name, cold, warm, shuffled, serialHash)
+      (q, cold, warm, shuffled, serialHash)
     }
     val qs = results
-      .map { case (k, v, _, _, _) => "\"" + k + "\":" + f"${v.getOrElse(-1.0)}%.3f" }
+      .map { case (q, v, _, _, _) => "\"" + q.name + "\":" + f"${v.getOrElse(-1.0)}%.3f" }
       .mkString("{", ",", "}")
     val qsWarm = results
-      .map { case (k, _, w, _, _) => "\"" + k + "\":" + f"${w.getOrElse(-1.0)}%.3f" }
+      .map { case (q, _, w, _, _) => "\"" + q.name + "\":" + f"${w.getOrElse(-1.0)}%.3f" }
       .mkString("{", ",", "}")
     val qsShuf = results
-      .map { case (k, _, _, b, _) => "\"" + k + "\":" + b }
+      .map { case (q, _, _, b, _) => "\"" + q.name + "\":" + b }
       .mkString("{", ",", "}")
     // Per-drain state-store actuals (r13 verdict item #6): rows AND
     // bytes the store held after the drain's last micro-batch, from
-    // StreamReplayQueries' per-tag drain record. SCALE.md §4's state
+    // StreamReplayQueries' per-id drain record. SCALE.md §4's state
     // model is row-derived; this column is what the store actually
     // held, reconciled in SCALE.md §9.1.3. Stateless drains
     // legitimately report 0/0; -1 = never drained.
-    val qsState = results.collect { case (k, _, _, _, _) if k.startsWith("sr") =>
-      val p = StreamReplayQueries.lastDrainProfile.getOrElse(k.split("_")(0), Map.empty[String, Long])
+    val qsState = results.collect { case (q, _, _, _, _) if q.drain =>
+      val p = StreamReplayQueries.lastDrainProfile.getOrElse(q.id, Map.empty[String, Long])
       val (rows, bytes) = (p.getOrElse("stateRows", -1L), p.getOrElse("stateBytes", -1L))
-      "\"" + k + "\":{" + s""""rows":$rows,"bytes":$bytes}"""
+      "\"" + q.name + "\":{" + s""""rows":$rows,"bytes":$bytes}"""
     }.mkString("{", ",", "}")
     // Per-drain phase profile from the SERIAL pass (r14 verdict item
     // #2): snapshotted HERE, before the concurrent passes re-drain
     // everything and overwrite the last-writer-wins registry. The
     // split (stateCommit vs addBatch vs setup) is what lets a slow
     // drain's own artifact say "14 of 17 s was state-store fsync".
-    val qsDrainProfile = results.collect { case (k, _, _, _, _) if k.startsWith("sr") =>
-      val p = StreamReplayQueries.lastDrainProfile
-        .getOrElse(k.split("_")(0), Map.empty[String, Long])
-      "\"" + k + "\":" + Seq("batches", "triggerExecution", "addBatch", "walCommit",
+    val qsDrainProfile = results.collect { case (q, _, _, _, _) if q.drain =>
+      val p = StreamReplayQueries.lastDrainProfile.getOrElse(q.id, Map.empty[String, Long])
+      "\"" + q.name + "\":" + Seq("batches", "triggerExecution", "addBatch", "walCommit",
         "commitOffsets", "queryPlanning", "source", "stateCommit")
         .map(f => "\"" + f + "\":" + p.getOrElse(f, -1L))
         .mkString("{", ",", "}")
@@ -319,24 +314,23 @@ object Bench {
     // keeps its round-1 meaning (sum of serial colds) — the schedule
     // question is answered by the extra field, not by moving the
     // headline's goalposts.
-    val srNames = names.filter(_.startsWith("sr"))
-    val srSerialSum = results
-      .collect { case (k, Some(v), _, _, _) if k.startsWith("sr") => v }.sum
+    val drains = board.filter(_.drain)
+    val srSerialSum = results.collect { case (q, Some(v), _, _, _) if q.drain => v }.sum
     val srConcurrency = 4
     val (srWall, srConcFailed): (Double, Seq[String]) =
-      if (srNames.isEmpty) (0.0, Seq.empty)
+      if (drains.isEmpty) (0.0, Seq.empty)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(srConcurrency)
         try {
           val t0 = System.nanoTime()
-          val futs = srNames.map { name =>
-            name -> pool.submit(new java.util.concurrent.Callable[Boolean] {
+          val futs = drains.map { q =>
+            q.name -> pool.submit(new java.util.concurrent.Callable[Boolean] {
               override def call(): Boolean =
-                try { SparkEntry.queries(name)(spark.newSession(), sfDir).count(); true }
+                try { q.run(spark.newSession(), sfDir).count(); true }
                 catch {
                   case e: Throwable =>
                     System.err.println(
-                      s"[bench] concurrent drain $name FAILED: ${e.getMessage}")
+                      s"[bench] concurrent drain ${q.name} FAILED: ${e.getMessage}")
                     false
                 }
             })
@@ -357,23 +351,23 @@ object Bench {
     // Skippable with SPARK_GRAFT_BOARD_CONCURRENCY=0 for quick subset
     // iterations.
     val serialHashes: Map[String, String] =
-      results.collect { case (k, _, _, _, Some(h)) => k -> h }.toMap
+      results.collect { case (q, _, _, _, Some(h)) => q.name -> h }.toMap
     val boardConcurrency = math.max(0,
       sys.env.getOrElse("SPARK_GRAFT_BOARD_CONCURRENCY", "6").toInt)
     val (boardWall, boardDiverged, boardFailed): (Double, Seq[String], Seq[String]) =
-      if (boardConcurrency == 0 || names.isEmpty) (0.0, Seq.empty, Seq.empty)
+      if (boardConcurrency == 0) (0.0, Seq.empty, Seq.empty)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(boardConcurrency)
         try {
           val t0 = System.nanoTime()
-          val futs = names.map { name =>
-            name -> pool.submit(new java.util.concurrent.Callable[Option[String]] {
+          val futs = board.map { q =>
+            q.name -> pool.submit(new java.util.concurrent.Callable[Option[String]] {
               override def call(): Option[String] =
-                try Some(contentHash(SparkEntry.queries(name)(spark.newSession(), sfDir)))
+                try Some(contentHash(q.run(spark.newSession(), sfDir)))
                 catch {
                   case e: Throwable =>
                     System.err.println(
-                      s"[bench] board-concurrent $name FAILED: ${e.getMessage}")
+                      s"[bench] board-concurrent ${q.name} FAILED: ${e.getMessage}")
                     None
                 }
             })
@@ -387,7 +381,7 @@ object Bench {
           (wall, diverged, bad)
         } finally pool.shutdown()
       }
-    val failed = results.collect { case (k, None, _, _, _) => "\"" + k + "\"" }
+    val failed = results.collect { case (q, None, _, _, _) => "\"" + q.name + "\"" }
     // With any failure the green-subset sum is NOT a comparable
     // headline (round 8: 53 failures read as a "41% speedup" to any
     // consumer ignoring the failed list) — report null instead.
@@ -429,7 +423,7 @@ object Bench {
     // any tail capture survives. The full line still lands in
     // SPARK_GRAFT_BENCH_OUT (single-line file, json.load-able).
     val summary =
-      s"""{"bench_summary":{"total":$total,"n":${names.size},""" +
+      s"""{"bench_summary":{"total":$total,"n":${board.size},""" +
         s""""failed":${failed.size},""" +
         f""""roundtrip_ms":$roundTripStart%.1f}}"""
     println(summary)

@@ -863,109 +863,55 @@ object ExtendedQueries {
                   * (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE)))
     FROM stats"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x44_salted_join" -> (saltedJoinQ _),
-    "x45_ab_test" -> (abTest _),
-    "x35_profile" -> (columnProfile _),
-    "x17_market_hours" -> (marketHoursSessions _),
-    "h5_region_revenue" -> ((s: SparkSession, dir: String) => TpchQueries.regionRevenue(s, dir)),
-    "h14_promo_revenue" -> ((s: SparkSession, dir: String) => TpchQueries.promoRevenue(s, dir)),
-    "h10_returned_items" -> ((s: SparkSession, dir: String) => TpchQueries.returnedItems(s, dir)),
-    "h12_late_shipments" -> ((s: SparkSession, dir: String) => TpchQueries.lateShipments(s, dir)),
-    "h13_cust_order_dist" -> ((s: SparkSession, dir: String) => TpchQueries.custOrderDistribution(s, dir)),
-    "h2_min_cost_supplier" -> ((s: SparkSession, dir: String) => TpchQueries.minCostSupplier(s, dir)),
-    "h18_big_orders" -> ((s: SparkSession, dir: String) => TpchQueries.bigOrders(s, dir)),
-    "h4_priority_late" -> ((s: SparkSession, dir: String) => TpchQueries.priorityLateOrders(s, dir)),
-    "h22_idle_rich" -> ((s: SparkSession, dir: String) => TpchQueries.idleRichCustomers(s, dir)),
-    "h6_forecast_revenue" -> ((s: SparkSession, dir: String) => TpchQueries.forecastRevenue(s, dir)),
-    "h7_volume_shipping" -> ((s: SparkSession, dir: String) => TpchQueries.volumeShipping(s, dir)),
-    "h8_market_share" -> ((s: SparkSession, dir: String) => TpchQueries.marketShare(s, dir)),
-    "h15_top_supplier" -> ((s: SparkSession, dir: String) => TpchQueries.topSupplier(s, dir)),
-    "h16_part_supplier_cnt" -> ((s: SparkSession, dir: String) => TpchQueries.partSupplierCounts(s, dir)),
-    "h17_small_qty_revenue" -> ((s: SparkSession, dir: String) => TpchQueries.smallQtyRevenue(s, dir)),
-    "h19_branded_revenue" -> ((s: SparkSession, dir: String) => TpchQueries.brandedRevenue(s, dir)),
-    "h20_excess_suppliers" -> ((s: SparkSession, dir: String) => TpchQueries.excessSuppliers(s, dir)),
-    "h21_waiting_suppliers" -> ((s: SparkSession, dir: String) => TpchQueries.waitingSuppliers(s, dir)),
-    "h9_product_profit" -> ((s: SparkSession, dir: String) => TpchQueries.productProfit(s, dir)),
-    "h11_important_parts" -> ((s: SparkSession, dir: String) => TpchQueries.importantParts(s, dir)),
-    "x10_token_packing" -> (tokenPacking _),
-    "x11_approx_distinct" -> (approxDistinct _),
-    "x12_subquery_daily_high" -> (dailyHighTrades _),
-    "x13_cube" -> (cubeVolume _),
-    "x14_pivot" -> (pivotVolume _),
-    "x15_range_join" -> (rangeBandJoin _),
-    "x16_semi_anti" -> (semiAntiUsers _),
-    "x20_heavy_hitters" -> (heavyHitterTokens _),
-    "x21_spread_metrics" -> (spreadMetrics _),
-    "x22_purged_folds" -> (purgedFolds _),
-    "x6_deterministic_sample" -> (docSample _),
-    "x18_mixture" -> (mixtureSample _),
-    "x41_temperature_mix" -> (temperatureMix _),
-    "x19_split" -> (labeledSplit _),
-    "x7_stratified_sample" -> (stratifiedSample _),
-    "x8_percentiles" -> (percentiles _),
-    "x23_dist_quantiles" -> (distQuantiles _),
-    "x9_histogram" -> (priceHistogram _),
-    "x1_asof_join" -> (asofJoin _),
-    "x2_sessions" -> (sessions _),
-    "x3_rollup" -> (rollupVolume _),
-    "x4_rank_windows" -> (topPricesRanked _),
-    "x5_set_ops" -> (setOps _),
-    "x32_funnel" -> (funnel _),
-    "x39_markov_transitions" -> (markovTransitions _),
-    "x33_retention_cohorts" -> (retentionCohorts _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x44_salted_join" -> saltedJoinSql,
-    "x45_ab_test" -> abTestSql,
-    "x35_profile" -> columnProfileSql,
-    "x17_market_hours" -> marketHoursSessionsSql,
-    "h5_region_revenue" -> TpchQueries.regionRevenueSql,
-    "h14_promo_revenue" -> TpchQueries.promoRevenueSql,
-    "h10_returned_items" -> TpchQueries.returnedItemsSql,
-    "h12_late_shipments" -> TpchQueries.lateShipmentsSql,
-    "h13_cust_order_dist" -> TpchQueries.custOrderDistributionSql,
-    "h2_min_cost_supplier" -> TpchQueries.minCostSupplierSql,
-    "h18_big_orders" -> TpchQueries.bigOrdersSql,
-    "h4_priority_late" -> TpchQueries.priorityLateOrdersSql,
-    "h22_idle_rich" -> TpchQueries.idleRichCustomersSql,
-    "h6_forecast_revenue" -> TpchQueries.forecastRevenueSql,
-    "h7_volume_shipping" -> TpchQueries.volumeShippingSql,
-    "h8_market_share" -> TpchQueries.marketShareSql,
-    "h15_top_supplier" -> TpchQueries.topSupplierSql,
-    "h16_part_supplier_cnt" -> TpchQueries.partSupplierCountsSql,
-    "h17_small_qty_revenue" -> TpchQueries.smallQtyRevenueSql,
-    "h19_branded_revenue" -> TpchQueries.brandedRevenueSql,
-    "h20_excess_suppliers" -> TpchQueries.excessSuppliersSql,
-    "h21_waiting_suppliers" -> TpchQueries.waitingSuppliersSql,
-    "h9_product_profit" -> TpchQueries.productProfitSql,
-    "h11_important_parts" -> TpchQueries.importantPartsSql,
-    "x10_token_packing" -> tokenPackingSql,
-    "x11_approx_distinct" -> approxDistinctSql,
-    "x12_subquery_daily_high" -> dailyHighTradesSql,
-    "x13_cube" -> cubeVolumeSql,
-    "x14_pivot" -> pivotVolumeSql,
-    "x15_range_join" -> rangeBandJoinSql,
-    "x16_semi_anti" -> semiAntiUsersSql,
-    "x20_heavy_hitters" -> heavyHitterTokensSql,
-    "x21_spread_metrics" -> spreadMetricsSql,
-    "x22_purged_folds" -> purgedFoldsSql,
-    "x6_deterministic_sample" -> docSampleSql,
-    "x18_mixture" -> mixtureSampleSql,
-    "x41_temperature_mix" -> temperatureMixSql,
-    "x19_split" -> labeledSplitSql,
-    "x7_stratified_sample" -> stratifiedSampleSql,
-    "x8_percentiles" -> percentilesSql,
-    "x23_dist_quantiles" -> distQuantilesSql,
-    "x9_histogram" -> priceHistogramSql,
-    "x1_asof_join" -> asofJoinSql,
-    "x2_sessions" -> sessionsSql,
-    "x3_rollup" -> rollupVolumeSql,
-    "x4_rank_windows" -> topPricesRankedSql,
-    "x5_set_ops" -> setOpsSql,
-    "x32_funnel" -> funnelSql,
-    "x39_markov_transitions" -> markovTransitionsSql,
-    "x33_retention_cohorts" -> retentionCohortsSql
-  )
+  val board: Seq[BoardQuery] = Seq(
+    BoardQuery("x44_salted_join", saltedJoinSql, saltedJoinQ),
+    BoardQuery("x45_ab_test", abTestSql, abTest),
+    BoardQuery("x35_profile", columnProfileSql, columnProfile),
+    BoardQuery("x17_market_hours", marketHoursSessionsSql, marketHoursSessions),
+    BoardQuery("h5_region_revenue", TpchQueries.regionRevenueSql, TpchQueries.regionRevenue),
+    BoardQuery("h14_promo_revenue", TpchQueries.promoRevenueSql, TpchQueries.promoRevenue),
+    BoardQuery("h10_returned_items", TpchQueries.returnedItemsSql, TpchQueries.returnedItems),
+    BoardQuery("h12_late_shipments", TpchQueries.lateShipmentsSql, TpchQueries.lateShipments),
+    BoardQuery("h13_cust_order_dist", TpchQueries.custOrderDistributionSql, TpchQueries.custOrderDistribution),
+    BoardQuery("h2_min_cost_supplier", TpchQueries.minCostSupplierSql, TpchQueries.minCostSupplier),
+    BoardQuery("h18_big_orders", TpchQueries.bigOrdersSql, TpchQueries.bigOrders),
+    BoardQuery("h4_priority_late", TpchQueries.priorityLateOrdersSql, TpchQueries.priorityLateOrders),
+    BoardQuery("h22_idle_rich", TpchQueries.idleRichCustomersSql, TpchQueries.idleRichCustomers),
+    BoardQuery("h6_forecast_revenue", TpchQueries.forecastRevenueSql, TpchQueries.forecastRevenue),
+    BoardQuery("h7_volume_shipping", TpchQueries.volumeShippingSql, TpchQueries.volumeShipping),
+    BoardQuery("h8_market_share", TpchQueries.marketShareSql, TpchQueries.marketShare),
+    BoardQuery("h15_top_supplier", TpchQueries.topSupplierSql, TpchQueries.topSupplier),
+    BoardQuery("h16_part_supplier_cnt", TpchQueries.partSupplierCountsSql, TpchQueries.partSupplierCounts),
+    BoardQuery("h17_small_qty_revenue", TpchQueries.smallQtyRevenueSql, TpchQueries.smallQtyRevenue),
+    BoardQuery("h19_branded_revenue", TpchQueries.brandedRevenueSql, TpchQueries.brandedRevenue),
+    BoardQuery("h20_excess_suppliers", TpchQueries.excessSuppliersSql, TpchQueries.excessSuppliers),
+    BoardQuery("h21_waiting_suppliers", TpchQueries.waitingSuppliersSql, TpchQueries.waitingSuppliers),
+    BoardQuery("h9_product_profit", TpchQueries.productProfitSql, TpchQueries.productProfit),
+    BoardQuery("h11_important_parts", TpchQueries.importantPartsSql, TpchQueries.importantParts),
+    BoardQuery("x10_token_packing", tokenPackingSql, tokenPacking),
+    BoardQuery("x11_approx_distinct", approxDistinctSql, approxDistinct),
+    BoardQuery("x12_subquery_daily_high", dailyHighTradesSql, dailyHighTrades),
+    BoardQuery("x13_cube", cubeVolumeSql, cubeVolume),
+    BoardQuery("x14_pivot", pivotVolumeSql, pivotVolume),
+    BoardQuery("x15_range_join", rangeBandJoinSql, rangeBandJoin),
+    BoardQuery("x16_semi_anti", semiAntiUsersSql, semiAntiUsers),
+    BoardQuery("x20_heavy_hitters", heavyHitterTokensSql, heavyHitterTokens),
+    BoardQuery("x21_spread_metrics", spreadMetricsSql, spreadMetrics),
+    BoardQuery("x22_purged_folds", purgedFoldsSql, purgedFolds),
+    BoardQuery("x6_deterministic_sample", docSampleSql, docSample),
+    BoardQuery("x18_mixture", mixtureSampleSql, mixtureSample),
+    BoardQuery("x41_temperature_mix", temperatureMixSql, temperatureMix),
+    BoardQuery("x19_split", labeledSplitSql, labeledSplit),
+    BoardQuery("x7_stratified_sample", stratifiedSampleSql, stratifiedSample),
+    BoardQuery("x8_percentiles", percentilesSql, percentiles),
+    BoardQuery("x23_dist_quantiles", distQuantilesSql, distQuantiles),
+    BoardQuery("x9_histogram", priceHistogramSql, priceHistogram),
+    BoardQuery("x1_asof_join", asofJoinSql, asofJoin),
+    BoardQuery("x2_sessions", sessionsSql, sessions),
+    BoardQuery("x3_rollup", rollupVolumeSql, rollupVolume),
+    BoardQuery("x4_rank_windows", topPricesRankedSql, topPricesRanked),
+    BoardQuery("x5_set_ops", setOpsSql, setOps),
+    BoardQuery("x32_funnel", funnelSql, funnel),
+    BoardQuery("x39_markov_transitions", markovTransitionsSql, markovTransitions),
+    BoardQuery("x33_retention_cohorts", retentionCohortsSql, retentionCohorts))
 }

@@ -12,105 +12,105 @@ import graft.streaming.IndicatorStream
   */
 object IndicatorQueries {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def board: Seq[BoardQuery] = Seq(
     // B1 — rolling SMA + Bollinger bands (20-trade window).
-    "b1_sma_bollinger" -> ((s, dir) =>
+    BoardQuery("b1_sma_bollinger", smaBollingerSql, (s, dir) =>
       Indicators.smaBollinger(SparkEntry.silverDf(s, dir), n = 20)),
 
     // B2 — per-trade returns, top-5 daily movers by |return|.
-    "b2_top_movers" -> ((s, dir) =>
+    BoardQuery("b2_top_movers", topMoversSql, (s, dir) =>
       Indicators.topMovers(SparkEntry.silverDf(s, dir), k = 5)),
 
     // B3 — RSI-14 (simple-average form, integer e4 units).
-    "b3_rsi" -> ((s, dir) =>
+    BoardQuery("b3_rsi", rsiSql, (s, dir) =>
       Indicators.rsi(SparkEntry.silverDf(s, dir), n = 14)),
 
     // B4 — z-score price-spike counts per symbol/day.
-    "b4_spike_counts" -> ((s, dir) =>
+    BoardQuery("b4_spike_counts", spikeCountsSql, (s, dir) =>
       Indicators.spikeCounts(SparkEntry.silverDf(s, dir), n = 20, z = 3)),
 
     // B6 — per-symbol/day max drawdown vs running peak + cumulative
     // return, exact e6 integer fractions.
-    "b6_drawdown" -> ((s, dir) =>
+    BoardQuery("b6_drawdown", drawdownSql, (s, dir) =>
       Indicators.drawdown(SparkEntry.silverDf(s, dir))),
 
     // B7 — MACD(12,26,9) end state per symbol over daily closes.
-    "b7_macd" -> ((s, dir) =>
+    BoardQuery("b7_macd", macdSql, (s, dir) =>
       Indicators.macdDaily(SparkEntry.silverDf(s, dir))),
 
     // B8 — pairwise daily-return covariance/correlation.
-    "b8_return_cov" -> ((s, dir) =>
+    BoardQuery("b8_return_cov", returnCovSql, (s, dir) =>
       Indicators.returnCovariance(SparkEntry.silverDf(s, dir))),
 
     // B9 — market beta per symbol vs the equal-weight index.
-    "b9_market_beta" -> ((s, dir) =>
+    BoardQuery("b9_market_beta", marketBetaSql, (s, dir) =>
       Indicators.marketBeta(SparkEntry.silverDf(s, dir))),
 
     // B10 — on-balance volume per symbol (exact longs end to end).
-    "b10_obv" -> ((s, dir) =>
+    BoardQuery("b10_obv", obvSql, (s, dir) =>
       Indicators.obv(SparkEntry.silverDf(s, dir))),
 
     // B11 — 14-day Average True Range over daily bars.
-    "b11_atr" -> ((s, dir) =>
+    BoardQuery("b11_atr", atrSql, (s, dir) =>
       Indicators.atr(SparkEntry.silverDf(s, dir), n = 14)),
 
     // B12 — stochastic oscillator %K/%D (14, 3) over daily bars.
-    "b12_stochastic" -> ((s, dir) =>
+    BoardQuery("b12_stochastic", stochasticSql, (s, dir) =>
       Indicators.stochastic(SparkEntry.silverDf(s, dir), n = 14)),
 
     // B13 — TWAP per symbol/day (time-weighted average price, exact
     // integer interval weighting; VWAP's execution-benchmark sibling).
-    "b13_twap" -> ((s, dir) =>
+    BoardQuery("b13_twap", twapSql, (s, dir) =>
       Indicators.twap(SparkEntry.silverDf(s, dir))),
 
     // B14 — realized volatility per symbol/day from 5m close log
     // returns (exact e6-quantized returns, long sum of squares).
-    "b14_realized_vol" -> ((s, dir) =>
+    BoardQuery("b14_realized_vol", realizedVolSql, (s, dir) =>
       Indicators.realizedVol(SparkEntry.silverDf(s, dir))),
 
     // B15 — Parkinson + Garman-Klass range volatility from daily OHLC.
-    "b15_range_vol" -> ((s, dir) =>
+    BoardQuery("b15_range_vol", rangeVolSql, (s, dir) =>
       Indicators.rangeVol(SparkEntry.silverDf(s, dir))),
 
     // B16 — tick-rule trade classification + per-day order-flow
     // imbalance (Lee-Ready tick test with zero-tick inheritance).
-    "b16_order_flow" -> ((s, dir) =>
+    BoardQuery("b16_order_flow", orderFlowSql, (s, dir) =>
       Indicators.orderFlow(SparkEntry.silverDf(s, dir))),
 
     // B17 — Kyle's lambda: per-(symbol, day) price impact, the OLS
     // slope of 5m price change on tick-test signed flow (exact e9).
-    "b17_kyle_lambda" -> ((s, dir) =>
+    BoardQuery("b17_kyle_lambda", kyleLambdaSql, (s, dir) =>
       Indicators.kyleLambda(SparkEntry.silverDf(s, dir))),
 
     // B18 — Amihud illiquidity: avg |daily ret| per dollar volume.
-    "b18_amihud" -> ((s, dir) =>
+    BoardQuery("b18_amihud", amihudSql, (s, dir) =>
       Indicators.amihudIlliquidity(SparkEntry.silverDf(s, dir))),
 
     // B19 — Roll effective-spread estimator from serial covariance
     // of trade price changes (exact cov, double spread).
-    "b19_roll_spread" -> ((s, dir) =>
+    BoardQuery("b19_roll_spread", rollSpreadSql, (s, dir) =>
       Indicators.rollSpread(SparkEntry.silverDf(s, dir))),
 
     // B20 — VPIN: order-flow toxicity over equal-volume buckets.
-    "b20_vpin" -> ((s, dir) =>
+    BoardQuery("b20_vpin", vpinSql, (s, dir) =>
       Indicators.vpin(SparkEntry.silverDf(s, dir), nBuckets = 50)),
 
     // B21 — rolling VPIN on a fixed 2000-share volume bucket, the
     // live-trading form (trailing-10-bucket toxicity per bucket).
-    "b21_vpin_rolling" -> ((s, dir) =>
+    BoardQuery("b21_vpin_rolling", vpinRollingSql, (s, dir) =>
       Indicators.vpinRolling(SparkEntry.silverDf(s, dir),
         bucketVolume = 2000L, window = 10)),
 
     // B22 — intraday seasonality: per (symbol, UTC hour) activity and
     // mean |return| (day-keyed lag — overnight gaps excluded).
-    "b22_intraday_profile" -> ((s, dir) =>
+    BoardQuery("b22_intraday_profile", intradayProfileSql, (s, dir) =>
       Indicators.intradayProfile(SparkEntry.silverDf(s, dir))),
 
     // B23 — quote-driven effective vs quoted spread: trades as-of
     // joined to the prevailing synthetic quote (quotes_raw finally
     // consumed — the reference declares the stream and never reads
     // it), per (symbol, UTC hour), exact e4/e6 integers.
-    "b23_effective_spread" -> ((s, dir) => {
+    BoardQuery("b23_effective_spread", effectiveSpreadSql, (s, dir) => {
       val silver = SparkEntry.silverDf(s, dir)
       Indicators.effectiveSpread(silver, Indicators.syntheticQuotes(silver))
     }),
@@ -118,12 +118,12 @@ object IndicatorQueries {
     // B24 — realized variance + bipower variation (jump diagnostic)
     // per (symbol, day): exact integer tick-increment sums, the
     // BNS decomposition with the irrational normalization left out.
-    "b24_realized_bipower" -> ((s, dir) =>
+    BoardQuery("b24_realized_bipower", realizedBipowerSql, (s, dir) =>
       Indicators.realizedBipower(SparkEntry.silverDf(s, dir))),
 
     // B25 — Lee-Ready trade classification: quote-midpoint test with
     // tick-test (zero-tick carry) fallback, per (symbol, day).
-    "b25_lee_ready" -> ((s, dir) => {
+    BoardQuery("b25_lee_ready", leeReadySql, (s, dir) => {
       val silver = SparkEntry.silverDf(s, dir)
       Indicators.leeReady(silver, Indicators.syntheticQuotes(silver))
     }),
@@ -132,7 +132,7 @@ object IndicatorQueries {
     // continuously from sequence start (streaming/IndicatorStream's
     // batch adapter — the one indicator a row-frame window cannot
     // express; oracle folds the same IEEE ops via list_reduce).
-    "b5_ema_daily" -> ((s, dir) => {
+    BoardQuery("b5_ema_daily", emaDailySql, (s, dir) => {
       import s.implicits._
       val ticks = SparkEntry.silverDf(s, dir)
         .select(col("symbol"), col("price"), col("event_time"))
@@ -205,11 +205,10 @@ object IndicatorQueries {
       FROM cum GROUP BY 1, 2
     )"""
 
-  def oracleSql: Map[String, String] = Map(
-    // B13: TWAP — integer millis weights (event_time unique per symbol
-    // after silver dedup), price_e4·duration summed as HUGEINT, one
-    // truncating integral division (`//` = Spark `div`).
-    "b13_twap" -> (SparkEntry.P + """
+  // B13: TWAP — integer millis weights (event_time unique per symbol
+  // after silver dedup), price_e4·duration summed as HUGEINT, one
+  // truncating integral division (`//` = Spark `div`).
+  val twapSql: String = SparkEntry.P + """
       , wt AS (
         SELECT symbol, trade_date,
                CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px,
@@ -223,11 +222,11 @@ object IndicatorQueries {
       SELECT symbol, trade_date, COUNT(*) AS n_trades,
              CAST(SUM(dur_ms) AS BIGINT) AS span_ms,
              CAST(SUM(px * dur_ms) * 100 // SUM(dur_ms) AS BIGINT) AS twap_e6
-      FROM wt GROUP BY symbol, trade_date"""),
+      FROM wt GROUP BY symbol, trade_date"""
 
-    // B10: integer-only signed cumulative volume; the window ordering
-    // (symbol, trade_date) is total after the daily aggregate.
-    "b10_obv" -> (SparkEntry.P + s""", $dailyb, sv AS (
+  // B10: integer-only signed cumulative volume; the window ordering
+  // (symbol, trade_date) is total after the daily aggregate.
+  val obvSql: String = SparkEntry.P + s""", $dailyb, sv AS (
       SELECT symbol, trade_date, close, day_volume,
              LAG(close) OVER (PARTITION BY symbol ORDER BY trade_date) AS prev_close
       FROM dailyb
@@ -241,11 +240,11 @@ object IndicatorQueries {
     SELECT symbol, trade_date, close AS close_px, day_volume, signed_vol,
            CAST(SUM(signed_vol) OVER (PARTITION BY symbol ORDER BY trade_date
                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS obv
-    FROM sgn"""),
+    FROM sgn"""
 
-    // B11: true range as exact integers; atr is one division of two
-    // exact integers (correctly rounded, hence bit-equal to Spark).
-    "b11_atr" -> (SparkEntry.P + s""", $dailyb, sv AS (
+  // B11: true range as exact integers; atr is one division of two
+  // exact integers (correctly rounded, hence bit-equal to Spark).
+  val atrSql: String = SparkEntry.P + s""", $dailyb, sv AS (
       SELECT symbol, trade_date, high, low, close,
              LAG(close) OVER (PARTITION BY symbol ORDER BY trade_date) AS prev_close
       FROM dailyb
@@ -263,13 +262,13 @@ object IndicatorQueries {
              / CAST(COUNT(*) OVER w AS DOUBLE) AS atr
     FROM trr
     WINDOW w AS (PARTITION BY symbol ORDER BY trade_date
-                 ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)"""),
+                 ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)"""
 
-    // B12: %K is the literal (cast*100.0)/cast tree, %D the literal
-    // ((k + lag1) + lag2)/3.0 tree — both mirror the Spark operator
-    // op for op, so the doubles are bit-exact; NULLs (flat windows,
-    // first two %D days) propagate identically.
-    "b12_stochastic" -> (SparkEntry.P + s""", $dailyb, ext AS (
+  // B12: %K is the literal (cast*100.0)/cast tree, %D the literal
+  // ((k + lag1) + lag2)/3.0 tree — both mirror the Spark operator
+  // op for op, so the doubles are bit-exact; NULLs (flat windows,
+  // first two %D days) propagate identically.
+  val stochasticSql: String = SparkEntry.P + s""", $dailyb, ext AS (
       SELECT symbol, trade_date, close,
              MAX(high) OVER w AS hh, MIN(low) OVER w AS ll
       FROM dailyb
@@ -286,8 +285,9 @@ object IndicatorQueries {
     SELECT symbol, trade_date, k_num, k_den, pct_k,
            ((pct_k + LAG(pct_k, 1) OVER ws) + LAG(pct_k, 2) OVER ws) / 3.0 AS pct_d
     FROM k
-    WINDOW ws AS (PARTITION BY symbol ORDER BY trade_date)"""),
-    "b1_sma_bollinger" -> (SparkEntry.P + s""", $ind, wnd AS (
+    WINDOW ws AS (PARTITION BY symbol ORDER BY trade_date)"""
+
+  val smaBollingerSql: String = SparkEntry.P + s""", $ind, wnd AS (
       SELECT symbol, event_time, price,
              COUNT(*) OVER w AS cnt,
              CAST(SUM(px) OVER w AS BIGINT) AS s1,
@@ -306,9 +306,9 @@ object IndicatorQueries {
            CAST(s1 AS DOUBLE) / CAST(cnt * 10000 AS DOUBLE)
              - 2.0 * sqrt(CAST(cnt * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
                           / CAST(cnt * cnt * 100000000 AS DOUBLE)) AS bb_lower
-    FROM wnd"""),
+    FROM wnd"""
 
-    "b2_top_movers" -> (SparkEntry.P + s""", $ind, rets AS (
+  val topMoversSql: String = SparkEntry.P + s""", $ind, rets AS (
       SELECT trade_date, symbol, event_id, price,
              CAST(px - prev_px AS DOUBLE) / CAST(prev_px AS DOUBLE) AS ret
       FROM (SELECT *, lag(px) OVER (PARTITION BY symbol ORDER BY event_time) AS prev_px
@@ -319,9 +319,9 @@ object IndicatorQueries {
     FROM (SELECT *, row_number() OVER (PARTITION BY trade_date
                       ORDER BY abs(ret) DESC, symbol, event_id) AS rnk
           FROM rets)
-    WHERE rnk <= 5"""),
+    WHERE rnk <= 5"""
 
-    "b3_rsi" -> (SparkEntry.P + s""", $ind, g AS (
+  val rsiSql: String = SparkEntry.P + s""", $ind, g AS (
       SELECT symbol, event_time, price,
              greatest(diff, 0) AS gain, greatest(-diff, 0) AS loss
       FROM (SELECT *, px - lag(px) OVER (PARTITION BY symbol ORDER BY event_time) AS diff
@@ -340,9 +340,9 @@ object IndicatorQueries {
            CASE WHEN gain_sum + loss_sum = 0 THEN NULL
                 ELSE CAST((gain_sum * 1000000) // (gain_sum + loss_sum) AS BIGINT)
            END AS rsi_e4
-    FROM wnd WHERE n_diffs = 14"""),
+    FROM wnd WHERE n_diffs = 14"""
 
-    "b4_spike_counts" -> (SparkEntry.P + s""", $ind, wnd AS (
+  val spikeCountsSql: String = SparkEntry.P + s""", $ind, wnd AS (
       SELECT symbol, trade_date, px,
              COUNT(*) OVER w AS cnt,
              CAST(SUM(px) OVER w AS BIGINT) AS s1,
@@ -356,14 +356,14 @@ object IndicatorQueries {
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_spikes
     FROM (SELECT symbol, trade_date, cnt, s1, s2, cnt * px - s1 AS dev
           FROM wnd WHERE cnt = 20)
-    GROUP BY symbol, trade_date"""),
+    GROUP BY symbol, trade_date"""
 
-    // B6: the running peak / first price as ordered-window aggregates,
-    // drawdown + cumulative return in the same exact e4/e6 integer
-    // arithmetic. Integer "//" TRUNCATES toward zero exactly like
-    // Spark's div (see b8's note; it is not floor) — and every
-    // operand here is non-negative anyway, where the two coincide.
-    "b6_drawdown" -> (SparkEntry.P + s""", $ind, wnd AS (
+  // B6: the running peak / first price as ordered-window aggregates,
+  // drawdown + cumulative return in the same exact e4/e6 integer
+  // arithmetic. Integer "//" TRUNCATES toward zero exactly like
+  // Spark's div (see b8's note; it is not floor) — and every
+  // operand here is non-negative anyway, where the two coincide.
+  val drawdownSql: String = SparkEntry.P + s""", $ind, wnd AS (
       SELECT symbol, trade_date, event_time, event_id, px,
              MAX(px) OVER w AS peak,
              first_value(px) OVER w AS first_px,
@@ -379,18 +379,18 @@ object IndicatorQueries {
            CAST(MAX(peak) AS BIGINT) AS peak_px,
            CAST(MAX(CASE WHEN rn = 1 THEN px END) * 1000000 // MIN(first_px) - 1000000 AS BIGINT) AS cum_ret_e6
     FROM wnd
-    GROUP BY symbol, trade_date"""),
+    GROUP BY symbol, trade_date"""
 
-    // B7: the EMA folds as plain-double list_reduce (the b5-proven
-    // path — this DuckDB's list_reduce with a STRUCT accumulator
-    // miscomputes fields that read sibling accumulator fields, found
-    // live by this oracle's first form). The macd series comes from
-    // prefix folds (O(days²) per symbol — an oracle can afford naive),
-    // and the signal is one more double fold over it; each prefix
-    // fold replays exactly the operator's per-step IEEE ops, so
-    // equality stays bit-exact. list_reduce seeds from the first
-    // element: macds[1] = 0 = the operator's signal seed.
-    "b7_macd" -> (SparkEntry.P + """, daily AS (
+  // B7: the EMA folds as plain-double list_reduce (the b5-proven
+  // path — this DuckDB's list_reduce with a STRUCT accumulator
+  // miscomputes fields that read sibling accumulator fields, found
+  // live by this oracle's first form). The macd series comes from
+  // prefix folds (O(days²) per symbol — an oracle can afford naive),
+  // and the signal is one more double fold over it; each prefix
+  // fold replays exactly the operator's per-step IEEE ops, so
+  // equality stays bit-exact. list_reduce seeds from the first
+  // element: macds[1] = 0 = the operator's signal seed.
+  val macdSql: String = SparkEntry.P + """, daily AS (
       SELECT symbol, trade_date, price AS close
       FROM (SELECT symbol, trade_date, price,
                    ROW_NUMBER() OVER (PARTITION BY symbol, trade_date
@@ -420,23 +420,23 @@ object IndicatorQueries {
     SELECT symbol, n_days, e12 AS ema12, e26 AS ema26,
            e12 - e26 AS macd, sig AS signal,
            e12 - e26 - sig AS histogram
-    FROM sg"""),
+    FROM sg"""
 
-    // B8: integer // truncates toward zero here exactly like Spark's
-    // div (so negative returns agree). The moment numerators exceed
-    // 2^53, so they ship as VARCHAR — exact text survives every
-    // reader identically, whereas a DECIMAL(38,0) output column is
-    // read exactly (pyarrow decimal.Decimal) on the Spark side but
-    // collapsed to float64 by DuckDB's .df() on the oracle side and
-    // can never hash-match above 2^53 (round-5 driver finding; the
-    // round-4 direct HUGEINT→DOUBLE cast before that double-rounded
-    // negatives by 1 ulp). `corr` needs the numerators as doubles;
-    // the VARCHAR-mediated cast IS correctly rounded here (fast_float
-    // strtod — verified against Python's correctly-rounded float()
-    // over 4000 random >2^53 integers: direct cast missed 56,
-    // via-string missed 0), matching Spark's correctly-rounded
-    // decimal→double, so corr is bit-identical with no ROUND needed.
-    "b8_return_cov" -> (SparkEntry.P + """, daily AS (
+  // B8: integer // truncates toward zero here exactly like Spark's
+  // div (so negative returns agree). The moment numerators exceed
+  // 2^53, so they ship as VARCHAR — exact text survives every
+  // reader identically, whereas a DECIMAL(38,0) output column is
+  // read exactly (pyarrow decimal.Decimal) on the Spark side but
+  // collapsed to float64 by DuckDB's .df() on the oracle side and
+  // can never hash-match above 2^53 (round-5 driver finding; the
+  // round-4 direct HUGEINT→DOUBLE cast before that double-rounded
+  // negatives by 1 ulp). `corr` needs the numerators as doubles;
+  // the VARCHAR-mediated cast IS correctly rounded here (fast_float
+  // strtod — verified against Python's correctly-rounded float()
+  // over 4000 random >2^53 integers: direct cast missed 56,
+  // via-string missed 0), matching Spark's correctly-rounded
+  // decimal→double, so corr is bit-identical with no ROUND needed.
+  val returnCovSql: String = SparkEntry.P + """, daily AS (
       SELECT symbol, trade_date,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS close_px
       FROM (SELECT symbol, trade_date, price,
@@ -472,15 +472,15 @@ object IndicatorQueries {
                      / sqrt(CAST(CAST(var_a_h AS VARCHAR) AS DOUBLE)
                             * CAST(CAST(var_b_h AS VARCHAR) AS DOUBLE))
            END AS corr
-    FROM m"""),
+    FROM m"""
 
-    // B9: b8's daily-return frame joined to the equal-weight market
-    // mean (floored integer division of a possibly-negative sum —
-    // DuckDB SUM(BIGINT) widens to HUGEINT, whose // also truncates
-    // toward zero like Spark's div). Moment numerators ship as
-    // VARCHAR and beta divides VARCHAR-mediated correctly-rounded
-    // doubles — the b8 >2^53 posture.
-    "b9_market_beta" -> (SparkEntry.P + """, daily AS (
+  // B9: b8's daily-return frame joined to the equal-weight market
+  // mean (floored integer division of a possibly-negative sum —
+  // DuckDB SUM(BIGINT) widens to HUGEINT, whose // also truncates
+  // toward zero like Spark's div). Moment numerators ship as
+  // VARCHAR and beta divides VARCHAR-mediated correctly-rounded
+  // doubles — the b8 >2^53 posture.
+  val marketBetaSql: String = SparkEntry.P + """, daily AS (
       SELECT symbol, trade_date,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS close_px
       FROM (SELECT symbol, trade_date, price,
@@ -515,14 +515,14 @@ object IndicatorQueries {
                 THEN CAST(CAST(cov_h AS VARCHAR) AS DOUBLE)
                      / CAST(CAST(var_h AS VARCHAR) AS DOUBLE)
            END AS beta
-    FROM m2"""),
+    FROM m2"""
 
-    // B14: 5m closes as deterministic last-by-(time,id) tick longs;
-    // each return = ONE ln() of a correctly-rounded quotient of exact
-    // doubles, floored to e6 BEFORE the (exact BIGINT) sum of squares.
-    // sqrt input goes HUGEINT→BIGINT→DOUBLE (the b8 posture: the
-    // direct HUGEINT→DOUBLE cast double-rounds).
-    "b14_realized_vol" -> (SparkEntry.P + """, cl AS (
+  // B14: 5m closes as deterministic last-by-(time,id) tick longs;
+  // each return = ONE ln() of a correctly-rounded quotient of exact
+  // doubles, floored to e6 BEFORE the (exact BIGINT) sum of squares.
+  // sqrt input goes HUGEINT→BIGINT→DOUBLE (the b8 posture: the
+  // direct HUGEINT→DOUBLE cast double-rounds).
+  val realizedVolSql: String = SparkEntry.P + """, cl AS (
       SELECT symbol, trade_date, ws_ms,
              MAX(CASE WHEN rn = 1 THEN px END) AS close
       FROM (SELECT symbol, trade_date,
@@ -551,13 +551,13 @@ object IndicatorQueries {
            CASE WHEN SUM(r_e6 * r_e6) IS NOT NULL THEN
              CAST(floor(sqrt(CAST(CAST(SUM(r_e6 * r_e6) AS BIGINT) AS DOUBLE))) AS BIGINT)
            END AS day_vol_e6
-    FROM r GROUP BY symbol, trade_date"""),
+    FROM r GROUP BY symbol, trade_date"""
 
-    // B15: daily OHLC as tick longs (open/close deterministic by the
-    // two row_number orderings); the Parkinson / Garman-Klass constants
-    // are decimal literals byte-identical to the Spark side, so both
-    // engines parse the same double and the IEEE trees match op-for-op.
-    "b15_range_vol" -> (SparkEntry.P + s""", $ind, dly AS (
+  // B15: daily OHLC as tick longs (open/close deterministic by the
+  // two row_number orderings); the Parkinson / Garman-Klass constants
+  // are decimal literals byte-identical to the Spark side, so both
+  // engines parse the same double and the IEEE trees match op-for-op.
+  val rangeVolSql: String = SparkEntry.P + s""", $ind, dly AS (
       SELECT symbol, trade_date,
              MAX(CASE WHEN rn_a = 1 THEN px END) AS open,
              MAX(px) AS high, MIN(px) AS low,
@@ -584,14 +584,14 @@ object IndicatorQueries {
                          * (ln(CAST(close AS DOUBLE) / CAST(open AS DOUBLE))
                             * ln(CAST(close AS DOUBLE) / CAST(open AS DOUBLE))))
                       * 1000000000.0) AS BIGINT) AS gk_e9
-    FROM dly"""),
+    FROM dly"""
 
-    // B16: the zero-tick inheritance is last_value(... IGNORE NULLS)
-    // over the ordered per-day frame, not a recursion. silver is
-    // deduped on (symbol, event_time), so the ORDER BY is total.
-    // "//" truncates toward zero = Spark div (the numerator CAN be
-    // negative here).
-    "b16_order_flow" -> (SparkEntry.P + """, pxv AS (
+  // B16: the zero-tick inheritance is last_value(... IGNORE NULLS)
+  // over the ordered per-day frame, not a recursion. silver is
+  // deduped on (symbol, event_time), so the ORDER BY is total.
+  // "//" truncates toward zero = Spark div (the numerator CAN be
+  // negative here).
+  val orderFlowSql: String = SparkEntry.P + """, pxv AS (
       SELECT symbol, trade_date, event_time, volume,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px
       FROM silver
@@ -621,15 +621,15 @@ object IndicatorQueries {
                           // (SUM(CASE WHEN sign = 1 THEN volume ELSE 0 END)
                              + SUM(CASE WHEN sign = -1 THEN volume ELSE 0 END)) AS BIGINT)
            END AS flow_imbalance_e6
-    FROM cls GROUP BY symbol, trade_date"""),
+    FROM cls GROUP BY symbol, trade_date"""
 
-    // B17: same cls pass as B16, then 5m bins (Δp = close−open px,
-    // q = signed flow) and the closed-form OLS slope in HUGEINT —
-    // mirrors the decimal(38,0) sufficient statistics exactly; "//"
-    // truncates toward zero = Spark div (numerator can be negative).
-    // Within a (symbol, bin) event_time is unique (silver dedup), so
-    // single-key arg_min/arg_max match minByOrd2/maxByOrd2.
-    "b17_kyle_lambda" -> (SparkEntry.P + """, pxv AS (
+  // B17: same cls pass as B16, then 5m bins (Δp = close−open px,
+  // q = signed flow) and the closed-form OLS slope in HUGEINT —
+  // mirrors the decimal(38,0) sufficient statistics exactly; "//"
+  // truncates toward zero = Spark div (numerator can be negative).
+  // Within a (symbol, bin) event_time is unique (silver dedup), so
+  // single-key arg_min/arg_max match minByOrd2/maxByOrd2.
+  val kyleLambdaSql: String = SparkEntry.P + """, pxv AS (
       SELECT symbol, trade_date, event_time, volume,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px
       FROM silver
@@ -663,12 +663,12 @@ object IndicatorQueries {
                           // (COUNT(*) * SUM(CAST(q AS HUGEINT) * q)
                              - SUM(CAST(q AS HUGEINT)) * SUM(CAST(q AS HUGEINT)))
                           AS BIGINT) END AS lambda_e9
-    FROM bins GROUP BY symbol, trade_date"""),
+    FROM bins GROUP BY symbol, trade_date"""
 
-    // B18: mirror of amihudIlliquidity — dailyb-style close (rn=1
-    // over DESC) + exact pv sum, the LAG return, and two truncating
-    // HUGEINT divisions (// = Spark div on decimal(38,0)).
-    "b18_amihud" -> (SparkEntry.P + """, dcv AS (
+  // B18: mirror of amihudIlliquidity — dailyb-style close (rn=1
+  // over DESC) + exact pv sum, the LAG return, and two truncating
+  // HUGEINT divisions (// = Spark div on decimal(38,0)).
+  val amihudSql: String = SparkEntry.P + """, dcv AS (
       SELECT symbol, trade_date,
              MAX(CASE WHEN rn = 1 THEN px END) AS close,
              SUM(pv) AS pv_ticks
@@ -692,14 +692,14 @@ object IndicatorQueries {
     )
     SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n_days,
            CAST(SUM(CAST(illiq_e12 AS HUGEINT)) // COUNT(*) AS BIGINT) AS avg_illiq_e12
-    FROM di GROUP BY symbol"""),
+    FROM di GROUP BY symbol"""
 
-    // B19: exact HUGEINT serial-covariance statistics; cov_num ships
-    // as VARCHAR (the b8 >2^53 posture) and the double spread routes
-    // the HUGEINT->DOUBLE cast through VARCHAR for correct rounding
-    // (a direct cast double-rounds — round-4 b8 finding), then runs
-    // the same negate/divide/sqrt/x2 IEEE chain as the Spark side.
-    "b19_roll_spread" -> (SparkEntry.P + """, d1 AS (
+  // B19: exact HUGEINT serial-covariance statistics; cov_num ships
+  // as VARCHAR (the b8 >2^53 posture) and the double spread routes
+  // the HUGEINT->DOUBLE cast through VARCHAR for correct rounding
+  // (a direct cast double-rounds — round-4 b8 finding), then runs
+  // the same negate/divide/sqrt/x2 IEEE chain as the Spark side.
+  val rollSpreadSql: String = SparkEntry.P + """, d1 AS (
       SELECT symbol, trade_date, event_time,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT)
                - LAG(CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT))
@@ -725,13 +725,13 @@ object IndicatorQueries {
                   -(CAST(CAST(n_pairs * s_dd - s_d * s_dn AS VARCHAR) AS DOUBLE))
                   / (CAST(n_pairs AS DOUBLE) * CAST(n_pairs AS DOUBLE)))
            END AS roll_spread_ticks
-    FROM st"""),
+    FROM st"""
 
-    // B20: B16's tick-test cls pass, the per-symbol volume clock
-    // (cum_prev over event_time — unique per symbol after dedup),
-    // floor bucket width clamped >=1, bucket id clamped to 49, and
-    // one truncating HUGEINT division for vpin_e6.
-    "b20_vpin" -> (SparkEntry.P + """, pxv AS (
+  // B20: B16's tick-test cls pass, the per-symbol volume clock
+  // (cum_prev over event_time — unique per symbol after dedup),
+  // floor bucket width clamped >=1, bucket id clamped to 49, and
+  // one truncating HUGEINT division for vpin_e6.
+  val vpinSql: String = SparkEntry.P + """, pxv AS (
       SELECT symbol, trade_date, event_time, volume,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px
       FROM silver
@@ -763,14 +763,14 @@ object IndicatorQueries {
     )
     SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n_buckets,
            CAST(SUM(ABS(CAST(buy AS HUGEINT) - sell)) * 1000000 // SUM(vol) AS BIGINT) AS vpin_e6
-    FROM pb GROUP BY symbol"""),
+    FROM pb GROUP BY symbol"""
 
-    // B21 oracle: b20's classification CTEs, then an ABSOLUTE volume
-    // clock (cum_prev // 2000 — no total), per-bucket flow aggregates
-    // and a trailing-10-bucket rolling VPIN window per symbol. The
-    // CTE chain (P → pxv → cls → cum → pb) is shared with sr4's
-    // streaming-replay oracle, which filters it to completed buckets.
-    "b21_vpin_rolling" -> (vpinRollingPb + """
+  // B21 oracle: b20's classification CTEs, then an ABSOLUTE volume
+  // clock (cum_prev // 2000 — no total), per-bucket flow aggregates
+  // and a trailing-10-bucket rolling VPIN window per symbol. The
+  // CTE chain (P → pxv → cls → cum → pb) is shared with sr4's
+  // streaming-replay oracle, which filters it to completed buckets.
+  val vpinRollingSql: String = vpinRollingPb + """
     SELECT symbol, CAST(bucket AS BIGINT) AS bucket, CAST(buy AS BIGINT) AS buy,
            CAST(sell AS BIGINT) AS sell, CAST(vol AS BIGINT) AS vol,
            CAST(COUNT(*) OVER w AS BIGINT) AS n_in_window,
@@ -778,11 +778,11 @@ object IndicatorQueries {
                 // SUM(vol) OVER w AS BIGINT) AS vpin_roll_e6
     FROM pb
     WINDOW w AS (PARTITION BY symbol ORDER BY bucket
-                 ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)"""),
+                 ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)"""
 
-    // B22: the day-keyed LAG, integer hour from epoch micros (no
-    // cross-engine EXTRACT), |Δpx|·1e6 in HUGEINT, truncating `//`.
-    "b22_intraday_profile" -> (SparkEntry.P + """, pxv AS (
+  // B22: the day-keyed LAG, integer hour from epoch micros (no
+  // cross-engine EXTRACT), |Δpx|·1e6 in HUGEINT, truncating `//`.
+  val intradayProfileSql: String = SparkEntry.P + """, pxv AS (
       SELECT symbol, volume,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px,
              LAG(CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT), 1)
@@ -801,15 +801,15 @@ object IndicatorQueries {
            CAST(CASE WHEN COUNT(abs_ret_e6) = 0 THEN NULL
                      ELSE SUM(CAST(abs_ret_e6 AS HUGEINT)) // COUNT(abs_ret_e6)
                 END AS BIGINT) AS mean_abs_ret_e6
-    FROM r GROUP BY 1, 2"""),
+    FROM r GROUP BY 1, 2"""
 
-    // B23: DuckDB's native ASOF JOIN is the independent twin of the
-    // tag-union-window as-of operator — different algorithm, same
-    // at-or-before tie semantics (DuckDB's >= matches the right-row-
-    // first sort at equal stamps). The staleness tolerance applies
-    // POST-match on both engines: a matched-but-stale quote voids the
-    // match rather than falling back to an older quote.
-    "b23_effective_spread" -> (SparkEntry.P + """, tq AS (
+  // B23: DuckDB's native ASOF JOIN is the independent twin of the
+  // tag-union-window as-of operator — different algorithm, same
+  // at-or-before tie semantics (DuckDB's >= matches the right-row-
+  // first sort at equal stamps). The staleness tolerance applies
+  // POST-match on both engines: a matched-but-stale quote voids the
+  // match rather than falling back to an older quote.
+  val effectiveSpreadSql: String = SparkEntry.P + """, tq AS (
       SELECT symbol, trade_date, event_id, epoch_ms(event_time) AS t_ms,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px_e4
       FROM silver
@@ -840,11 +840,11 @@ object IndicatorQueries {
                 THEN SUM(ABS(2 * CAST(px_e4 AS HUGEINT) - (bid_e4 + ask_e4))) * 1000000
                      // SUM(CAST(ask_e4 AS HUGEINT) - bid_e4)
                 END AS BIGINT) AS eff_vs_quoted_e6
-    FROM j GROUP BY 1, 2"""),
+    FROM j GROUP BY 1, 2"""
 
-    // RV/BV: two stacked day-keyed lags, exact HUGEINT sums, one
-    // truncating division — mirrors the Spark decimal(38,0) staging.
-    "b24_realized_bipower" -> (SparkEntry.P + """, px AS (
+  // RV/BV: two stacked day-keyed lags, exact HUGEINT sums, one
+  // truncating division — mirrors the Spark decimal(38,0) staging.
+  val realizedBipowerSql: String = SparkEntry.P + """, px AS (
       SELECT symbol, trade_date, event_time,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px_e4
       FROM silver
@@ -861,12 +861,12 @@ object IndicatorQueries {
            CAST(CASE WHEN SUM(CAST(d AS HUGEINT) * d) > 0
                 THEN SUM(ABS(CAST(d AS HUGEINT)) * ABS(prev_d)) * 1000000
                      // SUM(CAST(d AS HUGEINT) * d) END AS BIGINT) AS bv_vs_rv_e6
-    FROM dd2 GROUP BY 1, 2"""),
+    FROM dd2 GROUP BY 1, 2"""
 
-    // Lee-Ready: midpoint test on the b23 quote fixture (same ASOF +
-    // staleness contract), tick test with zero-tick carry via
-    // last_value IGNORE NULLS over the day-keyed frame.
-    "b25_lee_ready" -> (SparkEntry.P + """, tq AS (
+  // Lee-Ready: midpoint test on the b23 quote fixture (same ASOF +
+  // staleness contract), tick test with zero-tick carry via
+  // last_value IGNORE NULLS over the day-keyed frame.
+  val leeReadySql: String = SparkEntry.P + """, tq AS (
       SELECT symbol, trade_date, event_id, epoch_ms(event_time) AS t_ms,
              epoch_us(event_time) AS t_us, volume,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px_e4
@@ -906,14 +906,14 @@ object IndicatorQueries {
            CAST(SUM(CASE WHEN side = -1 THEN volume ELSE 0 END) AS BIGINT) AS sell_vol,
            CAST(SUM(CASE WHEN side = 1 THEN volume ELSE 0 END)
                 - SUM(CASE WHEN side = -1 THEN volume ELSE 0 END) AS BIGINT) AS net_flow
-    FROM sided GROUP BY 1, 2"""),
+    FROM sided GROUP BY 1, 2"""
 
-    // The EMA recursion as a literal left fold over the per-symbol
-    // price sequence: acc' = α·x + (1−α)·acc with α = 2/15 — the same
-    // IEEE double ops in the same order as IndicatorStream.step, so
-    // the result is bit-identical, not approximately equal. silver is
-    // deduped on (symbol, event_time), so event_time order is total.
-    "b5_ema_daily" -> (SparkEntry.P + s""", seq AS (
+  // The EMA recursion as a literal left fold over the per-symbol
+  // price sequence: acc' = α·x + (1−α)·acc with α = 2/15 — the same
+  // IEEE double ops in the same order as IndicatorStream.step, so
+  // the result is bit-identical, not approximately equal. silver is
+  // deduped on (symbol, event_time), so event_time order is total.
+  val emaDailySql: String = SparkEntry.P + s""", seq AS (
       SELECT symbol, trade_date, event_time,
              COUNT(*) OVER (PARTITION BY symbol, trade_date) AS cnt,
              list(price) OVER (PARTITION BY symbol ORDER BY event_time
@@ -925,5 +925,5 @@ object IndicatorQueries {
     SELECT symbol, trade_date, CAST(cnt AS BIGINT) AS n_ticks,
            list_reduce(pxs, (acc, x) -> (2::DOUBLE / 15::DOUBLE) * x
                               + (1::DOUBLE - 2::DOUBLE / 15::DOUBLE) * acc) AS ema
-    FROM seq WHERE rn = 1"""))
+    FROM seq WHERE rn = 1"""
 }

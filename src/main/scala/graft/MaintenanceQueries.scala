@@ -458,27 +458,15 @@ object MaintenanceQueries {
   val compactionSql: String = SparkEntry.P + """
     SELECT symbol, epoch_ms(event_time) AS ts_ms, price, volume FROM silver"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v1_incremental_ohlcv" -> (incrementalOhlcv _),
-    "v2_merge_upsert" -> (mergeUpsert _),
-    "v3_scd2_history" -> (scd2History _),
-    "v4_pit_join" -> (pitJoin _),
-    "v5_snapshot_diff" -> (snapshotDiff _),
-    "v6_retention_audit" -> (retentionAudit _),
-    "v7_delta_join" -> (deltaJoinQ _),
-    "v8_compaction" -> (compactionQ _),
-    "g1_gap_fill" -> (gapFill _),
-    "z1_zorder_cluster" -> (zorderCluster _))
-
-  val oracles: Map[String, String] = Map(
-    "v1_incremental_ohlcv" -> incrementalOhlcvSql,
-    "v2_merge_upsert" -> mergeUpsertSql,
-    "v3_scd2_history" -> scd2HistorySql,
-    "v4_pit_join" -> pitJoinSql,
-    "v5_snapshot_diff" -> snapshotDiffSql,
-    "v6_retention_audit" -> retentionAuditSql,
-    "v7_delta_join" -> deltaJoinSql,
-    "v8_compaction" -> compactionSql,
-    "g1_gap_fill" -> gapFillSql,
-    "z1_zorder_cluster" -> zorderClusterSql)
+  val board: Seq[BoardQuery] = Seq(
+    BoardQuery("v1_incremental_ohlcv", incrementalOhlcvSql, incrementalOhlcv),
+    BoardQuery("v2_merge_upsert", mergeUpsertSql, mergeUpsert),
+    BoardQuery("v3_scd2_history", scd2HistorySql, scd2History),
+    BoardQuery("v4_pit_join", pitJoinSql, pitJoin),
+    BoardQuery("v5_snapshot_diff", snapshotDiffSql, snapshotDiff),
+    BoardQuery("v6_retention_audit", retentionAuditSql, retentionAudit),
+    BoardQuery("v7_delta_join", deltaJoinSql, deltaJoinQ),
+    BoardQuery("v8_compaction", compactionSql, compactionQ),
+    BoardQuery("g1_gap_fill", gapFillSql, gapFill),
+    BoardQuery("z1_zorder_cluster", zorderClusterSql, zorderCluster))
 }

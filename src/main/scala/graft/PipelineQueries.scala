@@ -2806,140 +2806,71 @@ object PipelineQueries {
   // Wiring
   // ---------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t10_bpe_pairs" -> (bpePairStats _),
-    "t13_bpe_encode" -> (bpeEncode _),
-    "t1_text_stats" -> (textStats _),
-    "t2_lang_id" -> (langIdConfusion _),
-    "t3_fingerprints" -> (fingerprintStats _),
-    "t4_doc_features" -> (docFeatures _),
-    "t5_repetition" -> (repetitionStats _),
-    "t6_pii" -> (piiScan _),
-    "t7_vocab_topk" -> (vocabTopK _),
-    "t8_chunking" -> (chunking _),
-    "t9_charset" -> (charsetStats _),
-    "t15_readability" -> (readabilityQ _),
-    "t17_quality_gate" -> (qualityFunnel _),
-    "t16_sequence_packing" -> ((s: SparkSession, dir: String) =>
+  val board: Seq[BoardQuery] = Seq(
+    BoardQuery("t10_bpe_pairs", bpePairStatsSql, bpePairStats),
+    BoardQuery("t13_bpe_encode", bpeEncodeSql, bpeEncode),
+    BoardQuery("t1_text_stats", textStatsSql, textStats),
+    BoardQuery("t2_lang_id", langIdSql, langIdConfusion),
+    BoardQuery("t3_fingerprints", fingerprintSql, fingerprintStats),
+    BoardQuery("t4_doc_features", docFeaturesSql, docFeatures),
+    BoardQuery("t5_repetition", repetitionSql, repetitionStats),
+    BoardQuery("t6_pii", piiSql, piiScan),
+    BoardQuery("t7_vocab_topk", vocabTopKSql, vocabTopK),
+    BoardQuery("t8_chunking", chunkingSql, chunking),
+    BoardQuery("t9_charset", charsetSql, charsetStats),
+    BoardQuery("t15_readability", readabilitySql, readabilityQ),
+    BoardQuery("t17_quality_gate", qualityFunnelSql, qualityFunnel),
+    BoardQuery("t16_sequence_packing", sequencePackingSql, (s, dir) =>
       Sampling.packSequences(docs(s, dir))),
-    "d1_exact_dedup" -> (exactDedupStats _),
-    "d8_decontamination" -> (decontamination _),
-    "d10_decontam_bloom" -> (decontaminationBloom _),
-    "c1_kmeans" -> (kmeans _),
-    "c3_cluster_quality" -> (kmeansQuality _),
-    "c4_prototype_prune" -> (prototypePrune _),
-    "d2_jaccard_pairs" -> (jaccardPairs _),
-    "d3_minhash_sigs" -> (minhashSignatures _),
-    "d4_minhash_candidates" -> (minhashCandidates _),
-    "d5_simhash" -> (simhashFingerprints _),
-    "d7_near_dedup" -> (nearDedup _),
-    "d19_jaccard_est" -> (jaccardEstQualityQ _),
-    "d9_dup_clusters" -> (dupClusters _),
-    "d11_near_dedup_cc" -> (nearDedupCC _),
-    "d12_substring_dup" -> (substringDup _),
-    "d20_dup_spans" -> (dupSpansQ _),
-    "d13_window_decontam" -> (windowDecontam _),
-    "d14_containment" -> (containment _),
-    "d21_lsh_tuning" -> (lshTuningQ _),
-    "d22_winnowing" -> (winnowingQ _),
-    "d23_containment" -> (containmentQ _),
-    "d24_containment_recall" -> (containmentRecallQ _),
-    "d16_incremental_dedup" -> (incrementalDedup _),
-    "x43_split_decontam" -> (splitDecontam _),
-    "t18_token_entropy" -> (tokenEntropyQ _),
-    "x24_domain_cap" -> (domainCap _),
-    "x25_train_shards" -> (trainShards _),
-    "d15_quality_dedup" -> (qualityDedup _),
-    "d6_embedding_dups" -> (embeddingDups _),
-    "d18_semantic_decontam" -> (semanticDecontamQ _),
-    "s1_knn_brute" -> (knnBrute _),
-    "s4_filtered_knn" -> (filteredKnn _),
-    "s2_knn_lsh" -> (knnLsh _),
-    "s3_knn_ivf" -> (knnIvf _),
-    "s5_knn_pq" -> (knnPq _),
-    "s8_knn_ivfpq" -> (knnIvfPq _),
-    "s9_knn_sq8" -> (knnSq8 _),
-    "s10_knn_bq" -> (knnBq _),
-    "t11_quality_classifier" -> (qualityClassifier _),
-    "s6_hard_negatives" -> (hardNegativesQ _),
-    "c2_curation_pipeline" -> (curationPipeline _),
-    "s7_ann_recall" -> (annRecallReport _),
-    "x36_score_calibration" -> (scoreCalibration _),
-    "t12_ngram_novelty" -> (ngramNovelty _),
-    "x38_incremental_novelty" -> (incrementalNovelty _),
-    "x37_source_overlap" -> (sourceOverlap _),
-    "mm1_modality_stats" -> (modalityStats _),
-    "mm2_frame_sample" -> (frameSample _),
-    "mm3_resize_plan" -> (resizePlan _),
-    "mm4_media_dedup" -> (mediaDedup _),
-    "mm5_perceptual_dedup" -> (perceptualDedupQ _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "t10_bpe_pairs" -> bpePairStatsSql,
-    "t13_bpe_encode" -> bpeEncodeSql,
-    "t1_text_stats" -> textStatsSql,
-    "t2_lang_id" -> langIdSql,
-    "t3_fingerprints" -> fingerprintSql,
-    "t4_doc_features" -> docFeaturesSql,
-    "t5_repetition" -> repetitionSql,
-    "t6_pii" -> piiSql,
-    "t7_vocab_topk" -> vocabTopKSql,
-    "t8_chunking" -> chunkingSql,
-    "t9_charset" -> charsetSql,
-    "t15_readability" -> readabilitySql,
-    "t17_quality_gate" -> qualityFunnelSql,
-    "t16_sequence_packing" -> sequencePackingSql,
-    "d1_exact_dedup" -> exactDedupSql,
-    "d8_decontamination" -> decontaminationSql,
-    "d10_decontam_bloom" -> decontaminationSql,
-    "c1_kmeans" -> kmeansOracleSql,
-    "c3_cluster_quality" -> kmeansQualitySql,
-    "c4_prototype_prune" -> prototypePruneSql,
-    "d2_jaccard_pairs" -> jaccardPairsSql,
-    "d3_minhash_sigs" -> minhashSigSql,
-    "d4_minhash_candidates" -> minhashCandSql,
-    "d5_simhash" -> simhashSql,
-    "d7_near_dedup" -> nearDedupSql,
-    "d19_jaccard_est" -> jaccardEstSql,
-    "d9_dup_clusters" -> dupClustersSql,
-    "d11_near_dedup_cc" -> nearDedupCCSql,
-    "d12_substring_dup" -> substringDupSql,
-    "d20_dup_spans" -> dupSpansSql,
-    "d13_window_decontam" -> windowDecontamSql,
-    "d14_containment" -> containmentSql,
-    "d21_lsh_tuning" -> lshTuningSql,
-    "d22_winnowing" -> winnowingSql,
-    "d23_containment" -> rareContainmentSql,
-    "d24_containment_recall" -> containmentRecallSql,
-    "d16_incremental_dedup" -> incrementalDedupSql,
-    "x43_split_decontam" -> splitDecontamSql,
-    "t18_token_entropy" -> tokenEntropySql,
-    "x24_domain_cap" -> domainCapSql,
-    "x25_train_shards" -> trainShardsSql,
-    "d15_quality_dedup" -> qualityDedupSql,
-    "d6_embedding_dups" -> embeddingDupsSql,
-    "d18_semantic_decontam" -> semanticDecontamSql,
-    "s1_knn_brute" -> knnBruteSql,
-    "s4_filtered_knn" -> filteredKnnSql,
-    "s2_knn_lsh" -> knnLshSql,
-    "s3_knn_ivf" -> knnIvfSql,
-    "s5_knn_pq" -> knnPqSql,
-    "s8_knn_ivfpq" -> knnIvfPqSql,
-    "s9_knn_sq8" -> knnSq8Sql,
-    "s10_knn_bq" -> knnBqSql,
-    "t11_quality_classifier" -> qualityClassifierSql,
-    "s6_hard_negatives" -> hardNegativesSql,
-    "c2_curation_pipeline" -> curationPipelineSql,
-    "s7_ann_recall" -> annRecallSql,
-    "x36_score_calibration" -> scoreCalibrationSql,
-    "t12_ngram_novelty" -> ngramNoveltySql,
-    "x38_incremental_novelty" -> incrementalNoveltySql,
-    "x37_source_overlap" -> sourceOverlapSql,
-    "mm1_modality_stats" -> modalityStatsSql,
-    "mm2_frame_sample" -> frameSampleSql,
-    "mm3_resize_plan" -> resizePlanSql,
-    "mm4_media_dedup" -> mediaDedupSql,
-    "mm5_perceptual_dedup" -> perceptualDedupSql
-  )
+    BoardQuery("d1_exact_dedup", exactDedupSql, exactDedupStats),
+    BoardQuery("d8_decontamination", decontaminationSql, decontamination),
+    BoardQuery("d10_decontam_bloom", decontaminationSql, decontaminationBloom),
+    BoardQuery("c1_kmeans", kmeansOracleSql, kmeans),
+    BoardQuery("c3_cluster_quality", kmeansQualitySql, kmeansQuality),
+    BoardQuery("c4_prototype_prune", prototypePruneSql, prototypePrune),
+    BoardQuery("d2_jaccard_pairs", jaccardPairsSql, jaccardPairs),
+    BoardQuery("d3_minhash_sigs", minhashSigSql, minhashSignatures),
+    BoardQuery("d4_minhash_candidates", minhashCandSql, minhashCandidates),
+    BoardQuery("d5_simhash", simhashSql, simhashFingerprints),
+    BoardQuery("d7_near_dedup", nearDedupSql, nearDedup),
+    BoardQuery("d19_jaccard_est", jaccardEstSql, jaccardEstQualityQ),
+    BoardQuery("d9_dup_clusters", dupClustersSql, dupClusters),
+    BoardQuery("d11_near_dedup_cc", nearDedupCCSql, nearDedupCC),
+    BoardQuery("d12_substring_dup", substringDupSql, substringDup),
+    BoardQuery("d20_dup_spans", dupSpansSql, dupSpansQ),
+    BoardQuery("d13_window_decontam", windowDecontamSql, windowDecontam),
+    BoardQuery("d14_containment", containmentSql, containment),
+    BoardQuery("d21_lsh_tuning", lshTuningSql, lshTuningQ),
+    BoardQuery("d22_winnowing", winnowingSql, winnowingQ),
+    BoardQuery("d23_containment", rareContainmentSql, containmentQ),
+    BoardQuery("d24_containment_recall", containmentRecallSql, containmentRecallQ),
+    BoardQuery("d16_incremental_dedup", incrementalDedupSql, incrementalDedup),
+    BoardQuery("x43_split_decontam", splitDecontamSql, splitDecontam),
+    BoardQuery("t18_token_entropy", tokenEntropySql, tokenEntropyQ),
+    BoardQuery("x24_domain_cap", domainCapSql, domainCap),
+    BoardQuery("x25_train_shards", trainShardsSql, trainShards),
+    BoardQuery("d15_quality_dedup", qualityDedupSql, qualityDedup),
+    BoardQuery("d6_embedding_dups", embeddingDupsSql, embeddingDups),
+    BoardQuery("d18_semantic_decontam", semanticDecontamSql, semanticDecontamQ),
+    BoardQuery("s1_knn_brute", knnBruteSql, knnBrute),
+    BoardQuery("s4_filtered_knn", filteredKnnSql, filteredKnn),
+    BoardQuery("s2_knn_lsh", knnLshSql, knnLsh),
+    BoardQuery("s3_knn_ivf", knnIvfSql, knnIvf),
+    BoardQuery("s5_knn_pq", knnPqSql, knnPq),
+    BoardQuery("s8_knn_ivfpq", knnIvfPqSql, knnIvfPq),
+    BoardQuery("s9_knn_sq8", knnSq8Sql, knnSq8),
+    BoardQuery("s10_knn_bq", knnBqSql, knnBq),
+    BoardQuery("t11_quality_classifier", qualityClassifierSql, qualityClassifier),
+    BoardQuery("s6_hard_negatives", hardNegativesSql, hardNegativesQ),
+    BoardQuery("c2_curation_pipeline", curationPipelineSql, curationPipeline),
+    BoardQuery("s7_ann_recall", annRecallSql, annRecallReport),
+    BoardQuery("x36_score_calibration", scoreCalibrationSql, scoreCalibration),
+    BoardQuery("t12_ngram_novelty", ngramNoveltySql, ngramNovelty),
+    BoardQuery("x38_incremental_novelty", incrementalNoveltySql, incrementalNovelty),
+    BoardQuery("x37_source_overlap", sourceOverlapSql, sourceOverlap),
+    BoardQuery("mm1_modality_stats", modalityStatsSql, modalityStats),
+    BoardQuery("mm2_frame_sample", frameSampleSql, frameSample),
+    BoardQuery("mm3_resize_plan", resizePlanSql, resizePlan),
+    BoardQuery("mm4_media_dedup", mediaDedupSql, mediaDedup),
+    BoardQuery("mm5_perceptual_dedup", perceptualDedupSql, perceptualDedupQ))
 }

@@ -456,29 +456,16 @@ object RetrievalQueries {
     FROM nr LEFT JOIN h USING (qid)"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x40_retrieval_eval" -> (retrievalEval _),
-    "t14_textrank" -> (textRankQ _),
-    "x34_bigram_lm" -> (bigramLm _),
-    "x42_heldout_lm" -> (heldOutLm _),
-    "x26_tfidf_topk" -> (tfIdf _),
-    "x27_bm25_search" -> (bm25 _),
-    "x28_inverted_index" -> (invertedIndex _),
-    "x29_importance_weights" -> (importance _),
-    "x30_pmi_cooccur" -> (pmi _),
-    "x31_lm_quality" -> (lmQuality _),
-    "d17_semantic_dedup" -> (semanticDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "x40_retrieval_eval" -> retrievalEvalSql,
-    "t14_textrank" -> textRankSql,
-    "x34_bigram_lm" -> bigramLmSql,
-    "x42_heldout_lm" -> heldOutLmSql,
-    "x26_tfidf_topk" -> tfIdfSql,
-    "x27_bm25_search" -> bm25Sql,
-    "x28_inverted_index" -> invertedIndexSql,
-    "x29_importance_weights" -> importanceSql,
-    "x30_pmi_cooccur" -> pmiSql,
-    "x31_lm_quality" -> lmQualitySql,
-    "d17_semantic_dedup" -> semanticDedupSql)
+  val board: Seq[BoardQuery] = Seq(
+    BoardQuery("x40_retrieval_eval", retrievalEvalSql, retrievalEval),
+    BoardQuery("t14_textrank", textRankSql, textRankQ),
+    BoardQuery("x34_bigram_lm", bigramLmSql, bigramLm),
+    BoardQuery("x42_heldout_lm", heldOutLmSql, heldOutLm),
+    BoardQuery("x26_tfidf_topk", tfIdfSql, tfIdf),
+    BoardQuery("x27_bm25_search", bm25Sql, bm25),
+    BoardQuery("x28_inverted_index", invertedIndexSql, invertedIndex),
+    BoardQuery("x29_importance_weights", importanceSql, importance),
+    BoardQuery("x30_pmi_cooccur", pmiSql, pmi),
+    BoardQuery("x31_lm_quality", lmQualitySql, lmQuality),
+    BoardQuery("d17_semantic_dedup", semanticDedupSql, semanticDedup))
 }

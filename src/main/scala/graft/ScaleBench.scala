@@ -11,7 +11,7 @@ import graft.sources.Tables
   * and k× and report the measured scaling exponent
   * log(tk/t1)/log(k). Because the scaled inputs live on disk as
   * ordinary parquet dirs, the sweep needs zero per-query code — each
-  * query runs verbatim via `SparkEntry.queries(name)(spark, dir)`.
+  * query runs verbatim via its board record's `run(spark, dir)`.
   *
   * Scaling model (copy i of k; copy 0 is the identity so base-
   * constant filters still match):
@@ -138,6 +138,7 @@ object ScaleBench {
     name.matches("^[ds]\\d.*")
 
   def main(args: Array[String]): Unit = {
+    val board = Board.fromEnv().sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val kMain = args.headOption.map(_.toInt).getOrElse(10)
     val kDeep = args.drop(1).headOption.map(_.toInt).getOrElse(30)
@@ -163,12 +164,7 @@ object ScaleBench {
       (best, n)
     }
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val results = names.flatMap { name =>
-      val fn = SparkEntry.queries(name)
+    val results = board.flatMap { case BoardQuery(name, _, fn, _) =>
       val (k, dirK) = if (isDedupAnn(name)) (kDeep, deepDir) else (kMain, mainDir)
       try {
         fn(spark, sfDir).count() // warm: codegen + file index

@@ -7,10 +7,10 @@ import graft.sources.Tables
 import graft.operators._
 import graft.streaming.LocalFs
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each entry in `queries` exercises one operator from the SURVEY.md §2
-  * inventory (names carry the operator id); `oracleSql` holds the
+  * Each board query exercises one operator from the SURVEY.md §2
+  * inventory (names carry the operator id) and carries the
   * equivalent DuckDB SQL over the same parquet tables. Column names and
   * types are aligned pair-wise: timestamps are emitted as epoch-millis
   * BIGINTs (the source `events.ts` physical encoding has drifted across
@@ -115,120 +115,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     goldMs(gold5m(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
-    // P1+P2 — JSON decode + event-time derivation.
-    "p1_parse_trades" -> ((s, dir) =>
-      trades(s, dir).select(col("event_id"), col("symbol"), col("price"), col("volume"),
-        unix_millis(col("event_time")).as("event_time_ms"), col("trade_date"))),
-
-    // P3 — bronze enrichment (deterministic columns).
-    "p3_bronze" -> ((s, dir) =>
-      Medallion.toBronze(trades(s, dir)).select(col("event_id"), col("symbol"),
-        col("price"), col("volume"), unix_millis(col("event_time")).as("event_time_ms"),
-        col("trade_date"), col("source"))),
-
-    // P4 — quality normalization.
-    "p4_clean" -> ((s, dir) =>
-      Medallion.clean(trades(s, dir)).select(col("event_id"), col("symbol"),
-        col("price"), col("volume"))),
-
-    // F1 (+P4, F2) — the silver layer.
-    "f1_silver" -> ((s, dir) =>
-      silverDf(s, dir).select(col("event_id"), col("symbol"), col("price"), col("volume"),
-        unix_millis(col("event_time")).as("event_time_ms"), col("trade_date"))),
-
-    // F2 — dedup invariants: per-symbol row and distinct-key counts.
-    "f2_dedup_stats" -> ((s, dir) =>
-      silverDf(s, dir).groupBy(col("symbol")).agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("event_time")).as("n_unique_times"))),
-
-    // F3+F4+F5 — validation rule bundle + metrics.
-    "f3_validation_metrics" -> ((s, dir) =>
-      Validation.metrics(Validation.validate(trades(s, dir), CutoffMs))),
-
-    // F5 — validation-rate gauge (validator.py validation_rate parity).
-    "f4_validation_rate" -> ((s, dir) =>
-      Validation.rateMetrics(Validation.validate(trades(s, dir), CutoffMs))),
-
-    // A1+A4 — 5-minute OHLCV bars with VWAP.
-    "a1_ohlcv_5m" -> ((s, dir) => goldMs(gold5m(s, dir))),
-
-    // A2 — 1-hour grain.
-    "a2_ohlcv_1h" -> ((s, dir) => goldMs(gold1h(s, dir))),
-
-    // A3 — sliding windows (5 minutes every 1 minute).
-    "a3_ohlcv_slide" -> ((s, dir) => goldMs(Ohlcv.barsSliding(silverDf(s, dir)))),
-
-    // A6 — latest-price snapshot with change vs previous trade.
-    "a6_latest_prices" -> ((s, dir) => LatestPrices.snapshot(silverDf(s, dir))),
-
-    // A7 — hierarchical grain cascade: 1h bars re-aggregated from 5m
-    // bars (shuffles bars, not trades; exact via pv_ticks carry).
-    "a7_ohlcv_rollup" -> ((s, dir) => goldMs(Ohlcv.rollup(gold5m(s, dir), "1 hour"))),
-
-    // A8 — three-level grain cascade: 1d bars from the 1h rollup of
-    // the 5m bars, all in one plan. Proves rollup composes: each
-    // level re-aggregates O(bars) with the exact pv_ticks carry, so
-    // the daily bar equals direct aggregation over trades.
-    "a8_ohlcv_daily" -> ((s, dir) =>
-      goldMs(Ohlcv.rollup(Ohlcv.rollup(gold5m(s, dir), "1 hour"), "1 day"))),
-
-    // Q1 — count for one day (day-scoped silver: see silverForDays).
-    "q1_count_day" -> ((s, dir) =>
-      MarketQueries.countForDay(silverForDays(s, dir, Day, nextDay(Day)), Day)),
-
-    // Q2 — total gold volume for one day.
-    "q2_volume_day" -> ((s, dir) =>
-      MarketQueries.volumeForDay(
-        Ohlcv.bars5m(silverForDays(s, dir, Day, nextDay(Day))), Day)),
-
-    // Q3 — freshest bar for one day.
-    "q3_max_window_day" -> ((s, dir) =>
-      MarketQueries.maxWindowForDay(
-        Ohlcv.bars5m(silverForDays(s, dir, Day, nextDay(Day))), Day)),
-
-    // Q4 — candles top-k newest-first.
-    "q4_candles" -> ((s, dir) =>
-      MarketQueries.candles(
-        Ohlcv.bars5m(silverForDays(s, dir, Day, nextDay(Day))), "click", Day, 50)),
-
-    // Q5 — volume by symbol.
-    "q5_volume_by_symbol" -> ((s, dir) => MarketQueries.volumeBySymbol(gold5m(s, dir))),
-
-    // Q6 — trade count by symbol.
-    "q6_trades_by_symbol" -> ((s, dir) => MarketQueries.tradeCountBySymbol(gold5m(s, dir))),
-
-    // Q8 — latest N trades for symbol+day.
-    "q8_latest_trades" -> ((s, dir) =>
-      MarketQueries.latestTrades(
-        silverForDays(s, dir, Day, nextDay(Day)), "purchase", Day, 20)),
-
-    // Q9 — OHLCV date-range fetch (1h grain).
-    "q9_ohlcv_range" -> ((s, dir) =>
-      MarketQueries.ohlcvRange(
-        Ohlcv.bars1h(silverForDays(s, dir, "2024-01-10", nextDay("2024-01-16"))),
-        "view", "2024-01-10", "2024-01-16")),
-
-    // Q10 — avg-latency analog (timestamp arithmetic + avg).
-    "q10_avg_seconds_into_day" -> ((s, dir) =>
-      MarketQueries.avgSecondsIntoDay(silverForDays(s, dir, Day, nextDay(Day)), Day)),
-
-    // Q11 — secondary-index analog: price-band filter.
-    "q11_price_band" -> ((s, dir) => MarketQueries.priceBand(silverDf(s, dir), 50.0, 100.0)),
-
-    // Q12 — catalog/table health check.
-    "q12_catalog" -> ((s, dir) => MarketQueries.catalogSummary(s, dir)),
-
-    // H1 — TPC-H-style pricing summary (scan-heavy agg benchmark).
-    "h1_pricing_summary" -> ((s, dir) => TpchQueries.pricingSummary(s, dir)),
-
-    // H3 — TPC-H-style shipping priority (3-way join + top-k).
-    "h3_shipping_priority" -> ((s, dir) => TpchQueries.shippingPriority(s, dir))
-  ) ++ PipelineQueries.queries ++ ExtendedQueries.queries ++ IndicatorQueries.queries ++
-    RetrievalQueries.queries ++ MaintenanceQueries.queries ++ StreamReplayQueries.queries
-
   /** Shared DuckDB CTE prelude: trades view + medallion layers.
     * Mirrors Tables.trades / Medallion / Ohlcv exactly.
     */
@@ -285,26 +171,49 @@ object SparkEntry {
         WINDOW w AS (PARTITION BY symbol ORDER BY event_time DESC, event_id DESC)
       ) WHERE rn = 1"""
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** One record per implemented operator from SURVEY.md §2, with its
+    * DuckDB oracle over the same parquet tables.
     */
-  def oracleSql: Map[String, String] = Map(
-    "p1_parse_trades" -> (P +
-      "SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms, trade_date FROM trades"),
+  val board: Seq[BoardQuery] = Seq(
+    // P1+P2 — JSON decode + event-time derivation.
+    BoardQuery("p1_parse_trades", P +
+      "SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms, trade_date FROM trades",
+      (s, dir) =>
+        trades(s, dir).select(col("event_id"), col("symbol"), col("price"), col("volume"),
+          unix_millis(col("event_time")).as("event_time_ms"), col("trade_date"))),
 
-    "p3_bronze" -> (P +
-      "SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms, trade_date, 'market' AS source FROM trades"),
+    // P3 — bronze enrichment (deterministic columns).
+    BoardQuery("p3_bronze", P +
+      "SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms, trade_date, 'market' AS source FROM trades",
+      (s, dir) =>
+        Medallion.toBronze(trades(s, dir)).select(col("event_id"), col("symbol"),
+          col("price"), col("volume"), unix_millis(col("event_time")).as("event_time_ms"),
+          col("trade_date"), col("source"))),
 
-    "p4_clean" -> (P +
-      "SELECT event_id, symbol, ROUND(price, 4) AS price, ABS(volume) AS volume FROM trades"),
+    // P4 — quality normalization.
+    BoardQuery("p4_clean", P +
+      "SELECT event_id, symbol, ROUND(price, 4) AS price, ABS(volume) AS volume FROM trades",
+      (s, dir) =>
+        Medallion.clean(trades(s, dir)).select(col("event_id"), col("symbol"),
+          col("price"), col("volume"))),
 
-    "f1_silver" -> (P +
-      "SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms, trade_date FROM silver"),
+    // F1 (+P4, F2) — the silver layer.
+    BoardQuery("f1_silver", P +
+      "SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms, trade_date FROM silver",
+      (s, dir) =>
+        silverDf(s, dir).select(col("event_id"), col("symbol"), col("price"), col("volume"),
+          unix_millis(col("event_time")).as("event_time_ms"), col("trade_date"))),
 
-    "f2_dedup_stats" -> (P +
-      "SELECT symbol, COUNT(*) AS n_rows, COUNT(DISTINCT event_time) AS n_unique_times FROM silver GROUP BY symbol"),
+    // F2 — dedup invariants: per-symbol row and distinct-key counts.
+    BoardQuery("f2_dedup_stats", P +
+      "SELECT symbol, COUNT(*) AS n_rows, COUNT(DISTINCT event_time) AS n_unique_times FROM silver GROUP BY symbol",
+      (s, dir) =>
+        silverDf(s, dir).groupBy(col("symbol")).agg(
+          count(lit(1)).as("n_rows"),
+          countDistinct(col("event_time")).as("n_unique_times"))),
 
-    "f3_validation_metrics" -> (P + """
+    // F3+F4+F5 — validation rule bundle + metrics.
+    BoardQuery("f3_validation_metrics", P + """
       SELECT reason, COUNT(*) AS n FROM (
         SELECT UNNEST(CASE WHEN len(errs) = 0 THEN ['valid'] ELSE errs END) AS reason FROM (
           SELECT list_filter([
@@ -317,9 +226,12 @@ object SparkEntry {
             CASE WHEN event_time IS NULL THEN 'missing_timestamp' END,
             CASE WHEN epoch_ms(event_time) > 1706745600000 THEN 'future_timestamp' END
           ], x -> x IS NOT NULL) AS errs FROM trades)
-      ) GROUP BY reason"""),
+      ) GROUP BY reason""",
+      (s, dir) =>
+        Validation.metrics(Validation.validate(trades(s, dir), CutoffMs))),
 
-    "f4_validation_rate" -> (P + """
+    // F5 — validation-rate gauge (validator.py validation_rate parity).
+    BoardQuery("f4_validation_rate", P + """
       SELECT CAST(COUNT(*) AS BIGINT) AS total,
              CAST(SUM(CASE WHEN nerr = 0 THEN 1 ELSE 0 END) AS BIGINT) AS valid,
              CAST(SUM(CASE WHEN nerr > 0 THEN 1 ELSE 0 END) AS BIGINT) AS invalid,
@@ -336,15 +248,22 @@ object SparkEntry {
           CASE WHEN volume = 0 THEN 'zero_volume' END,
           CASE WHEN event_time IS NULL THEN 'missing_timestamp' END,
           CASE WHEN epoch_ms(event_time) > 1706745600000 THEN 'future_timestamp' END
-        ], x -> x IS NOT NULL)) AS nerr FROM trades)"""),
+        ], x -> x IS NOT NULL)) AS nerr FROM trades)""",
+      (s, dir) =>
+        Validation.rateMetrics(Validation.validate(trades(s, dir), CutoffMs))),
 
-    "a1_ohlcv_5m" -> (P +
-      "SELECT symbol, ws_ms AS window_start_ms, we_ms AS window_end_ms, open, high, low, close, volume, trade_count, vwap_e6 FROM gold_5m"),
+    // A1+A4 — 5-minute OHLCV bars with VWAP.
+    BoardQuery("a1_ohlcv_5m", P +
+      "SELECT symbol, ws_ms AS window_start_ms, we_ms AS window_end_ms, open, high, low, close, volume, trade_count, vwap_e6 FROM gold_5m",
+      (s, dir) => goldMs(gold5m(s, dir))),
 
-    "a2_ohlcv_1h" -> (P +
-      "SELECT symbol, ws_ms AS window_start_ms, we_ms AS window_end_ms, open, high, low, close, volume, trade_count, vwap_e6 FROM gold_1h"),
+    // A2 — 1-hour grain.
+    BoardQuery("a2_ohlcv_1h", P +
+      "SELECT symbol, ws_ms AS window_start_ms, we_ms AS window_end_ms, open, high, low, close, volume, trade_count, vwap_e6 FROM gold_1h",
+      (s, dir) => goldMs(gold1h(s, dir))),
 
-    "a3_ohlcv_slide" -> (P + """
+    // A3 — sliding windows (5 minutes every 1 minute).
+    BoardQuery("a3_ohlcv_slide", P + """
       SELECT symbol, ws_ms AS window_start_ms, ws_ms + 300000 AS window_end_ms,
              arg_min(price, event_time) AS open, MAX(price) AS high,
              MIN(price) AS low, arg_max(price, event_time) AS close,
@@ -356,15 +275,20 @@ object SparkEntry {
         SELECT *, epoch_ms(event_time) - epoch_ms(event_time) % 60000
                   - 60000 * UNNEST([0, 1, 2, 3, 4]) AS ws_ms
         FROM silver)
-      GROUP BY symbol, ws_ms"""),
+      GROUP BY symbol, ws_ms""",
+      (s, dir) => goldMs(Ohlcv.barsSliding(silverDf(s, dir)))),
 
-    "a6_latest_prices" -> latestPricesSql,
+    // A6 — latest-price snapshot with change vs previous trade.
+    BoardQuery("a6_latest_prices", latestPricesSql,
+      (s, dir) => LatestPrices.snapshot(silverDf(s, dir))),
 
+    // A7 — hierarchical grain cascade: 1h bars re-aggregated from 5m
+    // bars (shuffles bars, not trades; exact via pv_ticks carry).
     // A7 oracle: re-aggregate the gold_5m CTE itself — open/close from
     // the finest window's open/close ordered by window start, VWAP
     // re-derived from the exact integer pv sums (not the floored
     // vwap_e6). Equals gold_1h by construction; computed independently.
-    "a7_ohlcv_rollup" -> (P + """
+    BoardQuery("a7_ohlcv_rollup", P + """
       SELECT symbol, hs_ms AS window_start_ms, hs_ms + 3600000 AS window_end_ms,
              arg_min(open, ws_ms) AS open, MAX(high) AS high, MIN(low) AS low,
              arg_max(close, ws_ms) AS close,
@@ -373,14 +297,19 @@ object SparkEntry {
              CASE WHEN SUM(volume) = 0 THEN NULL ELSE
                CAST(SUM(pv) * 100 // SUM(volume) AS BIGINT) END AS vwap_e6
       FROM (SELECT *, ws_ms - ws_ms % 3600000 AS hs_ms FROM gold_5m)
-      GROUP BY symbol, hs_ms"""),
+      GROUP BY symbol, hs_ms""",
+      (s, dir) => goldMs(Ohlcv.rollup(gold5m(s, dir), "1 hour"))),
 
+    // A8 — three-level grain cascade: 1d bars from the 1h rollup of
+    // the 5m bars, all in one plan. Proves rollup composes: each
+    // level re-aggregates O(bars) with the exact pv_ticks carry, so
+    // the daily bar equals direct aggregation over trades.
     // A8 oracle: the daily re-aggregation of gold_5m directly —
     // independent of the intermediate 1h level, so a hash match
     // proves the 5m→1h→1d cascade is lossless end-to-end (exactness
     // rides the integer pv carry; a vwap_e6-based rollup would not
     // round-trip the floor).
-    "a8_ohlcv_daily" -> (P + """
+    BoardQuery("a8_ohlcv_daily", P + """
       SELECT symbol, ds_ms AS window_start_ms, ds_ms + 86400000 AS window_end_ms,
              arg_min(open, ws_ms) AS open, MAX(high) AS high, MIN(low) AS low,
              arg_max(close, ws_ms) AS close,
@@ -389,51 +318,98 @@ object SparkEntry {
              CASE WHEN SUM(volume) = 0 THEN NULL ELSE
                CAST(SUM(pv) * 100 // SUM(volume) AS BIGINT) END AS vwap_e6
       FROM (SELECT *, ws_ms - ws_ms % 86400000 AS ds_ms FROM gold_5m)
-      GROUP BY symbol, ds_ms"""),
+      GROUP BY symbol, ds_ms""",
+      (s, dir) =>
+        goldMs(Ohlcv.rollup(Ohlcv.rollup(gold5m(s, dir), "1 hour"), "1 day"))),
 
-    "q1_count_day" -> (P +
-      s"SELECT COUNT(*) AS n_trades FROM silver WHERE trade_date = DATE '$Day'"),
+    // Q1 — count for one day (day-scoped silver: see silverForDays).
+    BoardQuery("q1_count_day", P +
+      s"SELECT COUNT(*) AS n_trades FROM silver WHERE trade_date = DATE '$Day'",
+      (s, dir) =>
+        MarketQueries.countForDay(silverForDays(s, dir, Day, nextDay(Day)), Day)),
 
-    "q2_volume_day" -> (P +
-      s"SELECT CAST(SUM(volume) AS BIGINT) AS total_volume FROM gold_5m WHERE window_date = DATE '$Day'"),
+    // Q2 — total gold volume for one day.
+    BoardQuery("q2_volume_day", P +
+      s"SELECT CAST(SUM(volume) AS BIGINT) AS total_volume FROM gold_5m WHERE window_date = DATE '$Day'",
+      (s, dir) =>
+        MarketQueries.volumeForDay(
+          Ohlcv.bars5m(silverForDays(s, dir, Day, nextDay(Day))), Day)),
 
-    "q3_max_window_day" -> (P +
-      s"SELECT MAX(ws_ms) AS max_window_start_ms FROM gold_5m WHERE window_date = DATE '$Day'"),
+    // Q3 — freshest bar for one day.
+    BoardQuery("q3_max_window_day", P +
+      s"SELECT MAX(ws_ms) AS max_window_start_ms FROM gold_5m WHERE window_date = DATE '$Day'",
+      (s, dir) =>
+        MarketQueries.maxWindowForDay(
+          Ohlcv.bars5m(silverForDays(s, dir, Day, nextDay(Day))), Day)),
 
-    "q4_candles" -> (P +
+    // Q4 — candles top-k newest-first.
+    BoardQuery("q4_candles", P +
       s"SELECT ws_ms AS window_start_ms, open, high, low, close, volume FROM gold_5m " +
-      s"WHERE symbol = 'click' AND window_date = DATE '$Day' ORDER BY window_start_ms DESC LIMIT 50"),
+      s"WHERE symbol = 'click' AND window_date = DATE '$Day' ORDER BY window_start_ms DESC LIMIT 50",
+      (s, dir) =>
+        MarketQueries.candles(
+          Ohlcv.bars5m(silverForDays(s, dir, Day, nextDay(Day))), "click", Day, 50)),
 
-    "q5_volume_by_symbol" -> (P +
-      "SELECT symbol, CAST(SUM(volume) AS BIGINT) AS total_volume FROM gold_5m GROUP BY symbol"),
+    // Q5 — volume by symbol.
+    BoardQuery("q5_volume_by_symbol", P +
+      "SELECT symbol, CAST(SUM(volume) AS BIGINT) AS total_volume FROM gold_5m GROUP BY symbol",
+      (s, dir) => MarketQueries.volumeBySymbol(gold5m(s, dir))),
 
-    "q6_trades_by_symbol" -> (P +
-      "SELECT symbol, CAST(SUM(trade_count) AS BIGINT) AS total_trades FROM gold_5m GROUP BY symbol"),
+    // Q6 — trade count by symbol.
+    BoardQuery("q6_trades_by_symbol", P +
+      "SELECT symbol, CAST(SUM(trade_count) AS BIGINT) AS total_trades FROM gold_5m GROUP BY symbol",
+      (s, dir) => MarketQueries.tradeCountBySymbol(gold5m(s, dir))),
 
-    "q8_latest_trades" -> (P +
+    // Q8 — latest N trades for symbol+day.
+    BoardQuery("q8_latest_trades", P +
       s"SELECT event_id, symbol, price, volume, epoch_ms(event_time) AS event_time_ms FROM silver " +
       s"WHERE symbol = 'purchase' AND trade_date = DATE '$Day' " +
-      "ORDER BY event_time_ms DESC, event_id DESC LIMIT 20"),
+      "ORDER BY event_time_ms DESC, event_id DESC LIMIT 20",
+      (s, dir) =>
+        MarketQueries.latestTrades(
+          silverForDays(s, dir, Day, nextDay(Day)), "purchase", Day, 20)),
 
-    "q9_ohlcv_range" -> (P +
+    // Q9 — OHLCV date-range fetch (1h grain).
+    BoardQuery("q9_ohlcv_range", P +
       "SELECT ws_ms AS window_start_ms, open, high, low, close, volume, trade_count, vwap_e6 FROM gold_1h " +
-      "WHERE symbol = 'view' AND window_date BETWEEN DATE '2024-01-10' AND DATE '2024-01-16'"),
+      "WHERE symbol = 'view' AND window_date BETWEEN DATE '2024-01-10' AND DATE '2024-01-16'",
+      (s, dir) =>
+        MarketQueries.ohlcvRange(
+          Ohlcv.bars1h(silverForDays(s, dir, "2024-01-10", nextDay("2024-01-16"))),
+          "view", "2024-01-10", "2024-01-16")),
 
-    "q10_avg_seconds_into_day" -> (P +
+    // Q10 — avg-latency analog (timestamp arithmetic + avg).
+    BoardQuery("q10_avg_seconds_into_day", P +
       s"SELECT ROUND(SUM(epoch_ms(event_time) - epoch_ms(CAST(trade_date AS TIMESTAMP))) " +
-      s"/ COUNT(*) / 1000.0, 6) AS avg_seconds_into_day FROM silver WHERE trade_date = DATE '$Day'"),
+      s"/ COUNT(*) / 1000.0, 6) AS avg_seconds_into_day FROM silver WHERE trade_date = DATE '$Day'",
+      (s, dir) =>
+        MarketQueries.avgSecondsIntoDay(silverForDays(s, dir, Day, nextDay(Day)), Day)),
 
-    "q11_price_band" -> (P + """
+    // Q11 — secondary-index analog: price-band filter.
+    BoardQuery("q11_price_band", P + """
       SELECT symbol, COUNT(*) AS n_trades, ROUND(MIN(price), 4) AS min_price,
              ROUND(MAX(price), 4) AS max_price
-      FROM silver WHERE price BETWEEN 50 AND 100 GROUP BY symbol"""),
+      FROM silver WHERE price BETWEEN 50 AND 100 GROUP BY symbol""",
+      (s, dir) => MarketQueries.priceBand(silverDf(s, dir), 50.0, 100.0)),
 
-    "q12_catalog" -> graft.sources.Tables.tableNames
+    // Q12 — catalog/table health check.
+    BoardQuery("q12_catalog", graft.sources.Tables.tableNames
       .map(n => s"SELECT '$n' AS table_name, COUNT(*) AS n_rows FROM $n")
       .mkString(" UNION ALL "),
+      MarketQueries.catalogSummary),
 
-    "h1_pricing_summary" -> TpchQueries.pricingSummarySql,
-    "h3_shipping_priority" -> TpchQueries.shippingPrioritySql
-  ) ++ PipelineQueries.oracles ++ ExtendedQueries.oracles ++ IndicatorQueries.oracleSql ++
-    RetrievalQueries.oracles ++ MaintenanceQueries.oracles ++ StreamReplayQueries.oracles
+    // H1 — TPC-H-style pricing summary (scan-heavy agg benchmark).
+    BoardQuery("h1_pricing_summary", TpchQueries.pricingSummarySql,
+      TpchQueries.pricingSummary),
+
+    // H3 — TPC-H-style shipping priority (3-way join + top-k).
+    BoardQuery("h3_shipping_priority", TpchQueries.shippingPrioritySql,
+      TpchQueries.shippingPriority))
+
+  /** The driver contract's views of the whole board ([[Board.all]]):
+    * name → run function, and name → oracle SQL.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Board.all.map(q => q.name -> q.run).toMap
+  def oracleSql: Map[String, String] = Board.all.map(q => q.name -> q.oracleSql).toMap
 }

@@ -63,9 +63,8 @@ object StreamReplayQueries {
     * capacity): 2 partitions read serial 68.3 s vs 76.2 s at 8 and
     * concurrent wall 15.1 s vs 20.1 s, with the heavy-stateCommit
     * drains (sr13's 4-store stream-stream join, sr4's chained tws
-    * pair) gaining the most. `SPARK_GRAFT_SR_SHUFFLE` overrides it, so
-    * a deployment with real state re-derives the count (≈ one
-    * partition per few hundred MB of state) without a code change.
+    * pair) gaining the most. A deployment with real state would size
+    * the count again (≈ one partition per few hundred MB of state).
     * Partition count never touches results — every replay's
     * arithmetic is per-key. `provider` sets the state-store provider:
     * every transformWithState replay MUST pass RocksDB (multiple
@@ -90,7 +89,7 @@ object StreamReplayQueries {
       case None => s.conf.unset(key)
     }
     try {
-      s.conf.set(shufKey, sys.env.getOrElse("SPARK_GRAFT_SR_SHUFFLE", "2"))
+      s.conf.set(shufKey, "2")
       provider.foreach { p =>
         s.conf.set(provKey, p)
         s.conf.set(logKey, "true")
@@ -1241,32 +1240,6 @@ object StreamReplayQueries {
         unix_millis(col("window.end")).as("we_ms"),
         col("n_events"), col("sum_volume"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sr1_stream_gold_replay" -> (streamGoldReplay _),
-    "sr2_stream_curation_replay" -> (streamCurationReplay _),
-    "sr3_stream_latest_replay" -> (streamLatestReplay _),
-    "sr4_stream_vpin_replay" -> (streamVpinReplay _),
-    "sr5_stream_funnel_replay" -> (streamFunnelReplay _),
-    "sr6_stream_transitions_replay" -> (streamTransitionsReplay _),
-    "sr7_stream_scd2_replay" -> (streamScd2Replay _),
-    "sr8_stream_ema_replay" -> (streamEmaReplay _),
-    "sr9_stream_heavyhitter_replay" -> (streamHeavyHitterReplay _),
-    "sr10_stream_barind_replay" -> (streamBarIndicatorReplay _),
-    "sr11_stream_late_replay" -> (streamLateReplay _),
-    "sr12_stream_session_replay" -> (streamSessionReplay _),
-    "sr13_stream_join_replay" -> (streamJoinReplay _),
-    "sr14_stream_dedup_replay" -> (streamDedupReplay _),
-    "sr15_stream_kafka_replay" -> (streamKafkaReplay _),
-    "sr16_stream_multitopic_replay" -> (streamMultiTopicReplay _),
-    "sr17_stream_ratelimit_replay" -> (streamRateLimitReplay _),
-    "sr18_stream_startoffsets_replay" -> (streamStartOffsetsReplay _),
-    "sr19_stream_evolution_replay" -> (streamEvolutionReplay _),
-    "sr20_stream_unionwm_replay" -> (streamUnionWatermarkReplay _),
-    "sr21_stream_seekadmit_replay" -> (streamSeekAdmitReplay _),
-    "sr22_stream_minoffsets_replay" -> (streamMinOffsetsReplay _),
-    "sr23_stream_heartbeat_replay" -> (streamHeartbeatReplay _),
-    "p8_kafka_bounded_read" -> (kafkaBoundedRead _))
-
   /** sr11's kept/emitted sets, as explicit SQL: the late-record filter
     * the THIRD slice meets (m0 — the watermark slice 1 evicted with,
     * i.e. max slice-0 event time − 3 days; see streamLateReplay's
@@ -1296,17 +1269,22 @@ object StreamReplayQueries {
     GROUP BY symbol, ws_ms
     HAVING ws_ms + 300000 <= (SELECT w FROM mf)"""
 
-  val oracles: Map[String, String] = Map(
+  /** A streaming-replay drain's board record. */
+  private def drain(name: String, run: (SparkSession, String) => DataFrame)
+                   (oracleSql: String): BoardQuery =
+    BoardQuery(name, oracleSql, run, drain = true)
+
+  val board: Seq[BoardQuery] = Seq(
     // The streamed merge-on-read store must equal batch gold_5m.
-    "sr1_stream_gold_replay" -> MaintenanceQueries.incrementalOhlcvSql,
-    "sr2_stream_curation_replay" -> PipelineQueries.streamCurationReplaySql,
+    drain("sr1_stream_gold_replay", streamGoldReplay)(MaintenanceQueries.incrementalOhlcvSql),
+    drain("sr2_stream_curation_replay", streamCurationReplay)(PipelineQueries.streamCurationReplaySql),
     // The streamed stateful snapshot must equal batch a6 — literally
     // the same oracle string.
-    "sr3_stream_latest_replay" -> SparkEntry.latestPricesSql,
+    drain("sr3_stream_latest_replay", streamLatestReplay)(SparkEntry.latestPricesSql),
     // The chained classify→bucket stream must equal batch b21 on
     // COMPLETED buckets: b21's own CTE chain, filtered to rows below
     // each symbol's final (still-filling) bucket.
-    "sr4_stream_vpin_replay" -> (IndicatorQueries.vpinRollingPb + """, roll AS (
+    drain("sr4_stream_vpin_replay", streamVpinReplay)(IndicatorQueries.vpinRollingPb + """, roll AS (
       SELECT symbol, bucket, buy, sell, vol,
              COUNT(*) OVER w AS n_in_window,
              SUM(ABS(CAST(buy AS HUGEINT) - sell)) OVER w * 1000000 AS absdiff_e6,
@@ -1323,25 +1301,25 @@ object StreamReplayQueries {
     FROM roll WHERE bucket < maxb"""),
     // Each remaining stateful runtime equals its batch operator
     // verbatim — literally the same oracle strings.
-    "sr5_stream_funnel_replay" -> ExtendedQueries.funnelSql,
-    "sr6_stream_transitions_replay" -> ExtendedQueries.markovTransitionsSql,
-    "sr7_stream_scd2_replay" -> MaintenanceQueries.scd2HistorySql,
-    "sr8_stream_ema_replay" -> IndicatorQueries.oracleSql("b5_ema_daily"),
-    "sr9_stream_heavyhitter_replay" -> ExtendedQueries.heavyHitterTokensSql,
-    "sr10_stream_barind_replay" -> IndicatorQueries.oracleSql("b12_stochastic"),
-    "sr11_stream_late_replay" -> lateReplaySql,
+    drain("sr5_stream_funnel_replay", streamFunnelReplay)(ExtendedQueries.funnelSql),
+    drain("sr6_stream_transitions_replay", streamTransitionsReplay)(ExtendedQueries.markovTransitionsSql),
+    drain("sr7_stream_scd2_replay", streamScd2Replay)(MaintenanceQueries.scd2HistorySql),
+    drain("sr8_stream_ema_replay", streamEmaReplay)(IndicatorQueries.emaDailySql),
+    drain("sr9_stream_heavyhitter_replay", streamHeavyHitterReplay)(ExtendedQueries.heavyHitterTokensSql),
+    drain("sr10_stream_barind_replay", streamBarIndicatorReplay)(IndicatorQueries.stochasticSql),
+    drain("sr11_stream_late_replay", streamLateReplay)(lateReplaySql),
     // x2's session table (the shared `sessions` CTE), filtered to
     // sessions CLOSED by the final watermark (max event time − 3
     // days), compared in microseconds — a plain WHERE on the named
     // fragment, not a suffix-concatenated HAVING (r12 advice).
-    "sr12_stream_session_replay" -> (ExtendedQueries.sessionsCte + """
+    drain("sr12_stream_session_replay", streamSessionReplay)(ExtendedQueries.sessionsCte + """
       SELECT user_id, session_start_ms, session_end_ms, n_events, sum_value
       FROM sessions
       WHERE last_us + 1800000000
             <= (SELECT epoch_ms(MAX(ts)) FROM events) * 1000 - 259200000000"""),
     // The batch interval join verbatim (no watermark cutoff — see the
     // streamJoinReplay note); µs time compares, b23's quote rules.
-    "sr13_stream_join_replay" -> (SparkEntry.P + """, t AS (
+    drain("sr13_stream_join_replay", streamJoinReplay)(SparkEntry.P + """, t AS (
       SELECT symbol, trade_date, epoch_us(event_time) AS t_us,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px_e4
       FROM silver WHERE trade_date = DATE '2024-01-15'
@@ -1370,7 +1348,7 @@ object StreamReplayQueries {
     // collisions collapse to the same row whichever side's survivor
     // wins; payload-DIFFERING collisions are excluded by the replay's
     // own loud precondition (see streamDedupReplay).
-    "sr14_stream_dedup_replay" -> (SparkEntry.P + """
+    drain("sr14_stream_dedup_replay", streamDedupReplay)(SparkEntry.P + """
       SELECT symbol, ts_ms, price, volume FROM (
         SELECT symbol, epoch_ms(event_time) AS ts_ms, ROUND(price, 4) AS price,
                ABS(volume) AS volume, event_id
@@ -1380,13 +1358,13 @@ object StreamReplayQueries {
       ) QUALIFY ROW_NUMBER() OVER (PARTITION BY symbol, ts_ms ORDER BY event_id) = 1"""),
     // The silver frame verbatim: the produce→consume→parse loop must
     // be lossless (JSON double round-trip included).
-    "sr15_stream_kafka_replay" -> (SparkEntry.P + """
+    drain("sr15_stream_kafka_replay", streamKafkaReplay)(SparkEntry.P + """
       SELECT symbol, epoch_ms(event_time) AS ts_ms, price, volume FROM silver"""),
     // Both decoded feeds as one union: trades verbatim; quotes from
     // the same integer-tick bid/ask rules (ticksE4 twin) and the same
     // IEEE /10000.0 — so the hash proves per-topic routing, the
     // branch filters, and both JSON contracts end-to-end.
-    "sr16_stream_multitopic_replay" -> (SparkEntry.P + """, qsrc AS (
+    drain("sr16_stream_multitopic_replay", streamMultiTopicReplay)(SparkEntry.P + """, qsrc AS (
       SELECT symbol, volume, epoch_ms(event_time) AS ts0,
              CAST(CAST(price AS DECIMAL(18,4)) * 10000 AS BIGINT) AS px_e4
       FROM silver WHERE event_id % 3 = 0
@@ -1405,7 +1383,7 @@ object StreamReplayQueries {
     // The silver frame verbatim, like sr15 — what changes is the
     // EXECUTION: four admission-limited micro-batches with mid-file
     // checkpoint resumption instead of one batch per staged file.
-    "sr17_stream_ratelimit_replay" -> (SparkEntry.P + """
+    drain("sr17_stream_ratelimit_replay", streamRateLimitReplay)(SparkEntry.P + """
       SELECT symbol, epoch_ms(event_time) AS ts_ms, price, volume FROM silver"""),
     // Silver minus each side's startingOffsets-skipped prefix: side =
     // event_id parity (the produce key), offset within a side = the
@@ -1413,7 +1391,7 @@ object StreamReplayQueries {
     // arrival order = event_id order ⇒ dense per-partition offsets in
     // that order), so "start partition A at 7, B at 3" is exactly
     // "keep rn > 7 / rn > 3" per side.
-    "sr18_stream_startoffsets_replay" -> (SparkEntry.P + """
+    drain("sr18_stream_startoffsets_replay", streamStartOffsetsReplay)(SparkEntry.P + """
       SELECT side, symbol, ts_ms, price, volume FROM (
         SELECT CASE WHEN event_id % 2 = 0 THEN 'feed-a' ELSE 'feed-b' END AS side,
                symbol, epoch_ms(event_time) AS ts_ms, price, volume,
@@ -1425,7 +1403,7 @@ object StreamReplayQueries {
     // rows: the v2 reader's BACKWARD default (absent JSON field →
     // null) is what the hash proves, across a checkpoint restart and
     // a mixed-schema output store.
-    "sr19_stream_evolution_replay" -> (SparkEntry.P + """
+    drain("sr19_stream_evolution_replay", streamEvolutionReplay)(SparkEntry.P + """
       SELECT CASE WHEN event_id % 2 = 1 THEN 'XN-' || symbol END AS exchange,
              symbol, epoch_ms(event_time) AS ts_ms, price, volume
       FROM silver"""),
@@ -1433,7 +1411,7 @@ object StreamReplayQueries {
     // watermark = min(maxA, maxB) - 3 days (multipleWatermarkPolicy
     // default min; 259200000 = 3 days in ms) — the slow feed gates the
     // fast feed's windows too, which is the semantics under test.
-    "sr20_stream_unionwm_replay" -> (SparkEntry.P + """, wmx AS (
+    drain("sr20_stream_unionwm_replay", streamUnionWatermarkReplay)(SparkEntry.P + """, wmx AS (
       SELECT LEAST(
         (SELECT epoch_ms(MAX(event_time)) FROM silver),
         (SELECT epoch_ms(MAX(event_time)) FROM silver
@@ -1455,7 +1433,7 @@ object StreamReplayQueries {
     // sr18's oracle verbatim: same offset floors, same content — what
     // changes is EXECUTION (rate-limited multi-batch admission from a
     // mid-topic seek, mid-file checkpoint offsets).
-    "sr21_stream_seekadmit_replay" -> (SparkEntry.P + """
+    drain("sr21_stream_seekadmit_replay", streamSeekAdmitReplay)(SparkEntry.P + """
       SELECT side, symbol, ts_ms, price, volume FROM (
         SELECT CASE WHEN event_id % 2 = 0 THEN 'feed-a' ELSE 'feed-b' END AS side,
                symbol, epoch_ms(event_time) AS ts_ms, price, volume,
@@ -1466,7 +1444,7 @@ object StreamReplayQueries {
     // Silver verbatim, like sr17: the min gate changes WHEN batches
     // fire (3 full + 1 deadline-deferred tail, require()d in-query),
     // never WHAT arrives.
-    "sr22_stream_minoffsets_replay" -> (SparkEntry.P + """
+    drain("sr22_stream_minoffsets_replay", streamMinOffsetsReplay)(SparkEntry.P + """
       SELECT symbol, epoch_ms(event_time) AS ts_ms, price, volume FROM silver"""),
     // Both feeds' windows closed by the FULL horizon maxSilver - 3d:
     // that horizon is only reachable because feed B's heartbeat
@@ -1475,7 +1453,7 @@ object StreamReplayQueries {
     // (early-prefix max - 3d) would withhold nearly every trade window
     // and hash-mismatch; an unfiltered heartbeat would mint 'HB'
     // windows and hash-mismatch the other way.
-    "sr23_stream_heartbeat_replay" -> (SparkEntry.P + """, wmx AS (
+    drain("sr23_stream_heartbeat_replay", streamHeartbeatReplay)(SparkEntry.P + """, wmx AS (
       SELECT epoch_ms(MAX(event_time)) - 259200000 AS w FROM silver
     ), u AS (
       SELECT 'trade' AS feed, symbol,
@@ -1493,7 +1471,7 @@ object StreamReplayQueries {
     // The batch offset window: side A's [7, 400), side B's [3, end) —
     // and NOTHING from the decoy topic (subscribe must exclude it, or
     // extra rows trip the gate).
-    "p8_kafka_bounded_read" -> (SparkEntry.P + """
+    BoardQuery("p8_kafka_bounded_read", run = kafkaBoundedRead, oracleSql = SparkEntry.P + """
       SELECT side, symbol, ts_ms, price, volume FROM (
         SELECT CASE WHEN event_id % 2 = 0 THEN 'feed-a' ELSE 'feed-b' END AS side,
                symbol, epoch_ms(event_time) AS ts_ms, price, volume,

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each board query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
@@ -29,6 +29,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev-only subset (SPARK_GRAFT_ONLY, see Board.fromEnv): iterate on
+    // one query without paying the full sweep. The driver never sets
+    // it — its runs always cover everything.
+    val board = Board.fromEnv()
     val spark = SparkEntry.batchSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // Pre-flight (round-8 lesson): print every table's physical schema
@@ -51,19 +55,12 @@ object Verify {
     // parquet is deleted so exactly that query fails the driver's
     // compare; the rest of the round is unaffected.
     val maxSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_MAX_SEC", "60").toDouble
-    // Dev-only subset filter (comma-separated name prefixes): iterate
-    // on one query without paying the full 120+-query sweep. The
-    // driver never sets this — its runs always cover everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val breaches = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    board.foreach { case BoardQuery(name, _, run, _) =>
       try {
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
+        val df = run(spark, sfDir)
         val lint = lintSchema(name, df)
         // A banned type is a hard failure, not a warning: writing the
         // parquet anyway would hand the driver a guaranteed-mismatch
@@ -109,8 +106,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = board.map(b => s"${q(b.name)}: ${q(b.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
